@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
   *
@@ -12,20 +10,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // test-scale tables are single ~10-50MB parquet files; the default
-      // 128MB split size would scan them on ONE core. At warehouse scale
-      // files outnumber cores and the default is right.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=d01_x,q01_y runs a subset (local profiling aid);
+    // parsed before the session starts so a typo fails fast
+    val names = SparkEntry.selectedKeys
+    val spark = GraftSession(GraftSession.envCores(32))
 
     def runOne(name: String): Double = {
       val fn = SparkEntry.queries(name)
@@ -53,11 +41,6 @@ object Bench {
     // the noise-guard re-measure happened to re-run it warm.
     runOne("d02_dedup_minhash")
 
-    // SPARK_GRAFT_ONLY=d01_x,q01_y runs a subset (local profiling aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     def clearCaches(): Unit = {
       // free persisted intermediates (LSH signature caches etc.) so one
       // query's cache blocks don't become the next query's GC pressure;
@@ -72,11 +55,11 @@ object Bench {
     // reported. The second run executes the full plan from the scans up
     // but hits the JVM's whole-stage-codegen cache, so the reported
     // number is plan EXECUTION cost, not janino-compile + first-analysis
-    // cost. Measured split (BenchProbe, sf0.1): 0.3-1.6s of every
-    // query's first run is compile-only — a one-time-per-JVM cost that
-    // is noise at warehouse scale but dominated this suite's total at
-    // test scale. The first-run sum is still reported alongside
-    // (`first_run_total`) for transparency.
+    // cost. Measured split (first vs repeat runs in one session, sf0.1):
+    // 0.3-1.6s of every query's first run is compile-only — a
+    // one-time-per-JVM cost that is noise at warehouse scale but
+    // dominated this suite's total at test scale. The first-run sum is
+    // still reported alongside (`first_run_total`) for transparency.
     val firstPass = names.map { n =>
       val t1 = runOne(n); clearCaches()
       val t2 = if (t1 >= 0) { val t = runOne(n); clearCaches(); t } else -1.0
@@ -116,9 +99,15 @@ object Bench {
     // per-query detail is written to bench_summary.json in the CWD;
     // (3) stdout ENDS with a compact summary line (totals + per-family
     // subtotals + pointer) that fits whole inside the capture window.
+    // A failed query (-1) is left out of every total, so the failures
+    // are counted and named on all three outputs: a crash must never
+    // read as a faster bench.
+    val failed = results.filter(_._2 < 0).map(_._1)
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""measure":"steady_min2","first_run_total":$firstTotal,""" +
-      s""""queries":$qs,"sf":"$sfDir"}""")
+      s""""queries":$qs,"sf":"$sfDir",""" +
+      s""""n_failed":${failed.size},"failed":$failedJson}""")
     val families = results.filter(_._2 >= 0).groupBy(_._1.take(1))
       .toSeq.sortBy(_._1)
       .map { case (f, rs) => f""""$f":${rs.map(_._2).sum}%.3f""" }
@@ -132,6 +121,7 @@ object Bench {
   "metric": "total", "value": $total%.6f, "unit": "sec",
   "measure": "steady_min2", "first_run_total": $firstTotal%.6f,
   "families": $families, "sf": "$sfDir",
+  "n_failed": ${failed.size}, "failed": $failedJson,
   "queries": {
 $perQuery
   }
@@ -147,6 +137,7 @@ $perQuery
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""measure":"steady_min2","first_run_total":$firstTotal,""" +
       s""""families":$families,"n_queries":${results.count(_._2 >= 0)},""" +
+      s""""n_failed":${failed.size},"failed":$failedJson,""" +
       s""""queries_detail":"bench_summary.json","sf":"$sfDir"}""")
     spark.stop()
   }

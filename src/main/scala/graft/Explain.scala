@@ -1,21 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan inspector: prints the formatted physical plan of one or all
-  * queries. Usage: runMain graft.Explain [queryName] [sfDir] */
+/** Formatted-plan dump for driver queries — the per-round plan audit
+  * (`.explain("formatted")`). Audit targets: one scan per corpus
+  * relation, BroadcastHashJoin on dim/query sides, pushed filters
+  * reaching the parquet scan, no unexpected SortMergeJoin or cartesian,
+  * WholeStageCodegen spans wide.
+  *
+  * Usage: `runMain graft.Explain <sfDir> <name>... | all`
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("q03_dim_double_join")
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2,
+      "usage: graft.Explain <sfDir> <queryName>... | all")
+    val sfDir = args.head
+    val names = args.tail.toSeq match {
+      case Seq("all") => SparkEntry.selectKeys(None)
+      case keys => SparkEntry.selectKeys(Some(keys.mkString(",")))
+    }
+    val spark = GraftSession(GraftSession.envCores(4))
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (name == "all") SparkEntry.queries.keys.toSeq.sorted else Seq(name)
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -37,27 +36,14 @@ object Verify {
       shipSidecars(sfDir, outDir)
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // single-file test tables: split small so scans parallelize
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=d14_x,q01_y dumps a subset (local iteration aid,
-    // same contract as Bench's filter); the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    // same contract as Bench's filter); the driver never sets it
+    val names = SparkEntry.selectedKeys
+    val spark = GraftSession(GraftSession.envCores(4))
+    new java.io.File(outDir).mkdirs()
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -74,8 +60,7 @@ object Verify {
     // SUBDIRECTORIES as query outputs (tools/validate.py did, and the
     // driver's copy may still) must never see a parquet-less dir.
     val digestDir = Paths.get(outDir)
-    SparkEntry.queries.keys
-      .filter(name => only.forall(_.contains(name)))
+    names
       .filter(name => Files.exists(Paths.get(outDir, name)))
       .foreach { name =>
         try {

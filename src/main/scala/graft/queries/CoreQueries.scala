@@ -3,7 +3,7 @@ package graft.queries
 import graft.catalog.Catalog
 import graft.functions.GraftFunctions._
 import graft.harmonize.Harmonize._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,8 +20,6 @@ import org.apache.spark.sql.types._
   * hash-match the DuckDB oracle at any scale / partitioning.
   */
 object CoreQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** TPC-H Q1-shape pricing summary: hash-aggregate with map-side
     * partial aggregation; one shuffle on the (tiny) group key. */
@@ -714,67 +712,37 @@ object CoreQueries {
       |GROUP BY 1, 2
       |ORDER BY revenue DESC, l_orderkey LIMIT 20""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q01_agg_pricing" -> q01AggPricing,
-    "q02_project_rename" -> q02ProjectRename,
-    "q03_dim_double_join" -> q03DimDoubleJoin,
-    "q04_harmonize_union" -> q04HarmonizeUnion,
-    "s01_stream_harmonize" -> s01StreamHarmonize,
-    "q05_case_decode" -> q05CaseDecode,
-    "q06_haversine" -> q06Haversine,
-    "q07_window" -> q07Window,
-    "q08_topk" -> q08TopK,
-    "q09_distinct" -> q09Distinct,
-    "q10_rollup" -> q10Rollup,
-    "q11_anti_join" -> q11AntiJoin,
-    "q12_semi_join" -> q12SemiJoin,
-    "q13_date_agg" -> q13DateAgg,
-    "q14_sessionize" -> q14Sessionize,
-    "q15_count_distinct" -> q15CountDistinct,
-    "q16_approx_distinct" -> q16ApproxDistinct,
-    "q17_string_funcs" -> q17StringFuncs,
-    "q18_conditional_agg" -> q18ConditionalAgg,
-    "q19_asof_join" -> q19AsofJoin,
-    "q20_cube" -> q20Cube,
-    "q21_set_ops" -> q21SetOps,
-    "q22_predicates" -> q22Predicates,
-    "q23_window_battery" -> q23WindowBattery,
-    "q24_datetime" -> q24Datetime,
-    "q25_null_funcs" -> q25NullFuncs,
-    "q26_percentile" -> q26Percentile,
-    "q27_scalar_subquery" -> q27ScalarSubquery,
-    "q28_tpch_q3" -> q28Tpch3,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_agg_pricing" -> q01Sql,
-    "q02_project_rename" -> q02Sql,
-    "q03_dim_double_join" -> q03Sql,
-    "q04_harmonize_union" -> q04Sql,
-    "s01_stream_harmonize" -> q04Sql, // drain == batch: same oracle text
-    "q05_case_decode" -> q05Sql,
-    "q06_haversine" -> q06Sql,
-    "q07_window" -> q07Sql,
-    "q08_topk" -> q08Sql,
-    "q09_distinct" -> q09Sql,
-    "q10_rollup" -> q10Sql,
-    "q11_anti_join" -> q11Sql,
-    "q12_semi_join" -> q12Sql,
-    "q13_date_agg" -> q13Sql,
-    "q14_sessionize" -> q14Sql,
-    "q15_count_distinct" -> q15Sql,
-    "q17_string_funcs" -> q17Sql,
-    "q18_conditional_agg" -> q18Sql,
-    "q19_asof_join" -> q19Sql,
-    "q20_cube" -> q20Sql,
-    "q21_set_ops" -> q21Sql,
-    "q22_predicates" -> q22Sql,
-    "q23_window_battery" -> q23Sql,
-    "q24_datetime" -> q24Sql,
-    "q25_null_funcs" -> q25Sql,
-    "q26_percentile" -> q26Sql,
-    "q27_scalar_subquery" -> q27Sql,
-    "q28_tpch_q3" -> q28Sql,
-    "q16_approx_distinct" -> q16Sql, // KMV since r9 — deterministic, replayable
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q01_agg_pricing", q01AggPricing, q01Sql),
+    QueryDef("q02_project_rename", q02ProjectRename, q02Sql),
+    QueryDef("q03_dim_double_join", q03DimDoubleJoin, q03Sql),
+    QueryDef("q04_harmonize_union", q04HarmonizeUnion, q04Sql),
+    // drain == batch: same oracle text
+    QueryDef("s01_stream_harmonize", s01StreamHarmonize, q04Sql),
+    QueryDef("q05_case_decode", q05CaseDecode, q05Sql),
+    QueryDef("q06_haversine", q06Haversine, q06Sql),
+    QueryDef("q07_window", q07Window, q07Sql),
+    QueryDef("q08_topk", q08TopK, q08Sql),
+    QueryDef("q09_distinct", q09Distinct, q09Sql),
+    QueryDef("q10_rollup", q10Rollup, q10Sql),
+    QueryDef("q11_anti_join", q11AntiJoin, q11Sql),
+    QueryDef("q12_semi_join", q12SemiJoin, q12Sql),
+    QueryDef("q13_date_agg", q13DateAgg, q13Sql),
+    QueryDef("q14_sessionize", q14Sessionize, q14Sql),
+    QueryDef("q15_count_distinct", q15CountDistinct, q15Sql),
+    // KMV since r9 — deterministic, replayable
+    QueryDef("q16_approx_distinct", q16ApproxDistinct, q16Sql),
+    QueryDef("q17_string_funcs", q17StringFuncs, q17Sql),
+    QueryDef("q18_conditional_agg", q18ConditionalAgg, q18Sql),
+    QueryDef("q19_asof_join", q19AsofJoin, q19Sql),
+    QueryDef("q20_cube", q20Cube, q20Sql),
+    QueryDef("q21_set_ops", q21SetOps, q21Sql),
+    QueryDef("q22_predicates", q22Predicates, q22Sql),
+    QueryDef("q23_window_battery", q23WindowBattery, q23Sql),
+    QueryDef("q24_datetime", q24Datetime, q24Sql),
+    QueryDef("q25_null_funcs", q25NullFuncs, q25Sql),
+    QueryDef("q26_percentile", q26Percentile, q26Sql),
+    QueryDef("q27_scalar_subquery", q27ScalarSubquery, q27Sql),
+    QueryDef("q28_tpch_q3", q28Tpch3, q28Sql),
   )
 }

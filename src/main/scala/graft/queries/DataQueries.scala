@@ -18,8 +18,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   */
 object DataQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // Shared DuckDB CTE fragments (tokens / shingles), kept identical
   // across oracles so a semantics change only happens in one place.
   private def toksCteOn(src: String): String =
@@ -4128,12 +4126,7 @@ object DataQueries {
           .filter(!_.sparkContext.isStopped)
           .orElse(SparkSession.getDefaultSession
             .filter(!_.sparkContext.isStopped))
-        val s = live.getOrElse(SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate())
+        val s = live.getOrElse(graft.GraftSession(4))
         try {
           val here = graft.io.ContentFingerprint.of(s, dir, "documents")
           val m = read(dir) match {
@@ -6486,255 +6479,128 @@ object DataQueries {
        |  PARTITION BY query_id ORDER BY key DESC, id) AS rank FROM bfkey)
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "d01_dedup_exact" -> d01DedupExact,
-    "d12_span_dedup" -> d12SpanDedup,
-    "d14_exact_substr" -> d14ExactSubstr,
-    "d15_edit_join" -> d15EditJoin,
-    "t08_pii_redact" -> t08PiiRedact,
-    "t09_repetition" -> t09Repetition,
-    "t10_domain_mixture" -> t10DomainMixture,
-    "t11_lm_score" -> t11LmScore,
-    "d09_decontaminate" -> d09Decontaminate,
-    "d16_decontam_shuffle" -> d16DecontamShuffle,
-    "d17_host_rank_gate" -> d17HostRankGate,
-    "d18_weighted_sample" -> d18WeightedSample,
-    "d20_edit_join_delta" -> d20EditJoinDelta,
-    "d21_semantic_delta" -> d21SemanticDedupDelta,
-    "d19_cluster_sample" -> d19ClusterSample,
-    "d10_containment" -> d10ContainmentPairs,
-    "t06_seq_pack" -> t06SeqPack,
-    "t07_quality_yield" -> t07QualityYield,
-    "d08_neardup_groups" -> d08NearDupGroups,
-    "d11_softdedup_weights" -> d11SoftDedupWeights,
-    "t05_token_topk" -> t05TokenTopK,
-    "t18_cms_topk" -> t18CmsTopK,
-    "t19_bm25" -> t19Bm25,
-    "t20_bpe_tokenize" -> t20BpeTokenize,
-    "t21_nb_classify" -> t21NbClassify,
-    "t23_nb_confusion" -> t23NbConfusion,
-    "t24_chunk_spans" -> t24ChunkSpans,
-    "t25_pack_bins" -> t25PackBins,
-    "t26_boilerplate" -> t26Boilerplate,
-    "d22_quality_keeper" -> d22QualityKeeper,
-    "d23_bloom_delta" -> d23BloomDelta,
-    "d24_segment_dedup" -> d24SegmentDedup,
-    "d25_allpairs_cosine" -> d25AllPairsCosine,
-    "t28_lr_distill" -> t28LrDistill,
-    "d26_cosine_delta" -> d26CosineDelta,
-    "t29_filter_ablation" -> t29FilterAblation,
-    "t30_novelty_score" -> t30NoveltyScore,
-    "d27_segment_delta" -> d27SegmentDelta,
-    "d28_cosine_rare" -> d28CosineRare,
-    "d29_lsh_sweep" -> d29LshSweep,
-    "d30_rare_delta" -> d30RareDelta,
-    "d31_allpairs_contain" -> d31Containment,
-    "d32_sweep_ci" -> d32SweepCi,
-    "d33_contain_delta" -> d33ContainDelta,
-    "d34_rare_sweep" -> d34RareSweep,
-    "d35_banding_choice" -> d35BandingChoice,
-    "e28_operating_choice" -> e28OperatingChoice,
-    "e29_ivfsq_grid3d" -> e29SqGrid3d,
-    "e30_opq_grid3d" -> e30OpqGrid3d,
-    "e34_bq_grid3d" -> e34BqGrid3d,
-    "e35_filtered_grid" -> e35FilteredGrid,
-    "e36_filtered_layout" -> e36FilteredLayout,
-    "e37_filtered_family" -> e37FilteredFamily,
-    "e38_filtered_choice" -> e38FilteredChoice,
-    "e39_filtered_opq_grid" -> e39FilteredOpqGrid,
-    "e40_nsw_beam" -> e40NswBeam,
-    "e41_nsw_grid" -> e41NswGrid,
-    "e42_filtered_nsw_grid" -> e42FilteredNswGrid,
-    "e43_nsw_upsert" -> e43NswUpsert,
-    "e44_hnsw_search" -> e44HnswSearch,
-    "e31_family_choice" -> e31FamilyChoice,
-    "e32_tenant_choice" -> e32TenantChoice,
-    "e33_layout_choice" -> e33LayoutChoice,
-    "t32_fertility" -> t32Fertility,
-    "t33_unigram_tokenize" -> t33UnigramTokenize,
-    "t34_unigram_fertility" -> t34UnigramFertility,
-    "t35_ppl_buckets" -> t35PplBuckets,
-    "t36_wordpiece_tokenize" -> t36WordpieceTokenize,
-    "t37_wordpiece_fertility" -> t37WordpieceFertility,
-    "t38_dsir_select" -> t38DsirSelect,
-    "t31_epoch_mix" -> t31EpochMix,
-    "t27_ce_diff" -> t27CeDiff,
-    "e22_chunk_cells" -> e22ChunkCells,
-    "e23_hybrid_rrf" -> e23HybridRrf,
-    "e21_knn_label" -> e21KnnLabel,
-    "t22_data_card" -> t22DataCard,
-    "d02_dedup_minhash" -> d02MinhashPairs,
-    "d03_dedup_simhash" -> d03Simhash,
-    "d04_dedup_ngram_jaccard" -> d04NgramJaccard,
-    "d05_dedup_embed_cosine" -> d05EmbedNearDup,
-    "d06_dedup_drop" -> d06DedupDrop,
-    "d07_dedup_simhash_pairs" -> d07SimhashPairs,
-    "e01_ann_bruteforce" -> e01AnnBruteForce,
-    "e02_ann_ivf" -> e02AnnIvf,
-    "e03_ann_lsh_buckets" -> e03LshBucketPairs,
-    "e04_pq_encode" -> e04PqEncode,
-    "e05_pq_adc_topk" -> e05PqAdcTopK,
-    "e06_pq_rerank" -> e06PqRerank,
-    "e07_ivf_pq" -> e07IvfPq,
-    "e08_kmeans_cells" -> e08KmeansCells,
-    "e09_ivf_pq_trained" -> e09IvfPqTrained,
-    "e10_kmeans_sampled" -> e10KmeansSampled,
-    "e11_opq_ivf_pq" -> e11OpqIvfPq,
-    "e12_ivf_pq_residual" -> e12IvfPqResidual,
-    "e13_sq8_topk" -> e13Sq8TopK,
-    "e14_bq_rerank" -> e14BqRerank,
-    "e15_ivf_sq_topk" -> e15IvfSqTopK,
-    "e16_trunc_rerank" -> e16TruncRerank,
-    "e17_filtered_ann" -> e17FilteredAnn,
-    "e18_ivf_recall" -> e18IvfRecall,
-    "e24_recall_sweep" -> e24RecallSweep,
-    "e25_operating_grid" -> e25OperatingGrid,
-    "e26_pq_grid" -> e26PqGrid,
-    "e27_grid3d" -> e27Grid3d,
-    "f01_table_fingerprints" -> f01TableFingerprints,
-    "t21m_nb_model" -> t21mNbModel,
-    "e24p_probe_table" -> e24pProbeTable,
-    "e24b_bf_baseline" -> e24bBfBaseline,
-    "e19_mmr_rerank" -> e19MmrRerank,
-    "e20_ivf_upsert" -> e20IvfUpsert,
-    "d13_semantic_dedup" -> d13SemanticDedup,
-    "t12_shard_shuffle" -> t12ShardShuffle,
-    "t13_gopher_rules" -> t13GopherRules,
-    "t14_bigram_lm" -> t14BigramLm,
-    "t15_stratified_sample" -> t15StratifiedSample,
-    "t16_split_assign" -> t16SplitAssign,
-    "t17_group_split" -> t17GroupSplit,
-    "t01_lang_id" -> t01LangId,
-    "t02_quality_score" -> t02Quality,
-    "t03_fingerprint" -> t03Fingerprint,
-    "t04_token_stats" -> t04TokenStats,
-  )
-
-  // def, not val: t21's oracle inlines the collected model as literals,
-  // so the map must be built AFTER the queries have run (Verify dumps
-  // oracle_sql.json last) — an eager val would freeze the replay
-  // fallback at class-init time
-  def oracles: Map[String, String] = Map(
-    "d01_dedup_exact" -> d01Sql,
-    "d12_span_dedup" -> d12Sql,
-    "d14_exact_substr" -> d14Sql,
-    "d15_edit_join" -> d15Sql,
-    "t08_pii_redact" -> t08Sql,
-    "t09_repetition" -> t09Sql,
-    "t10_domain_mixture" -> t10Sql,
-    "t11_lm_score" -> t11Sql,
-    "d09_decontaminate" -> d09Sql,
-    "d16_decontam_shuffle" -> d09Sql, // same result contract, shuffle plan
-    "d17_host_rank_gate" -> d17Sql,
-    "d18_weighted_sample" -> d18Sql,
-    "d20_edit_join_delta" -> d20Sql,
-    "d21_semantic_delta" -> d21Sql,
-    "d19_cluster_sample" -> d19Sql,
-    "d10_containment" -> d10Sql,
-    "t06_seq_pack" -> t06Sql,
-    "t07_quality_yield" -> t07Sql,
-    "d08_neardup_groups" -> d08Sql,
-    "d11_softdedup_weights" -> d11Sql,
-    "t05_token_topk" -> t05Sql,
-    "t18_cms_topk" -> t18Sql,
-    "t19_bm25" -> t19Sql,
-    "t20_bpe_tokenize" -> t20Sql,
-    "t21_nb_classify" -> t21Sql,
-    "t23_nb_confusion" -> t23Sql,
-    "t24_chunk_spans" -> t24Sql,
-    "t25_pack_bins" -> t25Sql,
-    "t26_boilerplate" -> t26Sql,
-    "d22_quality_keeper" -> d22Sql,
-    "d23_bloom_delta" -> d23Sql,
-    "d24_segment_dedup" -> d24Sql,
-    "d25_allpairs_cosine" -> d25Sql,
-    "t28_lr_distill" -> t28Sql,
-    "d26_cosine_delta" -> d26Sql,
-    "t29_filter_ablation" -> t29Sql,
-    "t30_novelty_score" -> t30Sql,
-    "d27_segment_delta" -> d27Sql,
-    "d28_cosine_rare" -> d28Sql,
-    "d29_lsh_sweep" -> d29Sql,
-    "d30_rare_delta" -> d30Sql,
-    "d31_allpairs_contain" -> d31Sql,
-    "d32_sweep_ci" -> d32Sql,
-    "d33_contain_delta" -> d33Sql,
-    "d34_rare_sweep" -> d34Sql,
-    "d35_banding_choice" -> d35Sql,
-    "e28_operating_choice" -> e28Sql,
-    "e29_ivfsq_grid3d" -> e29Sql,
-    "e30_opq_grid3d" -> e30Sql,
-    "e34_bq_grid3d" -> e34Sql,
-    "e35_filtered_grid" -> e35Sql,
-    "e36_filtered_layout" -> e36Sql,
-    "e37_filtered_family" -> e37Sql,
-    "e38_filtered_choice" -> e38Sql,
-    "e39_filtered_opq_grid" -> e39Sql,
-    "e40_nsw_beam" -> e40Sql,
-    "e41_nsw_grid" -> e41Sql,
-    "e42_filtered_nsw_grid" -> e42Sql,
-    "e43_nsw_upsert" -> e43Sql,
-    "e44_hnsw_search" -> e44Sql,
-    "e31_family_choice" -> e31Sql,
-    "e32_tenant_choice" -> e32Sql,
-    "e33_layout_choice" -> e33Sql,
-    "t32_fertility" -> t32Sql,
-    "t33_unigram_tokenize" -> t33Sql,
-    "t34_unigram_fertility" -> t34Sql,
-    "t35_ppl_buckets" -> t35Sql,
-    "t36_wordpiece_tokenize" -> t36Sql,
-    "t37_wordpiece_fertility" -> t37Sql,
-    "t38_dsir_select" -> t38Sql,
-    "t31_epoch_mix" -> t31Sql,
-    "t27_ce_diff" -> t27Sql,
-    "e22_chunk_cells" -> e22Sql,
-    "e23_hybrid_rrf" -> e23Sql,
-    "e21_knn_label" -> e21Sql,
-    "t22_data_card" -> t22Sql,
-    "d02_dedup_minhash" -> d02Sql,
-    "d03_dedup_simhash" -> d03Sql,
-    "d04_dedup_ngram_jaccard" -> d04Sql,
-    "d05_dedup_embed_cosine" -> d05Sql,
-    "d06_dedup_drop" -> d06Sql,
-    "d07_dedup_simhash_pairs" -> d07Sql,
-    "e01_ann_bruteforce" -> e01Sql,
-    "e02_ann_ivf" -> e02Sql,
-    "e03_ann_lsh_buckets" -> e03Sql,
-    "e04_pq_encode" -> e04Sql,
-    "e05_pq_adc_topk" -> e05Sql,
-    "e06_pq_rerank" -> e06Sql,
-    "e07_ivf_pq" -> e07Sql,
-    "e08_kmeans_cells" -> e08Sql,
-    "e09_ivf_pq_trained" -> e09Sql,
-    "e10_kmeans_sampled" -> e10Sql,
-    "e11_opq_ivf_pq" -> e11Sql,
-    "e12_ivf_pq_residual" -> e12Sql,
-    "e13_sq8_topk" -> e13Sql,
-    "e14_bq_rerank" -> e14Sql,
-    "e15_ivf_sq_topk" -> e15Sql,
-    "e16_trunc_rerank" -> e16Sql,
-    "e17_filtered_ann" -> e17Sql,
-    "e18_ivf_recall" -> e18Sql,
-    "e24_recall_sweep" -> e24Sql,
-    "e25_operating_grid" -> e25Sql,
-    "e26_pq_grid" -> e26Sql,
-    "e27_grid3d" -> e27Sql,
-    "f01_table_fingerprints" -> f01Sql,
-    "t21m_nb_model" -> t21mSql,
-    "e24p_probe_table" -> e24pSql,
-    "e24b_bf_baseline" -> e24bSql,
-    "e19_mmr_rerank" -> e19Sql,
-    "e20_ivf_upsert" -> e20Sql,
-    "d13_semantic_dedup" -> d13Sql,
-    "t12_shard_shuffle" -> t12Sql,
-    "t13_gopher_rules" -> t13Sql,
-    "t14_bigram_lm" -> t14Sql,
-    "t15_stratified_sample" -> t15Sql,
-    "t16_split_assign" -> t16Sql,
-    "t17_group_split" -> t17Sql,
-    "t01_lang_id" -> t01Sql,
-    "t02_quality_score" -> t02Sql,
-    "t03_fingerprint" -> t03Sql,
-    "t04_token_stats" -> t04Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("d01_dedup_exact", d01DedupExact, d01Sql),
+    QueryDef("d12_span_dedup", d12SpanDedup, d12Sql),
+    QueryDef("d14_exact_substr", d14ExactSubstr, d14Sql),
+    QueryDef("d15_edit_join", d15EditJoin, d15Sql),
+    QueryDef("t08_pii_redact", t08PiiRedact, t08Sql),
+    QueryDef("t09_repetition", t09Repetition, t09Sql),
+    QueryDef("t10_domain_mixture", t10DomainMixture, t10Sql),
+    QueryDef("t11_lm_score", t11LmScore, t11Sql),
+    QueryDef("d09_decontaminate", d09Decontaminate, d09Sql),
+    // same result contract, shuffle plan
+    QueryDef("d16_decontam_shuffle", d16DecontamShuffle, d09Sql),
+    QueryDef("d17_host_rank_gate", d17HostRankGate, d17Sql),
+    QueryDef("d18_weighted_sample", d18WeightedSample, d18Sql),
+    QueryDef("d20_edit_join_delta", d20EditJoinDelta, d20Sql),
+    QueryDef("d21_semantic_delta", d21SemanticDedupDelta, d21Sql),
+    QueryDef("d19_cluster_sample", d19ClusterSample, d19Sql),
+    QueryDef("d10_containment", d10ContainmentPairs, d10Sql),
+    QueryDef("t06_seq_pack", t06SeqPack, t06Sql),
+    QueryDef("t07_quality_yield", t07QualityYield, t07Sql),
+    QueryDef("d08_neardup_groups", d08NearDupGroups, d08Sql),
+    QueryDef("d11_softdedup_weights", d11SoftDedupWeights, d11Sql),
+    QueryDef("t05_token_topk", t05TokenTopK, t05Sql),
+    QueryDef("t18_cms_topk", t18CmsTopK, t18Sql),
+    QueryDef("t19_bm25", t19Bm25, t19Sql),
+    QueryDef("t20_bpe_tokenize", t20BpeTokenize, t20Sql),
+    QueryDef("t21_nb_classify", t21NbClassify, t21Sql),
+    QueryDef("t23_nb_confusion", t23NbConfusion, t23Sql),
+    QueryDef("t24_chunk_spans", t24ChunkSpans, t24Sql),
+    QueryDef("t25_pack_bins", t25PackBins, t25Sql),
+    QueryDef("t26_boilerplate", t26Boilerplate, t26Sql),
+    QueryDef("d22_quality_keeper", d22QualityKeeper, d22Sql),
+    QueryDef("d23_bloom_delta", d23BloomDelta, d23Sql),
+    QueryDef("d24_segment_dedup", d24SegmentDedup, d24Sql),
+    QueryDef("d25_allpairs_cosine", d25AllPairsCosine, d25Sql),
+    QueryDef("t28_lr_distill", t28LrDistill, t28Sql),
+    QueryDef("d26_cosine_delta", d26CosineDelta, d26Sql),
+    QueryDef("t29_filter_ablation", t29FilterAblation, t29Sql),
+    QueryDef("t30_novelty_score", t30NoveltyScore, t30Sql),
+    QueryDef("d27_segment_delta", d27SegmentDelta, d27Sql),
+    QueryDef("d28_cosine_rare", d28CosineRare, d28Sql),
+    QueryDef("d29_lsh_sweep", d29LshSweep, d29Sql),
+    QueryDef("d30_rare_delta", d30RareDelta, d30Sql),
+    QueryDef("d31_allpairs_contain", d31Containment, d31Sql),
+    QueryDef("d32_sweep_ci", d32SweepCi, d32Sql),
+    QueryDef("d33_contain_delta", d33ContainDelta, d33Sql),
+    QueryDef("d34_rare_sweep", d34RareSweep, d34Sql),
+    QueryDef("d35_banding_choice", d35BandingChoice, d35Sql),
+    QueryDef("e28_operating_choice", e28OperatingChoice, e28Sql),
+    QueryDef("e29_ivfsq_grid3d", e29SqGrid3d, e29Sql),
+    QueryDef("e30_opq_grid3d", e30OpqGrid3d, e30Sql),
+    QueryDef("e34_bq_grid3d", e34BqGrid3d, e34Sql),
+    QueryDef("e35_filtered_grid", e35FilteredGrid, e35Sql),
+    QueryDef("e36_filtered_layout", e36FilteredLayout, e36Sql),
+    QueryDef("e37_filtered_family", e37FilteredFamily, e37Sql),
+    QueryDef("e38_filtered_choice", e38FilteredChoice, e38Sql),
+    QueryDef("e39_filtered_opq_grid", e39FilteredOpqGrid, e39Sql),
+    QueryDef("e40_nsw_beam", e40NswBeam, e40Sql),
+    QueryDef("e41_nsw_grid", e41NswGrid, e41Sql),
+    QueryDef("e42_filtered_nsw_grid", e42FilteredNswGrid, e42Sql),
+    QueryDef("e43_nsw_upsert", e43NswUpsert, e43Sql),
+    QueryDef("e44_hnsw_search", e44HnswSearch, e44Sql),
+    QueryDef("e31_family_choice", e31FamilyChoice, e31Sql),
+    QueryDef("e32_tenant_choice", e32TenantChoice, e32Sql),
+    QueryDef("e33_layout_choice", e33LayoutChoice, e33Sql),
+    QueryDef("t32_fertility", t32Fertility, t32Sql),
+    QueryDef("t33_unigram_tokenize", t33UnigramTokenize, t33Sql),
+    QueryDef("t34_unigram_fertility", t34UnigramFertility, t34Sql),
+    QueryDef("t35_ppl_buckets", t35PplBuckets, t35Sql),
+    QueryDef("t36_wordpiece_tokenize", t36WordpieceTokenize, t36Sql),
+    QueryDef("t37_wordpiece_fertility", t37WordpieceFertility, t37Sql),
+    QueryDef("t38_dsir_select", t38DsirSelect, t38Sql),
+    QueryDef("t31_epoch_mix", t31EpochMix, t31Sql),
+    QueryDef("t27_ce_diff", t27CeDiff, t27Sql),
+    QueryDef("e22_chunk_cells", e22ChunkCells, e22Sql),
+    QueryDef("e23_hybrid_rrf", e23HybridRrf, e23Sql),
+    QueryDef("e21_knn_label", e21KnnLabel, e21Sql),
+    QueryDef("t22_data_card", t22DataCard, t22Sql),
+    QueryDef("d02_dedup_minhash", d02MinhashPairs, d02Sql),
+    QueryDef("d03_dedup_simhash", d03Simhash, d03Sql),
+    QueryDef("d04_dedup_ngram_jaccard", d04NgramJaccard, d04Sql),
+    QueryDef("d05_dedup_embed_cosine", d05EmbedNearDup, d05Sql),
+    QueryDef("d06_dedup_drop", d06DedupDrop, d06Sql),
+    QueryDef("d07_dedup_simhash_pairs", d07SimhashPairs, d07Sql),
+    QueryDef("e01_ann_bruteforce", e01AnnBruteForce, e01Sql),
+    QueryDef("e02_ann_ivf", e02AnnIvf, e02Sql),
+    QueryDef("e03_ann_lsh_buckets", e03LshBucketPairs, e03Sql),
+    QueryDef("e04_pq_encode", e04PqEncode, e04Sql),
+    QueryDef("e05_pq_adc_topk", e05PqAdcTopK, e05Sql),
+    QueryDef("e06_pq_rerank", e06PqRerank, e06Sql),
+    QueryDef("e07_ivf_pq", e07IvfPq, e07Sql),
+    QueryDef("e08_kmeans_cells", e08KmeansCells, e08Sql),
+    QueryDef("e09_ivf_pq_trained", e09IvfPqTrained, e09Sql),
+    QueryDef("e10_kmeans_sampled", e10KmeansSampled, e10Sql),
+    QueryDef("e11_opq_ivf_pq", e11OpqIvfPq, e11Sql),
+    QueryDef("e12_ivf_pq_residual", e12IvfPqResidual, e12Sql),
+    QueryDef("e13_sq8_topk", e13Sq8TopK, e13Sql),
+    QueryDef("e14_bq_rerank", e14BqRerank, e14Sql),
+    QueryDef("e15_ivf_sq_topk", e15IvfSqTopK, e15Sql),
+    QueryDef("e16_trunc_rerank", e16TruncRerank, e16Sql),
+    QueryDef("e17_filtered_ann", e17FilteredAnn, e17Sql),
+    QueryDef("e18_ivf_recall", e18IvfRecall, e18Sql),
+    QueryDef("e24_recall_sweep", e24RecallSweep, e24Sql),
+    QueryDef("e25_operating_grid", e25OperatingGrid, e25Sql),
+    QueryDef("e26_pq_grid", e26PqGrid, e26Sql),
+    QueryDef("e27_grid3d", e27Grid3d, e27Sql),
+    QueryDef("f01_table_fingerprints", f01TableFingerprints, f01Sql),
+    QueryDef("t21m_nb_model", t21mNbModel, t21mSql),
+    QueryDef("e24p_probe_table", e24pProbeTable, e24pSql),
+    QueryDef("e24b_bf_baseline", e24bBfBaseline, e24bSql),
+    QueryDef("e19_mmr_rerank", e19MmrRerank, e19Sql),
+    QueryDef("e20_ivf_upsert", e20IvfUpsert, e20Sql),
+    QueryDef("d13_semantic_dedup", d13SemanticDedup, d13Sql),
+    QueryDef("t12_shard_shuffle", t12ShardShuffle, t12Sql),
+    QueryDef("t13_gopher_rules", t13GopherRules, t13Sql),
+    QueryDef("t14_bigram_lm", t14BigramLm, t14Sql),
+    QueryDef("t15_stratified_sample", t15StratifiedSample, t15Sql),
+    QueryDef("t16_split_assign", t16SplitAssign, t16Sql),
+    QueryDef("t17_group_split", t17GroupSplit, t17Sql),
+    QueryDef("t01_lang_id", t01LangId, t01Sql),
+    QueryDef("t02_quality_score", t02Quality, t02Sql),
+    QueryDef("t03_fingerprint", t03Fingerprint, t03Sql),
+    QueryDef("t04_token_stats", t04TokenStats, t04Sql),
   )
 }

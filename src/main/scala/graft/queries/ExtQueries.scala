@@ -23,8 +23,6 @@ import org.apache.spark.sql.types._
   */
 object ExtQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Pivot: order counts per priority × status. Explicit value list so
     * the output schema is fixed at plan time (required at scale: no
     * driver-side distinct scan), null-filled to 0 to match the
@@ -1852,91 +1850,48 @@ object ExtQueries {
       |  CAST(CASE WHEN nts IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
       |FROM ch ORDER BY k, vts""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q40_approx_percentile" -> q40ApproxPercentile,
-    "q62_versioned_range" -> q62VersionedRange,
-    "q63_bucketed_join" -> q63BucketedJoin,
-    "q66_bloom_point" -> q66BloomPoint,
-    "q67_scd2_snapshot" -> q67Scd2Snapshot,
-    "q68_bloom_dir" -> q68BloomDir,
-    "q69_snapshot_asof" -> q69SnapshotAsof,
-    "q60_hopping_window" -> q60HoppingWindow,
-    "q56_gap_fill" -> q56GapFill,
-    "q57_funnel" -> q57Funnel,
-    "q58_seq_pattern" -> q58SeqPattern,
-    "q59_cohort_retention" -> q59CohortRetention,
-    "q51_pagerank" -> q51PageRank,
-    "q52_kmv_algebra" -> q52KmvAlgebra,
-    "q53_bloom_join" -> q53BloomJoin,
-    "q54_zorder" -> q54Zorder,
-    "q55_hierarchy" -> q55Hierarchy,
-    "q50_polygon_join" -> q50PolygonJoin,
-    "q41_json_funcs" -> q41JsonFuncs,
-    "q42_det_sample" -> q42DetSample,
-    "q43_full_outer" -> q43FullOuter,
-    "q29_pivot" -> q29Pivot,
-    "q30_unpivot" -> q30Unpivot,
-    "q31_explode_pos" -> q31ExplodePos,
-    "q32_grouping_sets" -> q32GroupingSets,
-    "q33_salted_skew_join" -> q33SaltedJoin,
-    "q44_demographic_mart" -> q44DemographicMart,
-    "q45_hot_key_join" -> q45HotKeyJoin,
-    "q46_social_mart" -> q46SocialMart,
-    "q47_housing_mart" -> q47HousingMart,
-    "q61_census_mart" -> q61CensusMart,
-    "q64_evictions_mart" -> q64EvictionsMart,
-    "q65_restaurant_mart" -> q65RestaurantMart,
-    "q48_geo_zones" -> q48GeoZones,
-    "q49_radius_join" -> q49RadiusJoin,
-    "q34_string_agg" -> q34StringAgg,
-    "q35_regex_funcs" -> q35Regex,
-    "q36_exists_subquery" -> q36Exists,
-    "q37_range_join" -> q37RangeJoin,
-    "q38_array_funcs" -> q38ArrayFuncs,
-    "q39_interval_window" -> q39IntervalWindow,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q41_json_funcs" -> q41Sql,
-    "q62_versioned_range" -> q62Sql,
-    "q63_bucketed_join" -> q63Sql,
-    "q66_bloom_point" -> q66Sql,
-    "q67_scd2_snapshot" -> q67Sql,
-    "q68_bloom_dir" -> q68Sql,
-    "q69_snapshot_asof" -> q69Sql,
-    "q51_pagerank" -> q51Sql,
-    "q52_kmv_algebra" -> q52Sql,
-    "q53_bloom_join" -> q53Sql,
-    "q54_zorder" -> q54Sql,
-    "q55_hierarchy" -> q55Sql,
-    "q56_gap_fill" -> q56Sql,
-    "q57_funnel" -> q57Sql,
-    "q58_seq_pattern" -> q58Sql,
-    "q59_cohort_retention" -> q59Sql,
-    "q60_hopping_window" -> q60Sql,
-    "q42_det_sample" -> q42Sql,
-    "q43_full_outer" -> q43Sql,
-    "q29_pivot" -> q29Sql,
-    "q30_unpivot" -> q30Sql,
-    "q31_explode_pos" -> q31Sql,
-    "q32_grouping_sets" -> q32Sql,
-    "q33_salted_skew_join" -> q33Sql,
-    "q44_demographic_mart" -> q44Sql,
-    "q45_hot_key_join" -> q45Sql,
-    "q46_social_mart" -> q46Sql,
-    "q47_housing_mart" -> q47Sql,
-    "q61_census_mart" -> q61Sql,
-    "q64_evictions_mart" -> q64Sql,
-    "q65_restaurant_mart" -> q65Sql,
-    "q48_geo_zones" -> q48Sql,
-    "q49_radius_join" -> q49Sql,
-    "q34_string_agg" -> q34Sql,
-    "q35_regex_funcs" -> q35Sql,
-    "q36_exists_subquery" -> q36Sql,
-    "q37_range_join" -> q37Sql,
-    "q38_array_funcs" -> q38Sql,
-    "q39_interval_window" -> q39Sql,
-    "q40_approx_percentile" -> q40Sql, // grid-rank since r9 — deterministic
-    "q50_polygon_join" -> q50Sql,
+  val queries: Seq[QueryDef] = Seq(
+    // grid-rank since r9 — deterministic
+    QueryDef("q40_approx_percentile", q40ApproxPercentile, q40Sql),
+    QueryDef("q62_versioned_range", q62VersionedRange, q62Sql),
+    QueryDef("q63_bucketed_join", q63BucketedJoin, q63Sql),
+    QueryDef("q66_bloom_point", q66BloomPoint, q66Sql),
+    QueryDef("q67_scd2_snapshot", q67Scd2Snapshot, q67Sql),
+    QueryDef("q68_bloom_dir", q68BloomDir, q68Sql),
+    QueryDef("q69_snapshot_asof", q69SnapshotAsof, q69Sql),
+    QueryDef("q60_hopping_window", q60HoppingWindow, q60Sql),
+    QueryDef("q56_gap_fill", q56GapFill, q56Sql),
+    QueryDef("q57_funnel", q57Funnel, q57Sql),
+    QueryDef("q58_seq_pattern", q58SeqPattern, q58Sql),
+    QueryDef("q59_cohort_retention", q59CohortRetention, q59Sql),
+    QueryDef("q51_pagerank", q51PageRank, q51Sql),
+    QueryDef("q52_kmv_algebra", q52KmvAlgebra, q52Sql),
+    QueryDef("q53_bloom_join", q53BloomJoin, q53Sql),
+    QueryDef("q54_zorder", q54Zorder, q54Sql),
+    QueryDef("q55_hierarchy", q55Hierarchy, q55Sql),
+    QueryDef("q50_polygon_join", q50PolygonJoin, q50Sql),
+    QueryDef("q41_json_funcs", q41JsonFuncs, q41Sql),
+    QueryDef("q42_det_sample", q42DetSample, q42Sql),
+    QueryDef("q43_full_outer", q43FullOuter, q43Sql),
+    QueryDef("q29_pivot", q29Pivot, q29Sql),
+    QueryDef("q30_unpivot", q30Unpivot, q30Sql),
+    QueryDef("q31_explode_pos", q31ExplodePos, q31Sql),
+    QueryDef("q32_grouping_sets", q32GroupingSets, q32Sql),
+    QueryDef("q33_salted_skew_join", q33SaltedJoin, q33Sql),
+    QueryDef("q44_demographic_mart", q44DemographicMart, q44Sql),
+    QueryDef("q45_hot_key_join", q45HotKeyJoin, q45Sql),
+    QueryDef("q46_social_mart", q46SocialMart, q46Sql),
+    QueryDef("q47_housing_mart", q47HousingMart, q47Sql),
+    QueryDef("q61_census_mart", q61CensusMart, q61Sql),
+    QueryDef("q64_evictions_mart", q64EvictionsMart, q64Sql),
+    QueryDef("q65_restaurant_mart", q65RestaurantMart, q65Sql),
+    QueryDef("q48_geo_zones", q48GeoZones, q48Sql),
+    QueryDef("q49_radius_join", q49RadiusJoin, q49Sql),
+    QueryDef("q34_string_agg", q34StringAgg, q34Sql),
+    QueryDef("q35_regex_funcs", q35Regex, q35Sql),
+    QueryDef("q36_exists_subquery", q36Exists, q36Sql),
+    QueryDef("q37_range_join", q37RangeJoin, q37Sql),
+    QueryDef("q38_array_funcs", q38ArrayFuncs, q38Sql),
+    QueryDef("q39_interval_window", q39IntervalWindow, q39Sql),
   )
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.catalog.Catalog
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,8 +20,6 @@ import org.apache.spark.sql.types._
   * flips m02 back to a rows-only check at the same point.
   */
 object MediaQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Media metadata + md5 checksum after batched feature extraction.
     * Everything here is byte-level truth (no stub outputs), so the
@@ -301,25 +299,14 @@ object MediaQueries {
       |SELECT media_id, align_cosine, align_cosine >= $m08Tau AS aligned
       |FROM c ORDER BY media_id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "m01_media_meta" -> m01MediaMeta,
-    "m02_media_features" -> m02MediaFeatures,
-    "m03_frame_sample" -> m03FrameSample,
-    "m04_resize" -> m04Resize,
-    "m05_chunk" -> m05Chunk,
-    "m06_media_dedup" -> m06MediaDedup,
-    "m07_phash_neardup" -> m07PhashNearDup,
-    "m08_caption_align" -> m08CaptionAlign,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "m01_media_meta" -> m01Sql,
-    "m02_media_features" -> m02Sql,
-    "m03_frame_sample" -> m03Sql,
-    "m04_resize" -> m04Sql,
-    "m05_chunk" -> m05Sql,
-    "m06_media_dedup" -> m06Sql,
-    "m07_phash_neardup" -> m07Sql,
-    "m08_caption_align" -> m08Sql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("m01_media_meta", m01MediaMeta, m01Sql),
+    QueryDef("m02_media_features", m02MediaFeatures, m02Sql),
+    QueryDef("m03_frame_sample", m03FrameSample, m03Sql),
+    QueryDef("m04_resize", m04Resize, m04Sql),
+    QueryDef("m05_chunk", m05Chunk, m05Sql),
+    QueryDef("m06_media_dedup", m06MediaDedup, m06Sql),
+    QueryDef("m07_phash_neardup", m07PhashNearDup, m07Sql),
+    QueryDef("m08_caption_align", m08CaptionAlign, m08Sql),
   )
 }

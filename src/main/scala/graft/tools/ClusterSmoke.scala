@@ -291,11 +291,8 @@ object ClusterSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    def builder = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.ui.enabled", "false")
+    def builder(master: String) = graft.GraftSession.builder(8,
+        master = Some(master))
       // local-cluster is a multi-JVM master, so Scratch demands an
       // explicit shared base (its fail-fast guard would otherwise refuse
       // the default driver-local warehouse dir). The executor JVMs here
@@ -306,12 +303,11 @@ object ClusterSmoke {
 
     // pass the sbt-forked JVM's classpath to the executor JVMs — they
     // are launched fresh and know nothing of sbt
-    val clusterRes = runAll(builder
-      .master("local-cluster[2,4,2048]")
+    val clusterRes = runAll(builder("local-cluster[2,4,2048]")
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
       .getOrCreate(), sfDir)
 
-    val localRes = runAll(builder.master("local[8]").getOrCreate(), sfDir)
+    val localRes = runAll(builder("local[8]").getOrCreate(), sfDir)
 
     var failed = false
     var emptyCount = 0
@@ -354,7 +350,7 @@ object ClusterSmoke {
       import graft.pipeline.VersionedTable
       val vtRoot = java.nio.file.Files
         .createTempDirectory("graft-smoke-vt").toString + "/tbl"
-      val spark = builder.master("local[4]").getOrCreate()
+      val spark = builder("local[4]").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       val nCommits = 8
       val writer = VersionedWriterMain.launch(vtRoot, "w1", nCommits)
@@ -410,7 +406,7 @@ object ClusterSmoke {
       val base = java.nio.file.Files
         .createTempDirectory("graft-smoke-rel").toString
       val (aRoot, bRoot, reg) = (s"$base/A", s"$base/B", s"$base/_REL")
-      val spark = builder.master("local[4]").getOrCreate()
+      val spark = builder("local[4]").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       import spark.implicits._
       val nRuns = 6
@@ -517,7 +513,7 @@ object ClusterSmoke {
       val reg = s"$base/reg"
       val mA = s"$base/memA"
       val mB = s"$base/memB"
-      val spark = builder.master("local[4]").getOrCreate()
+      val spark = builder("local[4]").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       import spark.implicits._
       // seed one release so sweeps have a registry from the start
@@ -600,7 +596,7 @@ object ClusterSmoke {
       val reg = s"$base/reg"
       val mA = s"$base/memA"
       val mB = s"$base/memB"
-      val spark = builder.master("local[4]").getOrCreate()
+      val spark = builder("local[4]").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       import spark.implicits._
       val sA = VersionedTable.write(spark, mA,
@@ -684,7 +680,7 @@ object ClusterSmoke {
       val reg = s"$base/reg"
       val mA = s"$base/memA"
       val mB = s"$base/memB"
-      val spark = builder.master("local[4]").getOrCreate()
+      val spark = builder("local[4]").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       import spark.implicits._
       def seed(root: String): Long = VersionedTable.write(spark, root,

@@ -134,14 +134,8 @@ object GcMain {
       "usage: GcMain <registryRoot> [--keep N] [--member-keep N] " +
         "[--stale-ms N] [--compact-max-files N] [--compact-cold N] " +
         "[--dry-run]"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-gc")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(4, "graft-gc",
+      sys.env.get("SPARK_GRAFT_MASTER"))
     try {
       val r = run(spark, reg, keep, memberKeep, staleMs, compactMaxFiles,
         compactCold, dryRun)

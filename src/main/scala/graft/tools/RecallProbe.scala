@@ -27,12 +27,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     // `opq_curve`: parametric-OPQ convergence evidence (VERDICT r8 #6)
     // instead of the recall battery — distortion (the Ge 2013

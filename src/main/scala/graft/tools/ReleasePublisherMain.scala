@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-JVM release publisher for the cross-process publish/GC
   * ClusterSmoke shape (VERDICT r14 next-#4): hammers the registry with
   * `n` member-commit-then-publish cycles (every 7th release a rollback
@@ -34,13 +32,7 @@ object ReleasePublisherMain {
         s"usage: ReleasePublisherMain <reg> <memberA> <memberB> <n> " +
           s"[paceMs partitioned], got ${other.mkString(" ")}")
     }
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("release-publisher")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(2, "release-publisher")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.pipeline.{PublishSet, VersionedTable}

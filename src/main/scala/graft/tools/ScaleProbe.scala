@@ -25,15 +25,12 @@ object ScaleProbe {
     val replicas = args.headOption.map(_.toInt).getOrElse(16)
     val only: Option[Set[String]] = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val spark = graft.GraftSession.builder(32)
       // SPARK_GRAFT_SHUFFLE: the knob a real cluster sizes to data —
       // the d17 64x probe re-runs with 128 to separate spill-at-fixed-
       // partitions from genuine superlinearity (VERDICT r12 next-#7)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def stage(name: String)(body: => Unit): Unit =

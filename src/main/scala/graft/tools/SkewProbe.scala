@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SkewJoin vs AQE measurement (VERDICT r6 next-#3): q45's workload —
@@ -28,12 +27,7 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = args.find(_.forall(_.isDigit)).map(_.toLong).getOrElse(40000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     import spark.implicits._
 
     // q45's skew shape: 75% of rows -> key 0, remainder over 1..996

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** A standalone writer PROCESS for the versioned-table multi-writer
   * contract (VERDICT r12 next-#3): commits `n` single-row merges into
   * `root`, each a distinct key, from its own JVM and its own
@@ -50,13 +48,7 @@ object VersionedWriterMain {
 
   def main(args: Array[String]): Unit = {
     val Array(root, writerId, n) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"vt-writer-$writerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(2, s"vt-writer-$writerId")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     try {

@@ -17,14 +17,26 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has an oracle or is a documented rows-only check") {
-    // q16/q40: engine-specific sketches (HLL, quantile); m02: stub LCG
-    // decode features
-    val rowsOnly = Set("q16_approx_distinct", "q40_approx_percentile",
-      "m02_media_features")
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnly
-    assert(missing.isEmpty, s"queries without oracle: $missing")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without query: $orphans")
+  test("query keys are unique across the four modules") {
+    val keys = SparkEntry.registry.map(_.key)
+    val dups = keys.diff(keys.distinct)
+    assert(dups.isEmpty, s"keys registered twice: $dups")
+    assert(SparkEntry.queries.keySet == keys.toSet)
+  }
+
+  test("every oracle string is non-empty") {
+    val empty = SparkEntry.oracleSql.collect {
+      case (k, sql) if sql.trim.isEmpty => k
+    }
+    assert(empty.isEmpty, s"empty oracle SQL: $empty")
+  }
+
+  test("SPARK_GRAFT_ONLY selection rejects an unknown key, naming it") {
+    assert(SparkEntry.selectKeys(Some(" q09_distinct,q01_agg_pricing ")) ==
+      Seq("q01_agg_pricing", "q09_distinct"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.selectKeys(Some("q01_agg_pricing,q01_agg_pricng"))
+    }
+    assert(e.getMessage.contains("q01_agg_pricng"))
   }
 }

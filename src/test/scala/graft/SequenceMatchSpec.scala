@@ -27,7 +27,7 @@ class SequenceMatchSpec extends SparkSpec {
         Catalog(spark, dir).events, "user_id", "ts", q57Stages)
       .withColumnRenamed("n_keys", "n_users")
       .collect().toSeq
-    val handWritten = ExtQueries.all("q57_funnel")(spark, dir)
+    val handWritten = ExtQueries.q57Funnel(spark, dir)
       .collect().toSeq
     assert(general == handWritten)
   }
