@@ -11,8 +11,14 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_ONLY=d01_x,q01_y runs a subset (local profiling aid);
-    // parsed before the session starts so a typo fails fast
-    val names = SparkEntry.selectedKeys
+    // parsed before the session starts so a typo fails fast. A subset
+    // run is marked partial (with its keys) in bench_summary.json and
+    // the compact line, so it cannot pass for a full-suite snapshot.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val names = SparkEntry.selectKeys(only)
+    val partialJson = only.fold("") { _ =>
+      s""""partial":true,"selected":${names.map(n => s""""$n"""").mkString("[", ",", "]")},"""
+    }
     val spark = GraftSession(GraftSession.envCores(32))
 
     def runOne(name: String): Double = {
@@ -121,7 +127,7 @@ object Bench {
   "metric": "total", "value": $total%.6f, "unit": "sec",
   "measure": "steady_min2", "first_run_total": $firstTotal%.6f,
   "families": $families, "sf": "$sfDir",
-  "n_failed": ${failed.size}, "failed": $failedJson,
+  "n_failed": ${failed.size}, "failed": $failedJson,$partialJson
   "queries": {
 $perQuery
   }
@@ -137,7 +143,7 @@ $perQuery
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""measure":"steady_min2","first_run_total":$firstTotal,""" +
       s""""families":$families,"n_queries":${results.count(_._2 >= 0)},""" +
-      s""""n_failed":${failed.size},"failed":$failedJson,""" +
+      s""""n_failed":${failed.size},"failed":$failedJson,$partialJson""" +
       s""""queries_detail":"bench_summary.json","sf":"$sfDir"}""")
     spark.stop()
   }

@@ -1677,27 +1677,47 @@ object Similarity {
     * Determinism: both cosines live as MICRO-UNIT integers
     * (floor(round(cos,6)·1e6 + 0.5) — the t11 floor(x+0.5) contract one
     * scale down), so at λ = 1/2 the MMR objective argmax is an exact
-    * integer difference rel_u − max(sim_u) with id-asc tie-break; every
-    * greedy step replays in SQL as a materialized stage (the q51/t20
-    * iterative-CTE pattern).
+    * integer difference rel_u − max(sim_u) with id-asc tie-break; the
+    * oracle replays every greedy step in SQL as a materialized stage
+    * (the q51/t20 iterative-CTE pattern).
     *
     * Scale shape: candidates come from [[bruteForceTopK]] (broadcast
     * query batch, no corpus shuffle; swap in any trained index for the
     * shortlist — the greedy stage only sees (query, candidate) rows).
-    * The candidate-pair sim relation is |queries| × topN² rows — batch-
-    * bounded, built ONCE and localCheckpointed (it feeds every greedy
-    * step); each of the k steps is one groupBy over that relation plus
-    * a per-query argmax window. Nothing in the loop touches the corpus.
+    * The candidate-pair sim relation is |queries| × topN² rows —
+    * batch-bounded. Both relations are grouped by query_id and cogrouped
+    * once; each query's k greedy steps then run inside that one group
+    * ([[mmrSelect]] over exact Longs — the per-group sequential pass of
+    * [[TextAnalysis.packFirstFitDecreasing]]). Both sides inherit the
+    * top-k window's hash partitioning on query_id, so the pair self-join
+    * and the cogroup add no exchange. The plan is lazy and independent
+    * of k: building it fires no Spark job, and the final action runs the
+    * same stages at any k. Per-group state is topN candidates plus their
+    * topN² pairs; the query batch is the parallelism.
+    *
+    * Ids must be integral (Byte/Short/Int/Long): the greedy pass keys on
+    * Long and the output casts back, so names and types are the
+    * inputs'. A candidate with no pair row to the selected set is not
+    * eligible, a NULL max-similarity yields a NULL score_u (sorted
+    * last), and a query stops early when no candidate is eligible.
     *
     * Output: (query_id, rank 1..k, id, rel_u, score_u) — score_u of
     * rank 1 is its relevance (nothing selected yet). */
   def mmrRerank(corpus: DataFrame, queries: DataFrame, vecCol: String,
                 idCol: String, topN: Int, k: Int): DataFrame = {
     require(k >= 1 && topN >= k, s"need 1 <= k <= topN; got k=$k topN=$topN")
+    def idType(df: DataFrame): DataType = {
+      val t = df.select(col(idCol)).schema.head.dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"mmrRerank needs an integral id column; $idCol is ${t.simpleString}")
+      t
+    }
+    val (queryIdType, candIdType) = (idType(queries), idType(corpus))
+    val sp = corpus.sparkSession
+    import sp.implicits._
     def micro(c: Column): Column = floor(c * 1e6 + 0.5).cast(LongType)
     val cands = bruteForceTopK(corpus, queries, vecCol, idCol, topN)
       .select(col("query_id"), col("id"), micro(col("cosine")).as("rel_u"))
-      .localCheckpoint(false)
     val cvecs = cands.select("query_id", "id")
       .join(corpus.select(col(idCol).as("id"),
         toDoubleArray(col(vecCol)).as("v")), Seq("id"))
@@ -1708,35 +1728,64 @@ object Similarity {
       .select(col("query_id"), col("a_id"), col("b_id"),
         micro(round(VectorExpressions.cosine(col("av"), col("bv")), 6))
           .as("sim_u"))
-      .localCheckpoint(false)
-    val firstW = Window.partitionBy("query_id")
-      .orderBy(col("rel_u").desc, col("id").asc)
-    // each loop level references `selected` THREE times (max-sim join,
-    // anti-join, union) — without a lineage cut the plan re-evaluates
-    // the previous level per reference, 3^k-fold (the q51-oracle
-    // MATERIALIZED lesson, Spark-side: measured 6.2 -> ~1 s on the
-    // driver batch). The relation is k·|queries| rows — tiny.
-    var selected = cands
-      .withColumn("rn", row_number().over(firstW)).filter(col("rn") === 1)
-      .select(col("query_id"), col("id"), col("rel_u"),
-        lit(1L).as("rank"), col("rel_u").as("score_u"))
-      .localCheckpoint(false)
-    for (i <- 2 to k) {
-      val sel = selected.select(col("query_id"), col("id").as("b_id"))
-      val ms = cp.join(sel, Seq("query_id", "b_id"))
-        .groupBy(col("query_id"), col("a_id").as("id"))
-        .agg(max(col("sim_u")).as("ms"))
-      val remaining = cands.join(sel.withColumnRenamed("b_id", "id"),
-        Seq("query_id", "id"), "left_anti")
-      val stepW = Window.partitionBy("query_id")
-        .orderBy((col("rel_u") - col("ms")).desc, col("id").asc)
-      val pick = remaining.join(ms, Seq("query_id", "id"))
-        .withColumn("rn", row_number().over(stepW)).filter(col("rn") === 1)
-        .select(col("query_id"), col("id"), col("rel_u"),
-          lit(i.toLong).as("rank"), (col("rel_u") - col("ms")).as("score_u"))
-      selected = selected.unionByName(pick).localCheckpoint(false)
+    val candsByQuery = cands
+      .select(col("query_id").cast(LongType), col("id").cast(LongType), col("rel_u"))
+      .groupBy("query_id").as[Long, (Long, Long, Option[Long])]
+    val pairsByQuery = cp
+      .select(col("query_id").cast(LongType), col("a_id").cast(LongType),
+        col("b_id").cast(LongType), col("sim_u"))
+      .groupBy("query_id").as[Long, (Long, Long, Long, Option[Long])]
+    candsByQuery.cogroup(pairsByQuery) { (q, cs, ps) =>
+      mmrSelect(cs.map(c => (c._2, c._3)).toArray,
+        ps.map(p => (p._2, p._3, p._4)), k)
+        .iterator.map { case (rank, id, rel, score) => (q, rank, id, rel, score) }
+    }.toDF("query_id", "rank", "id", "rel_u", "score_u")
+      .select(col("query_id").cast(queryIdType).as("query_id"), col("rank"),
+        col("id").cast(candIdType).as("id"), col("rel_u"), col("score_u"))
+  }
+
+  /** One query's greedy MMR selection (λ = 1/2) over exact micro-unit
+    * Longs: `cands` are (id, rel_u) rows, `pairs` (a_id, b_id, sim_u).
+    * Step 1 takes the relevance argmax; step i takes, among unselected
+    * candidates with at least one pair row to the selected set, the
+    * argmax of rel_u − max(sim_u to selected) — NULL when either side
+    * is NULL, and a NULL sorts below every value — with ids ascending on
+    * ties. Stops at k ranks or when no candidate is eligible. Returns
+    * (rank, id, rel_u, score_u). */
+  private[graft] def mmrSelect(cands: Array[(Long, Option[Long])],
+                               pairs: Iterator[(Long, Long, Option[Long])],
+                               k: Int): Seq[(Long, Long, Option[Long], Option[Long])] = {
+    val pairsByB = pairs.toSeq.groupBy(_._2)
+    val selected = scala.collection.mutable.Set.empty[Long]
+    // a_id -> max sim_u to the selected set: present once a pair row
+    // exists (eligible), None while every such sim_u is NULL
+    val maxSim = scala.collection.mutable.Map.empty[Long, Option[Long]]
+    def better(s: Option[Long], id: Long, bs: Option[Long], bid: Long) = (s, bs) match {
+      case (Some(a), Some(b)) if a != b => a > b
+      case (Some(_), None) => true
+      case (None, Some(_)) => false
+      case _ => id < bid
     }
-    selected.select("query_id", "rank", "id", "rel_u", "score_u")
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Option[Long], Option[Long])]
+    var exhausted = false
+    while (out.length < k && !exhausted) {
+      val first = out.isEmpty
+      var best: (Long, Option[Long], Option[Long]) = null
+      for ((id, rel) <- cands if !selected(id) && (first || maxSim.contains(id))) {
+        val score = if (first) rel
+          else for (r <- rel; m <- maxSim(id)) yield Math.subtractExact(r, m)
+        if (best == null || better(score, id, best._3, best._1)) best = (id, rel, score)
+      }
+      if (best == null) exhausted = true
+      else {
+        val (id, rel, score) = best
+        out += ((out.length + 1L, id, rel, score))
+        selected += id
+        for ((a, _, sim) <- pairsByB.getOrElse(id, Nil))
+          maxSim(a) = (maxSim.get(a).flatten ++ sim).reduceOption(_ max _)
+      }
+    }
+    out.toSeq
   }
 
   /** RECIPROCAL-RANK FUSION (Cormack, Clarke & Buettcher, SIGIR 2009)

@@ -94,8 +94,8 @@ object ClusterSmoke {
     // (t21), the generalized N-stage sequence plan (q58), the host
     // syndication graph build + rank join (d17), A-ES weighted top-k
     // merged from per-partition partial top-ks (d18), trained-cell
-    // quotas (d19), the MMR greedy loop's per-step localCheckpoints
-    // across executor JVMs (e19), and the perceptual-hash banding
+    // quotas (d19), the MMR per-query greedy pass running as a typed
+    // cogroup closure in executor JVMs (e19), and the perceptual-hash banding
     // self-join (m07)
     "t20_bpe_tokenize", "t21_nb_classify", "q58_seq_pattern",
     "d17_host_rank_gate", "d18_weighted_sample", "d19_cluster_sample",

@@ -1,7 +1,12 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** MMR diverse rerank ([[Similarity.mmrRerank]], λ = 1/2): the greedy
   * selection must prefer a diverse moderately-relevant candidate over
@@ -53,5 +58,123 @@ class MmrSpec extends SparkSpec {
     val a = run(1)
     assert(a.length === 3)
     assert(a === run(5))
+  }
+
+  /** Spark jobs started while `body` runs on this thread. Jobs carry a
+    * per-call tag as a local property, so jobs of other threads never
+    * count; a tagged sentinel job submitted afterwards drains the
+    * listener queue, since the bus delivers job starts in order. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val sentinel = s"$tag-sentinel"
+    val seen = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "the listener never saw the sentinel job")
+      seen.asScala.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building the rerank fires no Spark job, and the action's jobs do not grow with k") {
+    def rerank(k: Int) = Similarity.mmrRerank(corpus, queries, "embedding",
+      "vec_id", topN = 4, k = k)
+    assert(jobsIn(rerank(3)) === 0)
+    def actionJobs(k: Int): (Int, Int) = {
+      val df = rerank(k)
+      var rows = 0
+      (jobsIn { rows = df.collect().length }, rows)
+    }
+    val (jobs1, rows1) = actionJobs(1)
+    val (jobs3, rows3) = actionJobs(3)
+    assert((rows1, rows3) === ((1, 3)))
+    assert(jobs1 > 0)
+    assert(jobs1 === jobs3)
+  }
+
+  test("fewer candidates than k emits only the ranks it can fill") {
+    // c5 is a zero vector (degenerate, never a candidate): 4 candidates
+    val withZero = corpus.union(Seq((5L, Seq(0.0f, 0.0f, 0.0f)))
+      .toDF("vec_id", "embedding"))
+    val got = Similarity.mmrRerank(withZero, queries, "embedding", "vec_id",
+        topN = 5, k = 5)
+      .select("rank", "id").as[(Long, Long)].collect().sortBy(_._1).toSeq
+    assert(got === Seq((1L, 1L), (2L, 3L), (3L, 4L), (4L, 2L)), got.toString)
+  }
+
+  test("two queries in one batch each break an exact score_u tie by id ascending") {
+    // per query: an exact copy of the query vector, then two mirror
+    // images at 45° — equal relevance and equal similarity to the copy,
+    // so rank 2 is an exact tie (score 0) that the lower id wins. The
+    // higher id comes first in the input.
+    val tieCorpus = Seq(
+      (1L, Seq(1.0f, 0.0f, 0.0f, 0.0f)),
+      (3L, Seq(1.0f, -1.0f, 0.0f, 0.0f)),
+      (2L, Seq(1.0f, 1.0f, 0.0f, 0.0f)),
+      (4L, Seq(0.0f, 0.0f, 1.0f, 0.0f)),
+      (6L, Seq(0.0f, 0.0f, 1.0f, -1.0f)),
+      (5L, Seq(0.0f, 0.0f, 1.0f, 1.0f))
+    ).toDF("vec_id", "embedding")
+    val tieQueries = Seq(
+      (200L, Seq(0.0f, 0.0f, 1.0f, 0.0f)),
+      (100L, Seq(1.0f, 0.0f, 0.0f, 0.0f))
+    ).toDF("vec_id", "embedding")
+    val got = Similarity.mmrRerank(tieCorpus.repartition(3), tieQueries,
+        "embedding", "vec_id", topN = 3, k = 3)
+      .as[(Long, Long, Long, Long, Long)].collect()
+      .sortBy(r => (r._1, r._2)).toSeq
+    val diag = 707107L // micro(round(cos 45°, 6))
+    assert(got === Seq(
+      (100L, 1L, 1L, 1000000L, 1000000L), (100L, 2L, 2L, diag, 0L),
+      (100L, 3L, 3L, diag, 0L),
+      (200L, 1L, 4L, 1000000L, 1000000L), (200L, 2L, 5L, diag, 0L),
+      (200L, 3L, 6L, diag, 0L)), got.toString)
+  }
+
+  test("output schema keeps its names and types for Long and Int ids") {
+    def schemaOf(idType: DataType) = {
+      def typed(df: org.apache.spark.sql.DataFrame) =
+        df.withColumn("vec_id", col("vec_id").cast(idType))
+      Similarity.mmrRerank(typed(corpus), typed(queries), "embedding",
+          "vec_id", topN = 4, k = 2)
+        .schema.fields.map(f => f.name -> f.dataType).toSeq
+    }
+    for (t <- Seq(LongType, IntegerType))
+      assert(schemaOf(t) === Seq("query_id" -> t, "rank" -> LongType,
+        "id" -> t, "rel_u" -> LongType, "score_u" -> LongType))
+  }
+
+  test("greedy step: no pair row to the selected set is ineligible; a NULL score sorts last") {
+    // c4 has no pair rows at all; c3's only pair row has a NULL sim;
+    // c5 has a NULL relevance
+    val cands = Array((4L, Some(11L)), (1L, Some(10L)), (2L, Some(9L)),
+      (3L, Some(8L)), (5L, None))
+    val pairs = Seq((2L, 1L, Some(5L)), (3L, 1L, None), (5L, 1L, Some(0L)),
+      (5L, 2L, Some(0L)))
+    val got = Similarity.mmrSelect(cands, pairs.iterator, k = 5)
+    // rank 1 is the relevance argmax (c4 — it needs no pair row); every
+    // later step needs a pair row to the selected set, so after c4 no
+    // candidate is eligible and the query stops
+    assert(got === Seq((1L, 4L, Some(11L), Some(11L))))
+    val rest = Similarity.mmrSelect(cands.filter(_._1 != 4L), pairs.iterator, k = 5)
+    assert(rest === Seq(
+      (1L, 1L, Some(10L), Some(10L)),
+      (2L, 2L, Some(9L), Some(4L)),
+      // c3 (max sim NULL) and c5 (relevance NULL) both score NULL: the
+      // lower id wins among NULLs
+      (3L, 3L, Some(8L), None),
+      (4L, 5L, None, None)), rest.toString)
   }
 }
