@@ -64,8 +64,8 @@ object Similarity {
 
   /** [[bruteForceTopK]] ranked on the exact-integer cosine key
     * ([[VectorExpressions.intCosKey]] — floor(1e6·|cos|)·sign of the
-    * micro-quantized vectors): the hash-gate baseline for
-    * [[ivfRecallSweepExact]], with zero float comparisons. NULL keys
+    * micro-quantized vectors): the hash-gate baseline for the IVF
+    * operating sweeps and grids, with zero float comparisons. NULL keys
     * (quantized-degenerate vectors) are filtered on both engines.
     * Output: (query_id, rank, id, cos_key). */
   def bruteForceTopKExact(corpus: DataFrame, queries: DataFrame,
@@ -242,7 +242,7 @@ object Similarity {
 
   /** THE probe ranking — (query_id, qv, cell, prn ≤ maxNp) — the ONE
     * formulation every probe consumer derives from ([[probeCellsOn]],
-    * the three tuning sweeps, and the [[ivfProbeTable]] diagnostic
+    * the operating sweep and grids, and the [[ivfProbeTable]] diagnostic
     * gate), so the contract cannot drift between them. */
   private def probeRanked(cents: DataFrame, queries: DataFrame,
                           vecCol: String, idCol: String,
@@ -323,174 +323,35 @@ object Similarity {
       .select(col("query_id"), col("rank").cast(LongType).as("rank"),
         col("id"), col("cos_r").as("cosine"))
 
-  /** NPROBE↔RECALL TUNING SWEEP — the cost/recall curve a serving
-    * deployment picks its probe width from: for each `nProbes` entry,
-    * recall@k of the trained IVF index against the exact brute-force
-    * baseline, next to the fraction of the corpus the probe actually
-    * scans. ONE summary row per nProbe, every column an exact BIGINT
-    * (recall and scanned-fraction in integer ppm via integer division)
-    * — no float leaves the already-verified cosine kernels.
+  /** IVF OPERATING SWEEP — nProbe × k JOINTLY, the cost/recall
+    * surface a serving deployment picks its probe width and result
+    * depth from: probe width trades scan cost against recall, k trades
+    * result depth against it, and the two interact (recall@1
+    * saturates at a narrower probe than recall@10). One row per
+    * (n_probe, k) with recall@k of the trained IVF index against the
+    * exact brute-force baseline, the baseline's actual row count, and
+    * the fraction of the corpus the probe scans. A single-k call is
+    * the nProbe↔recall curve (e24 reads it off `ks = Seq(5)`).
     *
-    * Efficiency contract: the sweep costs ONE search at max(nProbes),
-    * not Σ searches — candidates are scanned once with their cell's
-    * probe rank attached, and each narrower nProbe re-ranks the
-    * prefix (candidates under n probes ⊂ candidates under max; only
-    * the bounded candidate relation is re-windowed). `scanned_ppm`
-    * counts every vector in a probed cell (the work the scan does —
-    * the query's own vector is excluded only at scoring, as in
-    * [[ivfSearch]]). */
-  def ivfRecallSweep(corpus: DataFrame, queries: DataFrame,
-                     vecCol: String, idCol: String, k: Int,
-                     codebook: Seq[Seq[Double]],
-                     nProbes: Seq[Int]): DataFrame =
-    ivfRecallSweepImpl(corpus, queries, vecCol, idCol, k, codebook,
-      nProbes, exactKeys = false)
-
-  /** [[ivfRecallSweep]] with the candidate and brute-force RANKINGS on
-    * the exact-integer cosine key ([[VectorExpressions.intCosKey]]) —
-    * the hash-gate form (VERDICT r13 next-#1b): the two
-    * corpus-vs-query rankings whose ~k·maxNp-deep comparison surface a
-    * single cross-engine float flip could tip become integer-exact.
-    * Since r15 probe selection ranks on the same integer key (VERDICT
-    * r14 next-#2), so only cell assignment — the rank-1 stage the
-    * e08 gate proves independently — still replays round-6 floats.
-    * Spec-pinned equal to the float sweep on the shipped corpus
-    * (IvfSpec) — the float path stays the production operator. */
-  def ivfRecallSweepExact(corpus: DataFrame, queries: DataFrame,
-                          vecCol: String, idCol: String, k: Int,
-                          codebook: Seq[Seq[Double]],
-                          nProbes: Seq[Int]): DataFrame =
-    ivfRecallSweepImpl(corpus, queries, vecCol, idCol, k, codebook,
-      nProbes, exactKeys = true)
-
-  private def ivfRecallSweepImpl(corpus: DataFrame, queries: DataFrame,
-                                 vecCol: String, idCol: String, k: Int,
-                                 codebook: Seq[Seq[Double]],
-                                 nProbes: Seq[Int],
-                                 exactKeys: Boolean): DataFrame = {
-    require(nProbes.nonEmpty && nProbes.forall(_ >= 1) &&
-      nProbes.distinct.size == nProbes.size, s"bad nProbes $nProbes")
-    val spark = corpus.sparkSession
-    val maxNp = nProbes.max
-    def scoreOf(a: Column, b: Column): Column =
-      if (exactKeys) VectorExpressions.intCosKey(a, b)
-      else round(VectorExpressions.cosine(a, b), 6)
-    val assigned = cellAssignmentsTrained(corpus, vecCol, idCol, codebook)
-      .persist()
-    val cents = centsOf(spark, codebook)
-    // probe ranking computed ONCE at the widest width, rank kept
-    val q = queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
-    // probe ranking on the exact-integer key (r15, VERDICT r14
-    // next-#2) — THE shared [[probeRanked]] formulation; NULL keys
-    // (degenerate micro-quantized vectors) filtered on BOTH engines
-    val probes = probeRanked(cents, queries, vecCol, idCol, maxNp)
-      .persist()
-    // one candidate scan at max width; each candidate tagged with the
-    // probe rank of the cell it came from. A NULL exact key means the
-    // quantized vector degenerated to zero — filtered on BOTH engines
-    // (NULL ordering defaults differ: Spark DESC is nulls-last, DuckDB
-    // DESC is nulls-first)
-    val cand = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("cos_r", scoreOf(col("v"), col("qv")))
-      .filter(col("cos_r").isNotNull)
-      .select(col("query_id"), col("id"), col("cos_r"), col("prn"))
-      .persist()
-    val bf = (if (exactKeys) bruteForceTopKExact(corpus, queries, vecCol, idCol, k)
-              else bruteForceTopK(corpus, queries, vecCol, idCol, k))
-      .select(col("query_id"), col("id")).persist()
-    val cellSizes = assigned.groupBy("cell")
-      .agg(count(lit(1)).as("cell_n"))
-    val nq = q.agg(count(lit(1)).as("nq"))
-    val nCorpus = assigned.agg(count(lit(1)).as("n_corpus"))
-    // recall denominator = the brute-force rows actually available, not
-    // k·nq: a corpus with fewer than k non-degenerate neighbors per
-    // query would otherwise bias every recall low (ADVICE r13)
-    val nBf = bf.agg(count(lit(1)).as("n_bf"))
-    // r18: every probe width reads off ONE ranked relation and ONE
-    // counting aggregate — the per-np branches each re-windowed and
-    // re-joined the same candidate relation. The width-np rank of a
-    // candidate is the RUNNING COUNT of rows with prn ≤ np in score
-    // order (row_number over the prn ≤ np subset for exactly those
-    // rows), so one window pass carries every width; scanned counts
-    // batch into one aggregate the same way. Output expressions are
-    // untouched (same in-plan arithmetic and types).
-    val npSorted = nProbes.sorted
-    val kw = Window.partitionBy("query_id")
-      .orderBy(col("cos_r").desc, col("id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = npSorted.foldLeft(cand)((df, np) =>
-      df.withColumn(s"rank_$np",
-        sum(when(col("prn") <= np, 1L).otherwise(0L)).over(kw)))
-    val hitsRow = bf.join(ranked, Seq("query_id", "id"))
-      .agg(coalesce(sum(when(col("prn") <= npSorted.head &&
-          col(s"rank_${npSorted.head}") <= k, 1L).otherwise(0L)), lit(0L))
-          .as(s"n_hits_${npSorted.head}"),
-        npSorted.tail.map(np => coalesce(sum(when(col("prn") <= np &&
-          col(s"rank_$np") <= k, 1L).otherwise(0L)), lit(0L))
-          .as(s"n_hits_$np")): _*)
-    val scannedRow = probes.join(cellSizes, Seq("cell"))
-      .agg(coalesce(sum(when(col("prn") <= npSorted.head, col("cell_n"))
-          .otherwise(0L)), lit(0L)).as(s"n_scanned_${npSorted.head}"),
-        npSorted.tail.map(np => coalesce(sum(when(col("prn") <= np,
-          col("cell_n")).otherwise(0L)), lit(0L))
-          .as(s"n_scanned_$np")): _*)
-    // ONE materialized stats row — the per-np union branches each
-    // reference it, and without the checkpoint every branch would
-    // re-run the aggregate subtrees it came from
-    val statsRow = hitsRow.crossJoin(scannedRow)
-      .crossJoin(nq).crossJoin(nCorpus).crossJoin(nBf)
-      .localCheckpoint(false)
-    val sweep = npSorted.map { np =>
-      statsRow
-        .select(col(s"n_hits_$np").as("n_hits"),
-          col(s"n_scanned_$np").as("n_scanned"),
-          col("nq"), col("n_corpus"), col("n_bf"))
-        .select(lit(np.toLong).as("n_probe"),
-          col("nq").as("n_queries"), col("n_hits"),
-          expr("1000000 * n_hits div n_bf").as("recall_ppm"),
-          // DECIMAL(38,0) intermediates: at the corpus scale this
-          // operator documents, 1e6·n_scanned and nq·n_corpus exceed
-          // 2^63 and the Long form would abort loudly under ANSI
-          // (ADVICE r14 — the same fix ivfOperatingSweepExact carries
-          // via BigInt; here the expression stays in-plan)
-          expr("CAST(1000000 AS DECIMAL(38,0)) * n_scanned div " +
-            "(CAST(nq AS DECIMAL(38,0)) * n_corpus)").as("scanned_ppm"))
-    }.reduce(_ unionByName _)
-    // The summary is |nProbes| rows — materialize it eagerly so the four
-    // shared relations can be RELEASED here (a lazy return would pin
-    // corpus-sized caches in the CacheManager for the driver's
-    // lifetime; every other persist in this codebase is paired with an
-    // unpersist). The caller gets a local relation, which is exactly
-    // what a bounded tuning table is.
-    try spark.createDataFrame(
-      spark.sparkContext.parallelize(sweep.collect().toSeq, 1), sweep.schema)
-    finally Seq(assigned, probes, cand, bf).foreach(_.unpersist(false))
-  }
-
-  /** 2-D OPERATING-SURFACE SWEEP — nProbe × k JOINTLY (the e24 curve
-    * widened to the grid a serving deployment actually tunes over:
-    * probe width trades scan cost against recall, k trades result
-    * depth against it, and the two interact — recall@1 saturates at a
-    * narrower probe than recall@10). One row per (n_probe, k) with
-    * recall vs the exact baseline, the baseline's actual row count,
-    * and the scanned corpus fraction; every column an exact BIGINT on
-    * the [[ivfRecallSweepExact]] integer-key contract (zero float
-    * compares anywhere in the grid).
+    * Every column is an exact BIGINT (recall and scanned fraction in
+    * integer ppm). The candidate and brute-force rankings and the probe
+    * selection all rank on the exact-integer cosine key
+    * ([[VectorExpressions.intCosKey]]), so no cross-engine float
+    * comparison decides a hit; only cell assignment, the rank-1 stage
+    * the e08 gate proves on its own, replays round-6 floats.
     *
-    * Efficiency contract — STRICTLY tighter than e24's, not |grid|
-    * searches: ONE candidate scan at max(nProbes) (candidates carry
-    * their cell's probe rank), ONE brute-force baseline at max(ks)
-    * (rank kept), then per probe width a single re-rank window and ONE
-    * conditional aggregate producing EVERY k's hit count from the same
-    * joined relation — sum(bf_rank<=k AND ivf_rank<=k) per k — so the
-    * k axis is free: |nProbes| windows + joins total, exactly e24's
-    * count, while the row count multiplies by |ks|. n_bf(k) divides
-    * each recall (the ADVICE-r13 denominator, per depth). At 100 TB
-    * the candidate relation is the IVF scan bound; everything after it
-    * is bounded by nq·max(k). */
+    * Efficiency contract — not |grid| searches: ONE candidate scan at
+    * max(nProbes) (candidates carry their cell's probe rank, and the
+    * candidates under n probes are a subset of those under the max),
+    * ONE brute-force baseline at max(ks) (rank kept), ONE window pass
+    * giving each candidate its rank under every probe width, and ONE
+    * conditional aggregate producing every (nProbe, k) hit count. The
+    * k axis costs no scan. `scanned_ppm` counts every vector in a
+    * probed cell (the query's own vector is excluded only at scoring,
+    * as in [[ivfSearch]]); n_bf(k) divides each recall, so a corpus
+    * with fewer than k non-degenerate neighbors per query does not bias
+    * recall low. At 100 TB the candidate relation is the IVF scan
+    * bound; everything after it is bounded by nq·max(k). */
   def ivfOperatingSweepExact(corpus: DataFrame, queries: DataFrame,
                              vecCol: String, idCol: String, ks: Seq[Int],
                              codebook: Seq[Seq[Double]],
@@ -799,160 +660,30 @@ object Similarity {
         queries, vecCol, idCol, nProbe),
       m, pqCodebook)
 
-  /** IVF-PQ OPERATING SWEEP — (nProbe × ADC-shortlist depth) jointly
-    * at fixed final k, the two knobs the PRODUCTION ANN path actually
-    * serves with: probe width buys candidate coverage (scan cost),
-    * shortlist depth buys back what lossy ADC ranking mis-orders
-    * (rerank cost — the e06 contract measured instead of assumed).
-    * Per grid cell: recall@k of [ADC-rank shortlist of depth r →
-    * EXACT rerank → top-k] against the exact brute force, next to the
-    * scanned corpus fraction. The final rerank ranks on the
-    * exact-integer cosine key and the baseline is
-    * [[bruteForceTopKExact]] (the e24/e25 gate contract); ADC scoring
-    * keeps the round-6 float replay the e05/e07/e09 gates have proven.
-    *
-    * Efficiency contract (the e25 shape deepened): ONE coded candidate
-    * scan at max(nProbes) (ADC-scored, probe rank attached); per probe
-    * width ONE ADC window cut to max(rs), and the TRUE vectors attach
-    * only to that bounded shortlist (nq·max(rs) rows — the rerank
-    * never touches the corpus); each depth then re-ranks the in-memory
-    * shortlist prefix. |nProbes| ADC windows + |nProbes| bounded
-    * attach joins total; the depth axis is windows over ≤ nq·max(rs)
-    * rows. n_bf is the depth-k baseline row count (denominator per
-    * ADVICE r13). */
-  def ivfPqOperatingSweepExact(corpus: DataFrame, queries: DataFrame,
-                               vecCol: String, idCol: String, k: Int,
-                               cellCodebook: Seq[Seq[Double]], m: Int,
-                               pqCodebook: Seq[Seq[Double]],
-                               rs: Seq[Int], nProbes: Seq[Int]): DataFrame = {
-    require(k >= 1, s"bad k $k")
-    require(rs.nonEmpty && rs.forall(_ >= k) && rs.distinct.size == rs.size,
-      s"shortlist depths must be >= k=$k and distinct, got $rs")
-    require(nProbes.nonEmpty && nProbes.forall(_ >= 1) &&
-      nProbes.distinct.size == nProbes.size, s"bad nProbes $nProbes")
-    val spark = corpus.sparkSession
-    val maxNp = nProbes.max
-    val maxR = rs.max
-    val assigned = cellAssignmentsTrained(corpus, vecCol, idCol,
-      cellCodebook).persist()
-    val coded = assigned
-      .select(col("id"), col("cell"),
-        graft.expressions.VectorExpressions
-          .pqEncode(col("v"), pqCodebook, m).as("st"))
-      .filter(col("st").isNotNull)
-      .select(col("id"), col("cell"), col("st.codes").as("codes"))
-    val cents = centsOf(spark, cellCodebook)
-    val q = queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
-    // probe ranking on the exact-integer key (r15) — THE shared
-    // [[probeRanked]] formulation across the family. No qv kept:
-    // unlike the exact sweep, ADC scoring reads the broadcast lookup
-    // tables, so caching query vectors per probe row would be dead
-    // weight (review r14 s2)
-    val probes = probeRanked(cents, queries, vecCol, idCol, maxNp)
-      .select(col("query_id"), col("cell"), col("prn"))
-      .persist()
-    val tables = adcTables(queries, vecCol, idCol, pqCodebook, m)
-    val cand = coded
-      .join(broadcast(probes.select("query_id", "cell", "prn")
-        .join(tables, Seq("query_id"))), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("adc_d2", round(adcScore(m, pqCodebook.length), 6))
-      .select(col("query_id"), col("id"), col("adc_d2"), col("prn"))
-      // materialize query_id-partitioned: the per-probe ADC window and
-      // the exact-key rerank then run with NO exchange (one shuffle
-      // here replaces one per probe width)
-      .repartition(col("query_id"))
-      .persist()
-    val bf = bruteForceTopKExact(corpus, queries, vecCol, idCol, k)
-      .select(col("query_id"), col("id")).persist()
-    val cellSizes = assigned.groupBy("cell").agg(count(lit(1)).as("cell_n"))
-    val corpusVecs = assigned.select(col("id"), col("v"))
-    val nQ = q.count()
-    val nCorpus = assigned.count()
-    val nBf = bf.count()
-    try {
-      // ONE bounded aggregate for every probe width's scanned count,
-      // and ONE window pass + ONE aggregate per probe width instead of
-      // |rs| rerank windows × |rs| count jobs — the depth-r rank of a
-      // shortlist row is the RUNNING COUNT of rows with ar ≤ r in
-      // exact-key order (row_number over the ar ≤ r subset for exactly
-      // those rows). The shortlist no longer needs a checkpoint: it is
-      // consumed by one job. (Same restructure as
-      // [[operatingGrid3dMulti]]; IvfPqGridSpec pins the cells equal.)
-      val npSorted = nProbes.sorted
-      val rsSorted = rs.sorted
-      val scanAggs = npSorted.map(np => coalesce(
-        sum(when(col("prn") <= np, col("cell_n")).otherwise(0L)), lit(0L)))
-      val scanRow = probes.join(cellSizes, Seq("cell"))
-        .agg(scanAggs.head, scanAggs.tail: _*).head
-      val rows = npSorted.zipWithIndex.flatMap { case (np, npi) =>
-        val scanned = scanRow.getLong(npi)
-        val scannedPpm =
-          if (nQ == 0 || nCorpus == 0) 0L
-          else (BigInt(1000000L) * scanned / (BigInt(nQ) * nCorpus)).toLong
-        val short = cand.filter(col("prn") <= np)
-          .withColumn("ar", row_number().over(Window.partitionBy("query_id")
-            .orderBy(col("adc_d2").asc, col("id").asc)))
-          .filter(col("ar") <= maxR)
-          // the rerank attaches TRUE vectors to the bounded shortlist
-          // only — nq·maxR rows, never the corpus
-          .join(corpusVecs, Seq("id"))
-          .join(q, Seq("query_id"))
-          .withColumn("key", VectorExpressions.intCosKey(col("v"), col("qv")))
-          .filter(col("key").isNotNull)
-          .select(col("query_id"), col("id"), col("ar"), col("key"))
-        val kw = Window.partitionBy("query_id")
-          .orderBy(col("key").desc, col("id").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val ranked = rsSorted.foldLeft(short)((df, r) =>
-          df.withColumn(s"frank_$r",
-            sum(when(col("ar") <= r, 1L).otherwise(0L)).over(kw)))
-        // bf and the shortlist are both unique per (query_id, id), so
-        // the inner join's conditional counts equal the left-semi
-        // counts the per-depth jobs produced
-        val joined = bf.join(ranked, Seq("query_id", "id"))
-        val hitAggs = rsSorted.map(r => coalesce(
-          sum(when(col("ar") <= r && col(s"frank_$r") <= k, 1L)
-            .otherwise(0L)), lit(0L)))
-        val hitRow = joined.agg(hitAggs.head, hitAggs.tail: _*).head
-        rsSorted.zipWithIndex.map { case (r, ri) =>
-          val hits = hitRow.getLong(ri)
-          (np.toLong, r.toLong, nQ, hits, nBf,
-            if (nBf == 0) 0L else 1000000L * hits / nBf, scannedPpm)
-        }
-      }
-      import spark.implicits._
-      rows.toDF("n_probe", "r_shortlist", "n_queries", "n_hits", "n_bf",
-        "recall_ppm", "scanned_ppm")
-    } finally Seq(assigned, probes, cand, bf).foreach(_.unpersist(false))
-  }
-
   /** 3-D IVF-PQ OPERATING GRID — (nProbe × ADC-shortlist depth × k)
     * JOINTLY (VERDICT r14 next-#7 / missing-#3): the table a real
-    * deployment actually tunes from. e25 covers (nProbe × k) on the
-    * exact index, e26 covers (nProbe × r) at fixed k on the PQ path;
-    * this composes both axes on the PQ path — probe width buys
-    * candidate coverage, shortlist depth buys back ADC mis-ordering,
-    * result depth k trades recall against serving cost, and all three
-    * interact (deep shortlists only pay at wide k; narrow probes cap
-    * recall regardless of r).
+    * deployment actually tunes from. Probe width buys candidate
+    * coverage, shortlist depth buys back ADC mis-ordering, result depth
+    * k trades recall against serving cost, and all three interact
+    * (deep shortlists only pay at wide k; narrow probes cap recall
+    * regardless of r). Per cell: recall@k of [ADC-rank shortlist of
+    * depth r → EXACT rerank → top-k] against the exact brute force,
+    * next to the scanned corpus fraction. The final rerank ranks on
+    * the exact-integer cosine key and the baseline is
+    * [[bruteForceTopKExact]] (the [[ivfOperatingSweepExact]] gate
+    * contract); ADC scoring keeps the round-6 float replay the
+    * e05/e07/e09 gates have proven. A single-k call is the (nProbe × r)
+    * surface at fixed k (e26 reads it off `ks = Seq(5)`).
     *
-    * Efficiency contract — e26's, with the k axis FREE (e25's trick):
-    * ONE coded candidate scan at max(nProbes); per probe width ONE ADC
-    * window cut to max(rs) with true vectors attached only to that
-    * bounded shortlist; per (probe, r) ONE exact-key re-rank window cut
-    * to max(ks) and ONE conditional aggregate emitting EVERY k's hit
-    * count — |nProbes| ADC windows + |nProbes|·|rs| re-rank windows
-    * total, row count multiplied by |ks| at zero extra scans. The
-    * baseline is [[bruteForceTopKExact]] at max(ks), rank kept, so
-    * each (k) divides by its own depth-k baseline row count (the
-    * ADVICE-r13 denominator, per depth).
-    *
-    * Every cell with k matching [[ivfPqOperatingSweepExact]]'s fixed k
-    * is spec-pinned EQUAL to that operator's (nProbe, r) point
-    * (IvfPqGridSpec) — the 3-D grid is a strict widening, not a fork. */
+    * Efficiency contract (see [[operatingGrid3dMulti]]): ONE coded
+    * candidate scan at max(nProbes); per probe width ONE ADC window cut
+    * to max(rs), with the TRUE vectors attached only to that bounded
+    * shortlist (nq·max(rs) rows — the rerank never touches the corpus),
+    * ONE exact-key window pass ranking the shortlist under every depth,
+    * and ONE conditional aggregate emitting every (r, k) hit count. The
+    * k axis costs no scan. The baseline is taken at max(ks), rank kept,
+    * so each k divides by its own depth-k baseline row count (the
+    * ADVICE-r13 denominator, per depth). */
   def ivfPqOperatingGrid3d(corpus: DataFrame, queries: DataFrame,
                            vecCol: String, idCol: String, ks: Seq[Int],
                            cellCodebook: Seq[Seq[Double]], m: Int,
@@ -1908,6 +1639,9 @@ object Similarity {
     * list, then answer top-`k` of everything visited (self excluded).
     * Fixed `hops` instead of a convergence test keeps the walk
     * replayable as unrolled SQL stages (the t33/t36 unroll contract).
+    * The flat walk is [[hnswSearch]] with ONE level whose members are
+    * the whole corpus; a maintained graph ([[nswUpsertEdges]]) is
+    * served by calling [[hnswSearch]] with its edge list.
     *
     * Determinism: every ranking — frontier, final — orders by
     * micro-unit cosine desc, id asc; duplicate visits of one node
@@ -1927,52 +1661,10 @@ object Similarity {
                     nBits: Int, bands: Int, degree: Int,
                     beamWidth: Int, hops: Int, k: Int,
                     dim: Int = 64): DataFrame =
-    nswBeamSearchWithEdges(corpus, queries, vecCol, idCol,
-      nswGraph(corpus, vecCol, idCol, nBits, bands, degree, dim),
-      beamWidth, hops, k)
-
-  /** [[nswBeamSearch]] over a CALLER-SUPPLIED edge list — the serving
-    * path for a maintained graph ([[nswUpsertEdges]]): the index is
-    * storage, the walk only reads it. */
-  def nswBeamSearchWithEdges(corpus: DataFrame, queries: DataFrame,
-                             vecCol: String, idCol: String,
-                             edgeList: DataFrame,
-                             beamWidth: Int, hops: Int, k: Int): DataFrame = {
-    require(beamWidth >= 1 && hops >= 1 && k >= 1,
-      s"need beamWidth/hops/k >= 1; got $beamWidth/$hops/$k")
-    val e = corpus.select(col(idCol).as("id"),
-        toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-      .localCheckpoint(false) // streamed per hop — decode the source once
-    val q = queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
-      .localCheckpoint(false) // reused per hop — scan the source once
-    val edges = edgeList.localCheckpoint(false)
-    val entry = e.orderBy(md5(col("id").cast(StringType)), col("id"))
-      .limit(1)
-    val fw = Window.partitionBy("query_id")
-      .orderBy(col("cos_u").desc, col("id").asc)
-    var state = q.crossJoin(broadcast(entry))
-      .select(col("query_id"), col("id"),
-        microCos(col("v"), col("qv")).as("cos_u"))
-      .repartition(col("query_id")) // hop 1's window needs no exchange
-      .localCheckpoint(false)
-    for (_ <- 1 to hops)
-      state = nswHop(state, edges, e, q, beamWidth)
-    val visited = state.groupBy("query_id")
-      .agg(count(lit(1)).as("visited"))
-    val exact = bruteForceTopK(corpus, queries, vecCol, idCol, k)
-      .select(col("query_id"), col("id"), lit(1L).as("hit"))
-    state.filter(col("id") =!= col("query_id"))
-      .withColumn("rank", row_number().over(fw))
-      .filter(col("rank") <= k)
-      .join(exact, Seq("query_id", "id"), "left")
-      .join(visited, Seq("query_id"))
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("cos_u"), coalesce(col("hit"), lit(0L)).as("hit"),
-        col("visited"))
-  }
+    hnswSearch(corpus, queries, vecCol, idCol,
+      corpus.select(col(idCol).as("id")),
+      Seq((nswGraph(corpus, vecCol, idCol, nBits, bands, degree, dim),
+        beamWidth, hops)), k)
 
   /** HIERARCHICAL NSW SEARCH — the full HNSW shape (Malkov & Yashunin,
     * TPAMI 2018): walk a cascade of graphs coarse→fine, each level's
@@ -2116,7 +1808,7 @@ object Similarity {
 
   // ONE beam hop — frontier (top-`beamWidth` visited per query), expand
   // through the edge list, score the new nodes, dedup into the state.
-  // Shared by nswBeamSearch and nswOperatingGrid so a hop-semantics
+  // Shared by hnswSearch and nswOperatingGrid so a hop-semantics
   // change can never fork the grid from the operator it measures.
   // Duplicate expansions (two frontier nodes sharing a neighbor) ride
   // through to the single state-level dedup — at most W·degree rows

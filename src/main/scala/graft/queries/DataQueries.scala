@@ -50,6 +50,31 @@ object DataQueries {
   private val h60 = // cross-engine md5 60-bit hash of a varchar expr
     (e: String) => s"CAST(('0x'||substr(md5($e),1,15)) AS BIGINT)"
 
+  /** One value per (session, sf dir) — the memo every fitted model and
+    * shared relation here goes through. `apply` builds a key at most
+    * once, even under concurrent first callers: it holds this memo's
+    * lock while building, because TrieMap.getOrElseUpdate alone may run
+    * the build twice, and a build may write parquet (two racing
+    * overwrites of one scratch dir could interleave into a corrupt
+    * relation). After the first build every call is a map hit. Entries
+    * of stopped sessions are dropped first — dead weight in a
+    * long-lived JVM that creates many sessions. `live` reads without
+    * the lock. */
+  private final class SessionMemo[V] {
+    private val entries =
+      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), V]
+    def apply(s: SparkSession, dir: String)(build: => V): V = synchronized {
+      entries.keys.foreach { case k @ (sess, _) =>
+        if (sess.sparkContext.isStopped) entries.remove(k)
+      }
+      entries.getOrElseUpdate((s, dir), build)
+    }
+    /** The value built for `dir` under any live session, if there is one. */
+    def live(dir: String): Option[V] = entries.collectFirst {
+      case ((sess, d), v) if d == dir && !sess.sparkContext.isStopped => v
+    }
+  }
+
   // -------------------------------------------------------------------
   // Dedup
   // -------------------------------------------------------------------
@@ -87,21 +112,9 @@ object DataQueries {
     * next-#7). Correctness does not depend on the cache: if the entry
     * was unpersisted (e.g. Bench's clearCache between queries) the
     * lineage recomputes the identical deterministic result. */
-  private val sharedPairs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val sharedPairs = new SessionMemo[DataFrame]
   private def minhashPairsShared(s: SparkSession, dir: String): DataFrame =
-    // synchronized: TrieMap.getOrElseUpdate may evaluate the thunk more
-    // than once under concurrent first callers — here the thunk WRITES
-    // parquet, and two racing overwrite writes to the same scratch dir
-    // could interleave into a corrupt relation. Coarse lock is fine:
-    // after the first build every call is a map hit.
-    synchronized {
-    // entries for stopped sessions are dead weight in a long-lived JVM
-    // that creates many sessions — drop them before (possibly) adding one
-    sharedPairs.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) sharedPairs.remove(k)
-    }
-    sharedPairs.getOrElseUpdate((s, dir), {
+    sharedPairs(s, dir) {
       val pairs = Dedup.minhashPairs(Catalog(s, dir).documents, "text", "doc_id",
         n = 3, k = 16, bands = 4, threshold = 0.2)
       // materialized to a scratch PARQUET, not persist(): the cache
@@ -123,8 +136,7 @@ object DataQueries {
       val out = graft.io.Scratch.dir(s, "pairs_" + dirKey)
       pairs.write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
-  }
+    }
 
   val d02MinhashPairs: Q = (s, dir) =>
     minhashPairsShared(s, dir)
@@ -654,37 +666,39 @@ object DataQueries {
 
   private val sweepNProbes = Seq(1, 2, 4, 8)
 
-  /** NPROBE↔RECALL TUNING SWEEP (e24 — [[Similarity.ivfRecallSweep]]):
-    * the cost/recall CURVE a serving deployment picks its probe width
-    * from — e18 measures recall at ONE operating point; this is the
-    * table you tune against: per nProbe ∈ {1,2,4,8} (of 16 cells),
-    * recall@5 vs the exact brute-force baseline next to the fraction
-    * of the corpus the probe scans, both in exact integer ppm
-    * (integer division — NO float column in the result at all).
+  /** NPROBE↔RECALL TUNING SWEEP (e24 — the k = 5 column of
+    * [[Similarity.ivfOperatingSweepExact]]): the cost/recall CURVE a
+    * serving deployment picks its probe width from — e18 measures
+    * recall at ONE operating point; this is the table you tune
+    * against: per nProbe ∈ {1,2,4,8} (of 16 cells), recall@5 vs the
+    * exact brute-force baseline next to the fraction of the corpus the
+    * probe scans, both in exact integer ppm (integer division — NO
+    * float column in the result at all).
     *
-    * Efficiency contract (spec-pinned): the sweep costs ONE candidate
-    * scan at max nProbe — candidates carry their cell's probe rank,
-    * and each narrower width is a re-rank of the prefix (candidates
-    * under n probes ⊂ candidates under max) — not Σ independent
-    * searches. At 100 TB the candidate relation is the scanned-pairs
-    * bound the IVF contract already imposes; the 4 re-windows are
-    * over that bounded relation.
+    * Efficiency contract: the sweep costs ONE candidate scan at max
+    * nProbe — candidates carry their cell's probe rank, and each
+    * narrower width is a re-rank of the prefix (candidates under n
+    * probes ⊂ candidates under max) — not Σ independent searches;
+    * OperatorsSpec "e24 curve: each width's prefix re-rank equals an
+    * independent search" pins the result. At 100 TB the candidate
+    * relation is the scanned-pairs bound the IVF contract already
+    * imposes.
     *
-    * r14 (VERDICT next-#1b): the GATE ranks candidates and the
-    * brute-force baseline on the exact-integer cosine key
+    * Gate contract: candidates, the brute-force baseline and the probe
+    * selection all rank on the exact-integer cosine key
     * ([[graft.expressions.IntCosKeyExpr]] — floor(1e6·|cos|)·sign of
-    * the micro-quantized vectors), so the enlarged width-8 comparison
-    * surface contains no cross-engine float compare at all; cell
-    * assignment and probe selection keep the round-6 replay the
-    * e02/e17/e18 gates have proven green for three rounds. The float
-    * sweep stays the production operator, spec-pinned equal on this
-    * corpus (IvfSpec). recall_ppm divides by the brute-force rows
-    * actually available, not k·nq (ADVICE r13). */
+    * the micro-quantized vectors), so the width-8 comparison surface
+    * contains no cross-engine float compare; cell assignment keeps the
+    * round-6 replay the e02/e17/e18 gates have proven. recall_ppm
+    * divides by the brute-force rows actually available, not k·nq
+    * (ADVICE r13). */
   val e24RecallSweep: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfRecallSweepExact(emb, emb.filter(col("vec_id") % 100 === 0),
-        "embedding", "vec_id", k = 5,
-        codebook = kmModel(s, dir).centroids, nProbes = sweepNProbes)
+    Similarity.ivfOperatingSweepExact(emb,
+        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
+        ks = Seq(5), codebook = kmModel(s, dir).centroids,
+        nProbes = sweepNProbes)
+      .select("n_probe", "n_queries", "n_hits", "recall_ppm", "scanned_ppm")
       .orderBy(col("n_probe"))
   }
 
@@ -951,24 +965,25 @@ object DataQueries {
   private val pqGridRs = Seq(5, 10, 20)
   private val pqGridNps = Seq(1, 2, 4)
 
-  /** IVF-PQ OPERATING GRID (e26 — [[Similarity
-    * .ivfPqOperatingSweepExact]]): the PRODUCTION ANN path's two
-    * serving knobs measured jointly — probe width × ADC-shortlist
-    * depth at fixed k=5, each cell's recall@5 of [lossy-ADC shortlist
-    * → exact rerank → top-5] against the brute force, next to the
-    * scanned fraction. The e06 rerank contract measured instead of
-    * assumed: depth buys back what 8-bit codes mis-order, probes buy
-    * candidate coverage, and the grid shows which knob is binding.
-    * Gate contract: the final rerank and the baseline rank on the
+  /** IVF-PQ OPERATING GRID (e26 — the k = 5 slice of [[Similarity
+    * .ivfPqOperatingGrid3d]]): the PRODUCTION ANN path's two serving
+    * knobs measured jointly — probe width × ADC-shortlist depth at
+    * fixed k=5, each cell's recall@5 of [lossy-ADC shortlist → exact
+    * rerank → top-5] against the brute force, next to the scanned
+    * fraction. The e06 rerank contract measured instead of assumed:
+    * depth buys back what 8-bit codes mis-order, probes buy candidate
+    * coverage, and the grid shows which knob is binding. Gate
+    * contract: the final rerank and the baseline rank on the
     * exact-integer cosine key (e24/e25); ADC scoring keeps the round-6
     * replay the e05/e07/e09 gates have proven. The oracle replays BOTH
     * quantizer trainings + the ADC chain + every rerank window. */
   val e26PqGrid: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfPqOperatingSweepExact(emb,
+    Similarity.ivfPqOperatingGrid3d(emb,
         emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        k = 5, cellCodebook = kmModel(s, dir).centroids, m = 4,
+        ks = Seq(5), cellCodebook = kmModel(s, dir).centroids, m = 4,
         pqCodebook = pqModel(s, dir), rs = pqGridRs, nProbes = pqGridNps)
+      .drop("k")
       .orderBy(col("n_probe"), col("r_shortlist"))
   }
 
@@ -1067,10 +1082,9 @@ object DataQueries {
     * production ANN path actually tunes from (VERDICT r14 next-#7).
     * Gate contract: the e24/e25/e26 integer-key chain end-to-end —
     * exact-key rerank, depth-k brute-force denominators, integer ppm;
-    * the k axis costs one conditional aggregate per (probe, r) cell.
-    * Every k=5 cell is spec-pinned equal to the e26 single point at
-    * matching (nProbe, r) (IvfPqGridSpec), so the 3-D grid is a strict
-    * widening of the shipped 2-D operators, never a fork. */
+    * the k axis costs no scan. e26 is this operator's k = 5 slice;
+    * OperatorsSpec "ivfPqOperatingGrid3d: every k-matching cell equals
+    * the e26 2-D point" pins a multi-k grid's k = 5 cells equal to it. */
   val e27Grid3d: Q = (s, dir) =>
     grid3dRelation(s, dir)
       .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
@@ -1764,7 +1778,8 @@ object DataQueries {
     * best co-bucketed neighbors; touched base nodes merge the
     * newcomers into their lists and re-cap at degree — cost O(delta ×
     * bucket population + affected rows), never O(rebuild)), then
-    * serves the e40 beam walk over the union with the UPSERTED edges.
+    * serves the e40 beam walk (one [[Similarity.hnswSearch]] level
+    * whose members are the whole union) with the UPSERTED edges.
     * The oracle replays the BATCH build on the union — hash equality
     * proves upsert ≡ rebuild cross-engine (the top-degree dominance
     * argument, pinned algebraically in NswSpec). Queries include
@@ -1775,9 +1790,10 @@ object DataQueries {
     val delta = emb.filter(col("vec_id") % 10 === 0)
     val edges = Similarity.nswUpsertEdges(base, delta, "embedding",
       "vec_id", nBits = nswNBits, bands = nswBands, degree = nswDegree)
-    Similarity.nswBeamSearchWithEdges(emb,
+    Similarity.hnswSearch(emb,
         emb.filter(col("vec_id") % 125 === 0), "embedding", "vec_id",
-        edges, beamWidth = 16, hops = 6, k = 10)
+        entryMembers = emb.select(col("vec_id").as("id")),
+        levels = Seq((edges, 16, 6)), k = 10)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2219,19 +2235,14 @@ object DataQueries {
   /** Memoized coarse fit on the BASE corpus only (vec_id % 3 != 0) —
     * e20's frozen quantizer: the index is built from the base, later
     * batches upsert against the SAME codebook without retraining. */
-  private val kmBaseModels =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), KMeans.Model]
+  private val kmBaseModels = new SessionMemo[KMeans.Model]
   private def kmBaseModel(s: SparkSession, dir: String): KMeans.Model =
-    kmBaseModels.synchronized {
-      kmBaseModels.keys.foreach { case kk @ (sess, _) =>
-        if (sess.sparkContext.isStopped) kmBaseModels.remove(kk)
-      }
-      kmBaseModels.getOrElseUpdate((s, dir),
-        KMeans.fit(Catalog(s, dir).embeddings
-            .filter(pmod(col("vec_id"), lit(3L)) =!= 0),
-          "embedding", "vec_id", k = kmK, dim = kmDim,
-          initRounds = kmRounds, oversample = kmL, iters = kmIters,
-          seedTag = "kb"))
+    kmBaseModels(s, dir) {
+      KMeans.fit(Catalog(s, dir).embeddings
+          .filter(pmod(col("vec_id"), lit(3L)) =!= 0),
+        "embedding", "vec_id", k = kmK, dim = kmDim,
+        initRounds = kmRounds, oversample = kmL, iters = kmIters,
+        seedTag = "kb")
     }
 
   /** MAINTAINED-index serving ([[Similarity.ivfTopKOnAssigned]] /
@@ -2480,14 +2491,10 @@ object DataQueries {
     val fitInput = emb.filter(
       pmod(md5Long(concat(lit("ksmp|"), col("vec_id").cast(StringType))),
         lit(4L)) === 0)
-    val m = kmSampledModels.synchronized {
-      kmSampledModels.keys.foreach { case kk @ (sess, _) =>
-        if (sess.sparkContext.isStopped) kmSampledModels.remove(kk)
-      }
-      kmSampledModels.getOrElseUpdate((s, dir),
-        KMeans.fit(fitInput, "embedding", "vec_id", k = kmK, dim = kmDim,
-          initRounds = kmRounds, oversample = kmL, iters = kmIters,
-          seedTag = "ks"))
+    val m = kmSampledModels(s, dir) {
+      KMeans.fit(fitInput, "embedding", "vec_id", k = kmK, dim = kmDim,
+        initRounds = kmRounds, oversample = kmL, iters = kmIters,
+        seedTag = "ks")
     }
     Similarity.cellAssignmentsTrained(emb, "embedding", "vec_id", m.centroids)
       .withColumn("cell_size", count(lit(1)).over(
@@ -2495,8 +2502,7 @@ object DataQueries {
       .select(col("id").as("vec_id"), col("cell"), col("cell_size"))
       .orderBy(col("vec_id"))
   }
-  private val kmSampledModels =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), KMeans.Model]
+  private val kmSampledModels = new SessionMemo[KMeans.Model]
 
   lazy val e10Sql: String =
     s"""WITH e0 AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2615,21 +2621,15 @@ object DataQueries {
     * split as e02/e05/e07/e09, so recall probes compare directly. */
   private final val opqP = 4 // Householder reflectors in R
   private lazy val opqReflectors = Opq.reflectors(opqP, kmDim)
-  private val opqModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (KMeans.Model, Seq[Seq[Double]])]
+  private val opqModels = new SessionMemo[(KMeans.Model, Seq[Seq[Double]])]
   private def opqModel(s: SparkSession, dir: String)
-      : (KMeans.Model, Seq[Seq[Double]]) = synchronized {
-    opqModels.keys.foreach { case kk @ (sess, _) =>
-      if (sess.sparkContext.isStopped) opqModels.remove(kk)
-    }
-    opqModels.getOrElseUpdate((s, dir), {
-      val rot = Opq.rotate(Catalog(s, dir).embeddings, "embedding", "vec_id",
-        opqReflectors)
-      (KMeans.fit(rot, "v", "id", k = kmK, dim = kmDim,
-          initRounds = kmRounds, oversample = kmL, iters = kmIters),
-        KMeans.fitPqCodebook(rot, "v", "id", m = 4, kCent = kmK, dim = kmDim,
-          initRounds = kmRounds, oversample = kmL, iters = kmIters))
-    })
+      : (KMeans.Model, Seq[Seq[Double]]) = opqModels(s, dir) {
+    val rot = Opq.rotate(Catalog(s, dir).embeddings, "embedding", "vec_id",
+      opqReflectors)
+    (KMeans.fit(rot, "v", "id", k = kmK, dim = kmDim,
+        initRounds = kmRounds, oversample = kmL, iters = kmIters),
+      KMeans.fitPqCodebook(rot, "v", "id", m = 4, kCent = kmK, dim = kmDim,
+        initRounds = kmRounds, oversample = kmL, iters = kmIters))
   }
 
   val e11OpqIvfPq: Q = (s, dir) => {
@@ -2677,20 +2677,14 @@ object DataQueries {
     * .ivfPqResidualTopK]]. The oracle replays coarse fit → assignment
     * → residuals → 4 residual sub-fits → per-probe-cell ADC, all from
     * md5 + parquet. Same query split as e02/e05/e07/e09/e11. */
-  private val residModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Seq[Double]]]
+  private val residModels = new SessionMemo[Seq[Seq[Double]]]
   private def residModel(s: SparkSession, dir: String): Seq[Seq[Double]] =
-    synchronized {
-      residModels.keys.foreach { case kk @ (sess, _) =>
-        if (sess.sparkContext.isStopped) residModels.remove(kk)
-      }
-      residModels.getOrElseUpdate((s, dir), {
-        val resid = Similarity.cellResiduals(Catalog(s, dir).embeddings,
-          "embedding", "vec_id", kmModel(s, dir).centroids)
-        KMeans.fitPqCodebook(resid, "rv", "id", m = 4, kCent = kmK,
-          dim = kmDim, initRounds = kmRounds, oversample = kmL,
-          iters = kmIters)
-      })
+    residModels(s, dir) {
+      val resid = Similarity.cellResiduals(Catalog(s, dir).embeddings,
+        "embedding", "vec_id", kmModel(s, dir).centroids)
+      KMeans.fitPqCodebook(resid, "rv", "id", m = 4, kCent = kmK,
+        dim = kmDim, initRounds = kmRounds, oversample = kmL,
+        iters = kmIters)
     }
 
   val e12IvfPqResidual: Q = (s, dir) => {
@@ -3017,34 +3011,23 @@ object DataQueries {
   /** One trained model per (session, sf dir): the fit is an eager
     * driver-orchestrated procedure (~2·rounds+iters bounded jobs), so
     * e08 and any trained-cell consumers share a single fit instead of
-    * re-running it per query. Same lifecycle contract as
-    * [[minhashPairsShared]] (entries for stopped sessions dropped). */
-  private val kmModels =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), KMeans.Model]
+    * re-running it per query (a [[SessionMemo]]). */
+  private val kmModels = new SessionMemo[KMeans.Model]
   private[queries] def kmModel(s: SparkSession, dir: String): KMeans.Model =
-    synchronized {
-      kmModels.keys.foreach { case kk @ (sess, _) =>
-        if (sess.sparkContext.isStopped) kmModels.remove(kk)
-      }
-      kmModels.getOrElseUpdate((s, dir),
-        KMeans.fit(Catalog(s, dir).embeddings, "embedding", "vec_id",
-          k = kmK, dim = kmDim, initRounds = kmRounds,
-          oversample = kmL, iters = kmIters))
+    kmModels(s, dir) {
+      KMeans.fit(Catalog(s, dir).embeddings, "embedding", "vec_id",
+        k = kmK, dim = kmDim, initRounds = kmRounds,
+        oversample = kmL, iters = kmIters)
     }
 
   /** One trained PACKED PQ codebook per (session, sf dir) — 4 L2
     * sub-fits; same memoization contract as [[kmModel]]. */
-  private val pqModels =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Seq[Double]]]
+  private val pqModels = new SessionMemo[Seq[Seq[Double]]]
   private[queries] def pqModel(s: SparkSession, dir: String): Seq[Seq[Double]] =
-    synchronized {
-      pqModels.keys.foreach { case kk @ (sess, _) =>
-        if (sess.sparkContext.isStopped) pqModels.remove(kk)
-      }
-      pqModels.getOrElseUpdate((s, dir),
-        KMeans.fitPqCodebook(Catalog(s, dir).embeddings, "embedding",
-          "vec_id", m = 4, kCent = kmK, dim = kmDim,
-          initRounds = kmRounds, oversample = kmL, iters = kmIters))
+    pqModels(s, dir) {
+      KMeans.fitPqCodebook(Catalog(s, dir).embeddings, "embedding",
+        "vec_id", m = 4, kCent = kmK, dim = kmDim,
+        initRounds = kmRounds, oversample = kmL, iters = kmIters)
     }
 
   /** Trained-cell assignment (vec_id, cell, cell_size) under the
@@ -4097,30 +4080,22 @@ object DataQueries {
       fit: (SparkSession, String) => M,
       write: (String, M, String) => Unit,
       read: String => Option[(M, String)]) {
-    private val memo = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), M]
+    private val memo = new SessionMemo[M]
     // dump-path memo: one PROVENANCE-VALIDATED literal per dir per JVM
     // (review r14: an oracle dump materializes t21+t23+t28 strings
     // against the same dir — without this, each materialization re-ran
     // the documents-table fingerprint scan and sidecar parse)
     private val validated = scala.collection.concurrent.TrieMap
       .empty[String, M]
-    def forQuery(s: SparkSession, dir: String): M = synchronized {
-      memo.keys.foreach { case kk @ (sess, _) =>
-        if (sess.sparkContext.isStopped) memo.remove(kk)
-      }
-      memo.getOrElseUpdate((s, dir), {
-        val m = fit(s, dir)
-        // persist for cross-JVM oracle dumps, provenance-stamped with
-        // the content the fit actually consumed
-        write(dir, m, graft.io.ContentFingerprint.of(s, dir, "documents"))
-        m
-      })
+    def forQuery(s: SparkSession, dir: String): M = memo(s, dir) {
+      val m = fit(s, dir)
+      // persist for cross-JVM oracle dumps, provenance-stamped with
+      // the content the fit actually consumed
+      write(dir, m, graft.io.ContentFingerprint.of(s, dir, "documents"))
+      m
     }
     def literal(dir: String): M =
-      memo.collectFirst {
-        case ((s, d), m) if d == dir && !s.sparkContext.isStopped => m
-      }.orElse(validated.get(dir)).getOrElse {
+      memo.live(dir).orElse(validated.get(dir)).getOrElse {
         // both the provenance CHECK and a bootstrap fit need a session
         val live = SparkSession.getActiveSession
           .filter(!_.sparkContext.isStopped)

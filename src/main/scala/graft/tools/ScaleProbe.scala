@@ -965,25 +965,11 @@ object ScaleProbe {
           m = 1 << 20, kh = 3)
       }
     }
-    // e24 nprobe↔recall sweep: must cost ONE search at max width (the
-    // candidate scan dominates; 4 re-windows over the bounded candidate
-    // relation), not Σ independent searches. r14: probes the EXACT
-    // integer-key gate form (what e24 now gates) — must hold the float
-    // sweep's flat profile (r13: 10.01/10.14/11.30 s at 1x/16x/64x).
-    stage("recall_sweep") {
-      t(s"recall_sweep_${replicas}x") {
-        val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-          k = 16, dim = 64, iters = 3).centroids
-        graft.operators.Similarity.ivfRecallSweepExact(embBig,
-          emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-          k = 5, codebook = cb, nProbes = Seq(1, 2, 4, 8))
-      }
-    }
-    // e25 operating grid (r14 session 2): the k axis must be FREE —
-    // tripling the grid's rows over recall_sweep adds only the deeper
-    // (kMax=10) baseline window plus one conditional aggregate per
-    // probe width, so the cost profile must track recall_sweep's, not
-    // 3x it.
+    // e25 operating grid (and e24, its k=5 column): must cost ONE
+    // search at max width, not Σ independent searches — the candidate
+    // scan dominates; the k axis adds only the deeper (kMax=10)
+    // baseline window and one conditional aggregate, so tripling the
+    // rows must not triple the cost.
     stage("operating_grid") {
       t(s"operating_grid_${replicas}x") {
         val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
@@ -993,26 +979,10 @@ object ScaleProbe {
           ks = Seq(1, 5, 10), codebook = cb, nProbes = Seq(1, 2, 4, 8))
       }
     }
-    // e26 IVF-PQ grid (r14 session 2): the rerank must touch only the
-    // bounded nq x max(r) shortlist — cost tracks the coded candidate
-    // scan (the e07 IVF-PQ bound), not the grid size, and stays flat
-    // like operating_grid's.
-    stage("pq_grid") {
-      t(s"pq_grid_${replicas}x") {
-        val cellCb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-          k = 16, dim = 64, iters = 3).centroids
-        val pqCb = graft.operators.KMeans.fitPqCodebook(emb, "embedding",
-          "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
-        graft.operators.Similarity.ivfPqOperatingSweepExact(embBig,
-          emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-          k = 5, cellCodebook = cellCb, m = 4, pqCodebook = pqCb,
-          rs = Seq(5, 10, 20), nProbes = Seq(1, 2, 4))
-      }
-    }
-    // e27 3-D grid (r15): the k axis must stay FREE on the PQ path —
-    // the cost profile must track pq_grid's (same coded scan, same ADC
-    // windows; the extra |rs| re-rank windows run over the bounded
-    // nq·max(r) shortlist), not multiply by |ks|.
+    // e27 3-D grid (and e26, its k=5 slice): the rerank must touch
+    // only the bounded nq x max(r) shortlist — cost tracks the coded
+    // candidate scan (the e07 IVF-PQ bound), not the grid size, and
+    // the k axis must stay FREE (not multiply the cost by |ks|).
     stage("grid3d") {
       t(s"grid3d_${replicas}x") {
         val cellCb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",

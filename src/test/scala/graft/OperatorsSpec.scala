@@ -7,6 +7,16 @@ import org.apache.spark.sql.functions._
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
+  // The coarse-cell and PQ codebooks the IVF grid tests share, fitted
+  // once on the sf0.001 corpus. Both fits are deterministic, so each
+  // test gets the codebook it would have fitted itself.
+  private lazy val emb001 =
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+  private lazy val cellCb = graft.operators.KMeans.fit(emb001, "embedding",
+    "vec_id", k = 8, dim = 64, iters = 3).centroids
+  private lazy val pqCb = graft.operators.KMeans.fitPqCodebook(emb001,
+    "embedding", "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
+
   test("wordShingles: distinct 3-grams, short docs -> empty") {
     val got = Seq("a b c d a b c d", "a b", "").toDF("t")
       .select(Dedup.wordShingles($"t", 3)).collect().map(_.getSeq[String](0))
@@ -107,13 +117,13 @@ class OperatorsSpec extends SparkSpec {
     assert(res.map(_.getLong(1)).toSeq == Seq(1L, 2L))
   }
 
-  test("ivfRecallSweep: curve is monotone, full-width probe recovers brute force") {
+  test("e24 curve: monotone in probe width, full-width probe recovers brute force") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val rows = Similarity.ivfRecallSweep(emb, queries, "embedding", "vec_id",
-        k = 5, codebook = cb, nProbes = Seq(1, 2, 4, 8))
+    // e24's projection of the k=5 sweep
+    val rows = Similarity.ivfOperatingSweepExact(emb, queries, "embedding",
+        "vec_id", ks = Seq(5), codebook = cellCb, nProbes = Seq(1, 2, 4, 8))
+      .select("n_probe", "n_queries", "n_hits", "recall_ppm", "scanned_ppm")
       .orderBy("n_probe").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 4L, 8L))
     // n_queries constant across the sweep
@@ -133,24 +143,6 @@ class OperatorsSpec extends SparkSpec {
     rows.foreach { r =>
       assert(r.getLong(3) == 1000000L * r.getLong(2) / (5L * r.getLong(1)))
     }
-  }
-
-  test("ivfRecallSweepExact: integer-key gate equals the float sweep off-boundary") {
-    // the e24 hash gate ranks by floor(1e6*|cos|)*sign of the
-    // micro-quantized vectors; on the shipped corpus (no cosine ties at
-    // 1e-6 granularity between rank-k and rank-k+1 candidates) the
-    // whole curve must match the float production operator row for row
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = emb.filter($"vec_id" % 100 === 0)
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val f = Similarity.ivfRecallSweep(emb, queries, "embedding", "vec_id",
-        k = 5, codebook = cb, nProbes = Seq(1, 2, 4, 8))
-      .orderBy("n_probe").collect().map(_.toSeq)
-    val x = Similarity.ivfRecallSweepExact(emb, queries, "embedding", "vec_id",
-        k = 5, codebook = cb, nProbes = Seq(1, 2, 4, 8))
-      .orderBy("n_probe").collect().map(_.toSeq)
-    assert(f.toSeq == x.toSeq, s"float ${f.toSeq} vs exact ${x.toSeq}")
   }
 
   test("intCosKey: matches an exact BigDecimal reference, signs and nulls") {
@@ -196,52 +188,51 @@ class OperatorsSpec extends SparkSpec {
     got.values.flatten.foreach(k => assert(math.abs(k) <= 1000000L))
   }
 
-  test("ivfRecallSweep: each width's prefix re-rank equals an independent search") {
+  test("e24 curve: each width's prefix re-rank equals an independent search") {
     // the sweep's efficiency trick (one candidate scan at max width,
     // re-rank per prefix) must be RESULT-identical to running
-    // ivfTopKTrained separately at each width
+    // ivfTopKTrained separately at each width. The independent search
+    // and its brute-force truth rank on round-6 float cosines while the
+    // sweep ranks on the exact-integer key; the shipped corpus has no
+    // cosine tie at 1e-6 between rank-k and rank-k+1 candidates, so the
+    // two orderings must agree here.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val sweep = Similarity.ivfRecallSweep(emb, queries, "embedding", "vec_id",
-        k = 5, codebook = cb, nProbes = Seq(1, 2, 4))
+    val sweep = Similarity.ivfOperatingSweepExact(emb, queries, "embedding",
+        "vec_id", ks = Seq(5), codebook = cellCb, nProbes = Seq(1, 2, 4))
       .orderBy("n_probe").collect()
     val bf = Similarity.bruteForceTopK(emb, queries, "embedding", "vec_id", 5)
       .select($"query_id", $"id")
     Seq(1, 2, 4).zipWithIndex.foreach { case (np, i) =>
       val ivf = Similarity.ivfTopKTrained(emb, queries, "embedding", "vec_id",
-        k = 5, codebook = cb, nProbe = np).select($"query_id", $"id")
+        k = 5, codebook = cellCb, nProbe = np).select($"query_id", $"id")
       val hits = bf.join(ivf, Seq("query_id", "id"), "left_semi").count()
-      assert(sweep(i).getLong(2) == hits,
-        s"nProbe=$np: sweep hits ${sweep(i).getLong(2)} != independent $hits")
+      assert(sweep(i).getLong(3) == hits,
+        s"nProbe=$np: sweep hits ${sweep(i).getLong(3)} != independent $hits")
     }
   }
 
   test("ivfOperatingSweepExact: every grid cell equals the independent single-point sweep; axes behave") {
     // the k axis must be FREE but exact: each (nProbe, k) row of the
-    // 2-D grid — computed from ONE conditional aggregate per probe
-    // width — must equal ivfRecallSweepExact run independently at that
-    // (k, nProbe) point, and the surface must be monotone in nProbe at
-    // fixed k (wider probes never lose hits)
+    // 2-D grid — computed from ONE window pass and ONE conditional
+    // aggregate for the whole grid — must equal the sweep run alone at
+    // that (k, nProbe) point, and the surface must be monotone in
+    // nProbe at fixed k (wider probes never lose hits)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val grid = Similarity.ivfOperatingSweepExact(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5, 10), codebook = cb, nProbes = Seq(1, 2, 4))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
+    def cells(ks: Seq[Int], nProbes: Seq[Int]) =
+      Similarity.ivfOperatingSweepExact(emb, queries, "embedding", "vec_id",
+          ks = ks, codebook = cellCb, nProbes = nProbes)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) ->
+          (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
+    val grid = cells(Seq(1, 5, 10), Seq(1, 2, 4))
     assert(grid.size == 9)
     for (np <- Seq(1, 2, 4); kk <- Seq(1, 5, 10)) {
-      val pt = Similarity.ivfRecallSweepExact(emb, queries, "embedding",
-        "vec_id", k = kk, codebook = cb, nProbes = Seq(np)).head
-      val (hits, nbf, rec, scn) = grid((np.toLong, kk.toLong))
-      assert(hits == pt.getLong(2),
-        s"(np=$np,k=$kk): grid hits $hits != independent ${pt.getLong(2)}")
-      assert(rec == pt.getLong(3), s"(np=$np,k=$kk): recall $rec vs ${pt.getLong(3)}")
-      assert(scn == pt.getLong(4), s"(np=$np,k=$kk): scanned $scn vs ${pt.getLong(4)}")
+      val pt = cells(Seq(kk), Seq(np))
+      val cell @ (hits, nbf, rec, _) = grid((np.toLong, kk.toLong))
+      assert(pt.size == 1 && cell == pt((np.toLong, kk.toLong)),
+        s"(np=$np,k=$kk): grid $cell != independent ${pt.values.head}")
       assert(nbf > 0 && rec == 1000000L * hits / nbf)
     }
     // monotone in probe width at fixed depth
@@ -251,29 +242,34 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("ivfPqOperatingSweepExact: every grid cell equals the shipped-operator composition; shortlist depth is monotone") {
-    // independent reference per (np, r): ivfPqTopKFullyTrained at k=r
-    // IS the ADC shortlist; exact-key rerank of those ids to top-5 is
-    // the serving path composed from already-gated operators
+  test("ivfPqOperatingGrid3d: every k-matching cell equals the e26 2-D point; k axis consistent with its own baselines (r15)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val cellCb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val pqCb = graft.operators.KMeans.fitPqCodebook(emb, "embedding",
-      "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
-    val grid = Similarity.ivfPqOperatingSweepExact(emb, queries,
-        "embedding", "vec_id", k = 5, cellCodebook = cellCb, m = 4,
+    def grid(ks: Seq[Int]) = Similarity.ivfPqOperatingGrid3d(emb, queries,
+        "embedding", "vec_id", ks = ks, cellCodebook = cellCb, m = 4,
         pqCodebook = pqCb, rs = Seq(5, 10), nProbes = Seq(1, 2))
       .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
-    assert(grid.size == 4)
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
+        (r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
+    val g3 = grid(Seq(1, 5))
+    assert(g3.size == 8)
+    // the k axis is free: at k=5 every (np, r) cell equals the e26
+    // 2-D point (the single-k grid e26 slices), all four columns
+    val g2 = grid(Seq(5))
+    assert(g2.size == 4)
+    for (np <- Seq(1L, 2L); r <- Seq(5L, 10L))
+      assert(g3((np, r, 5L)) == g2((np, r, 5L)),
+        s"(np=$np,r=$r,k=5): 3-D ${g3((np, r, 5L))} != 2-D ${g2((np, r, 5L))}")
+    // every k=5 cell's hits equal the serving path composed from
+    // already-gated operators: ivfPqTopKFullyTrained at k=r IS the ADC
+    // shortlist; exact-key rerank of those ids to top-5, scored
+    // against the exact-key brute force
     val bf = Similarity.bruteForceTopKExact(emb, queries, "embedding",
       "vec_id", 5).select($"query_id", $"id")
     val vecs = emb.select($"vec_id".as("id"),
       graft.functions.GraftFunctions.toDoubleArray($"embedding").as("v"))
-    val qv = emb.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("query_id"),
-        graft.functions.GraftFunctions.toDoubleArray($"embedding").as("qv"))
+    val qv = queries.select($"vec_id".as("query_id"),
+      graft.functions.GraftFunctions.toDoubleArray($"embedding").as("qv"))
     for (np <- Seq(1, 2); r <- Seq(5, 10)) {
       val shortlist = Similarity.ivfPqTopKFullyTrained(emb, queries,
         "embedding", "vec_id", k = r, cellCodebook = cellCb, nProbe = np,
@@ -288,41 +284,9 @@ class OperatorsSpec extends SparkSpec {
         .filter($"frank" <= 5)
         .select($"query_id", $"id")
       val hits = bf.join(reranked, Seq("query_id", "id"), "left_semi").count()
-      assert(grid((np.toLong, r.toLong)) == hits,
-        s"(np=$np,r=$r): grid ${grid((np.toLong, r.toLong))} != composed $hits")
+      assert(g2((np.toLong, r.toLong, 5L))._1 == hits,
+        s"(np=$np,r=$r): grid ${g2((np.toLong, r.toLong, 5L))._1} != composed $hits")
     }
-    // a deeper shortlist can only add candidates the exact rerank may
-    // promote: hits monotone in r at fixed np
-    Seq(1L, 2L).foreach { np =>
-      assert(grid((np, 5L)) <= grid((np, 10L)), grid.toString)
-    }
-  }
-
-  test("ivfPqOperatingGrid3d: every k-matching cell equals the e26 2-D point; k axis consistent with its own baselines (r15)") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = emb.filter($"vec_id" % 100 === 0)
-    val cellCb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val pqCb = graft.operators.KMeans.fitPqCodebook(emb, "embedding",
-      "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
-    val g3 = Similarity.ivfPqOperatingGrid3d(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5), cellCodebook = cellCb, m = 4,
-        pqCodebook = pqCb, rs = Seq(5, 10), nProbes = Seq(1, 2))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
-        (r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
-    assert(g3.size == 8)
-    // the 3-D grid is a strict widening: at k=5 every (np, r) cell
-    // equals the shipped 2-D operator's point, all four columns
-    val g2 = Similarity.ivfPqOperatingSweepExact(emb, queries,
-        "embedding", "vec_id", k = 5, cellCodebook = cellCb, m = 4,
-        pqCodebook = pqCb, rs = Seq(5, 10), nProbes = Seq(1, 2))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
-    for (np <- Seq(1L, 2L); r <- Seq(5L, 10L))
-      assert(g3((np, r, 5L)) == g2((np, r)),
-        s"(np=$np,r=$r,k=5): 3-D ${g3((np, r, 5L))} != 2-D ${g2((np, r))}")
     // per-depth denominators and ppm arithmetic exact
     g3.foreach { case ((np, r, kk), (h, nbf, rec, _)) =>
       assert(nbf > 0 && rec == 1000000L * h / nbf, s"($np,$r,$kk)")
@@ -911,10 +875,6 @@ class OperatorsSpec extends SparkSpec {
   test("ivfFamilyOperatingGrids: shared-substrate cells equal the standalone grids exactly (r16, +bq r17)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val pqCb = graft.operators.KMeans.fitPqCodebook(emb, "embedding",
-      "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
     val thr = Similarity.bqTrain(emb, "embedding", "vec_id")
     def key(r: org.apache.spark.sql.Row, fam: String) =
@@ -922,21 +882,21 @@ class OperatorsSpec extends SparkSpec {
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
           r.getLong(7))
     val shared = Similarity.ivfFamilyOperatingGrids(emb, queries,
-        "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb, m = 4,
+        "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cellCb, m = 4,
         pqCodebook = pqCb, mins = mins, scales = scales,
         bqThresholds = thr, rs = Seq(5, 10), nProbes = Seq(1, 2))
       .collect().map(r => key(r, r.getString(8))).toMap
     val standalone =
       Similarity.ivfPqOperatingGrid3d(emb, queries, "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cb, m = 4, pqCodebook = pqCb,
+          ks = Seq(1, 5), cellCodebook = cellCb, m = 4, pqCodebook = pqCb,
           rs = Seq(5, 10), nProbes = Seq(1, 2))
         .collect().map(r => key(r, "ivf_pq")) ++
       Similarity.ivfSqOperatingGrid3d(emb, queries, "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cb, mins = mins, scales = scales,
+          ks = Seq(1, 5), cellCodebook = cellCb, mins = mins, scales = scales,
           rs = Seq(5, 10), nProbes = Seq(1, 2))
         .collect().map(r => key(r, "ivf_sq8")) ++
       Similarity.ivfBqOperatingGrid3d(emb, queries, "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cb, thresholds = thr,
+          ks = Seq(1, 5), cellCodebook = cellCb, thresholds = thr,
           rs = Seq(5, 10), nProbes = Seq(1, 2))
         .collect().map(r => key(r, "ivf_bq"))
     assert(shared.size === 24 && standalone.size === 24)
@@ -959,19 +919,17 @@ class OperatorsSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
     val nCells = 8
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = nCells, dim = 64, iters = 3).centroids
     val thr = Similarity.bqTrain(emb, "embedding", "vec_id")
     val rFull = 600 // > corpus size
     val g = Similarity.ivfBqOperatingGrid3d(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5), cellCodebook = cb, thresholds = thr,
+        "vec_id", ks = Seq(1, 5), cellCodebook = cellCb, thresholds = thr,
         rs = Seq(20, rFull), nProbes = Seq(1, nCells))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
     assert(g.size == 8)
     val exact = Similarity.ivfOperatingSweepExact(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5), codebook = cb, nProbes = Seq(1, nCells))
+        "vec_id", ks = Seq(1, 5), codebook = cellCb, nProbes = Seq(1, nCells))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
@@ -1001,13 +959,9 @@ class OperatorsSpec extends SparkSpec {
       .filter($"lang" === "en").select($"doc_id".as("vec_id"))
     val queries = emb.filter($"vec_id" % 100 === 0)
     val nCells = 8
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = nCells, dim = 64, iters = 3).centroids
-    val pqCb = graft.operators.KMeans.fitPqCodebook(emb, "embedding",
-      "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
     val rFull = 600 // > corpus size
     val g = Similarity.ivfPqFilteredOperatingGrid3d(emb, en, queries,
-        "embedding", "vec_id", ks = Seq(5), cellCodebook = cb, m = 4,
+        "embedding", "vec_id", ks = Seq(5), cellCodebook = cellCb, m = 4,
         pqCodebook = pqCb, rs = Seq(5, rFull), nProbes = Seq(1, nCells))
       .collect()
     val nFull = emb.count()
@@ -1069,10 +1023,6 @@ class OperatorsSpec extends SparkSpec {
     val en = spark.read.parquet(s"$dir/documents.parquet")
       .filter($"lang" === "en").select($"doc_id".as("vec_id"))
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
-    val pqCb = graft.operators.KMeans.fitPqCodebook(emb, "embedding",
-      "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
     val thr = Similarity.bqTrain(emb, "embedding", "vec_id")
     def key(r: org.apache.spark.sql.Row) =
@@ -1080,7 +1030,7 @@ class OperatorsSpec extends SparkSpec {
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
           r.getLong(7), r.getAs[Long]("selectivity_ppm"))
     val shared = Similarity.ivfFilteredFamilyOperatingGrids(emb, en,
-        queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb,
+        queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cellCb,
         m = 4, pqCodebook = pqCb, mins = mins, scales = scales,
         bqThresholds = thr, rs = Seq(5, 10), nProbes = Seq(1, 2))
       .collect()
@@ -1088,7 +1038,7 @@ class OperatorsSpec extends SparkSpec {
     val pqCells = shared.filter(_.getAs[String]("family") == "ivf_pq")
       .map(key).toMap
     val standalone = Similarity.ivfPqFilteredOperatingGrid3d(emb, en,
-        queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb,
+        queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cellCb,
         m = 4, pqCodebook = pqCb, rs = Seq(5, 10), nProbes = Seq(1, 2))
       .collect().map(key)
     assert(standalone.length === 8)
@@ -1233,19 +1183,17 @@ class OperatorsSpec extends SparkSpec {
     // operator; the SQ scorer can then only affect BOUNDED shortlists.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
-    val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
-      k = 8, dim = 64, iters = 3).centroids
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
     val rFull = 600 // > corpus size: every probed candidate survives
     val gsq = Similarity.ivfSqOperatingGrid3d(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5), cellCodebook = cb, mins = mins,
+        "vec_id", ks = Seq(1, 5), cellCodebook = cellCb, mins = mins,
         scales = scales, rs = Seq(5, rFull), nProbes = Seq(1, 2))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
     assert(gsq.size == 8)
     val exact = Similarity.ivfOperatingSweepExact(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5), codebook = cb, nProbes = Seq(1, 2))
+        "vec_id", ks = Seq(1, 5), codebook = cellCb, nProbes = Seq(1, 2))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
