@@ -195,21 +195,18 @@ object CurationModels {
           val isLm = org.apache.spark.sql.functions.pmod(
             md5Long(col("doc_id").cast(
               org.apache.spark.sql.types.StringType)), lit(20L)) === 0L
-          val scored =
+          val score =
             if (bigramGate) {
               val (bi, uni, oov, backoff) = TextAnalysis.bigramLm(
                 d.filter(isLm), "text", vocab = 1000, bigramVocab = 2000)
-              TextAnalysis.bigramCrossEntropy(d, "text", "doc_id",
+              graft.expressions.TextExpressions.bigramLmScore(col("text"),
                 bi, uni, oov, backoff)
             } else {
               val (lm, oov) = TextAnalysis.unigramLm(d.filter(isLm), "text",
                 vocab = 1000)
-              TextAnalysis.lmCrossEntropy(d, "text", "doc_id", lm, oov)
+              graft.expressions.TextExpressions.lmScore(col("text"), lm, oov)
             }
-          val keep = scored
-            .filter(col("cross_entropy") <= maxCe)
-            .select(col("doc_id"))
-          d.join(keep, Seq("doc_id"))
+          TextAnalysis.crossEntropyAtMost(d, score, maxCe)
       }
     })
 
@@ -598,25 +595,26 @@ object CurationModels {
     graft.pipeline.PublishSet.rollback(spark, releaseRoot(cfg), to)
 
   /** The generic data-test suite for the curation DAG outputs (one
-    * batched job, dbt-test semantics). */
-  def tests(r: Registry, cfg: RunConfig): Seq[graft.pipeline.DataTests.CheckResult] = {
-    val rel = r.resolve(cfg)
-    import graft.pipeline.DataTests._
-    import graft.functions.GraftFunctions.{emailRe, patternCount}
-    runAll(Seq(
-      Check("DOCS_FILTERED", "doc_id_not_null",
-        notNull(rel("DOCS_FILTERED"), "doc_id")),
-      Check("DOCS_FILTERED", "text_not_null",
-        notNull(rel("DOCS_FILTERED"), "text")),
-      Check("DOCS_DEDUPED", "doc_id_unique",
-        unique(rel("DOCS_DEDUPED"), Seq("doc_id"))),
-      Check("DOCS_PACKED", "seq_id_not_null",
-        notNull(rel("DOCS_PACKED"), "seq_id")),
-      Check("DOCS_SHARDED", "shard_pos_unique",
-        unique(rel("DOCS_SHARDED"), Seq("shard", "pos"))),
-      // singular test: the shipped text was redacted upstream, so no
-      // email pattern may survive to the clean relation
-      Check("DOCS_CLEAN", "no_email_pii",
-        rel("DOCS_CLEAN").filter(patternCount(col("text"), emailRe) > 0))))
-  }
+    * Spark action over [[Registry.resolve]]'s on-demand resolution,
+    * dbt-test semantics). */
+  def tests(r: Registry, cfg: RunConfig): Seq[graft.pipeline.DataTests.CheckResult] =
+    r.resolve(cfg) { rel =>
+      import graft.pipeline.DataTests._
+      import graft.functions.GraftFunctions.{emailRe, patternCount}
+      runAll(Seq(
+        Check("DOCS_FILTERED", "doc_id_not_null",
+          notNull(rel("DOCS_FILTERED"), "doc_id")),
+        Check("DOCS_FILTERED", "text_not_null",
+          notNull(rel("DOCS_FILTERED"), "text")),
+        Check("DOCS_DEDUPED", "doc_id_unique",
+          unique(rel("DOCS_DEDUPED"), Seq("doc_id"))),
+        Check("DOCS_PACKED", "seq_id_not_null",
+          notNull(rel("DOCS_PACKED"), "seq_id")),
+        Check("DOCS_SHARDED", "shard_pos_unique",
+          unique(rel("DOCS_SHARDED"), Seq("shard", "pos"))),
+        // singular test: the shipped text was redacted upstream, so no
+        // email pattern may survive to the clean relation
+        Check("DOCS_CLEAN", "no_email_pii",
+          rel("DOCS_CLEAN").filter(patternCount(col("text"), emailRe) > 0))))
+    }
 }

@@ -415,20 +415,28 @@ object TextAnalysis {
     val counts = lmCorpus
       .select(explode(tokens(lower(col(textCol)))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
-    val total = counts.agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
+    // ONE action: the top-k rows plus one row carrying the total, told
+    // apart by `is_total`; both branches read the same token-count
+    // exchange, which the plan reuses
+    val rows = counts.orderBy(col("n").desc, col("tok")).limit(vocab)
+      .select(lit(false).as("is_total"), col("tok"), col("n"))
+      .unionAll(counts.agg(lit(true).as("is_total"),
+        lit(null).cast(StringType).as("tok"),
+        coalesce(sum(col("n")), lit(0L)).as("n")))
+      .collect()
+    val (totalRow, top) = rows.partition(_.getBoolean(0))
+    val total = totalRow.head.getLong(2)
     require(total > 0, "unigramLm: LM corpus has no tokens")
     def pre(p: Double): Double = math.log(p) * 1e9 + 0.5
-    val top = counts.orderBy(col("n").desc, col("tok"))
-      .limit(vocab).collect()
     // the oracle replays these ln's in another libm: fail loudly if any
     // parameter sits near a flooring boundary (VERDICT r11 / t21).
     // The quantized integers themselves come from [[ExactLn]] (r15):
     // this host's libm can no longer move a parameter, so the audited
     // margin only has to cover the REPLAYING engine's ln error
     QuantAudit.audit("unigram-lm",
-      top.map(r => pre(r.getLong(1).toDouble / total)).toSeq :+ pre(1.0 / total))
+      top.map(r => pre(r.getLong(2).toDouble / total)).toSeq :+ pre(1.0 / total))
     val lm = top.map(r =>
-      r.getString(0) -> ExactLn.lnNanoFloor(r.getLong(1), total)).toMap
+      r.getString(1) -> ExactLn.lnNanoFloor(r.getLong(2), total)).toMap
     (lm, ExactLn.lnNanoFloor(1L, total))
   }
 
@@ -439,17 +447,31 @@ object TextAnalysis {
     * .LmScoreExpr]] with the LM as a literal) — no join, no shuffle, at
     * any corpus size. */
   def lmCrossEntropy(df: DataFrame, textCol: String, idCol: String,
-                     lm: Map[String, Long], oovLogpU: Long): DataFrame = {
-    val st = graft.expressions.TextExpressions.lmScore(col(textCol), lm, oovLogpU)
-    df.select(col(idCol).as("doc_id"), st.as("st"))
-      .select(
-        col("doc_id"),
-        col("st.n_tokens").as("n_tokens"),
-        when(col("st.n_tokens") > 0L,
-          round((-col("st.sum_logp_u").cast(DoubleType) / 1e9) /
-            col("st.n_tokens").cast(DoubleType), 6)).otherwise(0.0)
-          .as("cross_entropy"))
-  }
+                     lm: Map[String, Long], oovLogpU: Long): DataFrame =
+    crossEntropyFrame(df, idCol,
+      graft.expressions.TextExpressions.lmScore(col(textCol), lm, oovLogpU))
+
+  /** Mean negative log-prob per token in nats, rounded to 6 places (0
+    * for a doc without tokens), of an LM score struct (n_tokens,
+    * sum_logp_u) — the cross-entropy every LM gate compares. */
+  private def crossEntropy(score: Column): Column =
+    when(score.getField("n_tokens") > 0L,
+      round((-score.getField("sum_logp_u").cast(DoubleType) / 1e9) /
+        score.getField("n_tokens").cast(DoubleType), 6)).otherwise(0.0)
+
+  private def crossEntropyFrame(df: DataFrame, idCol: String,
+                                score: Column): DataFrame =
+    df.select(col(idCol).as("doc_id"), score.as("st"))
+      .select(col("doc_id"), col("st.n_tokens").as("n_tokens"),
+        crossEntropy(col("st")).as("cross_entropy"))
+
+  /** The rows of `df` whose [[crossEntropy]] under the LM score struct
+    * `score` is at most `maxCe` — a per-row filter that scores each row
+    * ONCE. The struct is bound as a lambda variable: a plain filter on
+    * its fields would get the scorer inlined once per field reference
+    * (three scoring passes a row). */
+  def crossEntropyAtMost(df: DataFrame, score: Column, maxCe: Double): DataFrame =
+    df.filter(exists(array(score), st => crossEntropy(st) <= maxCe))
 
   /** MOORE-LEWIS CROSS-ENTROPY-DIFFERENCE data selection (Moore &
     * Lewis 2010; the scoring CCNet ranks documents with): every doc is
@@ -647,18 +669,9 @@ object TextAnalysis {
     * [[lmCrossEntropy]]. */
   def bigramCrossEntropy(df: DataFrame, textCol: String, idCol: String,
                          bigram: Map[String, Long], unigram: Map[String, Long],
-                         oovLogpU: Long, backoffU: Long): DataFrame = {
-    val st = graft.expressions.TextExpressions.bigramLmScore(
-      col(textCol), bigram, unigram, oovLogpU, backoffU)
-    df.select(col(idCol).as("doc_id"), st.as("st"))
-      .select(
-        col("doc_id"),
-        col("st.n_tokens").as("n_tokens"),
-        when(col("st.n_tokens") > 0L,
-          round((-col("st.sum_logp_u").cast(DoubleType) / 1e9) /
-            col("st.n_tokens").cast(DoubleType), 6)).otherwise(0.0)
-          .as("cross_entropy"))
-  }
+                         oovLogpU: Long, backoffU: Long): DataFrame =
+    crossEntropyFrame(df, idCol, graft.expressions.TextExpressions.bigramLmScore(
+      col(textCol), bigram, unigram, oovLogpU, backoffU))
 
   /** Deterministic stratified sample: at most `perStratum` documents
     * per `byCol` stratum, selected by md5-hash order with id tiebreak —

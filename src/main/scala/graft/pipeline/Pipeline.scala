@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import java.util.concurrent.{Executors, TimeUnit}
 import scala.collection.mutable
 import scala.concurrent.duration.Duration
@@ -140,12 +141,28 @@ object Pipeline {
 
   def mergeIntoParquet(spark: SparkSession, path: String, increment: DataFrame,
                        uniqueKey: Seq[String], partitionBy: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     val p = new org.apache.hadoop.fs.Path(path)
     val f = fsFor(spark, path)
     recoverSwap(f, p) // heal a previous merge that crashed mid-swap
     val partitionScoped = partitionBy.nonEmpty &&
       (uniqueKey.isEmpty || partitionBy.forall(uniqueKey.contains))
+    // The increment is read up to three times: for the affected
+    // partitions, for the anti-join keys and as the appended rows. Hold
+    // it for the merge so that its lineage runs once (unless the caller
+    // already holds it), and release it before returning.
+    val hold = (partitionScoped || (uniqueKey.nonEmpty && f.exists(p))) &&
+      increment.storageLevel == StorageLevel.NONE
+    if (hold) increment.persist()
+    try mergeOnce(spark, path, p, f, increment, uniqueKey, partitionBy, partitionScoped)
+    finally if (hold) increment.unpersist(blocking = true)
+  }
+
+  private def mergeOnce(spark: SparkSession, path: String,
+                        p: org.apache.hadoop.fs.Path,
+                        f: org.apache.hadoop.fs.FileSystem, increment: DataFrame,
+                        uniqueKey: Seq[String], partitionBy: Seq[String],
+                        partitionScoped: Boolean): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     // Partition-scoped preliminaries run BEFORE the existing relation is
     // read: per-dir crash recovery must restore any aside-moved
     // partition first, or the merge would be computed WITHOUT that
@@ -395,18 +412,35 @@ object Pipeline {
     private def exists(path: String): Boolean =
       fsFor(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
+    /** The model's relation as already materialized under `cfg`'s env,
+      * if it is. Views and Ephemerals never are. */
+    private def envRelation(m: Model, cfg: RunConfig): Option[DataFrame] =
+      if (cfg.warehouseRoot.isEmpty) None
+      else m.materialization match {
+        case Table | Incremental(_) if exists(envPath(m, cfg)) =>
+          Some(spark.read.parquet(envPath(m, cfg)))
+        case Versioned(_, _) if VersionedTable.currentVersion(spark, envPath(m, cfg)).nonEmpty =>
+          Some(VersionedTable.read(spark, envPath(m, cfg)))
+        case _ => None
+      }
+
     /** The model's existing env relation, for Incremental/Versioned
       * models whose path is already materialized — exposed to `build`
       * as [[This]]. */
     private def existingRelation(m: Model, cfg: RunConfig): Option[DataFrame] =
       m.materialization match {
-        case Incremental(_) if cfg.warehouseRoot.nonEmpty && exists(envPath(m, cfg)) =>
-          Some(spark.read.parquet(envPath(m, cfg)))
-        case Versioned(_, _) if cfg.warehouseRoot.nonEmpty &&
-            VersionedTable.currentVersion(spark, envPath(m, cfg)).nonEmpty =>
-          Some(VersionedTable.read(spark, envPath(m, cfg)))
+        case Incremental(_) | Versioned(_, _) => envRelation(m, cfg)
         case _ => None
       }
+
+    /** Read back a relation this run just wrote. An unpartitioned one is
+      * read with the schema it was written with, which skips the parquet
+      * footer inference job; a partitioned one is inferred, because
+      * inference puts the partition columns last. */
+    private def readWritten(path: String, written: DataFrame,
+                            partitionBy: Seq[String]): DataFrame =
+      if (partitionBy.isEmpty) spark.read.schema(written.schema).parquet(path)
+      else spark.read.parquet(path)
 
     private def materialize(m: Model, df: DataFrame, cfg: RunConfig): DataFrame =
       m.materialization match {
@@ -414,11 +448,11 @@ object Pipeline {
         case Table =>
           val path = envPath(m, cfg)
           Pipeline.writeParquet(df, path, m.partitionBy)
-          spark.read.parquet(path)
+          readWritten(path, df, m.partitionBy)
         case Incremental(uniqueKey) =>
           val path = envPath(m, cfg)
           mergeIntoParquet(spark, path, df, uniqueKey, m.partitionBy)
-          spark.read.parquet(path)
+          readWritten(path, df, m.partitionBy)
         case Versioned(uniqueKey, retain) =>
           val path = envPath(m, cfg)
           if (uniqueKey.isEmpty)
@@ -435,33 +469,58 @@ object Pipeline {
         case Failure(e) => throw e
       }
 
-    /** Resolve every model's DataFrame under `cfg`'s env WITHOUT
-      * materializing anything — the `dbt test` resolution mode: tests
-      * reference the target's existing relations, they never build
-      * them. Table models whose env path is already materialized are
-      * READ from it; everything else (Views, Ephemerals, never-built
-      * Tables) recomputes its lineage lazily. */
-    def resolve(cfg: RunConfig, targets: Seq[String] = Nil): Map[String, DataFrame] = {
+    /** Resolve models under `cfg`'s env WITHOUT materializing anything
+      * and lend them to `use` — the `dbt test` resolution mode: tests
+      * reference the target's existing relations, they never build them.
+      *
+      * Resolution is on demand: `use` gets a map of every model in the
+      * requested subgraph, but a model is resolved only when `use` or a
+      * downstream build reads it, so a model nothing reads is never
+      * built. A Table, Incremental or Versioned model whose env relation
+      * is already materialized is READ from it. Any other one is
+      * recomputed from its lineage: a Table-like model is then HELD
+      * (persisted), so every check and downstream build that reads it
+      * shares one evaluation, while Views and Ephemerals stay inlined in
+      * their readers as in dbt. Everything held is released (blocking)
+      * when `use` returns or throws. */
+    def resolve[T](cfg: RunConfig, targets: Seq[String] = Nil)(
+        use: Map[String, DataFrame] => T): T = {
       val order = topoOrder(if (targets.isEmpty) names else targets)
+      val inScope = order.toSet
       val resolved = mutable.Map.empty[String, DataFrame]
-      order.foreach { n =>
-        val m = models(n)
-        def built = m.build(
-          m.deps.map(d => d -> resolved(d)).toMap ++
-            existingRelation(m, cfg).map(This -> _))
-        resolved(n) = m.materialization match {
-          case (Table | Incremental(_)) if cfg.warehouseRoot.nonEmpty =>
-            val path = envPath(m, cfg)
-            if (exists(path)) spark.read.parquet(path) else built
-          case Versioned(_, _) if cfg.warehouseRoot.nonEmpty =>
-            val path = envPath(m, cfg)
-            if (VersionedTable.currentVersion(spark, path).nonEmpty)
-              VersionedTable.read(spark, path)
-            else built
-          case _ => built
-        }
+      val held = mutable.ArrayBuffer.empty[DataFrame]
+      def frame(n: String): DataFrame = resolved.synchronized {
+        resolved.getOrElse(n, {
+          val m = models(n)
+          def built = m.build(m.deps.map(d => d -> frame(d)).toMap)
+          val df = m.materialization match {
+            case View | Ephemeral => built
+            case _ => envRelation(m, cfg).getOrElse {
+              val b = built
+              // a pass-through of a held upstream is held already
+              if (b.storageLevel == StorageLevel.NONE) { b.persist(); held += b }
+              b
+            }
+          }
+          resolved(n) = df
+          df
+        })
       }
-      resolved.toMap
+      val lent = new scala.collection.immutable.AbstractMap[String, DataFrame] {
+        def get(n: String): Option[DataFrame] =
+          if (inScope(n)) Some(frame(n)) else None
+        def iterator: Iterator[(String, DataFrame)] =
+          order.iterator.map(n => n -> frame(n))
+        override def contains(n: String): Boolean = inScope(n)
+        override def keysIterator: Iterator[String] = order.iterator
+        override def size: Int = order.size
+        override def knownSize: Int = order.size
+        def removed(n: String): Map[String, DataFrame] = iterator.toMap - n
+        def updated[V >: DataFrame](n: String, v: V): Map[String, V] =
+          iterator.toMap.updated(n, v)
+      }
+      try use(lent)
+      finally resolved.synchronized(held.foreach(_.unpersist(blocking = true)))
     }
 
     /** Materialize the DAG. Independent models run concurrently on a

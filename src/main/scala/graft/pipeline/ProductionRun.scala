@@ -20,8 +20,11 @@ import scala.util.{Failure, Success, Try}
   *             real materialization, with the registry's retry envelope;
   *  - test   → [[DataTests.runAll]] over the DEV env's resolution of the
   *             models ([[Pipeline.Registry.resolve]]: tests reference
-  *             existing relations, they never build them) — one batched
-  *             Spark job for the whole suite.
+  *             existing relations, they never build them; a model is
+  *             resolved only if a check reads it, and a recomputed one
+  *             is evaluated once for all its readers) — one Spark action
+  *             for the whole suite (AQE runs it as one job per query
+  *             stage).
   *
   * Phases run strictly in order and the composition stops at the first
   * failed phase (a failed debug or run must not let tests "pass" against
@@ -36,8 +39,8 @@ object ProductionRun {
   final case class Report(
       phases: Seq[PhaseResult],
       tests: Seq[DataTests.CheckResult]) {
-    def ok: Boolean = phases.forall(_.ok) && tests.forall(_.passed)
-    def failedChecks: Seq[DataTests.CheckResult] = tests.filterNot(_.passed)
+    def ok: Boolean = phases.forall(_.ok) && failedChecks.isEmpty
+    def failedChecks: Seq[DataTests.CheckResult] = DataTests.failed(tests)
   }
 
   private def timed(phase: String)(body: => String): PhaseResult = {
@@ -110,13 +113,13 @@ object ProductionRun {
       phase("test dev") {
         val devCfg = Pipeline.RunConfig(env = Pipeline.Dev,
           warehouseRoot = warehouseRoot)
-        val frames = registry.resolve(devCfg, targets)
-        tests = DataTests.runAll(checksFor(frames))
-        val failed = tests.count(!_.passed)
-        require(failed == 0,
-          s"$failed/${tests.size} data tests failed: " +
-            tests.filterNot(_.passed)
-              .map(t => s"${t.model}.${t.name}=${t.nViolations}").mkString(", "))
+        tests = registry.resolve(devCfg, targets) { frames =>
+          DataTests.runAll(checksFor(frames))
+        }
+        val failed = DataTests.failed(tests)
+        require(failed.isEmpty,
+          s"${failed.size}/${tests.size} data tests failed: " +
+            failed.map(t => s"${t.model}.${t.name}=${t.nViolations}").mkString(", "))
         s"${tests.size} checks, 0 violations"
       }
 

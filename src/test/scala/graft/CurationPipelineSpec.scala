@@ -44,8 +44,8 @@ class CurationPipelineSpec extends SparkSpec {
     val r = CurationModels.registry(spark, docs, bench)
     // profiling is ONE map-only projection — a shuffle here would mean
     // the stage regressed to joining the standalone operators' outputs
-    val profPlan = r.resolve(cfg)("DOCS_PROFILED")
-      .queryExecution.executedPlan.toString
+    val profPlan = r.resolve(cfg)(
+      _("DOCS_PROFILED").queryExecution.executedPlan.toString)
     assert(!profPlan.contains("Exchange"), s"unexpected shuffle:\n$profPlan")
     val res = r.run(cfg, Seq("DOCS_PACKED", "DOCS_SHARDED"))
     assert(res.order.nonEmpty && res.resolved.contains("DOCS_PACKED"),
@@ -519,5 +519,111 @@ class CurationPipelineSpec extends SparkSpec {
     // against the acknowledged baseline the same frontier now passes
     val g5 = CurationModels.indexCardGate(spark, cfg, maxRelDelta = 0.10)
     assert(g5.passed && g5.violations === 0L && g5.cardVersion === Some(4L))
+  }
+
+  /** 200 docs of the shared-stopword shape and 100 of a repeated
+    * 10-word frame (so cross-entropies differ between docs), gated and
+    * written to parquet (a local relation would be folded into the
+    * plan), and the stage's deterministic 5% LM sample of them. */
+  private def gatedLmCorpus(): (org.apache.spark.sql.DataFrame,
+                                org.apache.spark.sql.DataFrame) = {
+    import graft.functions.GraftFunctions.md5Long
+    val frame = Seq("alpha", "bravo", "charlie", "delta", "echo",
+      "foxtrot", "golf", "hotel", "india", "juliet")
+    def framed(i: Long) =
+      (frame :+ s"w${i}a").mkString(" ") + " " + (frame :+ s"w${i}b").mkString(" ")
+    val path = Files.createTempDirectory("graft-cur-lm").toString + "/gated"
+    CurationModels.gateDocs(((0L until 200L).map(i => (i, docText(i), "en", "web")) ++
+        (200L until 300L).map(i => (i, framed(i), "en", "web")))
+      .toDF("doc_id", "text", "lang", "source")).write.parquet(path)
+    val gated = spark.read.parquet(path)
+    (gated, gated.filter(pmod(md5Long(col("doc_id")
+      .cast(org.apache.spark.sql.types.StringType)), lit(20L)) === 0L))
+  }
+
+  test("unigramLm fits in one SQL execution and returns the two-action fit's integers") {
+    import graft.operators.{ExactLn, TextAnalysis}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val (_, sample) = gatedLmCorpus()
+    val sentinel = "graft_lm_fit_sentinel"
+    def isSentinel(qe: QueryExecution) = qe.analyzed.output.map(_.name) == Seq(sentinel)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    // vocab 20 cuts through the count ties, so the top-k order matters
+    val vocab = 20
+    spark.listenerManager.register(listener)
+    val (lm, oov) = try {
+      val fit = TextAnalysis.unigramLm(sample, "text", vocab)
+      // the bus delivers in order: every execution before the sentinel's
+      // is the fit's
+      spark.range(1).toDF(sentinel).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(isSentinel) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      fit
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.asScala.exists(isSentinel), "the listener never saw the sentinel")
+    assert(seen.asScala.takeWhile(!isSentinel(_)).size == 1,
+      "the fit is one action, not a total plus a top-k")
+
+    // the two-action formulation the fit replaced
+    val counts = sample
+      .select(explode(graft.functions.GraftFunctions.tokens(lower(col("text")))).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("n"))
+    val total = counts.agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
+    val top = counts.orderBy(col("n").desc, col("tok")).limit(vocab).collect()
+    assert(lm.size == vocab)
+    assert(lm == top.map(r =>
+      r.getString(0) -> ExactLn.lnNanoFloor(r.getLong(1), total)).toMap)
+    assert(oov == ExactLn.lnNanoFloor(1L, total))
+  }
+
+  test("DOCS_SCORED filters per row with one scoring pass and keeps the join formulation's docs") {
+    import graft.expressions.{BigramLmScoreExpr, LmScoreExpr}
+    import graft.operators.TextAnalysis
+    import org.apache.spark.sql.execution.FilterExec
+    val (gated, sample) = gatedLmCorpus()
+    val bench = Seq((9001L, "nothing shared here at all with anyone"))
+      .toDF("doc_id", "text")
+    val (lm, oov) = TextAnalysis.unigramLm(sample, "text", vocab = 1000)
+    val (bi, uni, oovB, backoff) = TextAnalysis.bigramLm(sample, "text",
+      vocab = 1000, bigramVocab = 2000)
+    Seq(
+      false -> TextAnalysis.lmCrossEntropy(gated, "text", "doc_id", lm, oov),
+      true -> TextAnalysis.bigramCrossEntropy(gated, "text", "doc_id",
+        bi, uni, oovB, backoff)
+    ).foreach { case (bigramGate, ce) =>
+      // the second-highest cross-entropy: the gate keeps some docs and
+      // drops the rest
+      val ces = ce.select("cross_entropy").as[Double].collect()
+      val levels = ces.distinct.sorted
+      assert(levels.length >= 2, s"bigramGate=$bigramGate: one CE level")
+      val thr = levels(levels.length - 2)
+      val joined = gated.join(
+          ce.filter(col("cross_entropy") <= thr).select("doc_id"), Seq("doc_id"))
+        .select("doc_id").as[Long].collect().toSet
+      val scored = CurationModels.registry(spark, gated, bench,
+          perplexityGate = Some(thr), bigramGate = bigramGate)
+        .model("DOCS_SCORED").build(Map("DOCS_FILTERED" -> gated))
+      val kept = scored.select("doc_id").as[Long].collect().toSet
+      assert(kept == joined, s"bigramGate=$bigramGate")
+      assert(kept.nonEmpty && kept.size < ces.length, s"bigramGate=$bigramGate")
+      val qe = scored.queryExecution
+      assert(qe.optimizedPlan.collect { case j: org.apache.spark.sql.catalyst
+        .plans.logical.Join => j }.isEmpty, s"bigramGate=$bigramGate: a join")
+      val scorers = qe.sparkPlan.collect { case f: FilterExec =>
+        f.condition.collect {
+          case e: LmScoreExpr => e
+          case e: BigramLmScoreExpr => e
+        }
+      }.flatten
+      assert(scorers.size == 1,
+        s"bigramGate=$bigramGate: the filter scores each row ${scorers.size} times")
+    }
   }
 }

@@ -52,11 +52,15 @@ class DataTestsSpec extends SparkSpec {
   }
 
   test("runAll: reports every check; failFast stops at first failure") {
+    // distinct counts (0, 1, 2): a result matched to the wrong check fails
     val suite = Seq(
+      Check("zones", "not_null_location_id", DataTests.notNull(zones, "location_id")),
       Check("zones", "unique_location_id", DataTests.unique(zones, Seq("location_id"))),
-      Check("zones", "not_null_borough", DataTests.notNull(zones, "borough")))
+      Check("zones", "svc_accepted", DataTests.acceptedValues(zones, "svc", Seq("A"))))
     val all = DataTests.runAll(suite)
-    assert(all.map(_.nViolations) == Seq(1L, 1L) && all.forall(!_.passed))
-    assert(DataTests.runAll(suite, failFast = true).length == 1)
+    assert(all.map(r => (r.name, r.nViolations)) == Seq(
+      "not_null_location_id" -> 0L, "unique_location_id" -> 1L, "svc_accepted" -> 2L))
+    assert(DataTests.failed(all).map(_.name) == Seq("unique_location_id", "svc_accepted"))
+    assert(DataTests.runAll(suite, failFast = true).map(_.nViolations) == Seq(0L, 1L))
   }
 }

@@ -200,7 +200,31 @@ class IncrementalModelSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tmp/DEV/3_MART/inc").count() == 2)
 
     // resolve() (dbt test mode) reads the materialized relation, no rebuild
-    val resolved = r.resolve(cfg, Seq("inc"))
-    assert(resolved("inc").count() == 2)
+    assert(r.resolve(cfg, Seq("inc"))(_("inc").count()) == 2)
+  }
+
+  test("a merge evaluates its increment once and leaves nothing cached") {
+    val evaluated = spark.sparkContext.longAccumulator("increment rows evaluated")
+    // the tally is the key itself, so every reader of the increment runs it
+    val tally = udf { (id: Long) => evaluated.add(1L); id }.asNondeterministic()
+    def increment(ids: Range) = spark.range(ids.start, ids.end)
+      .select(tally(col("id")).as("id"), (col("id") % 2).cast("string").as("part"),
+        lit("v").as("v"))
+    spark.catalog.clearCache()
+    Seq(Nil, Seq("part")).foreach { partitionBy =>
+      val path = java.nio.file.Files.createTempDirectory("graft-inc-once")
+        .toString + "/rel"
+      mergeIntoParquet(spark, path, increment(0 until 6), Seq("id", "part"),
+        partitionBy)
+      evaluated.reset()
+      // keys 4, 5 replace existing rows; 6..9 are new
+      mergeIntoParquet(spark, path, increment(4 until 10), Seq("id", "part"),
+        partitionBy)
+      assert(evaluated.value == 6L,
+        s"partitionBy=$partitionBy: ${evaluated.value} increment rows evaluated, want 6")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"partitionBy=$partitionBy: the held increment was not released")
+      assert(spark.read.parquet(path).count() == 10L)
+    }
   }
 }

@@ -95,9 +95,84 @@ class ProductionRunSpec extends SparkSpec {
       .register(Model("mart_marked", "3_MART", Seq("staging"), Table) { d =>
         d("staging")
       })
-    val frames = r2.resolve(
-      Pipeline.RunConfig(env = Pipeline.Dev, warehouseRoot = root))
-    assert(frames("mart_marked").columns.contains("marker"),
+    val columns = r2.resolve(
+      Pipeline.RunConfig(env = Pipeline.Dev, warehouseRoot = root))(
+      _("mart_marked").columns)
+    assert(columns.contains("marker"),
       "resolve() reads the materialized dev relation, not the lineage")
+  }
+
+  test("test dev evaluates a DEV model read by two checks and a downstream model once") {
+    val root = Files.createTempDirectory("graft-prod").toString
+    // counts the rows the mart's lineage evaluates, on every path that
+    // runs it; nullable (boxed), so a not-null check cannot fold it away
+    val evaluated = spark.sparkContext.longAccumulator("mart rows evaluated")
+    val tally = udf { (id: Long) =>
+      evaluated.add(1L); java.lang.Long.valueOf(id)
+    }.asNondeterministic()
+    val r = new Registry(spark)
+    r.register(Model("staging", "1_SRC", Nil) { _ =>
+        spark.range(1, 4).select(col("id").as("zone_id"),
+          when(col("id") === 3L, "EWR").otherwise("Queens").as("borough"))
+      })
+      .register(Model("mart", "3_MART", Seq("staging"), Table) { d =>
+        d("staging").withColumn("zone_id", tally(col("zone_id")))
+      })
+      .register(Model("by_borough", "3_MART", Seq("mart"), Table) { d =>
+        d("mart").groupBy("borough").agg(max("zone_id").as("max_zone_id"))
+      })
+    var afterRun = -1L
+    val report = ProductionRun.run(spark, r, root, { frames =>
+      afterRun = evaluated.value
+      Seq(
+        DataTests.Check("mart", "zone_id_not_null",
+          DataTests.notNull(frames("mart"), "zone_id")),
+        DataTests.Check("mart", "zone_id_unique",
+          DataTests.unique(frames("mart"), Seq("zone_id"))),
+        DataTests.Check("by_borough", "borough_unique",
+          DataTests.unique(frames("by_borough"), Seq("borough"))))
+    })
+    assert(report.ok, report.phases.mkString("; "))
+    assert(afterRun == 3L, "run prod evaluates the mart's 3 rows once")
+    assert(evaluated.value - afterRun == 3L,
+      "test dev evaluates the mart once for both checks and by_borough, " +
+        s"not once per reader: ${evaluated.value - afterRun} rows evaluated")
+  }
+
+  test("test dev never builds a model that no check reads") {
+    // a build there could only fail after run prod already failed on it,
+    // so skipping it hides no failure
+    val root = Files.createTempDirectory("graft-prod").toString
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val r = freshRegistry()
+    r.register(Model("unread", "3_MART", Seq("mart"), Table) { d =>
+      builds.incrementAndGet(); d("mart")
+    })
+    val report = ProductionRun.run(spark, r, root, checks)
+    assert(report.ok, report.phases.mkString("; "))
+    assert(builds.get == 1, s"built by run prod only, got ${builds.get} builds")
+  }
+
+  test("test dev releases every relation it holds, also when a check throws") {
+    spark.catalog.clearCache()
+    val cache = spark.sharedState.cacheManager
+    def run(checksFor: Map[String, DataFrame] => Seq[DataTests.Check]) =
+      ProductionRun.run(spark, freshRegistry(),
+        Files.createTempDirectory("graft-prod").toString, checksFor)
+    assert(run(checks).ok)
+    assert(cache.isEmpty, "green run leaves the mart cached")
+    val throwsBuilding = run { frames =>
+      frames("mart") // resolved and held before the suite fails
+      throw new IllegalStateException("suite construction failed")
+    }
+    assert(!throwsBuilding.ok &&
+      throwsBuilding.phases.last.detail.contains("suite construction failed"))
+    assert(cache.isEmpty, "a suite that throws leaves the mart cached")
+    val throwsEvaluating = run { frames =>
+      Seq(DataTests.Check("mart", "raises",
+        DataTests.expect(frames("mart"), raise_error(lit("check failed")).isNull)))
+    }
+    assert(!throwsEvaluating.ok && throwsEvaluating.tests.isEmpty)
+    assert(cache.isEmpty, "a check that throws leaves the mart cached")
   }
 }

@@ -446,7 +446,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.read(spark, fullRoot).count() === 3L)
     assert(VersionedTable.read(spark, mergeRoot).count() === 3L)
     // resolve() reads the committed version, not the lineage
-    assert(r.resolve(cfg)("V_MERGE").count() === 3L)
+    assert(r.resolve(cfg)(_("V_MERGE").count()) === 3L)
     // the first publish is still time-travelable
     assert(VersionedTable.readVersion(spark, fullRoot, 1L).count() === 2L)
     // retention: repeated publishes stay bounded by retain (default 3)
