@@ -82,8 +82,6 @@ object HashExpressions {
     Bridge.column(PerceptualHashExpr(Bridge.expression(text)))
   def minhashSignature(shingles: Column, k: Int): Column =
     Bridge.column(MinHashSigExpr(Bridge.expression(shingles), k))
-  def md5Min(strings: Column): Column =
-    Bridge.column(Md5MinExpr(Bridge.expression(strings)))
   def md5Set(strings: Column): Column =
     Bridge.column(Md5SetExpr(Bridge.expression(strings)))
   def suffixOverlapBound(a: Column, b: Column, depth: Int): Column =

@@ -411,12 +411,10 @@ case class CellResidualExpr(left: Expression, right: Expression,
   * Procrustes-updated R is a general dense orthogonal matrix). Rows of
   * `matrix` are driver-built literals, so application is MAP-ONLY
   * (dim² multiply-adds per row, left-fold per output coordinate).
-  * Optional `dp` rounding for grid-stable consumers (dp < 0 = none —
-  * the parametric fit is a declared-divergence operator with no SQL
-  * replay, so full precision is the default). Width mismatch or NULL
-  * element -> NULL. CodegenFallback. */
-case class MatrixRotateExpr(child: Expression,
-                            matrix: Seq[Seq[Double]], dp: Int)
+  * Full precision, no rounding: the parametric fit is a
+  * declared-divergence operator with no SQL replay. Width mismatch or
+  * NULL element -> NULL. CodegenFallback. */
+case class MatrixRotateExpr(child: Expression, matrix: Seq[Seq[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
 
@@ -455,10 +453,7 @@ case class MatrixRotateExpr(child: Expression,
       var s = 0.0
       var j = 0
       while (j < dim) { s += row(j) * x(j); j += 1 }
-      out(i) =
-        if (dp < 0) s
-        else java.math.BigDecimal.valueOf(s)
-          .setScale(dp, java.math.RoundingMode.HALF_UP).doubleValue()
+      out(i) = s
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -593,14 +588,13 @@ object VectorExpressions {
     Bridge.column(CellResidualExpr(
       Bridge.expression(v.cast("array<double>")),
       Bridge.expression(cell.cast("bigint")), codebook))
-  def matrixRotate(v: Column, matrix: Seq[Seq[Double]],
-                   dp: Int = -1): Column =
+  def matrixRotate(v: Column, matrix: Seq[Seq[Double]]): Column =
     Bridge.column(MatrixRotateExpr(
-      Bridge.expression(v.cast("array<double>")), matrix, dp))
-  def intCosKey(a: Column, b: Column, quant: Long = 100000L): Column =
+      Bridge.expression(v.cast("array<double>")), matrix))
+  def intCosKey(a: Column, b: Column): Column =
     Bridge.column(IntCosKeyExpr(
       Bridge.expression(a.cast("array<double>")),
-      Bridge.expression(b.cast("array<double>")), quant))
+      Bridge.expression(b.cast("array<double>")), 100000L))
 }
 
 /** EXACT-INTEGER cosine ranking key — floor(1e6·|cos(aq, bq)|)·sign,

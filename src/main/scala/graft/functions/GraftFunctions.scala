@@ -102,11 +102,6 @@ object GraftFunctions {
   def exactSum(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
 
-  /** Exact average: decimal sum divided by count in double space.
-    * DuckDB: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)/COUNT(x). */
-  def exactAvg(c: Column): Column =
-    exactSum(c) / count(c)
-
   // ---------------------------------------------------------------------
   // Space-filling curves (data layout)
   // ---------------------------------------------------------------------
@@ -274,22 +269,6 @@ object GraftFunctions {
   // ---------------------------------------------------------------------
   // Vector functions (embeddings table; ANN / near-dup surface)
   // ---------------------------------------------------------------------
-
-  /** Dot product of two double-array columns (zip_with + left-fold sum —
-    * same accumulation order as DuckDB's list ops). */
-  def dotProduct(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  /** L2 norm. */
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-
-  /** Cosine similarity of two double-array columns; null-safe on zero
-    * norms (returns NULL rather than ANSI div-by-zero). */
-  def cosineSim(a: Column, b: Column): Column = {
-    val denom = l2Norm(a) * l2Norm(b)
-    when(denom > 0, dotProduct(a, b) / denom)
-  }
 
   /** Cast a float-array column to double-array (embeddings are
     * list<float> on disk; all arithmetic happens in double to match the

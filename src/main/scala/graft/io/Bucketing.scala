@@ -94,7 +94,8 @@ object Bucketing {
     * within partitions tightens row-group stats too. The caller writes
     * the result (`.write.parquet(...)`); ZorderSpec measures the
     * payoff: per-file value spread on BOTH dims is a fraction of a
-    * single-column layout's on its non-sort dim. */
+    * single-column layout's on its non-sort dim.
+    * Declared by SURVEY §2.9 row q54 (Z-ORDER layout writer). */
   def zorderLayout(df: DataFrame, xCol: String, yCol: String,
                    bits: Int, nFiles: Int): DataFrame = {
     import org.apache.spark.sql.functions.col

@@ -16,6 +16,7 @@ import org.apache.spark.sql.types._
   *    preserved in a corrupt-record column for quarantine
   *  - [[applyRenames]]: the "same columns, new names" evolution step as
   *    a data-driven rename map (the D10 playbook's cheap path)
+  * Declared by README row "S6 dictionary-driven aux CSV".
   */
 object DictionaryIngest {
 

@@ -24,18 +24,18 @@ import org.apache.spark.sql.functions._
   *
   * The row count comes from a `count()` pre-pass: one extra job, but a
   * cheap columnar one, and the alternative — guessing a partition
-  * count — is exactly the naive-write failure mode. Callers that
-  * already know the cardinality can pass `knownRows` to skip it.
+  * count — is exactly the naive-write failure mode.
+  * Declared by SURVEY "Beyond `queries` (round 3)", io.Export.sharded.
   */
 object Export {
 
   final case class ShardReport(path: String, rows: Long, shards: Int)
 
   def sharded(df: DataFrame, path: String, sortCols: Seq[String],
-              rowsPerShard: Long, knownRows: Option[Long] = None): ShardReport = {
+              rowsPerShard: Long): ShardReport = {
     require(sortCols.nonEmpty, "sharded export needs at least one sort column")
     require(rowsPerShard > 0, s"rowsPerShard must be positive, got $rowsPerShard")
-    val rows = knownRows.getOrElse(df.count())
+    val rows = df.count()
     val shards = math.max(1, math.ceil(rows.toDouble / rowsPerShard).toInt)
     df.repartitionByRange(shards, sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)

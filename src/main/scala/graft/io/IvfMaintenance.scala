@@ -29,6 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB: upsert cost tracks the batch, delete cost the id list,
   * compact cost the affected cells' bytes — never the index size.
+  * Declared by SURVEY §2.9 row e20 (maintained-index serving).
   */
 object IvfMaintenance {
 

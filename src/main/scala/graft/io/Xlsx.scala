@@ -25,6 +25,7 @@ import scala.collection.mutable
   * uploads read once on the driver (exactly like
   * [[DictionaryIngest.readDictionary]]'s collect-by-contract) and
   * land in parquet; big data never arrives as xlsx.
+  * Declared by SURVEY "Beyond `queries` (round 3)", graft.io.Xlsx.
   */
 object Xlsx {
 
@@ -205,34 +206,6 @@ object Xlsx {
       org.apache.spark.sql.Row.fromSeq(a.toSeq.padTo(header.length, null)))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toList), schema)
-  }
-
-  /** [[readSheetDF]] for BANDED civic workbooks whose real header sits
-    * below rows of notes and merged display bands (the decennial
-    * census sheet: 7 rows of prose + band labels before `GeoType`):
-    * the header is the first row CONTAINING `headerMarker`, and
-    * duplicate header names (the census sheet repeats `LandAcres` in
-    * its 2010 and 2020 bands) are de-duplicated with a positional
-    * `_2`, `_3`… suffix so the DataFrame is well-formed. */
-  def readSheetDFAt(spark: SparkSession, path: String, sheet: String,
-                    headerMarker: String): DataFrame = {
-    val all = readSheet(path, sheet)
-    val hi = all.indexWhere(_.exists(c => c != null && c.trim == headerMarker))
-    require(hi >= 0,
-      s"sheet '$sheet' in $path has no row containing '$headerMarker'")
-    val seen = scala.collection.mutable.Map.empty[String, Int]
-    val header = all(hi).zipWithIndex.map { case (h, i) =>
-      val base = if (h == null || h.trim.isEmpty) s"_c$i" else h.trim
-      val n = seen.getOrElse(base, 0) + 1
-      seen(base) = n
-      if (n == 1) base else s"${base}_$n"
-    }
-    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
-    val rows = all.drop(hi + 1)
-      .filterNot(_.forall(_ == null))
-      .map(a => org.apache.spark.sql.Row.fromSeq(
-        a.toSeq.padTo(header.length, null).take(header.length)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toList), schema)
   }
 
   /** Read a dictionary SHEET (the xlsx twin of

@@ -1,6 +1,5 @@
 package graft.models
 
-import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,9 +18,9 @@ import org.apache.spark.sql.types._
   */
 object AuxStaging {
 
-  /** try-parse a string column to date with an explicit format. */
-  def parseDate(c: Column, fmt: String = "M/d/yyyy"): Column =
-    try_to_timestamp(c, lit(fmt)).cast(DateType)
+  /** try-parse a string column to date in the feeds' M/d/yyyy format. */
+  def parseDate(c: Column): Column =
+    try_to_timestamp(c, lit("M/d/yyyy")).cast(DateType)
 
   /** try-parse a numeric string (null on garbage, never ANSI error). */
   def parseDouble(c: Column): Column = c.try_cast(DoubleType)
@@ -180,9 +179,9 @@ object AuxStaging {
     * model, VERDICT r12 next-#6). The workbook's own `About` sheet is
     * the dictionary: GeoType/Borough/GeoID/Name STRING; `Pop`, `HHPop`,
     * `GQ`, `HUnits`, `OcHU`, `VacHU` counts with `_10`/`_20`/`_Ch`
-    * decade suffixes; `AvHHSz` numeric. Load the banded sheet with
-    * [[graft.io.Xlsx.readSheetDFAt]] (header at the `GeoType` row).
-    * Keeps NTA2020 rows; try-parses counts; derives the decade growth
+    * decade suffixes; `AvHHSz` numeric. The banded sheet's header is
+    * the row holding `GeoType`, below rows of prose. Keeps NTA2020 rows; try-
+    * parses counts; derives the decade growth
     * rate from integer sums; and checks the census's OWN identities as
     * quarantine flags, never row drops: population = households +
     * group quarters, units = occupied + vacant, and change = 2020-2010
@@ -222,31 +221,4 @@ object AuxStaging {
         col("pop_2010").isNotNull && col("pop_2020").isNotNull &&
           col("pop_change").isNotNull &&
           col("pop_2020") - col("pop_2010") === col("pop_change"))
-
-  /** Nearest-zone assignment by haversine distance to zone centroids —
-    * the first geo-ish mart the reference's staged data implies
-    * (SURVEY.md §7.2 slice 4): broadcast the (small) centroid dim,
-    * pick argmin distance per point; map-only over the fact side.
-    * Points with a NULL coordinate are excluded up front (callers
-    * pre-flag them via the staging validity columns) — a NULL lng
-    * would otherwise produce NULL distances and an arbitrary
-    * nulls-first argmin "assignment". */
-  def nearestZone(points: DataFrame, zones: DataFrame,
-                  idCol: String, latCol: String, lngCol: String,
-                  zoneKeyCol: String, zoneLatCol: String,
-                  zoneLngCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val z = zones.select(col(zoneKeyCol).as("zone"),
-      col(zoneLatCol).as("zlat"), col(zoneLngCol).as("zlng"))
-    val joined = points
-      .select(col(idCol).as("id"), col(latCol).as("lat"), col(lngCol).as("lng"))
-      .filter(col("lat").isNotNull && col("lng").isNotNull)
-      .crossJoin(broadcast(z))
-      .withColumn("dist_km",
-        round(distLatLng(col("lat"), col("lng"), col("zlat"), col("zlng"), "km"), 6))
-    val w = Window.partitionBy("id").orderBy(col("dist_km").asc, col("zone").asc)
-    joined.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("id"), col("zone").as("nearest_zone"), col("dist_km"))
-  }
 }

@@ -23,7 +23,9 @@ import org.apache.spark.sql.types._
   */
 object CitibikeModels {
 
-  /** Public Citibike system-data schema (post-2021 feed). */
+  /** Public Citibike system-data schema (post-2021 feed).
+    * Declared by README row "Q2 Citibike TRIPS staging": the declared
+    * source's schema. */
   val tripsSchema: StructType = StructType(Seq(
     StructField("ride_id", StringType),
     StructField("rideable_type", StringType),

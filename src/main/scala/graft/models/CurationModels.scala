@@ -397,10 +397,12 @@ object CurationModels {
     * deterministic 1-in-20 chunk sample. Integer PPM so the pass/fail
     * boundary is engine-exact. Below `thresholdPpm`, the publish ROLLS
     * BACK — index AND codebook together, to the version before the
-    * gate's read — and the bad version stays inspectable in history. */
+    * gate's read — and the bad version stays inspectable in history.
+    * Declared by SURVEY "Round-13 infrastructure": IVF publish gated by e18's
+    * recall. */
   def ragRecallGate(spark: SparkSession, cfg: RunConfig,
-                    thresholdPpm: Long, k: Int = 5,
-                    nProbe: Int = 2): RagGateResult = {
+                    thresholdPpm: Long): RagGateResult = {
+    val (k, nProbe) = (5, 2) // recall@5 over the 2 nearest cells
     val idxRoot = memberRoot(cfg, "RAG_CHUNK_INDEX")
     val cbRoot = memberRoot(cfg, "RAG_CODEBOOK")
     val idxV = VersionedTable.currentVersion(spark, idxRoot).getOrElse(
@@ -454,12 +456,10 @@ object CurationModels {
     * (k, recall target). This is the operating point a serving team
     * reads off the release; versioned next to the release so a retrain
     * that degrades the cost/recall frontier is a DIFFABLE event, not a
-    * silent regression. Bounded: |ks|·|targets| rows, computed from
-    * the 1-in-20 chunk sample against the stored index. */
-  def indexCard(spark: SparkSession, cfg: RunConfig,
-                ks: Seq[Int] = Seq(1, 5),
-                nProbes: Seq[Int] = Seq(1, 2, 4),
-                targetsPpm: Seq[Long] = Seq(600000L, 900000L)): DataFrame = {
+    * silent regression. Bounded: k ∈ {1, 5} × targets {60%, 90%}
+    * (probe widths 1, 2, 4) = 4 rows, computed from the 1-in-20 chunk
+    * sample against the stored index. */
+  def indexCard(spark: SparkSession, cfg: RunConfig): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val index = VersionedTable.read(spark, memberRoot(cfg, "RAG_CHUNK_INDEX"))
     val cb = collectRagCodebook(
@@ -468,9 +468,9 @@ object CurationModels {
     val queries = index.filter(pmod(col("chunk_id"), lit(20L)) === 0)
       .select(col("chunk_id").as("id"), col("v"))
     val grid = Similarity.ivfOperatingSweepExact(corpus, queries, "v", "id",
-      ks = ks, codebook = cb, nProbes = nProbes)
+      ks = Seq(1, 5), codebook = cb, nProbes = Seq(1, 2, 4))
     import spark.implicits._
-    val targets = targetsPpm.toDF("target_ppm")
+    val targets = Seq(600000L, 900000L).toDF("target_ppm")
     val cand = grid.crossJoin(broadcast(targets))
       .withColumn("meets",
         (col("recall_ppm") >= col("target_ppm")).cast(LongType))
@@ -501,16 +501,14 @@ object CurationModels {
     * INDEX_CARD sibling of the release members), one card per accepted
     * release; on trip nothing is written and the caller skips/rolls
     * back the publish (the [[ragRecallGate]] convention). First publish
-    * (no prior card) passes by definition. */
+    * (no prior card) passes by definition.
+    * Declared by README row "Round-17 ext": versioned index card + frontier
+    * gate. */
   def indexCardGate(spark: SparkSession, cfg: RunConfig,
-                    maxRelDelta: Double,
-                    ks: Seq[Int] = Seq(1, 5),
-                    nProbes: Seq[Int] = Seq(1, 2, 4),
-                    targetsPpm: Seq[Long] = Seq(600000L, 900000L),
-                    force: Boolean = false)
+                    maxRelDelta: Double, force: Boolean = false)
       : IndexCardGateResult = {
     val cardRoot = memberRoot(cfg, "INDEX_CARD")
-    val card = indexCard(spark, cfg, ks, nProbes, targetsPpm)
+    val card = indexCard(spark, cfg)
     val nViol = VersionedTable.currentVersion(spark, cardRoot).fold(0L) { _ =>
       graft.pipeline.DataTests.cardDiff(card,
           VersionedTable.read(spark, cardRoot), maxRelDelta,
@@ -524,75 +522,8 @@ object CurationModels {
       Some(VersionedTable.write(spark, cardRoot, card)))
   }
 
-  /** The versioned members of a curation RELEASE — everything a
-    * downstream consumer must see move in lockstep: the card that
-    * describes the corpus, the chunks, and the index+codebook that
-    * serve it. */
-  val releaseMembers: Seq[String] =
-    Seq("DATA_CARD", "RAG_CHUNKS", "RAG_CODEBOOK", "RAG_CHUNK_INDEX")
-
   private def memberRoot(cfg: RunConfig, name: String): String =
     graft.pipeline.Pipeline.materializationPath(cfg, "3_MART___CURATION", name)
-
-  /** The env's release-registry root (the `_RELEASE` sibling of the
-    * member tables; the leading underscore keeps it out of any
-    * table-name namespace). */
-  def releaseRoot(cfg: RunConfig): String =
-    memberRoot(cfg, "_RELEASE")
-
-  /** ATOMIC CROSS-TABLE PUBLISH of the curation run (VERDICT r13
-    * next-#4): snapshot the four members' current versions into ONE
-    * [[graft.pipeline.PublishSet]] registry commit. Call AFTER the
-    * Registry run's member commits and after [[ragRecallGate]] passes
-    * — a failed gate never publishes, so release readers never observe
-    * the bad candidate, and the mid-run window (card committed, index
-    * not yet) is invisible to anyone resolving through the release.
-    * Returns the release version. */
-  def publishRelease(spark: SparkSession, cfg: RunConfig): Long =
-    graft.pipeline.PublishSet.publishCurrent(spark, releaseRoot(cfg),
-      releaseMembers.map(memberRoot(cfg, _)))
-
-  final case class GatedPublishResult(recall: RagGateResult,
-                                      card: Option[IndexCardGateResult],
-                                      releaseVersion: Option[Long])
-
-  /** BOTH release gates + the atomic publish in their required order
-    * (recall gate — which rolls a bad index back — THEN the frontier
-    * gate — which commits the accepted card — THEN the registry
-    * publish), so a caller composing them by hand is never one
-    * forgotten call away from an ungated publish. Gate ordering
-    * matters: the recall gate can ROLL BACK index+codebook, and the
-    * card must describe whatever survives it. A tripped gate publishes
-    * NOTHING and reports which gate tripped; `forceCard = true` is the
-    * index-card acknowledgment path threaded through. */
-  def publishGatedRelease(spark: SparkSession, cfg: RunConfig,
-                          recallThresholdPpm: Long,
-                          cardMaxRelDelta: Double,
-                          forceCard: Boolean = false): GatedPublishResult = {
-    val recall = ragRecallGate(spark, cfg, recallThresholdPpm)
-    if (!recall.passed) return GatedPublishResult(recall, None, None)
-    val card = indexCardGate(spark, cfg, cardMaxRelDelta, force = forceCard)
-    if (!card.passed) return GatedPublishResult(recall, Some(card), None)
-    GatedPublishResult(recall, Some(card),
-      Some(publishRelease(spark, cfg)))
-  }
-
-  /** Read one member AT the current release's pinned version — the
-    * consistent-snapshot read path (never the member table's own
-    * current, which a concurrent run may have advanced). */
-  def readRelease(spark: SparkSession, cfg: RunConfig,
-                  member: String): DataFrame = {
-    require(releaseMembers.contains(member),
-      s"'$member' is not a release member (${releaseMembers.mkString(", ")})")
-    graft.pipeline.PublishSet.readTable(spark, releaseRoot(cfg),
-      memberRoot(cfg, member))
-  }
-
-  /** Roll the WHOLE release back to version `to` in one registry
-    * commit — all four members restore together; no torn intermediate
-    * is ever resolvable. */
-  def rollbackRelease(spark: SparkSession, cfg: RunConfig, to: Long): Long =
-    graft.pipeline.PublishSet.rollback(spark, releaseRoot(cfg), to)
 
   /** The generic data-test suite for the curation DAG outputs (one
     * Spark action over [[Registry.resolve]]'s on-demand resolution,

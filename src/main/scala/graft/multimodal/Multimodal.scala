@@ -151,15 +151,14 @@ object Multimodal {
     * the scan; the only exchange carries (chunk-key, id, sig) triples —
     * never the payload bytes (the dedupMedia contract). Empty payloads
     * yield NULL signatures and never pair. */
-  def phashNearDup(media: Dataset[MediaRow], chunks: Int = 4,
-                   maxHamming: Int = 3): DataFrame = {
+  def phashNearDup(media: Dataset[MediaRow]): DataFrame = {
     val sigs = media.toDF()
       .select(col("media_id").as("id"),
         graft.expressions.HashExpressions.phash(
           decode(col("bytes"), "UTF-8")).as("sig"))
       .filter(col("sig").isNotNull)
     graft.operators.Dedup.hammingPairs(sigs, bits = 60,
-      chunks = chunks, maxHamming = maxHamming)
+      chunks = 4, maxHamming = 3)
   }
 
   /** Per-partition batched feature extraction over a media Dataset.
@@ -313,13 +312,4 @@ object Multimodal {
       .select(col("media_id"), col("align_cosine"),
         (col("align_cosine") >= tau).as("aligned"))
   }
-
-  /** Join extracted media features back onto a relational table — the
-    * shape a multimodal training pipeline ends in (metadata + features
-    * co-located, bytes dropped before any wide shuffle). */
-  def featureTable(media: Dataset[MediaRow], dim: Int = 64)(
-      implicit spark: SparkSession): DataFrame =
-    extractFeatures(media, dim)
-      .withColumnRenamed("features", "embedding")
-      .drop("kind")
 }

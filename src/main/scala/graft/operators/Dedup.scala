@@ -207,12 +207,16 @@ object Dedup {
     * side, weights from the MERGED copy counts. */
   def minhashPairsDelta(newDocs: DataFrame, state: DataFrame,
                         textCol: String, idCol: String,
-                        n: Int = 3, k: Int = 16, bands: Int = 4,
                         threshold: Double = 0.5): DataFrame = {
-    val (baseOld, bandedOld) = bandedRelations(state, "text", "id", n, k, bands)
+    val (baseOld, bandedOld) = deltaBanding(state)
     deltaPairsOn(newDocs, state, baseOld, bandedOld, textCol, idCol,
-      n, k, bands, threshold).pairs
+      threshold).pairs
   }
+
+  /** The delta family's one banding, [[minhashPairs]]' defaults:
+    * 3-word shingles, 16 minhashes in 4 bands, over (id, text) rows. */
+  private def deltaBanding(reps: DataFrame): (DataFrame, DataFrame) =
+    bandedRelations(reps, "text", "id", n = 3, k = 16, bands = 4)
 
   /** Result of the BANDED delta pairing: the contributed pairs plus the
     * new fingerprints' (id, sh) / (id, band) relations — exactly the
@@ -228,9 +232,8 @@ object Dedup {
     * `bands` is written bucketed/partitioned BY band (the candNO join
     * prunes to the batch's buckets), `base` bucketed BY id (the verify
     * join fetches only matched candidates' shingle sets). */
-  def minhashBandState(state: DataFrame, n: Int = 3, k: Int = 16,
-                       bands: Int = 4): (DataFrame, DataFrame) =
-    bandedRelations(state, "text", "id", n, k, bands)
+  def minhashBandState(state: DataFrame): (DataFrame, DataFrame) =
+    deltaBanding(state)
 
   /** Delta MinHash pairing against MATERIALIZED signature state: same
     * semantics as [[minhashPairsDelta]] (spec-pinned identical), but
@@ -243,22 +246,20 @@ object Dedup {
   def minhashPairsDeltaBanded(newDocs: DataFrame, state: DataFrame,
                               stateBase: DataFrame, stateBands: DataFrame,
                               textCol: String, idCol: String,
-                              n: Int = 3, k: Int = 16, bands: Int = 4,
                               threshold: Double = 0.5): DeltaBanded =
     deltaPairsOn(newDocs, state, stateBase, stateBands, textCol, idCol,
-      n, k, bands, threshold)
+      threshold)
 
   private def deltaPairsOn(newDocs: DataFrame, state: DataFrame,
                            baseOld: DataFrame, bandedOld: DataFrame,
                            textCol: String, idCol: String,
-                           n: Int, k: Int, bands: Int,
                            threshold: Double): DeltaBanded = {
     val batchReps = fingerprintReps(newDocs, textCol, idCol)
       .localCheckpoint(false) // feeds the anti-join and the count join
     val newReps = batchReps
       .join(state.select(col("fp")), Seq("fp"), "left_anti")
       .localCheckpoint(false) // feeds bands and base
-    val (baseNew, bandedNew) = bandedRelations(newReps, "text", "id", n, k, bands)
+    val (baseNew, bandedNew) = deltaBanding(newReps)
     // At-least-once REPLAY guard (ADVICE r8): a crash between the
     // companion-table merges and the state swap leaves this batch's
     // rows already absorbed into `baseOld`/`bandedOld`. A replayed
@@ -440,7 +441,9 @@ object Dedup {
 
   /** [[minhashPairs]] with the banding chosen by [[chooseBanding]] from
     * the verification threshold itself — candidates are generated at
-    * the S-curve point matching what the exact-jaccard verify keeps. */
+    * the S-curve point matching what the exact-jaccard verify keeps.
+    * Declared by SURVEY "Beyond `queries` (round 11)", LSH banding
+    * auto-tuning. */
   def minhashPairsAuto(df: DataFrame, textCol: String, idCol: String,
                        n: Int = 3, k: Int = 16,
                        threshold: Double = 0.5): DataFrame = {
@@ -754,15 +757,16 @@ object Dedup {
     * components of (all old pairs ∪ new pairs) — |state| + |batch|
     * edges instead of the full history, with NO append-order
     * assumption (min ids propagate globally either way; spec-pinned
-    * == full rebuild). O(log diameter) rounds as the base operator. */
-  def connectedComponentsDelta(labels: DataFrame, newPairs: DataFrame,
-                               maxIter: Int = 30): DataFrame = {
+    * == full rebuild). O(log diameter) rounds as the base operator.
+    * Declared by SURVEY "Beyond `queries` (round 8)", DELTA connected
+    * components. */
+  def connectedComponentsDelta(labels: DataFrame,
+                               newPairs: DataFrame): DataFrame = {
     val labelEdges = labels
       .filter(col("id") =!= col("group_id")) // keepers re-enter as mates' id2
       .select(col("id").as("id1"), col("group_id").as("id2"))
     connectedComponents(
-      labelEdges.unionByName(newPairs.select(col("id1"), col("id2"))),
-      maxIter)
+      labelEdges.unionByName(newPairs.select(col("id1"), col("id2"))))
   }
 
   // -------------------------------------------------------------------
@@ -776,14 +780,13 @@ object Dedup {
     */
   def embeddingNearDupPairs(df: DataFrame, vecCol: String, idCol: String,
                             threshold: Double,
-                            bucketed: Boolean = false,
-                            dim: Int = 64): DataFrame = {
+                            bucketed: Boolean = false): DataFrame = {
     val withB =
       if (bucketed)
         // the SAME bucket pipeline as the e03 scale path — routed
         // through Similarity.lshBuckets so the key format / bit count /
         // degenerate-vector contract can never drift between the two
-        Similarity.lshBuckets(df, vecCol, idCol, nBits = 8, dim = dim)
+        Similarity.lshBuckets(df, vecCol, idCol, nBits = 8, dim = 64)
           .withColumnRenamed("bucket", "b")
       else df.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
         .filter(Similarity.nonDegenerate(col("v")))

@@ -14,6 +14,9 @@ import org.apache.spark.sql.types.LongType
   */
 object Graph {
 
+  /** Total rank mass: ranks are BIGINT units of 1e-12. */
+  private val scale = 1000000000000L
+
   /** Fixed-point PageRank: `iterations` synchronous power steps with
     * damping 85/100 and uniform teleport, all arithmetic in BIGINT
     * "rank units" of 1e-12 (`scale` = 1_000_000_000_000 = total mass).
@@ -41,11 +44,10 @@ object Graph {
     *
     * `edges` must carry long columns `src`, `dst` (directed; pass both
     * directions for an undirected graph). Output: (node, rank). */
-  def pageRankFixedPoint(edges: DataFrame, iterations: Int,
-                         scale: Long = 1000000000000L): DataFrame = {
-    require(iterations >= 1 && scale >= 1000000L, s"$iterations/$scale")
-    val (e, init, n) = rankInit(edges, scale, prev = None)
-    powerSteps(e, init, n, iterations, scale).select(col("node"), col("rank"))
+  def pageRankFixedPoint(edges: DataFrame, iterations: Int): DataFrame = {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+    val (e, init, n) = rankInit(edges, prev = None)
+    powerSteps(e, init, n, iterations).select(col("node"), col("rank"))
   }
 
   /** Warm-start PageRank — the delta form for a daily-growing graph:
@@ -60,19 +62,18 @@ object Graph {
     * that, plus near-stationarity when the graph didn't change — the
     * same delta-operator theme as the dedup/CC delta family).
     *
-    * prevRanks: (node, rank). Output: (node, rank). */
+    * prevRanks: (node, rank). Output: (node, rank).
+    * Declared by SURVEY "Beyond `queries` (round 10)", warm-start PageRank. */
   def pageRankWarmStart(edges: DataFrame, prevRanks: DataFrame,
-                        iterations: Int,
-                        scale: Long = 1000000000000L): DataFrame = {
-    require(iterations >= 1 && scale >= 1000000L, s"$iterations/$scale")
-    val (e, init, n) = rankInit(edges, scale, Some(prevRanks))
-    powerSteps(e, init, n, iterations, scale).select(col("node"), col("rank"))
+                        iterations: Int): DataFrame = {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+    val (e, init, n) = rankInit(edges, Some(prevRanks))
+    powerSteps(e, init, n, iterations).select(col("node"), col("rank"))
   }
 
   /** Shared init: checkpointed edges, the seeded (node, outdeg, rank)
     * relation, and the node count that sizes the teleport. */
-  private def rankInit(edges: DataFrame, scale: Long,
-                       prev: Option[DataFrame])
+  private def rankInit(edges: DataFrame, prev: Option[DataFrame])
       : (DataFrame, DataFrame, Long) = {
     val e = edges.select(col("src").cast(LongType).as("src"),
                          col("dst").cast(LongType).as("dst"))
@@ -122,7 +123,7 @@ object Graph {
 
   /** The synchronous power iteration shared by cold and warm starts. */
   private def powerSteps(e: DataFrame, init: DataFrame, n: Long,
-                         iterations: Int, scale: Long): DataFrame = {
+                         iterations: Int): DataFrame = {
     if (n == 0) return init // empty graph: nothing to iterate
     val teleport = ((scale * 15L) / 100L) / n
     var ranks = init
@@ -188,9 +189,9 @@ object Graph {
 
   /** Host-authority prior from CONTENT SYNDICATION — the curation-gate
     * consumer PageRank was built for: with no crawl link graph in the
-    * corpus, hosts that share near-identical content (≥ `minShared`
-    * distinct word `n`-shingles) are linked, and fixed-point PageRank
-    * over that graph ranks hosts by how central they are in the
+    * corpus, hosts that share near-identical content (≥ 3 distinct
+    * word 5-shingles) are linked, and 6 steps of fixed-point PageRank
+    * over that graph rank hosts by how central they are in the
     * syndication network (mirror farms and scraped-content hubs score
     * structurally, not by volume). Output: (host, rank) for every host
     * with at least one syndication edge — callers join it back to
@@ -206,12 +207,11 @@ object Graph {
     * [[pageRankFixedPoint]]'s one-shuffle-per-step shape on a
     * hosts-sized graph. */
   def hostSyndicationRank(docs: DataFrame, textCol: String,
-                          hostCol: String, n: Int = 5, minShared: Int = 3,
-                          maxHostsPerShingle: Int = 50,
-                          iterations: Int = 6): DataFrame = {
+                          hostCol: String,
+                          maxHostsPerShingle: Int = 50): DataFrame = {
     val hostSh = docs
       .select(col(hostCol).as("host"),
-        explode(Dedup.wordShingles(col(textCol), n)).as("g"))
+        explode(Dedup.wordShingles(col(textCol), 5)).as("g"))
       .distinct()
     val capped = hostSh.groupBy("g")
       .agg(count(lit(1)).as("df"))
@@ -223,13 +223,13 @@ object Graph {
         col("a.g") === col("b.g") && col("a.host") =!= col("b.host"))
       .groupBy(col("a.host").as("ha"), col("b.host").as("hb"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= 3)
     // pairs holds both orders already (a<>b join), so the edge relation
     // is symmetric — the same contract q51's trade graph satisfies
     val edges = pairs.select(
       graft.functions.GraftFunctions.md5Long(col("ha")).as("src"),
       graft.functions.GraftFunctions.md5Long(col("hb")).as("dst"))
-    val ranks = pageRankFixedPoint(edges, iterations)
+    val ranks = pageRankFixedPoint(edges, 6)
     docs.select(col(hostCol).as("host")).distinct()
       .withColumn("node", graft.functions.GraftFunctions.md5Long(col("host")))
       .join(ranks, Seq("node"))

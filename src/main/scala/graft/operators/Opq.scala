@@ -68,12 +68,12 @@ object Opq {
 
   /** Dense-R variant of [[rotate]] for a [[fitParametric]] matrix. */
   def rotateDense(df: DataFrame, vecCol: String, idCol: String,
-                  matrix: Seq[Seq[Double]], dp: Int = -1): DataFrame =
+                  matrix: Seq[Seq[Double]]): DataFrame =
     df.select(col(idCol).cast(LongType).as("id"),
         toDoubleArray(col(vecCol)).as("v0"))
       .filter(Similarity.nonDegenerate(col("v0")))
       .select(col("id"),
-        VectorExpressions.matrixRotate(col("v0"), matrix, dp).as("v"))
+        VectorExpressions.matrixRotate(col("v0"), matrix).as("v"))
 
   /** PARAMETRIC OPQ — the full Ge et al. 2013 non-parametric
     * alternation the random-rotation e11 deliberately skips: alternate
@@ -105,16 +105,16 @@ object Opq {
     * Returns (R rows, packed PQ codebook trained under the final R). */
   def fitParametric(df: DataFrame, vecCol: String, idCol: String,
                     m: Int, kCent: Int, dim: Int,
-                    alternations: Int = 2,
-                    initReflectors: Int = 4): (Seq[Seq[Double]], Seq[Seq[Double]]) = {
+                    alternations: Int = 2): (Seq[Seq[Double]], Seq[Seq[Double]]) = {
     require(alternations >= 1 && dim % m == 0,
       s"bad opq params: alternations=$alternations m=$m dim=$dim")
     val x = df.select(col(idCol).cast(LongType).as("id"),
         toDoubleArray(col(vecCol)).as("x"))
       .filter(Similarity.nonDegenerate(col("x")))
       .localCheckpoint(false) // 2·alternations bounded passes below
-    // init: the deterministic Householder product, materialized densely
-    var r: Array[Array[Double]] = denseOf(reflectors(initReflectors, dim), dim)
+    // init: the deterministic 4-reflector Householder product,
+    // materialized densely
+    var r: Array[Array[Double]] = denseOf(reflectors(4, dim), dim)
     var cb: Seq[Seq[Double]] = Seq.empty
     val sub = dim / m
     for (_ <- 1 to alternations) {

@@ -28,7 +28,7 @@ object QuantAudit {
     * clears that by 3-5× while a uniformly-positioned parameter set of
     * ~1.5k values still passes with ~97% probability — near-misses are
     * meant to be SEEN, not silently absorbed. */
-  val DefaultMargin: Double = 1e-5
+  val Margin: Double = 1e-5
 
   /** Distance of the pre-floor value to its nearest integer boundary. */
   def distance(pre: Double): Double = {
@@ -44,7 +44,6 @@ object QuantAudit {
     * `hardFail = false` (literal-contract fits, immune by construction)
     * only logs — the headroom is still recorded per round. */
   def audit(what: String, pres: Iterable[Double],
-            margin: Double = DefaultMargin,
             hardFail: Boolean = true): Double = {
     var min = Double.PositiveInfinity
     var n = 0
@@ -54,11 +53,11 @@ object QuantAudit {
       n += 1
     }
     // one line per fit per round: the near-boundary trend is diffable
-    println(f"[graft] quant-audit $what: n=$n min-boundary-dist=$min%.3e margin=$margin%.1e")
+    println(f"[graft] quant-audit $what: n=$n min-boundary-dist=$min%.3e margin=$Margin%.1e")
     if (hardFail)
-      require(n == 0 || min >= margin,
+      require(n == 0 || min >= Margin,
         s"[quant-audit $what] a fitted parameter's pre-floor value sits " +
-          f"$min%.3e from a floor(f(x)*1e9+0.5) boundary (margin $margin%.1e): " +
+          f"$min%.3e from a floor(f(x)*1e9+0.5) boundary (margin $Margin%.1e): " +
           "cross-engine libm skew can flip the quantized integer and fail " +
           "the hash gate. Move this fit to the literal contract (inline " +
           "the collected parameters into both scoring paths) or refit.")

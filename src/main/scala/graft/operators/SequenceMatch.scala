@@ -74,12 +74,4 @@ object SequenceMatch {
         (1 to n).map(i => col(tsName(i))) :+
         deepest.as("stage"): _*)
   }
-
-  /** Funnel counts by deepest stage reached — q57's output contract for
-    * any stage list. */
-  def funnelCounts(events: DataFrame, keyCol: String, tsCol: String,
-                   stages: Seq[Stage]): DataFrame =
-    funnel(events, keyCol, tsCol, stages)
-      .groupBy(col("stage")).agg(count(lit(1)).as("n_keys"))
-      .orderBy(col("stage"))
 }

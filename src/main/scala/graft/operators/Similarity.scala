@@ -614,22 +614,11 @@ object Similarity {
     * broadcast; top-k via per-query window. At warehouse scale the code
     * table is written partitioned BY cell, so probes prune partitions
     * at the scan (IvfStorageSpec pins that property).
-    */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
-                vecCol: String, idCol: String, k: Int,
-                cellIds: Seq[Long], nProbe: Int,
-                m: Int, pqCentroidIds: Seq[Long]): DataFrame =
-    ivfPqSearch(corpus, queries, vecCol, idCol, k,
-      cellAssignments(corpus, vecCol, idCol, cellIds),
-      () => probeCells(corpus, queries, vecCol, idCol, cellIds, nProbe),
-      m, collectCodebook(
-        corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-          .filter(nonDegenerate(col("v"))), pqCentroidIds.distinct.sorted))
-
-  /** IVF-PQ over a TRAINED coarse quantizer: cells come from a
-    * [[KMeans.Model]] codebook (0..k-1); the PQ sub-codebook stays the
-    * id-named contract. For the fully-trained form (PQ sub-codebooks
-    * from per-subspace L2 k-means too) see [[ivfPqTopKFullyTrained]]. */
+    *
+    * Cells come from a TRAINED coarse quantizer, a [[KMeans.Model]]
+    * codebook (0..k-1); the PQ sub-codebook stays the id-named
+    * contract. For the fully-trained form (PQ sub-codebooks from
+    * per-subspace L2 k-means too) see [[ivfPqTopKFullyTrained]]. */
   def ivfPqTopKTrained(corpus: DataFrame, queries: DataFrame,
                        vecCol: String, idCol: String, k: Int,
                        cellCodebook: Seq[Seq[Double]], nProbe: Int,
@@ -832,21 +821,11 @@ object Similarity {
                                    cellCodebook: Seq[Seq[Double]], m: Int,
                                    pqCodebook: Seq[Seq[Double]],
                                    rs: Seq[Int], nProbes: Seq[Int])
-      : DataFrame = {
-    def cleanCount(df: DataFrame): Long =
-      df.select(toDoubleArray(col(vecCol)).as("v"))
-        .filter(nonDegenerate(col("v"))).count()
-    val nFull = cleanCount(corpus)
-    val filtered = corpus.join(keepIds, Seq(idCol))
-    val nKept = cleanCount(filtered)
-    require(nFull > 0, "filtered grid needs a non-empty corpus")
-    operatingGrid3dMulti(filtered, queries, vecCol, idCol, ks,
+      : DataFrame =
+    filteredGrids(corpus, keepIds, queries, vecCol, idCol, ks,
         cellCodebook, rs, nProbes,
-        Seq("" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook)),
-        scanDenomOverride = Some(nFull))
+        Seq("" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook)))
       .drop("family")
-      .withColumn("selectivity_ppm", lit(1000000L * nKept / nFull))
-  }
 
   /** FILTERED MULTI-FAMILY GRIDS — [[ivfPqFilteredOperatingGrid3d]]'s
     * pre-filter contract over [[operatingGrid3dMulti]]'s shared
@@ -866,7 +845,26 @@ object Similarity {
                                       mins: Seq[Double], scales: Seq[Double],
                                       bqThresholds: Seq[Double],
                                       rs: Seq[Int], nProbes: Seq[Int])
-      : DataFrame = {
+      : DataFrame =
+    filteredGrids(corpus, keepIds, queries, vecCol, idCol, ks,
+      cellCodebook, rs, nProbes, Seq(
+        "ivf_pq" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook),
+        "ivf_sq8" -> sqCandOf(mins, scales),
+        "ivf_bq" -> bqCandOf(bqThresholds)))
+
+  /** The filtered grids' shared prelude and tail: cut the corpus to
+    * `keepIds` (the pre-filter contract), run [[operatingGrid3dMulti]]
+    * over the survivors with every cell's scan charged against the FULL
+    * clean corpus, and append `selectivity_ppm` — the cost of the
+    * predicate-pruned exact scan the cells compete with. */
+  private def filteredGrids(corpus: DataFrame, keepIds: DataFrame,
+                            queries: DataFrame, vecCol: String,
+                            idCol: String, ks: Seq[Int],
+                            cellCodebook: Seq[Seq[Double]],
+                            rs: Seq[Int], nProbes: Seq[Int],
+                            families: Seq[(String,
+                              (DataFrame, DataFrame, DataFrame)
+                                => DataFrame)]): DataFrame = {
     def cleanCount(df: DataFrame): Long =
       df.select(toDoubleArray(col(vecCol)).as("v"))
         .filter(nonDegenerate(col("v"))).count()
@@ -875,11 +873,7 @@ object Similarity {
     val nKept = cleanCount(filtered)
     require(nFull > 0, "filtered grids need a non-empty corpus")
     operatingGrid3dMulti(filtered, queries, vecCol, idCol, ks,
-        cellCodebook, rs, nProbes, Seq(
-          "ivf_pq" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook),
-          "ivf_sq8" -> sqCandOf(mins, scales),
-          "ivf_bq" -> bqCandOf(bqThresholds)),
-        scanDenomOverride = Some(nFull))
+        cellCodebook, rs, nProbes, families, scanDenomOverride = Some(nFull))
       .withColumn("selectivity_ppm", lit(1000000L * nKept / nFull))
   }
 
@@ -1578,6 +1572,10 @@ object Similarity {
     floor(round(VectorExpressions.cosine(a, b), 6) * 1e6 + 0.5)
       .cast(LongType)
 
+  /** Width of the embeddings the NSW builds sketch: their hyperplane
+    * bits draw 64-dimensional planes. */
+  private val NswDim = 64
+
   /** Deterministic kNN-graph build, the NSW way but batch: candidate
     * pairs from `bands` independent random-hyperplane sketches (band b
     * uses seeds [b·nBits, (b+1)·nBits) of the [[graft.functions
@@ -1591,8 +1589,7 @@ object Similarity {
     * by src, and the result is |corpus|·degree skinny edge rows.
     * Output: (src, dst, cos_u). */
   def nswGraph(corpus: DataFrame, vecCol: String, idCol: String,
-               nBits: Int, bands: Int, degree: Int,
-               dim: Int = 64): DataFrame = {
+               nBits: Int, bands: Int, degree: Int): DataFrame = {
     require(nBits >= 1 && bands >= 1 && degree >= 1,
       s"need nBits/bands/degree >= 1; got $nBits/$bands/$degree")
     val e = corpus.select(col(idCol).as("id"),
@@ -1614,7 +1611,7 @@ object Similarity {
     val bucketed = (0 until bands).map { b =>
       e.withColumn("bucket", concat(lit(s"$b:"), concat_ws("",
         (0 until nBits).map(s =>
-          hyperplaneBit(col("v"), b * nBits + s, dim)
+          hyperplaneBit(col("v"), b * nBits + s, NswDim)
             .cast(StringType)): _*)))
     }.reduce(_ unionByName _)
     val cand = bucketed
@@ -1659,11 +1656,10 @@ object Similarity {
   def nswBeamSearch(corpus: DataFrame, queries: DataFrame,
                     vecCol: String, idCol: String,
                     nBits: Int, bands: Int, degree: Int,
-                    beamWidth: Int, hops: Int, k: Int,
-                    dim: Int = 64): DataFrame =
+                    beamWidth: Int, hops: Int, k: Int): DataFrame =
     hnswSearch(corpus, queries, vecCol, idCol,
       corpus.select(col(idCol).as("id")),
-      Seq((nswGraph(corpus, vecCol, idCol, nBits, bands, degree, dim),
+      Seq((nswGraph(corpus, vecCol, idCol, nBits, bands, degree),
         beamWidth, hops)), k)
 
   /** HIERARCHICAL NSW SEARCH — the full HNSW shape (Malkov & Yashunin,
@@ -1751,9 +1747,8 @@ object Similarity {
     * newcomer are touched. */
   def nswUpsertEdges(base: DataFrame, delta: DataFrame,
                      vecCol: String, idCol: String,
-                     nBits: Int, bands: Int, degree: Int,
-                     dim: Int = 64): DataFrame = {
-    val gBase = nswGraph(base, vecCol, idCol, nBits, bands, degree, dim)
+                     nBits: Int, bands: Int, degree: Int): DataFrame = {
+    val gBase = nswGraph(base, vecCol, idCol, nBits, bands, degree)
     def bucketed(df: DataFrame): DataFrame = {
       val e = df.select(col(idCol).as("id"),
           toDoubleArray(col(vecCol)).as("v"))
@@ -1761,7 +1756,7 @@ object Similarity {
       (0 until bands).map { b =>
         e.withColumn("bucket", concat(lit(s"$b:"), concat_ws("",
           (0 until nBits).map(s =>
-            hyperplaneBit(col("v"), b * nBits + s, dim)
+            hyperplaneBit(col("v"), b * nBits + s, NswDim)
               .cast(StringType)): _*)))
       }.reduce(_ unionByName _)
     }
@@ -1881,10 +1876,9 @@ object Similarity {
   def nswOperatingGrid(corpus: DataFrame, queries: DataFrame,
                        vecCol: String, idCol: String, ks: Seq[Int],
                        nBits: Int, bands: Int, degree: Int,
-                       beamWidths: Seq[Int], hopsList: Seq[Int],
-                       dim: Int = 64): DataFrame =
+                       beamWidths: Seq[Int], hopsList: Seq[Int]): DataFrame =
     nswGridCore(corpus, None, queries, vecCol, idCol, ks, nBits, bands,
-      degree, beamWidths, hopsList, dim)
+      degree, beamWidths, hopsList)
 
   /** FILTERED NSW GRID — [[nswOperatingGrid]] under a metadata
     * predicate, with the production filtered-HNSW semantics
@@ -1902,17 +1896,17 @@ object Similarity {
                                queries: DataFrame,
                                vecCol: String, idCol: String, ks: Seq[Int],
                                nBits: Int, bands: Int, degree: Int,
-                               beamWidths: Seq[Int], hopsList: Seq[Int],
-                               dim: Int = 64): DataFrame =
+                               beamWidths: Seq[Int], hopsList: Seq[Int])
+      : DataFrame =
     nswGridCore(corpus, Some(keepIds), queries, vecCol, idCol, ks, nBits,
-      bands, degree, beamWidths, hopsList, dim)
+      bands, degree, beamWidths, hopsList)
 
   private def nswGridCore(corpus: DataFrame, keepIds: Option[DataFrame],
                           queries: DataFrame,
                           vecCol: String, idCol: String, ks: Seq[Int],
                           nBits: Int, bands: Int, degree: Int,
-                          beamWidths: Seq[Int], hopsList: Seq[Int],
-                          dim: Int): DataFrame = {
+                          beamWidths: Seq[Int], hopsList: Seq[Int])
+      : DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1) && ks.distinct.size == ks.size,
       s"bad ks $ks")
     require(beamWidths.nonEmpty && beamWidths.forall(_ >= 1) &&
@@ -1929,7 +1923,7 @@ object Similarity {
       .filter(nonDegenerate(col("qv"))).persist()
     val kMax = ks.max
     val ksSorted = ks.sorted
-    val edges = nswGraph(corpus, vecCol, idCol, nBits, bands, degree, dim)
+    val edges = nswGraph(corpus, vecCol, idCol, nBits, bands, degree)
       .persist()
     // answer-set restriction + the filtered truth (None = unfiltered)
     val keep = keepIds.map(k =>

@@ -38,11 +38,11 @@ object SkewJoin {
     *    genuinely underuse the cluster and benefit from the salt
     *    fan-out). Default hotFactor = saltBuckets: a key only benefits
     *    from an n-way salt split if it is n-fold over-represented. At
-    *    most `maxHotKeys` keys qualify (top by count) so the hot-key
+    *    most 1000 keys qualify (top by count) so the hot-key
     *    set is always driver-bounded — the same contract AQE's skew
     *    stats use.
     * 2. HOT PATH: only hot-key left rows are salted into [0, n); only
-    *    the hot-key subset of the right side (bounded: <= maxHotKeys
+    *    the hot-key subset of the right side (bounded: <= 1000
     *    keys) is replicated x n. Co-location cost for a hot key becomes
     *    max(|key|/n) instead of |key|.
     * 3. COLD PATH: everything else is a plain equi-join — zero
@@ -63,7 +63,6 @@ object SkewJoin {
   def saltedInnerJoin(left: DataFrame, right: DataFrame, key: String,
                       saltBuckets: Int,
                       sampleFraction: Double = 0.05,
-                      maxHotKeys: Int = 1000,
                       hotFactor: Double = -1): DataFrame = {
     require(saltBuckets > 0, "saltBuckets must be positive")
     require(sampleFraction > 0 && sampleFraction <= 1.0,
@@ -91,7 +90,7 @@ object SkewJoin {
         freq.filter(col("__n") >= lit(median * factor) ||
             col("__n") >= lit(total.toDouble / saltBuckets))
           .orderBy(col("__n").desc, col("__hk"))
-          .limit(maxHotKeys)
+          .limit(1000)
           .select(col("__hk")).collect().map(_.get(0))
       }
     freq.unpersist()
@@ -102,7 +101,7 @@ object SkewJoin {
     } else {
       val isHot = col(key).isin(hotKeys: _*)
       // hot path: salt left hot rows; replicate ONLY the hot-key subset
-      // of the right side (bounded by maxHotKeys — broadcastable)
+      // of the right side (at most 1000 keys — broadcastable)
       val leftHot = left.filter(isHot).withColumn("__salt",
         pmod(monotonically_increasing_id(), lit(saltBuckets.toLong)).cast("int"))
       val rightHot = right.filter(isHot).withColumn("__salt",

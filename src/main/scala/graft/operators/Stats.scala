@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 object Stats {
 
   /** ln(2/0.05)·1e9, rounded UP — the pinned integer constant behind
-    * [[withHoeffdingPpm]]'s default 95% bound. The ceiling direction
+    * [[withHoeffdingPpm]]'s 95% bound. The ceiling direction
     * means constant rounding can only WIDEN the interval, never
     * narrow coverage. */
   val HoeffdingLn40NanoCeil: Long = 3688879455L
@@ -51,12 +51,8 @@ object Stats {
     * (s0+2)²·2t ≤ A + 4·sqrt(A·2t) + 8t — inside 2^63 for any
     * trials < ~1e17. */
   def withHoeffdingPpm(df: DataFrame, phatCol: String, trialsCol: String,
-                       loCol: String, hiCol: String,
-                       lnTwoOverAlphaNano: Long = HoeffdingLn40NanoCeil)
-      : DataFrame = {
-    require(lnTwoOverAlphaNano > 0,
-      s"need a positive ln(2/alpha) nano constant, got $lnTwoOverAlphaNano")
-    val a = 1000L * lnTwoOverAlphaNano
+                       loCol: String, hiCol: String): DataFrame = {
+    val a = 1000L * HoeffdingLn40NanoCeil
     val q = s"__${loCol}_q"
     val s0 = s"__${loCol}_s0"
     val hw = s"__${loCol}_hw"

@@ -142,9 +142,7 @@ object TextAnalysis {
     * layout a shard writer consumes — no second pass needed.
     */
   def packFirstFitDecreasing(df: DataFrame, textCol: String, idCol: String,
-                             shardCol: String, cap: Long,
-                             countTokens: Column => Column = tokenCount)
-      : DataFrame = {
+                             shardCol: String, cap: Long): DataFrame = {
     require(cap > 0, s"pack capacity must be positive, got $cap")
     val sp = df.sparkSession
     import sp.implicits._
@@ -153,7 +151,7 @@ object TextAnalysis {
     // there the row is arithmetic, here it must occupy a bin slot)
     val base = df.select(col(shardCol).cast(StringType).as("shard"),
         col(idCol).cast(LongType).as("doc_id"),
-        coalesce(countTokens(col(textCol)).cast(LongType), lit(0L))
+        coalesce(tokenCount(col(textCol)).cast(LongType), lit(0L))
           .as("n_tokens"))
       .as[(String, Long, Long)]
     base.groupByKey(_._1).flatMapGroups { (shard, it) =>
@@ -950,7 +948,8 @@ object TextAnalysis {
     * single-occurrence spans — a future appended doc matching a span
     * seen once must still lose to it. This is the warehouse table a
     * daily-crawl pipeline maintains instead of re-deriving the span
-    * relation per run; [[mergeSpanKeepers]] folds a new batch in. */
+    * relation per run; [[mergeSpanKeepers]] folds a new batch in.
+    * Declared by SURVEY "Beyond `queries` (round 7)", incremental span dedup. */
   def spanKeepers(df: DataFrame, textCol: String, idCol: String,
                   k: Int = 10): DataFrame = {
     import graft.expressions.TextExpressions.spanHashes
@@ -961,7 +960,8 @@ object TextAnalysis {
 
   /** Fold an appended batch into the keeper table: min of the old
     * keeper and the batch's min per span hash. One keyed shuffle
-    * bounded by |old distinct spans| + |batch spans|. */
+    * bounded by |old distinct spans| + |batch spans|.
+    * Declared by SURVEY "Beyond `queries` (round 7)", incremental span dedup. */
   def mergeSpanKeepers(keepers: DataFrame, newDocs: DataFrame,
                        textCol: String, idCol: String,
                        k: Int = 10): DataFrame =
@@ -988,7 +988,8 @@ object TextAnalysis {
     * Scale shape: span generation is one compiled call per BATCH doc;
     * the only exchange keyed by span hash carries the batch's spans
     * plus the matching keeper rows — independent of old-corpus size
-    * given a keeper table partitioned/bucketed by h. */
+    * given a keeper table partitioned/bucketed by h.
+    * Declared by SURVEY "Beyond `queries` (round 7)", incremental span dedup. */
   def spanDedupDelta(newDocs: DataFrame, textCol: String, idCol: String,
                      keepers: DataFrame, k: Int = 10): DataFrame = {
     import graft.expressions.TextExpressions.spanHashes
@@ -1069,7 +1070,9 @@ object TextAnalysis {
     * row per distinct segment hash with its keeper (min doc_id) —
     * [[spanKeepers]]' contract at segment granularity (~1/stride its
     * row count). Single-occurrence segments included: a future doc
-    * matching a segment seen once must lose to it. */
+    * matching a segment seen once must lose to it.
+    * Declared by SURVEY "Beyond `queries` (round 9)", DELTA exact-substring
+    * dedup. */
   def substrKeepers(df: DataFrame, textCol: String, idCol: String,
                     w: Int = 4, stride: Int = 8): DataFrame = {
     import graft.expressions.TextExpressions.anchorSegments
@@ -1081,7 +1084,9 @@ object TextAnalysis {
 
   /** Fold an appended batch into the segment-keeper table: min of old
     * keeper and batch min per hash — one keyed shuffle bounded by
-    * |old distinct segments| + |batch segments|. */
+    * |old distinct segments| + |batch segments|.
+    * Declared by SURVEY "Beyond `queries` (round 9)", DELTA exact-substring
+    * dedup. */
   def mergeSubstrKeepers(keepers: DataFrame, newDocs: DataFrame,
                          textCol: String, idCol: String,
                          w: Int = 4, stride: Int = 8): DataFrame =
@@ -1101,7 +1106,9 @@ object TextAnalysis {
     * shape: segmentation touches the BATCH only; the one keyed
     * exchange carries batch segments + matching keeper rows —
     * independent of old-corpus size given a keeper table bucketed by
-    * h. */
+    * h.
+    * Declared by SURVEY "Beyond `queries` (round 9)", DELTA exact-substring
+    * dedup. */
   def exactSubstrDedupDelta(newDocs: DataFrame, textCol: String,
                             idCol: String, keepers: DataFrame,
                             w: Int = 4, stride: Int = 8,
@@ -1431,7 +1438,8 @@ object TextAnalysis {
     * table, as a tokenizer pluggable into [[tokenStats]] /
     * [[packSequences]] / [[domainMixture]]: whitespace-pretokenize
     * lowercased text, sum each word's symbol count. Array-fold form (no
-    * explode), so it drops into any per-doc projection. */
+    * explode), so it drops into any per-doc projection.
+    * Declared by README row "Round-17 ext": the pluggable counter. */
   def bpeTokenCounter(merges: Seq[(String, String)]): Column => Column =
     text => coalesce(
       aggregate(
@@ -1499,10 +1507,10 @@ object TextAnalysis {
     * 1/total floor of the FINAL iteration). */
   def fitUnigramLm(docs: DataFrame, textCol: String, idCol: String,
                    vocabWords: Int = 2000, pieceMaxLen: Int = 4,
-                   candVocab: Int = 120, emIters: Int = 2,
-                   sampleMod: Int = 20): (Map[String, Long], Long) = {
-    val sample = docs.filter(
-      pmod(md5Long(col(idCol).cast(StringType)), lit(sampleMod.toLong)) === 0L)
+                   candVocab: Int = 120, emIters: Int = 2)
+      : (Map[String, Long], Long) = {
+    val sample = docs.filter( // the deterministic 1-in-20 md5 sample
+      pmod(md5Long(col(idCol).cast(StringType)), lit(20L)) === 0L)
     val words = sample
       .select(explode(tokens(lower(col(textCol)))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
@@ -1616,14 +1624,15 @@ object TextAnalysis {
     * [[tokenStats]] / [[packSequences]] / [[domainMixture]] exactly like
     * [[bpeTokenCounter]] (VERDICT r16 next-#5's pluggable-counter bar):
     * whitespace-pretokenize lowercased text, sum each word's Viterbi
-    * piece count under the literal cost table. */
-  def unigramTokenCounter(costsU: Map[String, Long], oovCostU: Long,
-                          pieceMaxLen: Int = 4): Column => Column =
+    * piece count under the literal cost table.
+    * Declared by README row "Round-17 ext": the pluggable counter. */
+  def unigramTokenCounter(costsU: Map[String, Long],
+                          oovCostU: Long): Column => Column =
     text => coalesce(
       aggregate(
         transform(tokens(lower(text)), w =>
           graft.expressions.TextExpressions.unigramCount(
-            w, costsU, oovCostU, pieceMaxLen)),
+            w, costsU, oovCostU, 4)),
         lit(0L), (acc, x) => acc + x),
       lit(0L))
 
@@ -1666,10 +1675,9 @@ object TextAnalysis {
     * engines (the same accepted ambiguity a real BERT vocab has). */
   def fitWordpieceVocab(docs: DataFrame, textCol: String, idCol: String,
                         vocabWords: Int = 2000, pieceMaxLen: Int = 4,
-                        candVocab: Int = 120, sampleMod: Int = 20)
-      : Set[String] = {
-    val sample = docs.filter(
-      pmod(md5Long(col(idCol).cast(StringType)), lit(sampleMod.toLong)) === 0L)
+                        candVocab: Int = 120): Set[String] = {
+    val sample = docs.filter( // the deterministic 1-in-20 md5 sample
+      pmod(md5Long(col(idCol).cast(StringType)), lit(20L)) === 0L)
     val words = sample
       .select(explode(tokens(lower(col(textCol)))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
@@ -1741,14 +1749,14 @@ object TextAnalysis {
   /** Per-document wordpiece token count, pluggable into [[tokenStats]] /
     * [[packSequences]] / [[domainMixture]] like [[bpeTokenCounter]] and
     * [[unigramTokenCounter]] (the pluggable-counter contract's third
-    * real family). [UNK] words count their single [UNK] token. */
-  def wordpieceTokenCounter(vocab: Set[String], pieceMaxLen: Int = 4)
-      : Column => Column =
+    * real family). [UNK] words count their single [UNK] token.
+    * Declared by README row "Round-17 ext": the pluggable counter. */
+  def wordpieceTokenCounter(vocab: Set[String]): Column => Column =
     text => coalesce(
       aggregate(
         transform(tokens(lower(text)), w =>
           graft.expressions.TextExpressions
-            .wordpieceCount(w, vocab, pieceMaxLen).getField("tk")),
+            .wordpieceCount(w, vocab, 4).getField("tk")),
         lit(0L), (acc, x) => acc + x),
       lit(0L))
 
@@ -2160,13 +2168,15 @@ object TextAnalysis {
     *
     * At scale: featurization is one map-only pass (the t13
     * expressions), materialized once (localCheckpoint) as a SKINNY
-    * (y, x) relation; each of the `iters` jobs is a full-corpus
+    * (y, x) relation; each of the 8 Newton jobs is a full-corpus
     * map-side-combinable aggregation of 44 decimal sums (8 gradient +
     * 36 upper-triangle Hessian entries) — no shuffle wider than one
-    * row of partials. Fit cost = iters × one scan of 9 numeric
-    * columns, independent of document text size. */
-  def logisticDistillFit(df: DataFrame, textCol: String, idCol: String,
-                         iters: Int = 8, ridge: Double = 1e-3): LrModel = {
+    * row of partials. Fit cost = 8 × one scan of 9 numeric columns,
+    * independent of document text size. The ridge penalty is 1e-3 per
+    * document. */
+  def logisticDistillFit(df: DataFrame, textCol: String,
+                         idCol: String): LrModel = {
+    val (iters, ridge) = (8, 1e-3)
     val d = lrFeatureNames.size + 1 // + bias
     val feats = lrFeatures(df, textCol, idCol)
       .select(col("y"), col("x")).localCheckpoint(false)

@@ -298,21 +298,24 @@ object Pipeline {
     nDeleted
   }
 
+  /** The file size compaction aims for, here and in the versioned
+    * store's [[VersionedTable.compact]]. */
+  val CompactTargetFileBytes: Long = 128L * 1024 * 1024
+
   /** Small-file compaction — the maintenance op that keeps scan task
     * counts sane after many small incremental merges: rewrite the
-    * relation into ~`targetFileBytes` files (coalesce, no shuffle),
-    * content-identical, through the crash-safe swap. Returns the file
-    * count after compaction. Partitioned relations compact per
-    * partition dir by calling this on each affected path. */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    require(targetFileBytes >= 1024 * 1024, s"target too small: $targetFileBytes")
+    * relation into ~[[CompactTargetFileBytes]] files (coalesce, no
+    * shuffle), content-identical, through the crash-safe swap. Returns
+    * the file count after compaction. Partitioned relations compact
+    * per partition dir by calling this on each affected path. */
+  def compact(spark: SparkSession, path: String): Int = {
     val p = new org.apache.hadoop.fs.Path(path)
     val f = fsFor(spark, path)
     recoverSwap(f, p)
     require(f.exists(p), s"no relation at $path")
     val bytes = f.getContentSummary(p).getLength
-    val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    val n = math.max(1,
+      math.ceil(bytes.toDouble / CompactTargetFileBytes).toInt)
     val tmp = new org.apache.hadoop.fs.Path(s"$path.__incremental_tmp")
     writeParquet(spark.read.parquet(path).coalesce(n), tmp.toString, Nil)
     swapIn(f, p, tmp)

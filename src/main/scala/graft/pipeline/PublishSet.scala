@@ -42,7 +42,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * must be sized >= the registry's retention window — a reader of a
   * RETAINED release whose member version was pruned underneath is the
   * same out-of-contract reader as [[VersionedTable.prune]]'s
-  * (readTable throws the member layer's not-retained error, loudly).
+  * (reading it throws the member layer's not-retained error, loudly).
   *
   * At 100 TB this is metadata-only machinery: a release set is
   * |tables| lines; publish cost is one small-file CAS regardless of
@@ -193,21 +193,6 @@ object PublishSet {
     VersionedTable.manifestLines(spark, registryRoot, v)
       .find(_.startsWith("#")).map(l => dec(l.substring(1)))
 
-  /** Snapshot each table's CURRENT version and publish that as the
-    * release set. The snapshot is taken table by table, so call this
-    * from the single orchestrator AFTER the run's member commits — the
-    * atomicity guarantee is for READERS (one registry manifest), not
-    * for publishers racing member writers. */
-  def publishCurrent(spark: SparkSession, registryRoot: String,
-                     tables: Seq[String]): Long = {
-    require(tables.nonEmpty, "a release set must name at least one table")
-    publish(spark, registryRoot, tables.map { t =>
-      t -> VersionedTable.currentVersion(spark, t).getOrElse(
-        throw new IllegalArgumentException(
-          s"publishCurrent: no versioned table at $t"))
-    }.toMap)
-  }
-
   /** The current release (table root → member version) — ONE manifest
     * read; the returned map is the whole atomic snapshot. */
   def resolve(spark: SparkSession, registryRoot: String): Map[String, Long] =
@@ -236,17 +221,6 @@ object PublishSet {
   /** All retained release versions, ascending. */
   def versions(spark: SparkSession, registryRoot: String): Seq[Long] =
     VersionedTable.versions(spark, registryRoot)
-
-  /** Read member `table` AT the current release's pinned version —
-    * never the member's own (possibly further-advanced) current. */
-  def readTable(spark: SparkSession, registryRoot: String,
-                table: String): DataFrame = {
-    val set = resolve(spark, registryRoot)
-    val v = set.getOrElse(table, throw new IllegalArgumentException(
-      s"$table is not in the current release of $registryRoot " +
-        s"(members: ${set.keys.toSeq.sorted.mkString(", ")})"))
-    VersionedTable.readVersion(spark, table, v)
-  }
 
   /** Restore release `to`'s ENTIRE set as a new registry version — the
     * one-commit cross-table rollback. */

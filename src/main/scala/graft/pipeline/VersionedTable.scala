@@ -234,7 +234,7 @@ object VersionedTable {
     * at commit time makes every read O(1) in metadata — no
     * footer-sampling, no distributed mergeSchema job over all files —
     * and makes ANY file subset (partition-scoped rewrites,
-    * readPartitions) read with the same deterministic schema even when
+    * readPartitionsRange) read with the same deterministic schema even when
     * the version mixes pre- and post-evolution batches. Manifests
     * written before the schema line existed read via the mergeSchema
     * fallback. */
@@ -461,18 +461,6 @@ object VersionedTable {
     readFiles(spark, root, m, m.files)
   }
 
-  /** Manifest-level partition pruning: read only the files of the
-    * current version whose `__pp_<col>=` dir key is in `values` —
-    * the scan-side payoff of the duplicated partition key. */
-  def readPartitions(spark: SparkSession, root: String, col: String,
-                     values: Seq[Any]): DataFrame = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no versioned table at $root"))
-    val m = manifest(spark, root, v)
-    readFiles(spark, root, m,
-      partitionFiles(m, root, "readPartitions", col, values))
-  }
-
   // the partition-pruned file subset of a manifest — ONE
   // implementation for every partition-scoped read, with the loud
   // layout contract of merge/deleteKeys (ADVICE r12): a column not in
@@ -532,7 +520,9 @@ object VersionedTable {
 
   /** [[rangeFiles]] with per-level prune attribution: how many whole
     * partition dirs the "@part" bloom unions skipped, then how many of
-    * the surviving files the per-file zones skipped. */
+    * the surviving files the per-file zones skipped.
+    * Declared by README row "Round-18 ext": `rangeFileStats` prune
+    * attribution. */
   def rangeFileStats(spark: SparkSession, root: String, colName: String,
                      lo: Any, hi: Any): (Seq[String], PruneStats) = {
     val v = currentVersion(spark, root).getOrElse(
@@ -592,7 +582,10 @@ object VersionedTable {
                 value: Any): DataFrame =
     readRange(spark, root, colName, value, value)
 
-  /** [[readPartitions]] composed with [[readRange]]'s zone-map skip:
+  /** Manifest-level partition pruning — read only the files of the
+    * current version whose `__pp_<col>=` dir key is in `values`, the
+    * scan-side payoff of the duplicated partition key — composed with
+    * [[readRange]]'s zone-map skip:
     * partition-dir pruning on the bucket key, then file-level min/max
     * pruning on a SECOND column inside the surviving partitions — the
     * two indexes a warehouse scan wants together (e.g. tenant dirs ×
@@ -1188,10 +1181,8 @@ object VersionedTable {
     * semantics): stage the current content as one new coalesced batch,
     * commit as a new version. Readers of the old version keep their
     * old (fragmented) files until pruned. */
-  def compact(spark: SparkSession, root: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Long =
+  def compact(spark: SparkSession, root: String): Long =
       withRootLock(root) {
-    require(targetFileBytes >= 1024 * 1024, s"target too small: $targetFileBytes")
     withCommitRetries(root, "compact") { () =>
       val cur = currentVersion(spark, root).getOrElse(
         throw new IllegalArgumentException(s"no versioned table at $root"))
@@ -1199,11 +1190,12 @@ object VersionedTable {
       val cm = manifest(spark, root, cur)
       // PRESERVE the stored layout: compacting a partitioned table into
       // an unpartitioned batch would silently disable every subsequent
-      // partition-scoped merge/deleteKeys/readPartitions
+      // partition-scoped merge/deleteKeys/readPartitionsRange
       val partitionBy = layoutOf(cm.files)
       val bytes = cm.files
         .map(rel => f.getFileStatus(hp(s"${dataRoot(root)}/$rel")).getLen).sum
-      val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+      val n = math.max(1,
+        math.ceil(bytes.toDouble / Pipeline.CompactTargetFileBytes).toInt)
       val v = cur + 1
       val content = readFiles(spark, root, cm, cm.files)
       stageAndCommit(spark, root, v, content.coalesce(n), partitionBy, Nil,
@@ -1254,8 +1246,8 @@ object VersionedTable {
     * knob: a bucket whose healthy size exceeds a good parquet file is
     * a layout problem (partition finer), not a compaction problem, and
     * the one-task-per-bucket rewrite of such a bucket would also be a
-    * skew hazard. There is deliberately no targetFileBytes here
-    * ([[compact]]'s coalesce honors one; a partition-preserving
+    * skew hazard. There is deliberately no target file size here
+    * ([[compact]]'s coalesce aims at one; a partition-preserving
     * rewrite cannot without splitting buckets).
     *
     * `coldAfterVersions` is the CADENCE POLICY (VERDICT r14
@@ -1311,7 +1303,7 @@ object VersionedTable {
   }
 
   /** The bucket selection [[compactPartitions]] and
-    * [[compactPartitionsPlan]] share: manifest files grouped by
+    * [[compactionReport]] share: manifest files grouped by
     * partition VALUE path (the physical `__pp_<col>=<val>` segments,
     * across batch dirs — two merges of the same bucket land files in
     * two `b<v>_` dirs and both count), filtered to buckets that are
@@ -1339,32 +1331,6 @@ object VersionedTable {
         (coldAfterVersions == 0 ||
           fs.iterator.map(vOfFile).max <= cur - coldAfterVersions)
     }
-  }
-
-  /** DRY RUN of [[compactPartitions]]: bucket path → current file
-    * count for every bucket the op WOULD rewrite under the same
-    * selection, touching nothing — the report a maintenance cron
-    * surfaces before a fleet-wide enable (the [[graft.pipeline
-    * .PublishSet.pruneMembersPlan]] convention). Fails as loudly as
-    * the op on a missing or unpartitioned table — the exact failure a
-    * dry run exists to predict. */
-  def compactPartitionsPlan(spark: SparkSession, root: String,
-                            maxFilesPerPartition: Int = 8,
-                            coldAfterVersions: Int = 0): Map[String, Int] =
-      withRootLock(root) {
-    require(maxFilesPerPartition >= 1,
-      s"maxFilesPerPartition must be >= 1, got $maxFilesPerPartition")
-    require(coldAfterVersions >= 0,
-      s"coldAfterVersions must be >= 0, got $coldAfterVersions")
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no versioned table at $root"))
-    val cm = manifest(spark, root, cur)
-    val partitionBy = layoutOf(cm.files)
-    require(partitionBy.nonEmpty,
-      s"$root is not partitioned - compactPartitions has no partition " +
-        "boundary to scope by; use compact()")
-    fragmentedBuckets(cm.files, partitionBy, cur, maxFilesPerPartition,
-      coldAfterVersions).map { case (k, fs) => k -> fs.size }
   }
 
   /** ONE-read maintenance introspection for tooling ([[graft.tools
@@ -1405,15 +1371,6 @@ object VersionedTable {
         .map { case (k, fs) => k -> fs.size }
       CompactionReport(partitionBy, cold, all -- cold.keys, cm.files.size)
     }
-  }
-
-  /** The current version's physical partition layout (empty for an
-    * unpartitioned table) — lets maintenance tooling decide between
-    * [[compactPartitions]] and [[compact]] without trying one. */
-  def partitionLayout(spark: SparkSession, root: String): Seq[String] = {
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no versioned table at $root"))
-    layoutOf(manifest(spark, root, cur).files)
   }
 
   /** ROLLBACK: commit a NEW version whose content is retained version

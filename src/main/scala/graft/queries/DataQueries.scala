@@ -2467,7 +2467,7 @@ object DataQueries {
 
   /** Full IVF-PQ search: coarse cells prune WHICH rows are scored,
     * PQ codes compress WHAT is read to score them — the production ANN
-    * shape; see [[Similarity.ivfPqTopK]]. Same query split, coarse
+    * shape; see [[Similarity.ivfPqTopKTrained]]. Same query split, coarse
     * quantizer, and PQ codebook stand-ins as e02/e04/e05. */
   val e07IvfPq: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
@@ -3054,9 +3054,7 @@ object DataQueries {
     * as int64 sums on the 10^-9 grid divided once in double space.
     * See KMeans.scala for why each is cross-engine stable. */
   private def kmCtesFor(p: String, src: String, dim: Int,
-                        metric: String, tag: String,
-                        k: Int = kmK, rounds: Int = kmRounds,
-                        iters: Int = kmIters, l: Int = kmL): String = {
+                        metric: String, tag: String): String = {
     def rankBy(cvExpr: String) = metric match {
       case "cos" => s"round(list_cosine_similarity(e.v, $cvExpr), 6) DESC"
       case "l2" => "round(list_inner_product(e.v, e.v) " +
@@ -3071,16 +3069,16 @@ object DataQueries {
           "- 2*list_inner_product(e.v, c.v) " +
           "+ list_inner_product(c.v, c.v), 6)) * 1000000, 0) AS BIGINT)"
     }
-    val roundCtes = (1 to rounds).map { r =>
+    val roundCtes = (1 to kmRounds).map { r =>
       s"""${p}d$r AS MATERIALIZED (SELECT e.id, $disExpr AS dis
          |  FROM $src e CROSS JOIN ${p}c${r - 1} c GROUP BY e.id),
          |${p}phi$r AS MATERIALIZED (SELECT CAST(sum(dis) AS BIGINT) AS phi FROM ${p}d$r),
          |${p}c$r AS MATERIALIZED (SELECT id, v FROM ${p}c${r - 1} UNION ALL
          |  SELECT e.id, e.v FROM $src e JOIN ${p}d$r d USING (id) CROSS JOIN ${p}phi$r p
-         |  WHERE (${h60(s"'$tag|r$r|'||e.id::VARCHAR")} % 1000000) * p.phi < $l * d.dis * 1000000
+         |  WHERE (${h60(s"'$tag|r$r|'||e.id::VARCHAR")} % 1000000) * p.phi < $kmL * d.dis * 1000000
          |    AND e.id NOT IN (SELECT id FROM ${p}c${r - 1}))""".stripMargin
     }.mkString(",\n")
-    val lloyd = (1 to iters).map { t =>
+    val lloyd = (1 to kmIters).map { t =>
       s"""${p}a$t AS MATERIALIZED (SELECT id, cell FROM (
          |  SELECT e.id, c.cell, row_number() OVER (PARTITION BY e.id
          |    ORDER BY ${rankBy("c.cv")}, c.cell) AS rn
@@ -3101,13 +3099,13 @@ object DataQueries {
        |${p}wasg AS MATERIALIZED (SELECT id, cid FROM (
        |  SELECT e.id, c.id AS cid, row_number() OVER (PARTITION BY e.id
        |    ORDER BY ${rankBy("c.v")}, c.id) AS rn
-       |  FROM $src e CROSS JOIN ${p}c$rounds c) WHERE rn = 1),
+       |  FROM $src e CROSS JOIN ${p}c$kmRounds c) WHERE rn = 1),
        |${p}wts AS MATERIALIZED (SELECT cid, count(*) AS w FROM ${p}wasg GROUP BY 1),
        |${p}fin AS MATERIALIZED (SELECT c.id, c.v, row_number() OVER (ORDER BY coalesce(w.w, 0) DESC, c.id) - 1 AS cell
-       |  FROM ${p}c$rounds c LEFT JOIN ${p}wts w ON w.cid = c.id),
-       |${p}cent0 AS MATERIALIZED (SELECT cell, v AS cv FROM ${p}fin WHERE cell < $k),
+       |  FROM ${p}c$kmRounds c LEFT JOIN ${p}wts w ON w.cid = c.id),
+       |${p}cent0 AS MATERIALIZED (SELECT cell, v AS cv FROM ${p}fin WHERE cell < $kmK),
        |$lloyd,
-       |${p}cents AS MATERIALIZED (SELECT cell, cv FROM ${p}cent$iters)""".stripMargin
+       |${p}cents AS MATERIALIZED (SELECT cell, cv FROM ${p}cent$kmIters)""".stripMargin
   }
 
   /** The coarse (cosine) fit over `e` — the e08/e02/e07/d13 quantizer. */

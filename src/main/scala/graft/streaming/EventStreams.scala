@@ -16,6 +16,7 @@ import org.apache.spark.sql.types._
   * Kafka); everything below is already expressed against the unbounded
   * table model: watermarks bound state, windows pre-aggregate map-side,
   * and sessionization state is per-key and eagerly timed out.
+  * Declared by README row "§2.8 streaming": kept whole, its specs drive it.
   */
 object EventStreams {
 
@@ -88,25 +89,19 @@ object EventStreams {
     * a session row when a gap closes it; trailing sessions stay open in
     * state. State per user is one 3-field struct — O(active users).
     *
-    * `withTimeout=true` additionally closes idle sessions on a
-    * processing-time timeout — for CONTINUOUS operation only: pending
-    * timeouts force extra micro-batches under Trigger.AvailableNow
-    * (observed: the drain never terminates), so batch-drain runs must
-    * leave it off. */
-  def sessionize(events: DataFrame, gapMicros: Long = 30L * 60 * 1000000,
-                 withTimeout: Boolean = false)(
+    * No processing-time timeout closes idle sessions: pending timeouts
+    * force extra micro-batches under Trigger.AvailableNow (observed: the
+    * drain never terminates), and the cron-tick drain is how this
+    * module runs. */
+  def sessionize(events: DataFrame)(
       implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._
+    val gapMicros = 30L * 60 * 1000000
     val typed = events.select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("tsMicros")).as[SessionEvent]
 
     def fn(userId: Long, rows: Iterator[SessionEvent],
            state: GroupState[SessionState]): Iterator[SessionOut] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        return Iterator(SessionOut(userId, s.start, s.last, s.n))
-      }
       val sorted = rows.toSeq.sortBy(e => (e.tsMicros, e.event_id))
       var cur = state.getOption
       val closed = Seq.newBuilder[SessionOut]
@@ -129,23 +124,17 @@ object EventStreams {
             cur = Some(SessionState(e.tsMicros, e.tsMicros, 1))
         }
       }
-      cur.foreach { s =>
-        state.update(s)
-        if (withTimeout) state.setTimeoutDuration("30 minutes")
-      }
+      cur.foreach(state.update)
       closed.result().iterator
     }
 
-    val timeout =
-      if (withTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     typed.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(fn)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
   /** Native session-window aggregation — the declarative twin of
     * [[sessionize]]: Spark's `session_window` merges per-user event-time
-    * windows separated by less than the gap, entirely inside the
+    * windows separated by less than the 30-minute gap, entirely inside the
     * aggregation operator (state = one open window per key, evicted by
     * the watermark). Use this form when the per-session output is an
     * AGGREGATE (count/sum/min/max); `sessionize`'s
@@ -154,11 +143,10 @@ object EventStreams {
     * watermark passes its end) — the spec pins drain == the batch
     * session_window aggregation minus each user's trailing session,
     * which is exactly the still-open state. */
-  def sessionWindowCounts(events: DataFrame,
-                          gap: String = "30 minutes"): DataFrame =
+  def sessionWindowCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
@@ -307,12 +295,10 @@ object EventStreams {
                            textCol: String, idCol: String,
                            codebook: Seq[Seq[Double]], dim: Int,
                            root: String,
-                           cap: Int = graft.operators.TextAnalysis.ChunkCap,
-                           stride: Int = graft.operators.TextAnalysis.ChunkStride,
                            trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val assigned = graft.operators.Similarity.cellAssignmentsTrained(
-      ragChunkEmbed(docs, textCol, idCol, dim, cap, stride),
+      ragChunkEmbed(docs, textCol, idCol, dim),
       "emb", "chunk_id", codebook)
       .withColumnRenamed("id", "chunk_id")
     versionedUpsertStreamQuery(spark, assigned, root,
@@ -320,13 +306,15 @@ object EventStreams {
       partitionBy = Seq("cell"), trigger = trigger)
   }
 
-  /** The shared RAG tick front half: chunk → packed chunk_id →
-    * stub-embed. Map-only; rides the micro-batch scan. */
+  /** The shared RAG tick front half: chunk (the curation DAG's
+    * ChunkCap/ChunkStride windows) → packed chunk_id → stub-embed.
+    * Map-only; rides the micro-batch scan. */
   private def ragChunkEmbed(docs: DataFrame, textCol: String, idCol: String,
-                            dim: Int, cap: Int, stride: Int): DataFrame = {
+                            dim: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.operators.TextAnalysis
-      .tokenWindowChunks(docs, textCol, idCol, cap, stride)
+    graft.operators.TextAnalysis.tokenWindowChunks(docs, textCol, idCol,
+      graft.operators.TextAnalysis.ChunkCap,
+      graft.operators.TextAnalysis.ChunkStride)
       .withColumn("chunk_id",
         col("doc_id") * lit(graft.operators.TextAnalysis.ChunkIdBase) +
           col("chunk_idx"))
@@ -389,25 +377,19 @@ object EventStreams {
                             codebook: Seq[Seq[Double]], dim: Int,
                             registryRoot: String, chunksRoot: String,
                             indexRoot: String, codebookRoot: String,
-                            cap: Int = graft.operators.TextAnalysis.ChunkCap,
-                            stride: Int = graft.operators.TextAnalysis.ChunkStride,
                             trigger: Trigger = Trigger.AvailableNow(),
                             gcKeepReleases: Option[Int] = None,
                             gcMemberKeep: Int = 1,
                             gcStaleAfterMs: Long = 3600 * 1000L,
-                            chunkBucketDocs: Long = 100000L,
                             compactMaxFiles: Option[Int] = None,
                             compactColdVersions: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import graft.pipeline.{PublishSet, VersionedTable}
-    require(chunkBucketDocs >= 1, s"bad chunkBucketDocs $chunkBucketDocs")
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         ragReleaseFoldBatch(spark, batch.toDF(), batchId, textCol, idCol,
           codebook, dim, registryRoot, chunksRoot, indexRoot, codebookRoot,
-          cap, stride, gcKeepReleases, gcMemberKeep, gcStaleAfterMs,
-          chunkBucketDocs, compactMaxFiles, compactColdVersions)
+          gcKeepReleases, gcMemberKeep, gcStaleAfterMs,
+          compactMaxFiles, compactColdVersions)
       }
       .option("checkpointLocation", s"$registryRoot.__checkpoint")
       .trigger(trigger)
@@ -420,9 +402,7 @@ object EventStreams {
       batchDf: DataFrame, batchId: Long, textCol: String, idCol: String,
       codebook: Seq[Seq[Double]], dim: Int, registryRoot: String,
       chunksRoot: String, indexRoot: String, codebookRoot: String,
-      cap: Int, stride: Int, gcKeepReleases: Option[Int],
-      gcMemberKeep: Int, gcStaleAfterMs: Long,
-      chunkBucketDocs: Long,
+      gcKeepReleases: Option[Int], gcMemberKeep: Int, gcStaleAfterMs: Long,
       compactMaxFiles: Option[Int] = None,
       compactColdVersions: Int = 0): Unit = {
     import org.apache.spark.sql.functions._
@@ -488,20 +468,20 @@ object EventStreams {
         // doubled chunk rows
         val dedup = batch.toDF().groupBy(col(idCol))
           .agg(max(col(textCol)).as(textCol))
-        val chunked = ragChunkEmbed(dedup, textCol, idCol, dim,
-            cap, stride)
+        val chunked = ragChunkEmbed(dedup, textCol, idCol, dim)
           // one durable cut: chunks feed BOTH member merges, and the
           // second merge must not rescan a landing dir the first one's
           // job may outlive (the curation-tick eager-cut rule)
           .localCheckpoint()
-        // doc-id RANGE bucket as the chunks partition (review r14): a
-        // crawl drop's fresh monotone ids land in the newest buckets,
+        // doc-id RANGE bucket (100 000 ids) as the chunks partition
+        // (review r14): a crawl drop's fresh monotone ids land in the
+        // newest buckets,
         // so the partition-scoped merge reuses old buckets' files
         // verbatim — per-tick write cost tracks the batch, not the
         // accumulated corpus
         val chunksV = VersionedTable.merge(spark, chunksRoot,
           chunked.select(
-            expr(s"doc_id div ${chunkBucketDocs}L").as("chunk_bucket"),
+            expr("doc_id div 100000L").as("chunk_bucket"),
             col("doc_id"), col("chunk_idx"), col("chunk_id"),
             col("chunk_text")),
           uniqueKey = Seq("chunk_bucket", "chunk_id"),
@@ -979,7 +959,7 @@ object EventStreams {
     events.join(spark.read.parquet(dimPath),
       col(eventKey) === col(dimKey), "left_outer")
 
-  /** Streaming count-min sketch maintenance: the d×w counter relation
+  /** Streaming count-min sketch maintenance: the d×w (4×512) counter relation
     * ([[graft.operators.TextAnalysis.cmsSketch]]) kept as a warehouse
     * state table, folded per micro-batch by per-(r,bucket) ADDITION —
     * the CMS merge law, so after any append-ordered slicing the state
@@ -992,12 +972,12 @@ object EventStreams {
     * same atomic last-batch-in-state-swap guard as
     * [[deltaDedupStreamQuery]]. */
   def cmsStreamQuery(spark: SparkSession, docs: DataFrame, textCol: String,
-                     statePath: String, d: Int = 4, w: Int = 512,
+                     statePath: String,
                      trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cmsFoldBatch(spark, batch.toDF(), batchId, textCol, statePath, d, w)
+        cmsFoldBatch(spark, batch.toDF(), batchId, textCol, statePath, 4, 512)
       }
       .option("checkpointLocation", s"$statePath.__checkpoint")
       .trigger(trigger)
@@ -1106,9 +1086,10 @@ object EventStreams {
   }
 
   /** Stream-stream interval join — the attribution shape: each purchase
-    * joined to the SAME user's clicks in the preceding `horizon`. Both
-    * sides are watermarked and the time-range predicate is two-sided,
-    * so Spark bounds the buffered join state on BOTH sides (clicks
+    * joined to the SAME user's clicks in the preceding 10-minute
+    * horizon. Both sides carry a 10-minute watermark and the time-range
+    * predicate is two-sided, so Spark bounds the buffered join state on
+    * BOTH sides (clicks
     * evict once older than horizon + watermark past the purchase-side
     * watermark; purchases once past their own) — the state contract
     * that keeps an unbounded self-join runnable forever. An INNER join
@@ -1120,21 +1101,20 @@ object EventStreams {
     * Self-join note: both inputs are filters of ONE file-source stream;
     * Spark plans them as two scans of the same source with independent
     * state stores — no second landing of the data is needed. */
-  def attributionJoin(events: DataFrame, horizon: String = "10 minutes",
-                      watermark: String = "10 minutes"): DataFrame = {
+  def attributionJoin(events: DataFrame): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
+      .withWatermark("click_ts", "10 minutes")
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user_id"),
         col("event_id").as("purchase_id"), col("ts").as("purchase_ts"),
         col("value").as("amount"))
-      .withWatermark("purchase_ts", watermark)
+      .withWatermark("purchase_ts", "10 minutes")
     clicks.join(purchases,
         col("user_id") === col("p_user_id") &&
         col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $horizon"))
+        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 minutes"))
       .select(col("user_id"), col("purchase_id"), col("click_id"),
         col("purchase_ts"), col("click_ts"), col("amount"))
   }
@@ -1155,34 +1135,33 @@ object EventStreams {
     * runs under the watermark persisted by the PREVIOUS batch (and an
     * empty backlog runs no batch), so null rows surface one data-drop
     * after the sentinel that closed their window. */
-  def attributionJoinOuter(events: DataFrame, horizon: String = "10 minutes",
-                           watermark: String = "10 minutes"): DataFrame = {
+  def attributionJoinOuter(events: DataFrame): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user_id"),
         col("event_id").as("click_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
+      .withWatermark("click_ts", "10 minutes")
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"),
         col("ts").as("purchase_ts"), col("value").as("amount"))
-      .withWatermark("purchase_ts", watermark)
+      .withWatermark("purchase_ts", "10 minutes")
     purchases.join(clicks,
         col("c_user_id") === col("user_id") &&
         col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $horizon"),
+        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 minutes"),
         "left_outer")
       .select(col("user_id"), col("purchase_id"), col("click_id"),
         col("purchase_ts"), col("click_ts"), col("amount"))
   }
 
   /** Drain-everything-now runner (the cron-tick semantics): starts the
-    * query with Trigger.AvailableNow on a memory sink and blocks until
-    * the backlog is processed. Returns the sink contents. */
+    * query with Trigger.AvailableNow on an append-mode memory sink and
+    * blocks until the backlog is processed. Returns the sink contents. */
   def runAvailableNow(spark: SparkSession, out: DataFrame,
-                      queryName: String, outputMode: String = "append"): DataFrame = {
+                      queryName: String): DataFrame = {
     val q = out.writeStream
       .format("memory")
       .queryName(queryName)
-      .outputMode(outputMode)
+      .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

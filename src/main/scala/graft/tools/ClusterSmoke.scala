@@ -446,9 +446,9 @@ object ClusterSmoke {
         PublishSet.currentVersion(spark, reg).contains(nRuns.toLong) &&
         (1L to nRuns.toLong).forall { v =>
           // read each HISTORICAL release's pinned member version, not
-          // the current one (review r14: readTable always resolves
-          // current, so the old loop re-read release nRuns six times
-          // and never checked historical member readability)
+          // the current one (review r14: resolving the current release
+          // re-read release nRuns six times and never checked
+          // historical member readability)
           val s = PublishSet.resolveVersion(spark, reg, v)
           s == Map(aRoot -> v, bRoot -> v) &&
             VersionedTable.readVersion(spark, aRoot, s(aRoot)).count() == 1L &&

@@ -152,11 +152,21 @@ class AuxStagingSpec extends SparkSpec {
   test("census staging consumes the REAL reference xlsx (banded header)") {
     val real = "/root/reference/ref/xlsx_nyc_decennialcensusdata_2010_2020_nta.xlsx"
     assume(new java.io.File(real).exists)
-    // the data sheet's header is row 8, under prose + merged band rows —
-    // readSheetDFAt locates it by the GeoType marker and de-duplicates
-    // the repeated LandAcres column
-    val raw = graft.io.Xlsx.readSheetDFAt(
-      spark, real, "2010_2020_and_Change", "GeoType")
+    // the data sheet's header is row 8, under prose + merged band rows:
+    // locate it by the GeoType marker; the repeated LandAcres column
+    // (read by no staged column) takes a positional name
+    val rows = graft.io.Xlsx.readSheet(real, "2010_2020_and_Change")
+    val hi = rows.indexWhere(_.exists(c => c != null && c.trim == "GeoType"))
+    val header = rows(hi).zipWithIndex.map { case (h, i) =>
+      if (h == null || rows(hi).indexOf(h) != i) s"_c$i" else h.trim }
+    val raw = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.drop(hi + 1)
+        .filterNot(_.forall(_ == null))
+        .map(a => org.apache.spark.sql.Row.fromSeq(
+          a.toSeq.padTo(header.length, null).take(header.length))).toList),
+      org.apache.spark.sql.types.StructType(header.map(
+        org.apache.spark.sql.types.StructField(_,
+          org.apache.spark.sql.types.StringType))))
     val staged = AuxStaging.stageCensus(raw).cache()
     assert(staged.count() === 262, "2020 NTA geography count")
     // the census's own identities hold on every real row — the planted
@@ -190,16 +200,5 @@ class AuxStagingSpec extends SparkSpec {
     assert(b.isNullAt(b.fieldIndex("inspection_date")) &&
       b.isNullAt(b.fieldIndex("score")), "dirty values null, row kept")
     assert(!b.getAs[Boolean]("grade_valid") && !b.getAs[Boolean]("coords_valid"))
-  }
-
-  test("nearestZone assigns argmin-haversine centroid deterministically") {
-    val zones = Seq(("bronx", 40.85, -73.88), ("bk", 40.65, -73.95),
-      ("si", 40.58, -74.15)).toDF("zone", "zlat", "zlng")
-    val pts = Seq((1L, 40.86, -73.89), (2L, 40.64, -73.96), (3L, 40.60, -74.10))
-      .toDF("id", "lat", "lng")
-    val got = AuxStaging.nearestZone(pts, zones, "id", "lat", "lng",
-        "zone", "zlat", "zlng")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == Map(1L -> "bronx", 2L -> "bk", 3L -> "si"))
   }
 }

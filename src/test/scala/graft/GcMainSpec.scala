@@ -79,8 +79,10 @@ class GcMainSpec extends SparkSpec {
     // the retained release resolves and reads whole (pins intact);
     // the sweep's gc markers repin the same set
     assert(PublishSet.resolve(spark, reg) === Map(a -> 2L, b -> 2L))
-    assert(PublishSet.readTable(spark, reg, a).count() === 80L)
-    assert(PublishSet.readTable(spark, reg, b)
+    assert(VersionedTable.readVersion(spark, a,
+      PublishSet.resolve(spark, reg)(a)).count() === 80L)
+    assert(VersionedTable.readVersion(spark, b,
+      PublishSet.resolve(spark, reg)(b))
       .select("tag").as[String].collect().toSeq === Seq("b2"))
     // idempotent under the cadence: a second run finds nothing to
     // compact (p0 is one file) and nothing below the floors

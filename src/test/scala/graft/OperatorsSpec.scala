@@ -614,28 +614,35 @@ class OperatorsSpec extends SparkSpec {
     assert(gotM == refM, "compiled argmax must equal the window formulation")
   }
 
-  test("ivfPqTopK: probing ALL cells equals plain ADC; fewer probes restrict candidates") {
-    val vecs = (0 until 40).map { i =>
+  test("ivfPqTopKTrained: all probes == plain ADC; one probe stays in the query's cell") {
+    def ring(i: Int) = {
       val angle = i * 2 * math.Pi / 40.0
-      (i.toLong, Array(math.cos(angle).toFloat, math.sin(angle).toFloat,
-        math.cos(angle + 1).toFloat, math.sin(angle + 1).toFloat))
-    }.toDF("vec_id", "embedding")
+      Array(math.cos(angle).toFloat, math.sin(angle).toFloat,
+        math.cos(angle + 1).toFloat, math.sin(angle + 1).toFloat)
+    }
+    val vecs = (0 until 40).map(i => (i.toLong, ring(i)))
+      .toDF("vec_id", "embedding")
     val q = vecs.filter($"vec_id" === 7)
     val cells = Seq(0L, 10L, 20L, 30L)
+    // the coarse codebook: the four cell rows, in the corpus's doubles
+    val cellCodebook = cells.map(c => ring(c.toInt).toSeq.map(_.toDouble))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
         .sortBy(_._1).toSeq
     // nProbe = all cells -> candidate set = whole corpus = pqAdcTopK
-    val full = rows(Similarity.ivfPqTopK(vecs, q, "embedding", "vec_id",
-      k = 5, cellIds = cells, nProbe = 4, m = 2, pqCentroidIds = cells))
+    val full = rows(Similarity.ivfPqTopKTrained(vecs, q, "embedding",
+      "vec_id", k = 5, cellCodebook = cellCodebook, nProbe = 4, m = 2,
+      pqCentroidIds = cells))
     val adc = rows(Similarity.pqAdcTopK(vecs, q, "embedding", "vec_id",
       k = 5, m = 2, centroidIds = cells))
     assert(full == adc, "all-probe IVF-PQ must equal plain ADC")
     // nProbe = 1 -> results confined to the query's own cell
-    val one = Similarity.ivfPqTopK(vecs, q, "embedding", "vec_id",
-      k = 5, cellIds = cells, nProbe = 1, m = 2, pqCentroidIds = cells)
+    val one = Similarity.ivfPqTopKTrained(vecs, q, "embedding", "vec_id",
+      k = 5, cellCodebook = cellCodebook, nProbe = 1, m = 2,
+      pqCentroidIds = cells)
       .collect().map(_.getLong(2)).toSet
-    val asg = Similarity.cellAssignments(vecs, "embedding", "vec_id", cells)
+    val asg = Similarity.cellAssignmentsTrained(vecs, "embedding", "vec_id",
+        cellCodebook)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val qCell = asg(7L)
     assert(one.forall(id => asg(id) == qCell),

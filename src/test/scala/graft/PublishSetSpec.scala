@@ -14,21 +14,21 @@ class PublishSetSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-release").toString
 
-  test("publish/resolve/readTable: one atomic set; member currents do not leak") {
+  test("publish/resolve: one atomic set; member currents do not leak") {
     val d = tmp()
     val (a, b, reg) = (s"$d/A", s"$d/B", s"$d/_REL")
     VersionedTable.write(spark, a, Seq((1L, "a1")).toDF("id", "tag"))
     VersionedTable.write(spark, b, Seq((1L, "b1")).toDF("id", "tag"))
     assert(PublishSet.publish(spark, reg, Map(a -> 1L, b -> 1L)) === 1L)
     assert(PublishSet.resolve(spark, reg) === Map(a -> 1L, b -> 1L))
-    assert(PublishSet.readTable(spark, reg, a)
+    assert(VersionedTable.readVersion(spark, a, PublishSet.resolve(spark, reg)(a))
       .select("tag").as[String].collect().toSeq === Seq("a1"))
     // member A advances WITHOUT a new release: the registry keeps
     // serving v1 — a release reader must never see the unpublished v2
     VersionedTable.write(spark, a, Seq((1L, "a2")).toDF("id", "tag"))
     assert(VersionedTable.currentVersion(spark, a) === Some(2L))
     assert(PublishSet.resolve(spark, reg) === Map(a -> 1L, b -> 1L))
-    assert(PublishSet.readTable(spark, reg, a)
+    assert(VersionedTable.readVersion(spark, a, PublishSet.resolve(spark, reg)(a))
       .select("tag").as[String].collect().toSeq === Seq("a1"))
   }
 
@@ -76,7 +76,7 @@ class PublishSetSpec extends SparkSpec {
     val v = PublishSet.rollback(spark, reg, to = 1L)
     assert(v === 3L, "rollback is a NEW registry version, not history rewrite")
     assert(PublishSet.resolve(spark, reg) === Map(a -> 1L, b -> 1L))
-    assert(PublishSet.readTable(spark, reg, a)
+    assert(VersionedTable.readVersion(spark, a, PublishSet.resolve(spark, reg)(a))
       .select("tag").as[String].collect().toSeq === Seq("a1"))
     // the rolled-back release is still resolvable for inspection
     assert(PublishSet.resolveVersion(spark, reg, 2L) === Map(a -> 2L, b -> 2L))
@@ -285,54 +285,30 @@ class PublishSetSpec extends SparkSpec {
     val bench = Seq((9000L, "benchmark only text never overlapping"))
       .toDF("doc_id", "text")
     val reg = CurationModels.registry(spark, docs, bench)
+    // the versioned members a downstream consumer must see move in
+    // lockstep, and the registry next to them
+    def root(name: String) = graft.pipeline.Pipeline.materializationPath(
+      cfg, "3_MART___CURATION", name)
+    val members = Seq("DATA_CARD", "RAG_CHUNKS", "RAG_CODEBOOK",
+      "RAG_CHUNK_INDEX").map(root)
+    val release = root("_RELEASE")
+    def publishCurrent() = PublishSet.publish(spark, release, members.map(m =>
+      m -> VersionedTable.currentVersion(spark, m).get).toMap)
+    def readCard() = VersionedTable.readVersion(spark, root("DATA_CARD"),
+      PublishSet.resolve(spark, release)(root("DATA_CARD"))).collect()
     reg.run(cfg, Seq("DATA_CARD", "RAG_CHUNK_INDEX"))
-    val rel1 = CurationModels.publishRelease(spark, cfg)
-    assert(rel1 === 1L)
-    val card1 = CurationModels.readRelease(spark, cfg, "DATA_CARD").collect()
+    assert(publishCurrent() === 1L)
+    val card1 = readCard()
     // second run advances every member; release 2 names them together
     reg.run(cfg, Seq("DATA_CARD", "RAG_CHUNK_INDEX"))
-    val rel2 = CurationModels.publishRelease(spark, cfg)
-    assert(rel2 === 2L)
-    val set2 = PublishSet.resolve(spark, CurationModels.releaseRoot(cfg))
+    assert(publishCurrent() === 2L)
+    val set2 = PublishSet.resolve(spark, release)
     assert(set2.values.toSet === Set(2L),
       s"all members pinned at their run-2 versions, got $set2")
     // one-commit rollback of the WHOLE release
-    CurationModels.rollbackRelease(spark, cfg, to = 1L)
-    val set1 = PublishSet.resolve(spark, CurationModels.releaseRoot(cfg))
+    PublishSet.rollback(spark, release, to = 1L)
+    val set1 = PublishSet.resolve(spark, release)
     assert(set1.values.toSet === Set(1L), s"rolled back whole, got $set1")
-    assert(CurationModels.readRelease(spark, cfg, "DATA_CARD").collect()
-      .toSeq === card1.toSeq)
-  }
-
-  test("publishGatedRelease: both gates then the atomic publish; a tripped gate publishes nothing (r17)") {
-    import graft.models.CurationModels
-    import graft.pipeline.Pipeline.{RunConfig, Core}
-    val wh = tmp()
-    val cfg = RunConfig(env = Core, warehouseRoot = wh)
-    val docs = (0L until 40L).map(i =>
-      (i, s"doc $i body token$i filler words enough to chunk and pack end",
-        if (i % 2 == 0) "en" else "de", s"host${i % 4}.example"))
-      .toDF("doc_id", "text", "lang", "source")
-    val bench = Seq((9000L, "benchmark only text never overlapping"))
-      .toDF("doc_id", "text")
-    val reg = CurationModels.registry(spark, docs, bench)
-    reg.run(cfg, Seq("DATA_CARD", "RAG_CHUNK_INDEX"))
-    // a sane candidate passes both gates and publishes release 1 with
-    // the accepted card committed
-    val g1 = CurationModels.publishGatedRelease(spark, cfg,
-      recallThresholdPpm = 1L, cardMaxRelDelta = 0.10)
-    assert(g1.recall.passed && g1.card.exists(_.passed) &&
-      g1.releaseVersion === Some(1L))
-    // a recall trip (impossible threshold) rolls back AND publishes
-    // nothing — the card gate never even runs, so the accepted card
-    // baseline stays v1
-    reg.run(cfg, Seq("DATA_CARD", "RAG_CHUNK_INDEX"))
-    val g2 = CurationModels.publishGatedRelease(spark, cfg,
-      recallThresholdPpm = 1000001L, cardMaxRelDelta = 0.10)
-    assert(!g2.recall.passed && g2.card.isEmpty &&
-      g2.releaseVersion.isEmpty)
-    assert(PublishSet.versions(spark,
-      CurationModels.releaseRoot(cfg)) === Seq(1L),
-      "a tripped gate must not advance the release registry")
+    assert(readCard().toSeq === card1.toSeq)
   }
 }

@@ -85,10 +85,6 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(frames.forall(_.media_id == 2L), "only video rows fan out")
     // 8192/1024 = 8 frames, every 2nd kept -> 4
     assert(frames.map(_.frame_index).sorted.toSeq == Seq(0, 2, 4, 6))
-
-    val table = Multimodal.featureTable(media, dim = 16)
-    assert(table.columns.toSet ==
-      Set("media_id", "n_bytes", "checksum", "embedding"))
   }
 
   test("multimodal dedup: identical payloads collapse to the lowest id; bytes never shuffle") {

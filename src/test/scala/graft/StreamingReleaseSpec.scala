@@ -37,8 +37,8 @@ class StreamingReleaseSpec extends SparkSpec {
     def tick(): Unit =
       EventStreams.ragReleaseStreamQuery(spark,
         spark.readStream.schema(schema).parquet(land.toString),
-        "text", "doc_id", codebook, dim, reg, chunks, idx, cb,
-        cap = 64, stride = 48).awaitTermination()
+        "text", "doc_id", codebook, dim, reg, chunks, idx, cb)
+        .awaitTermination()
 
     // ---- epoch 0: 6 docs -> 12 chunks; first release pins all three
     land1((0L until 6L).map(i => (i, docText(i))))
@@ -51,7 +51,8 @@ class StreamingReleaseSpec extends SparkSpec {
     assert(VersionedTable.readVersion(spark, idx, set1(idx)).count() === 12L)
     assert(VersionedTable.readVersion(spark, chunks, set1(chunks))
       .count() === 12L)
-    assert(PublishSet.readTable(spark, reg, cb).count() === 4L)
+    assert(VersionedTable.readVersion(spark, cb,
+      PublishSet.resolve(spark, reg)(cb)).count() === 4L)
 
     // ---- a shrinking epoch: delete 2 docs' cells from the index
     // member directly (4 chunks), then tick a re-send of one deleted
@@ -112,8 +113,8 @@ class StreamingReleaseSpec extends SparkSpec {
     def tick(): Unit =
       EventStreams.ragReleaseStreamQuery(spark,
         spark.readStream.schema(schema).parquet(land.toString),
-        "text", "doc_id", codebook, dim, reg, chunks, idx, cb,
-        cap = 64, stride = 48).awaitTermination()
+        "text", "doc_id", codebook, dim, reg, chunks, idx, cb)
+        .awaitTermination()
     Seq((0L, docText(0L))).toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(land.toString)
     tick() // epoch 0 -> release 1
@@ -133,8 +134,8 @@ class StreamingReleaseSpec extends SparkSpec {
     EventStreams.ragReleaseFoldBatch(spark,
       Seq((1L, docText(1L))).toDF("doc_id", "text"), 1L,
       "text", "doc_id", codebook, dim, reg, chunks, idx, cb,
-      cap = 64, stride = 48, gcKeepReleases = None, gcMemberKeep = 1,
-      gcStaleAfterMs = 3600 * 1000L, chunkBucketDocs = 100000L)
+      gcKeepReleases = None, gcMemberKeep = 1,
+      gcStaleAfterMs = 3600 * 1000L)
     assert(PublishSet.currentVersion(spark, reg) === Some(3L),
       "the replayed epoch must not publish over the rollback")
     assert(PublishSet.resolve(spark, reg).values.toSet === Set(1L),
@@ -149,8 +150,8 @@ class StreamingReleaseSpec extends SparkSpec {
       EventStreams.ragReleaseFoldBatch(spark,
         Seq((id, docText(id))).toDF("doc_id", "text"), batchId,
         "text", "doc_id", codebook, dim, reg, chunks, idx, cb,
-        cap = 64, stride = 48, gcKeepReleases = None, gcMemberKeep = 1,
-        gcStaleAfterMs = 3600 * 1000L, chunkBucketDocs = 100000L)
+        gcKeepReleases = None, gcMemberKeep = 1,
+        gcStaleAfterMs = 3600 * 1000L)
     fold(0L, 0L) // release 1, note 'epoch 0 rows 2'
     fold(1L, 1L) // release 2, note 'epoch 1 rows 4'
     assert(PublishSet.readEpochCursor(spark, reg) === Some((1L, 4L)),
@@ -181,7 +182,6 @@ class StreamingReleaseSpec extends SparkSpec {
       EventStreams.ragReleaseStreamQuery(spark,
         spark.readStream.schema(schema).parquet(land.toString),
         "text", "doc_id", codebook, dim, reg, chunks, idx, cb,
-        cap = 64, stride = 48,
         gcKeepReleases = Some(1),
         compactMaxFiles = Some(1)).awaitTermination()
     (0 until 3).foreach { e =>
@@ -201,7 +201,8 @@ class StreamingReleaseSpec extends SparkSpec {
     set.foreach { case (t, v) =>
       assert(VersionedTable.readVersion(spark, t, v).count() > 0)
     }
-    assert(PublishSet.readTable(spark, reg, idx).count() === 6L,
+    assert(VersionedTable.readVersion(spark, idx,
+      PublishSet.resolve(spark, reg)(idx)).count() === 6L,
       "3 docs x 2 chunks accreted across the gc'd epochs")
     // index versions below the retained release's pin are pruned; the
     // in-tick compaction's content-identical version may sit ABOVE the

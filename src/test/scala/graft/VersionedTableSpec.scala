@@ -327,7 +327,8 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.compact(spark, r)
     // compacted version still carries __pp_p dirs: partition-scoped ops
     // and manifest pruning keep working
-    val pruned = VersionedTable.readPartitions(spark, r, "p", Seq("a"))
+    val pruned = VersionedTable.readPartitionsRange(spark, r, "p", Seq("a"),
+      "x", Long.MinValue, Long.MaxValue)
     assert(pruned.select("id").as[Long].collect().toSeq === Seq(1L))
     VersionedTable.merge(spark, r, Seq((1L, "a", 99L)).toDF("id", "p", "x"),
       uniqueKey = Seq("p", "id"), partitionBy = Seq("p"))
@@ -630,12 +631,13 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
-  test("readPartitions prunes at the manifest, same rows as a filter") {
+  test("readPartitionsRange prunes at the manifest, same rows as a filter") {
     val r = root()
     VersionedTable.write(spark, r,
       (1L to 30L).map(i => (i, s"p${i % 3}", i)).toDF("id", "p", "x"),
       partitionBy = Seq("p"))
-    val pruned = VersionedTable.readPartitions(spark, r, "p", Seq("p1"))
+    val pruned = VersionedTable.readPartitionsRange(spark, r, "p", Seq("p1"),
+      "x", Long.MinValue, Long.MaxValue)
     val full = VersionedTable.read(spark, r).filter($"p" === "p1")
     assert(pruned.select("id").as[Long].collect().sorted.toSeq ===
       full.select("id").as[Long].collect().sorted.toSeq)
