@@ -118,7 +118,7 @@ object Graph {
             expr(s"CAST(floor(rank * (CAST(${scale}L AS DOUBLE) / t)) " +
               "AS BIGINT)").as("rank"))
     }
-    (e, seeded.localCheckpoint(false), n)
+    (e, seeded.localCheckpoint(), n) // eager: see powerSteps
   }
 
   /** The synchronous power iteration shared by cold and warm starts. */
@@ -142,7 +142,13 @@ object Graph {
         .select(col("node"), col("outdeg"),
           (lit(teleport) + coalesce(col("inflow"), lit(0L)) +
             expr(s"dm div ${n}L")).as("rank"))
-        .localCheckpoint(false)
+        // EAGER cut: the next step reads `ranks` in two concurrent AQE
+        // jobs (the dangling-mass broadcast and the inflow join's
+        // shuffle); over a lazy cut both would meet its still-pending
+        // checkpoint, and Spark's checkpoint locks invert (jstack:
+        // DAGScheduler.getCacheLocs against RDD.doCheckpoint on the
+        // broadcast-exchange thread) — a hang, not an error
+        .localCheckpoint()
     }
     ranks
   }

@@ -52,8 +52,7 @@ object Similarity {
                      vecCol: String, idCol: String, k: Int): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
       .filter(nonDegenerate(col("v")))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
+    val q = queryVecs(queries, vecCol, idCol)
     c.join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6))
       .withColumn("rank", row_number().over(rankWindow))
@@ -72,8 +71,7 @@ object Similarity {
                           vecCol: String, idCol: String, k: Int): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
       .filter(nonDegenerate(col("v")))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
+    val q = queryVecs(queries, vecCol, idCol)
     c.join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("cos_r", VectorExpressions.intCosKey(col("v"), col("qv")))
       .filter(col("cos_r").isNotNull)
@@ -94,8 +92,7 @@ object Similarity {
                        vecCol: String, idCol: String, k: Int): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
       .filter(nonDegenerate(col("v")))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
+    val q = queryVecs(queries, vecCol, idCol)
     val d2 = VectorExpressions.dot(col("v"), col("v")) -
       lit(2.0) * VectorExpressions.dot(col("v"), col("qv")) +
       VectorExpressions.dot(col("qv"), col("qv"))
@@ -150,8 +147,7 @@ object Similarity {
       .filter(nonDegenerate(col("v")))
       .withColumn("vt", slice(col("v"), 1, dPrime))
       .filter(nonDegenerate(col("vt")))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
+    val q = queryVecs(queries, vecCol, idCol)
       .withColumn("qvt", slice(col("qv"), 1, dPrime))
       .filter(nonDegenerate(col("qvt")))
     val coarseW = Window.partitionBy("query_id")
@@ -247,8 +243,7 @@ object Similarity {
   private def probeRanked(cents: DataFrame, queries: DataFrame,
                           vecCol: String, idCol: String,
                           maxNp: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
+    val q = queryVecs(queries, vecCol, idCol)
     q.crossJoin(broadcast(cents))
       .withColumn("d", VectorExpressions.intCosKey(col("qv"), col("cv")))
       .filter(col("d").isNotNull)
@@ -340,12 +335,14 @@ object Similarity {
     * comparison decides a hit; only cell assignment, the rank-1 stage
     * the e08 gate proves on its own, replays round-6 floats.
     *
-    * Efficiency contract — not |grid| searches: ONE candidate scan at
-    * max(nProbes) (candidates carry their cell's probe rank, and the
-    * candidates under n probes are a subset of those under the max),
-    * ONE brute-force baseline at max(ks) (rank kept), ONE window pass
+    * Efficiency contract — one lazy plan, not |grid| searches, and
+    * building it fires no Spark job: ONE candidate scan at max(nProbes)
+    * (candidates carry their cell's probe rank, and the candidates
+    * under n probes are a subset of those under the max), ONE
+    * brute-force baseline at max(ks) (rank kept), ONE window pass
     * giving each candidate its rank under every probe width, and ONE
-    * conditional aggregate producing every (nProbe, k) hit count. The
+    * grouped aggregate producing every (nProbe, k) hit count; the
+    * denominators are one-row aggregates [[gridTail]] joins in. The
     * k axis costs no scan. `scanned_ppm` counts every vector in a
     * probed cell (the query's own vector is excluded only at scoring,
     * as in [[ivfSearch]]); n_bf(k) divides each recall, so a corpus
@@ -361,77 +358,130 @@ object Similarity {
     require(nProbes.nonEmpty && nProbes.forall(_ >= 1) &&
       nProbes.distinct.size == nProbes.size, s"bad nProbes $nProbes")
     val spark = corpus.sparkSession
-    val maxNp = nProbes.max
-    val kMax = ks.max
-    val ksSorted = ks.sorted
+    val npSorted = nProbes.sorted
     val assigned = cellAssignmentsTrained(corpus, vecCol, idCol, codebook)
-      .persist()
-    val cents = centsOf(spark, codebook)
-    val q = queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
     // probe ranking on the exact-integer key (r15) — THE shared
     // [[probeRanked]] formulation across the family
-    val probes = probeRanked(cents, queries, vecCol, idCol, maxNp)
-      .persist()
+    val probes = probeRanked(centsOf(spark, codebook), queries, vecCol,
+      idCol, nProbes.max)
     val cand = assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .withColumn("cos_r", VectorExpressions.intCosKey(col("v"), col("qv")))
       .filter(col("cos_r").isNotNull)
       .select(col("query_id"), col("id"), col("cos_r"), col("prn"))
-      .persist()
-    val bf = bruteForceTopKExact(corpus, queries, vecCol, idCol, kMax)
-      .select(col("query_id"), col("id"), col("rank").as("bfr"))
-      .persist()
-    val cellSizes = assigned.groupBy("cell").agg(count(lit(1)).as("cell_n"))
-    val nQ = q.count()
-    val nCorpus = assigned.count()
-    val bfAggs = ksSorted.map(kk =>
-      coalesce(sum(when(col("bfr") <= kk, 1L).otherwise(0L)), lit(0L)))
-    val nBfRow = bf.agg(bfAggs.head, bfAggs.tail: _*).head
-    try {
-      // r18: ONE window pass and ONE aggregate for the whole grid —
-      // the width-np rank of a candidate is the RUNNING COUNT of rows
-      // with prn ≤ np in score order (row_number over the prn ≤ np
-      // subset for exactly those rows), so every (np, k) cell reads
-      // off one conditional sum instead of |nProbes| windows and
-      // 2·|nProbes| jobs; scanned counts batch the same way.
-      val npSorted = nProbes.sorted
-      val kw = Window.partitionBy("query_id")
-        .orderBy(col("cos_r").desc, col("id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val ranked = npSorted.foldLeft(cand)((df, np) =>
-        df.withColumn(s"ivfr_$np",
-          sum(when(col("prn") <= np, 1L).otherwise(0L)).over(kw)))
-      val joined = bf.join(ranked, Seq("query_id", "id"))
-      val hitAggs = for (np <- npSorted; kk <- ksSorted) yield coalesce(
-        sum(when(col("prn") <= np && col("bfr") <= kk &&
-          col(s"ivfr_$np") <= kk, 1L).otherwise(0L)), lit(0L))
-      val hitRow = joined.agg(hitAggs.head, hitAggs.tail: _*).head
-      val scanAggs = npSorted.map(np => coalesce(
-        sum(when(col("prn") <= np, col("cell_n")).otherwise(0L)), lit(0L)))
-      val scanRow = probes.join(cellSizes, Seq("cell"))
-        .agg(scanAggs.head, scanAggs.tail: _*).head
-      val rows = npSorted.zipWithIndex.flatMap { case (np, ni) =>
-        val scanned = scanRow.getLong(ni)
-        // BigInt: 1e6·scanned and nQ·nCorpus overflow a Long at the
-        // corpus scale this operator documents (review r14)
-        val scannedPpm =
-          if (nQ == 0 || nCorpus == 0) 0L
-          else (BigInt(1000000L) * scanned /
-            (BigInt(nQ) * nCorpus)).toLong
-        ksSorted.zipWithIndex.map { case (kk, ki) =>
-          val h = hitRow.getLong(ni * ksSorted.length + ki)
-          val nbf = nBfRow.getLong(ki)
-          (np.toLong, kk.toLong, nQ, h, nbf,
-            if (nbf == 0) 0L else 1000000L * h / nbf, scannedPpm)
-        }
-      }
-      import spark.implicits._
-      rows.toDF("n_probe", "k", "n_queries", "n_hits", "n_bf",
-        "recall_ppm", "scanned_ppm")
-    } finally Seq(assigned, probes, cand, bf).foreach(_.unpersist(false))
+    // the width-np rank of a candidate is the RUNNING COUNT of rows
+    // with prn ≤ np in score order (row_number over the prn ≤ np
+    // subset, for exactly those rows), so one window ranks every width
+    val kw = Window.partitionBy("query_id")
+      .orderBy(col("cos_r").desc, col("id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranked = npSorted.foldLeft(cand)((df, np) =>
+      df.withColumn(s"ivfr_$np",
+        sum(when(col("prn") <= np, 1L).otherwise(0L)).over(kw)))
+    val bf = truthRanks(corpus, queries, vecCol, idCol, ks.max)
+    val hits = bf.join(ranked, Seq("query_id", "id"))
+      .withColumn("n_probe", explode(axisValues(nProbes)))
+      .withColumn("k", explode(axisValues(ks)))
+      .filter(col("prn") <= col("n_probe") && col("bfr") <= col("k") &&
+        atAxis("n_probe", npSorted, "ivfr_") <= col("k"))
+      .groupBy("n_probe", "k").agg(count(lit(1)).as("n_hits"))
+    gridTail(cellsOf(spark, "n_probe" -> axisValues(nProbes),
+        "k" -> axisValues(ks)), hits, probeScans(probes, assigned, nProbes),
+      gridDenoms(queryVecs(queries, vecCol, idCol), assigned, bf, ks), ks,
+      Seq("n_probe", "k"))
   }
+
+  /** The filtered query relation (query_id, qv) every ANN operator
+    * ranks against: degenerate query vectors excluded by contract. */
+  private def queryVecs(queries: DataFrame, vecCol: String,
+                        idCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"),
+        toDoubleArray(col(vecCol)).as("qv"))
+      .filter(nonDegenerate(col("qv")))
+
+  /** The truth every operating grid measures against: the exact
+    * integer-key top-max(k), (query_id, id, bfr), rank kept so each k
+    * reads its own depth. */
+  private def truthRanks(corpus: DataFrame, queries: DataFrame,
+                         vecCol: String, idCol: String,
+                         kMax: Int): DataFrame =
+    bruteForceTopKExact(corpus, queries, vecCol, idCol, kMax)
+      .select(col("query_id"), col("id"), col("rank").as("bfr"))
+
+  /** One grid axis's values as a literal BIGINT array: exploding it
+    * into a column fans each row out over the axis with no join, no
+    * exchange and no job. */
+  private def axisValues(values: Seq[Int]): Column =
+    typedlit(values.sorted.map(_.toLong))
+
+  /** Every cell of a grid, one row each: the cross product of the axes,
+    * exploded out of one literal row. */
+  private def cellsOf(spark: org.apache.spark.sql.SparkSession,
+                      axes: (String, Column)*): DataFrame =
+    axes.foldLeft(spark.range(1).toDF())((df, a) =>
+      df.withColumn(a._1, explode(a._2))).drop("id")
+
+  /** The per-row column of the row's own axis value: a per-value
+    * quantity is one column per value (`<prefix><value>`), and a cell
+    * row reads the one its `axisCol` names. */
+  private def atAxis(axisCol: String, values: Seq[Int],
+                     prefix: String): Column =
+    values.map(v => when(col(axisCol) === v, col(s"$prefix$v")))
+      .reduce(coalesce(_, _))
+
+  /** Every probe width's summed scan, (n_probe, scanned): per query,
+    * the populations of the cells its first n_probe probes name. */
+  private def probeScans(probes: DataFrame, assigned: DataFrame,
+                         nProbes: Seq[Int]): DataFrame =
+    probes.withColumn("n_probe", explode(axisValues(nProbes)))
+      .filter(col("prn") <= col("n_probe"))
+      .join(assigned.groupBy("cell").agg(count(lit(1)).as("cell_n")),
+        Seq("cell"))
+      .groupBy("n_probe").agg(sum(col("cell_n")).as("scanned"))
+
+  /** The one-row denominators of a grid: n_queries, n_corpus and, per
+    * depth k, the truth's row count `n_bf_<k>`. */
+  private def gridDenoms(q: DataFrame, corpusRows: DataFrame,
+                         bf: DataFrame, ks: Seq[Int]): DataFrame = {
+    val nBf = ks.map(k => count(when(col("bfr") <= k, 1)).as(s"n_bf_$k"))
+    q.agg(count(lit(1)).as("n_queries"))
+      .crossJoin(corpusRows.agg(count(lit(1)).as("n_corpus")))
+      .crossJoin(bf.agg(nBf.head, nBf.tail: _*))
+  }
+
+  /** THE cell tail of every operating grid — the one place the rule for
+    * a cell's `n_bf`, `recall_ppm` and `scanned_ppm` lives. `cells`
+    * lists every cell (its `axes`, `k` among them, plus any tag column);
+    * `hits` holds `n_hits` for the cells with at least one hit (the
+    * rest read 0); `scanned` holds the per-query scan summed over its
+    * key columns; `denoms` is [[gridDenoms]]' one row (plus whatever
+    * `tail` reads). recall_ppm = 10⁶·hits / n_bf(k), 0 when the truth is
+    * empty; scanned_ppm = 10⁶·scanned / (n_queries · n_corpus) in
+    * DECIMAL(38,0), since 10⁶·scanned and n_queries·n_corpus overflow a
+    * Long at the corpus scale these operators document (review r14).
+    * Output: the axes, n_queries, n_hits, n_bf, recall_ppm,
+    * scanned_ppm, then `tail`, sorted by `order`. */
+  private def gridTail(cells: DataFrame, hits: DataFrame,
+                       scanned: DataFrame, denoms: DataFrame, ks: Seq[Int],
+                       axes: Seq[String], tail: Seq[Column] = Nil,
+                       order: Seq[Column] = Nil): DataFrame =
+    cells.join(broadcast(hits), cells.columns.toSeq, "left")
+      .join(broadcast(scanned), scanned.columns.toSeq.filter(_ != "scanned"),
+        "left")
+      .crossJoin(broadcast(denoms))
+      .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
+      .withColumn("n_bf", atAxis("k", ks, "n_bf_"))
+      .withColumn("scanned", coalesce(col("scanned"), lit(0L)))
+      .orderBy((if (order.isEmpty) axes.map(col) else order): _*)
+      .select((axes.map(col) ++ Seq(col("n_queries"), col("n_hits"),
+        col("n_bf"),
+        when(col("n_bf") === 0L, lit(0L))
+          .otherwise(expr("(1000000 * n_hits) div n_bf")).as("recall_ppm"),
+        when(col("n_queries") === 0L || col("n_corpus") === 0L, lit(0L))
+          .otherwise(expr("(CAST(scanned AS DECIMAL(38,0)) * 1000000) div " +
+            "(CAST(n_queries AS DECIMAL(38,0)) * " +
+            "CAST(n_corpus AS DECIMAL(38,0)))")).as("scanned_ppm")) ++
+        tail): _*)
 
   /** Product-quantization encode — the memory-scale path for ANN
     * (IVF-PQ's second half): each vector compresses to `m` codebook
@@ -516,10 +566,7 @@ object Similarity {
   private def adcTables(queries: DataFrame, vecCol: String, idCol: String,
                         codebook: Seq[Seq[Double]], m: Int): DataFrame = {
     val dim = codebook.head.length
-    val qRows = queries
-      .select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
-      .collect()
+    val qRows = queryVecs(queries, vecCol, idCol).collect()
     val spark = queries.sparkSession
     import spark.implicits._
     qRows.toSeq.map { r =>
@@ -664,15 +711,16 @@ object Similarity {
     * e05/e07/e09 gates have proven. A single-k call is the (nProbe × r)
     * surface at fixed k (e26 reads it off `ks = Seq(5)`).
     *
-    * Efficiency contract (see [[operatingGrid3dMulti]]): ONE coded
-    * candidate scan at max(nProbes); per probe width ONE ADC window cut
-    * to max(rs), with the TRUE vectors attached only to that bounded
-    * shortlist (nq·max(rs) rows — the rerank never touches the corpus),
-    * ONE exact-key window pass ranking the shortlist under every depth,
-    * and ONE conditional aggregate emitting every (r, k) hit count. The
-    * k axis costs no scan. The baseline is taken at max(ks), rank kept,
-    * so each k divides by its own depth-k baseline row count (the
-    * ADVICE-r13 denominator, per depth). */
+    * Efficiency contract (see [[operatingGrid3dMulti]]): one lazy
+    * plan — ONE coded candidate scan at max(nProbes), ONE ADC window
+    * over every probe width cutting each shortlist to max(rs), the TRUE
+    * vectors attached only to those bounded shortlists (nq·max(rs) rows
+    * per width — the rerank never touches the corpus), ONE exact-key
+    * window ranking them under every depth, and ONE grouped aggregate
+    * emitting every (np, r, k) hit count. The k axis costs no scan.
+    * The baseline is taken at max(ks), rank kept, so each k divides by
+    * its own depth-k baseline row count (the ADVICE-r13 denominator,
+    * per depth). */
   def ivfPqOperatingGrid3d(corpus: DataFrame, queries: DataFrame,
                            vecCol: String, idCol: String, ks: Seq[Int],
                            cellCodebook: Seq[Seq[Double]], m: Int,
@@ -708,7 +756,7 @@ object Similarity {
     * points, feeding the cross-family serving auto-choice the same way
     * e27 feeds e28. Plan shape is identical (shared skeleton below —
     * ONE coded candidate scan at max(nProbes), bounded shortlists,
-    * exact-integer-key re-rank, conditional per-k aggregates), so the
+    * exact-integer-key re-rank, one grouped hit aggregate), so the
     * two families' cost/recall cells are directly comparable: same
     * probe stage, same truth, same scanned_ppm denominator — only the
     * approximate scorer differs, which is exactly the axis a family
@@ -793,8 +841,8 @@ object Similarity {
                               mins: Seq[Double], scales: Seq[Double],
                               bqThresholds: Seq[Double],
                               rs: Seq[Int], nProbes: Seq[Int]): DataFrame =
-    operatingGrid3dMulti(corpus, queries, vecCol, idCol, ks, cellCodebook,
-      rs, nProbes, Seq(
+    operatingGrid3dMulti(corpus, None, queries, vecCol, idCol, ks,
+      cellCodebook, rs, nProbes, Seq(
         "ivf_pq" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook),
         "ivf_sq8" -> sqCandOf(mins, scales),
         "ivf_bq" -> bqCandOf(bqThresholds)))
@@ -822,7 +870,7 @@ object Similarity {
                                    pqCodebook: Seq[Seq[Double]],
                                    rs: Seq[Int], nProbes: Seq[Int])
       : DataFrame =
-    filteredGrids(corpus, keepIds, queries, vecCol, idCol, ks,
+    operatingGrid3dMulti(corpus, Some(keepIds), queries, vecCol, idCol, ks,
         cellCodebook, rs, nProbes,
         Seq("" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook)))
       .drop("family")
@@ -846,36 +894,11 @@ object Similarity {
                                       bqThresholds: Seq[Double],
                                       rs: Seq[Int], nProbes: Seq[Int])
       : DataFrame =
-    filteredGrids(corpus, keepIds, queries, vecCol, idCol, ks,
+    operatingGrid3dMulti(corpus, Some(keepIds), queries, vecCol, idCol, ks,
       cellCodebook, rs, nProbes, Seq(
         "ivf_pq" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook),
         "ivf_sq8" -> sqCandOf(mins, scales),
         "ivf_bq" -> bqCandOf(bqThresholds)))
-
-  /** The filtered grids' shared prelude and tail: cut the corpus to
-    * `keepIds` (the pre-filter contract), run [[operatingGrid3dMulti]]
-    * over the survivors with every cell's scan charged against the FULL
-    * clean corpus, and append `selectivity_ppm` — the cost of the
-    * predicate-pruned exact scan the cells compete with. */
-  private def filteredGrids(corpus: DataFrame, keepIds: DataFrame,
-                            queries: DataFrame, vecCol: String,
-                            idCol: String, ks: Seq[Int],
-                            cellCodebook: Seq[Seq[Double]],
-                            rs: Seq[Int], nProbes: Seq[Int],
-                            families: Seq[(String,
-                              (DataFrame, DataFrame, DataFrame)
-                                => DataFrame)]): DataFrame = {
-    def cleanCount(df: DataFrame): Long =
-      df.select(toDoubleArray(col(vecCol)).as("v"))
-        .filter(nonDegenerate(col("v"))).count()
-    val nFull = cleanCount(corpus)
-    val filtered = corpus.join(keepIds, Seq(idCol))
-    val nKept = cleanCount(filtered)
-    require(nFull > 0, "filtered grids need a non-empty corpus")
-    operatingGrid3dMulti(filtered, queries, vecCol, idCol, ks,
-        cellCodebook, rs, nProbes, families, scanDenomOverride = Some(nFull))
-      .withColumn("selectivity_ppm", lit(1000000L * nKept / nFull))
-  }
 
   /** The CHEAPEST-MEETING-CELL decision window shared by every serving
     * auto-choice (e28/e31/e32/e33/e36 and the curation index card —
@@ -903,7 +926,7 @@ object Similarity {
   /** The family-generic 3-D grid skeleton: everything in the e27
     * contract EXCEPT the approximate candidate scorer, which `candOf`
     * supplies as a (query_id, id, score, prn) relation built from the
-    * persisted cell assignments, the probe table, and the skeleton's
+    * cell assignments, the probe table, and the skeleton's
     * filtered query relation (query_id, qv) (score ASC = more
     * promising, round-6dp, id tiebreak — the established shortlist
     * ordering contract). */
@@ -914,35 +937,49 @@ object Similarity {
                                 candOf: (DataFrame, DataFrame, DataFrame)
                                   => DataFrame)
       : DataFrame =
-    operatingGrid3dMulti(corpus, queries, vecCol, idCol, ks, cellCodebook,
-      rs, nProbes, Seq("" -> candOf)).drop("family")
+    operatingGrid3dMulti(corpus, None, queries, vecCol, idCol, ks,
+      cellCodebook, rs, nProbes, Seq("" -> candOf)).drop("family")
 
   /** MULTI-FAMILY grid: the skeleton run for SEVERAL candidate scorers
     * over ONE shared substrate — cell assignments, probe table,
     * brute-force truth, per-k baselines, and per-probe-width scanned
-    * fractions are all family-independent, so computing them once and
-    * scoring per family is the honest intra-query plan (the corpus is
-    * scanned once per family for CODES, but the exchanges and the
-    * truth job are not repeated). e31/e32/e33 select over this union;
-    * the single-family operators delegate here with one entry, so the
-    * shared and standalone paths cannot diverge (and the e31 spec
-    * re-derives the choice from the standalone grids, pinning the
-    * equality). Output: the grid columns + `family`. */
-  private def operatingGrid3dMulti(corpus: DataFrame, queries: DataFrame,
+    * fractions are all family-independent, so they are planned once
+    * and every family's candidates, tagged with `family`, flow through
+    * one ranking and one aggregate (the corpus is scanned once per
+    * family for CODES, but the exchanges and the truth job are not
+    * repeated). e31/e32/e33 select over this union; the single-family
+    * operators delegate here with one entry, so the shared and
+    * standalone paths cannot diverge (and the e31 spec re-derives the
+    * choice from the standalone grids, pinning the equality).
+    *
+    * With `keepIds` the grid is measured under the pre-filter contract
+    * (e17): candidates and truth come from the corpus cut to `keepIds`,
+    * every cell's scan is charged against the FULL clean corpus (so it
+    * compares to the predicate-pruned exact scan), and
+    * `selectivity_ppm` — that scan's cost — is appended; an empty
+    * corpus fails the action.
+    *
+    * One lazy plan; building it fires no Spark job beyond the PQ
+    * scorer's bounded ADC query collect ([[adcTables]]). The probe
+    * widths join the candidates on prn ≤ n_probe, ONE window
+    * partitioned by (n_probe, family, query_id) cuts each shortlist to
+    * max(rs) by score, the TRUE vectors are attached only to those
+    * bounded shortlists (nq·max(rs) rows per cell — the rerank never
+    * touches the corpus), ONE exact-key window gives each shortlist row
+    * its rank under every depth (the depth-r rank of a row with ar ≤ r
+    * is the RUNNING COUNT of ar ≤ r rows in exact-key order), and ONE
+    * grouped aggregate emits every (n_probe, r, k, family) hit count.
+    * Output: the grid columns + `family` (+ `selectivity_ppm`). */
+  private def operatingGrid3dMulti(corpus: DataFrame,
+                                   keepIds: Option[DataFrame],
+                                   queries: DataFrame,
                                    vecCol: String, idCol: String,
                                    ks: Seq[Int],
                                    cellCodebook: Seq[Seq[Double]],
                                    rs: Seq[Int], nProbes: Seq[Int],
                                    families: Seq[(String,
                                      (DataFrame, DataFrame, DataFrame)
-                                       => DataFrame)],
-                                   // scanned_ppm denominator override:
-                                   // the filtered grid charges cells
-                                   // against the FULL corpus so they
-                                   // compare to the predicate-pruned
-                                   // exact scan (None = |corpus|)
-                                   scanDenomOverride: Option[Long] = None)
-      : DataFrame = {
+                                       => DataFrame)]): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1) && ks.distinct.size == ks.size,
       s"bad ks $ks")
     require(rs.nonEmpty && rs.forall(_ >= ks.max) &&
@@ -954,101 +991,64 @@ object Similarity {
       families.map(_._1).distinct.size == families.size,
       s"family tags must be distinct, got ${families.map(_._1)}")
     val spark = corpus.sparkSession
-    val maxNp = nProbes.max
-    val maxR = rs.max
-    val kMax = ks.max
-    val ksSorted = ks.sorted
-    val assigned = cellAssignmentsTrained(corpus, vecCol, idCol,
-      cellCodebook).persist()
-    val cents = centsOf(spark, cellCodebook)
-    val q = queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
-    val probes = probeRanked(cents, queries, vecCol, idCol, maxNp)
+    val rsSorted = rs.sorted
+    val searched = keepIds.fold(corpus)(kp => corpus.join(kp, Seq(idCol)))
+    val assigned = cellAssignmentsTrained(searched, vecCol, idCol,
+      cellCodebook)
+    val q = queryVecs(queries, vecCol, idCol)
+    val probes = probeRanked(centsOf(spark, cellCodebook), queries, vecCol,
+        idCol, nProbes.max)
       .select(col("query_id"), col("cell"), col("prn"))
-      .persist()
-    val cands = families.map { case (fam, candOf) =>
-      fam -> candOf(assigned, probes, q)
-        .select(col("query_id"), col("id"), col("score"), col("prn"))
-        // materialize query_id-partitioned: every downstream window
-        // (per-probe shortlist rank, exact-key rerank) then runs with
-        // NO exchange — one shuffle here replaces one per probe width
-        .repartition(col("query_id"))
-        .persist()
+    val cand = families.map { case (fam, candOf) =>
+      candOf(assigned, probes, q).select(lit(fam).as("family"),
+        col("query_id"), col("id"), col("score"), col("prn"))
+    }.reduce(_ unionByName _)
+    val perCell = Seq(col("n_probe"), col("family"), col("query_id"))
+    val short = cand.withColumn("n_probe", explode(axisValues(nProbes)))
+      .filter(col("prn") <= col("n_probe"))
+      .withColumn("ar", row_number().over(Window.partitionBy(perCell: _*)
+        .orderBy(col("score").asc, col("id").asc)))
+      .filter(col("ar") <= rs.max)
+      .join(assigned.select(col("id"), col("v")), Seq("id"))
+      .join(broadcast(q), Seq("query_id"))
+      .withColumn("key", VectorExpressions.intCosKey(col("v"), col("qv")))
+      .filter(col("key").isNotNull)
+      .select(col("n_probe"), col("family"), col("query_id"), col("id"),
+        col("ar"), col("key"))
+    val kw = Window.partitionBy(perCell: _*)
+      .orderBy(col("key").desc, col("id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranked = rsSorted.foldLeft(short)((df, r) =>
+      df.withColumn(s"frank_$r",
+        sum(when(col("ar") <= r, 1L).otherwise(0L)).over(kw)))
+    val bf = truthRanks(searched, queries, vecCol, idCol, ks.max)
+    val hits = bf.join(ranked, Seq("query_id", "id"))
+      .withColumn("r_shortlist", explode(axisValues(rs)))
+      .withColumn("k", explode(axisValues(ks)))
+      .filter(col("ar") <= col("r_shortlist") && col("bfr") <= col("k") &&
+        atAxis("r_shortlist", rsSorted, "frank_") <= col("k"))
+      .groupBy("n_probe", "r_shortlist", "k", "family")
+      .agg(count(lit(1)).as("n_hits"))
+    val tags = families.map(_._1)
+    val (denoms, selectivity) = keepIds match {
+      case None => (gridDenoms(q, assigned, bf, ks), Nil)
+      case Some(_) =>
+        val clean = corpus.select(toDoubleArray(col(vecCol)).as("v"))
+          .filter(nonDegenerate(col("v")))
+        (gridDenoms(q, clean, bf, ks)
+          .crossJoin(assigned.agg(count(lit(1)).as("n_kept"))),
+          Seq(when(col("n_corpus") === 0L,
+              raise_error(lit("filtered grids need a non-empty corpus")))
+            .otherwise(expr("(1000000 * n_kept) div n_corpus"))
+            .as("selectivity_ppm")))
     }
-    val bf = bruteForceTopKExact(corpus, queries, vecCol, idCol, kMax)
-      .select(col("query_id"), col("id"), col("rank").as("bfr"))
-      .persist()
-    val cellSizes = assigned.groupBy("cell").agg(count(lit(1)).as("cell_n"))
-    val corpusVecs = assigned.select(col("id"), col("v"))
-    val nQ = q.count()
-    val nCorpus = scanDenomOverride.getOrElse(assigned.count())
-    val bfAggs = ksSorted.map(kk =>
-      coalesce(sum(when(col("bfr") <= kk, 1L).otherwise(0L)), lit(0L)))
-    val nBfRow = bf.agg(bfAggs.head, bfAggs.tail: _*).head
-    try {
-      // ONE bounded aggregate for every probe width's scanned count —
-      // the per-np aggregates were identical scans of the same tiny
-      // probe relation (guide §1: fewer jobs)
-      val npSorted = nProbes.sorted
-      val rsSorted = rs.sorted
-      val scanAggs = npSorted.map(np => coalesce(
-        sum(when(col("prn") <= np, col("cell_n")).otherwise(0L)), lit(0L)))
-      val scanRow = probes.join(cellSizes, Seq("cell"))
-        .agg(scanAggs.head, scanAggs.tail: _*).head
-      val scannedPpmOf = npSorted.zipWithIndex.map { case (np, i) =>
-        np -> (if (nQ == 0 || nCorpus == 0) 0L
-          else (BigInt(1000000L) * scanRow.getLong(i) /
-            (BigInt(nQ) * nCorpus)).toLong)
-      }.toMap
-      val rows = npSorted.flatMap { np =>
-        val scannedPpm = scannedPpmOf(np)
-        cands.flatMap { case (fam, cand) =>
-          // ONE window pass + ONE aggregate per (probe, family)
-          // instead of |rs| rerank windows × |rs| jobs: the depth-r
-          // rank of a shortlist row is the RUNNING COUNT of rows with
-          // ar ≤ r in exact-key order (for rows with ar ≤ r this
-          // equals row_number over the ar ≤ r subset — predecessors
-          // inclusive of self in a total order), so every (r, k) cell
-          // reads off one conditional sum. The shortlist no longer
-          // needs its own persist: it is consumed by exactly one job.
-          val short = cand.filter(col("prn") <= np)
-            .withColumn("ar", row_number().over(Window.partitionBy("query_id")
-              .orderBy(col("score").asc, col("id").asc)))
-            .filter(col("ar") <= maxR)
-            .join(corpusVecs, Seq("id"))
-            .join(q, Seq("query_id"))
-            .withColumn("key",
-              VectorExpressions.intCosKey(col("v"), col("qv")))
-            .filter(col("key").isNotNull)
-            .select(col("query_id"), col("id"), col("ar"), col("key"))
-          val kw = Window.partitionBy("query_id")
-            .orderBy(col("key").desc, col("id").asc)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val ranked = rsSorted.foldLeft(short)((df, r) =>
-            df.withColumn(s"frank_$r",
-              sum(when(col("ar") <= r, 1L).otherwise(0L)).over(kw)))
-          val joined = bf.join(ranked, Seq("query_id", "id"))
-          val hitAggs = for (r <- rsSorted; kk <- ksSorted) yield coalesce(
-            sum(when(col("ar") <= r && col(s"frank_$r") <= kk &&
-              col("bfr") <= kk, 1L).otherwise(0L)), lit(0L))
-          val hitRow = joined.agg(hitAggs.head, hitAggs.tail: _*).head
-          rsSorted.zipWithIndex.flatMap { case (r, ri) =>
-            ksSorted.zipWithIndex.map { case (kk, ki) =>
-              val h = hitRow.getLong(ri * ksSorted.length + ki)
-              val nbf = nBfRow.getLong(ki)
-              (np.toLong, r.toLong, kk.toLong, nQ, h, nbf,
-                if (nbf == 0) 0L else 1000000L * h / nbf, scannedPpm, fam)
-            }
-          }
-        }
-      }
-      import spark.implicits._
-      rows.toDF("n_probe", "r_shortlist", "k", "n_queries", "n_hits",
-        "n_bf", "recall_ppm", "scanned_ppm", "family")
-    } finally
-      (Seq(assigned, probes, bf) ++ cands.map(_._2))
-        .foreach(_.unpersist(false))
+    gridTail(cellsOf(spark, "n_probe" -> axisValues(nProbes),
+        "r_shortlist" -> axisValues(rs), "k" -> axisValues(ks),
+        "family" -> typedlit(tags)),
+      hits, probeScans(probes, assigned, nProbes), denoms, ks,
+      Seq("n_probe", "r_shortlist", "k"), col("family") +: selectivity,
+      Seq(col("n_probe"), array_position(typedlit(tags), col("family")),
+        col("r_shortlist"), col("k")))
   }
 
   private def ivfPqSearch(corpus: DataFrame, queries: DataFrame,
@@ -1141,8 +1141,7 @@ object Similarity {
     val decoded = c
       .select(col("id"), sqEncodeCol(col("v"), mins, scales).as("codes"))
       .select(col("id"), sqDecodeCol(col("codes"), mins, scales).as("rv"))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
+    val q = queryVecs(queries, vecCol, idCol)
     val w = Window.partitionBy("query_id")
       .orderBy(col("sq_d2").asc, col("id").asc)
     decoded.join(broadcast(q), col("id") =!= col("query_id"))
@@ -1372,8 +1371,7 @@ object Similarity {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
       .filter(nonDegenerate(col("v")))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
+    val q = queryVecs(queries, vecCol, idCol)
     short.join(c, Seq("id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6))
@@ -1687,32 +1685,21 @@ object Similarity {
     require(levels.nonEmpty, "need at least one level")
     require(k >= 1 && levels.forall { case (_, w, h) => w >= 1 && h >= 1 },
       "beamWidth/hops/k must be >= 1")
-    val e = corpus.select(col(idCol).as("id"),
-        toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-      .localCheckpoint(false) // streamed per hop — decode the source once
-    val q = queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
-      .localCheckpoint(false) // reused per hop — scan the source once
+    val (e, q, seed) = walkStart(corpus, queries, vecCol, idCol,
+      Some(entryMembers))
+    val keys = Seq("query_id")
     val fw = Window.partitionBy("query_id")
       .orderBy(col("cos_u").desc, col("id").asc)
-    val entry = e.join(entryMembers.select(col("id")), Seq("id"))
-      .orderBy(md5(col("id").cast(StringType)), col("id")).limit(1)
-    var state = q.crossJoin(broadcast(entry))
-      .select(col("query_id"), col("id"),
-        microCos(col("v"), col("qv")).as("cos_u"))
-      .repartition(col("query_id")) // hop 1's window needs no exchange
-      .localCheckpoint(false)
+    var state = seed.repartition(col("query_id")) // hop 1's window: no exchange
+      .localCheckpoint()
     val finals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     levels.zipWithIndex.foreach { case ((edgeList, wW, hH), li) =>
-      val edges = edgeList.localCheckpoint(false)
+      val edges = edgeList.localCheckpoint()
       if (li > 0) // descend: seed from the previous level's best
         state = state.withColumn("__rn", row_number().over(fw))
-          .filter(col("__rn") === 1)
-          .select(col("query_id"), col("id"), col("cos_u"))
-          .localCheckpoint(false)
-      for (_ <- 1 to hH) state = nswHop(state, edges, e, q, wW)
+          .filter(col("__rn") === 1).drop("__rn")
+          .localCheckpoint()
+      for (h <- 1 to hH) state = nswHop(state, edges, e, q, keys, lit(wW), h)
       finals += state
     }
     val visited = finals.map(_.select(col("query_id"), col("id")))
@@ -1801,61 +1788,94 @@ object Similarity {
       .select(col("src"), col("dst"), col("cos_u"))
   }
 
-  // ONE beam hop — frontier (top-`beamWidth` visited per query), expand
+  /** The walk's set-up, one copy for [[hnswSearch]] and the NSW grid:
+    * the decoded corpus `e` and queries `q`, each cut once (every hop
+    * re-reads them), and the seed state — every query at the global
+    * entry, the md5-min member of `entryMembers` (None = the whole
+    * corpus), stamped hop 0. Every cut in the walk is EAGER: a lazy
+    * localCheckpoint leaves its RDD's checkpoint pending until the
+    * first job over it ends, and when an AQE broadcast job (the hop's
+    * frontier) and a shuffle stage (the hop's union) both read that
+    * pending RDD, Spark's checkpoint locks invert — the same deadlock
+    * [[Graph]]'s power steps hit. */
+  private def walkStart(corpus: DataFrame, queries: DataFrame,
+                        vecCol: String, idCol: String,
+                        entryMembers: Option[DataFrame])
+      : (DataFrame, DataFrame, DataFrame) = {
+    val e = corpus.select(col(idCol).as("id"),
+        toDoubleArray(col(vecCol)).as("v"))
+      .filter(nonDegenerate(col("v")))
+      .localCheckpoint() // streamed per hop — decode the source once
+    val q = queryVecs(queries, vecCol, idCol)
+      .localCheckpoint() // reused per hop — scan the source once
+    val entry = entryMembers.fold(e)(m => e.join(m.select(col("id")), Seq("id")))
+      .orderBy(md5(col("id").cast(StringType)), col("id")).limit(1)
+    val seed = q.crossJoin(broadcast(entry))
+      .select(col("query_id"), col("id"),
+        microCos(col("v"), col("qv")).as("cos_u"), lit(0).as("hop"))
+    (e, q, seed)
+  }
+
+  // ONE beam hop — frontier (the top-`width` visited per walk), expand
   // through the edge list, score the new nodes, dedup into the state.
-  // Shared by hnswSearch and nswOperatingGrid so a hop-semantics
-  // change can never fork the grid from the operator it measures.
+  // A walk is keyed by `keys`: (query_id) for [[hnswSearch]],
+  // (beam_width, query_id) for the grid, whose every beam width walks
+  // in one state; `width` is the literal beam width or the row's own
+  // `beam_width`. Shared so a hop-semantics change can never fork the
+  // grid from the operator it measures. Each state row carries `hop`,
+  // its FIRST-visit hop (the min over duplicate visits; the seed is
+  // hop 0), so the state after hop h is exactly the rows stamped ≤ h.
   // Duplicate expansions (two frontier nodes sharing a neighbor) ride
   // through to the single state-level dedup — at most W·degree rows
-  // per query, cheaper than a second shuffle per hop. The state is
+  // per walk, cheaper than a second shuffle per hop. The state is
   // referenced TWICE per later hop (frontier + union), so each hop
   // MUST end in a localCheckpoint: it is the only cut that makes the
   // state a true plan LEAF. (Measured on this tree: persist — lazy or
   // count()-forced — does NOT get substituted for the re-analyzed
   // subplans, so every hop recomputes the whole chain: 12 s → 70-103 s
   // for the e41 grid at sf0.1. The checkpoint blocks live until the
-  // JVM drops the frames — the price of the leaf cut.)
+  // JVM drops the frames — the price of the leaf cut.) The cut is
+  // eager: see [[walkStart]].
   //
   // r18 optimization (guide §2.4): the hop carries ONE shuffle
   // exchange and zero corpus-sized broadcasts.
-  //  - The state stays hash-partitioned by query_id across hops
+  //  - The state stays hash-partitioned by `keys` across hops
   //    (checkpoint preserves outputPartitioning), so the frontier
-  //    window needs no exchange; the dedup re-keys by query_id once
-  //    per hop — HashPartitioning(query_id) satisfies
-  //    ClusteredDistribution(query_id, id), so dropDuplicates adds no
-  //    second exchange and the NEXT hop's window inherits the layout.
-  //    Duplicate visits carry identical deterministic cos_u, so
-  //    dropDuplicates(query_id, id) keeps exactly the distinct()'d
-  //    row set.
+  //    window needs no exchange; the dedup re-keys by `keys` once per
+  //    hop — HashPartitioning(keys) satisfies ClusteredDistribution(
+  //    keys, id), so the dedup aggregate adds no second exchange and
+  //    the NEXT hop's window inherits the layout. Duplicate visits
+  //    carry identical deterministic cos_u.
   //  - The corpus-vector attach STREAMS `e` against a broadcast of
   //    the bounded expansion (≤ |q|·W·degree rows) instead of
-  //    broadcasting/shuffling the corpus per hop — callers keep `e`
-  //    persisted or checkpointed, so the per-hop stream is a cached
-  //    scan. (Measured alternative: pre-joining dst vectors into the
-  //    edge list removes this probe but materializes a dim-times
-  //    wider edge checkpoint — slower for single walks, wash for
-  //    grids.)
-  //  - `q` is explicitly broadcast: it is a checkpoint/persisted leaf
-  //    whose stats the planner may not know (an unhinted plan degrades
-  //    to SMJ with two exchanges per hop — measured).
+  //    broadcasting/shuffling the corpus per hop — `e` is a
+  //    checkpointed leaf, so the per-hop stream is a cached scan.
+  //    (Measured alternative: pre-joining dst vectors into the edge
+  //    list removes this probe but materializes a dim-times wider
+  //    edge checkpoint — slower for single walks, wash for grids.)
+  //  - `q` is explicitly broadcast: it is a checkpointed leaf whose
+  //    stats the planner may not know (an unhinted plan degrades to
+  //    SMJ with two exchanges per hop — measured).
   private def nswHop(state: DataFrame, edges: DataFrame, e: DataFrame,
-                     q: DataFrame, beamWidth: Int): DataFrame = {
-    val fw = Window.partitionBy("query_id")
+                     q: DataFrame, keys: Seq[String], width: Column,
+                     hop: Int): DataFrame = {
+    val fw = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("cos_u").desc, col("id").asc)
     val frontier = state.withColumn("__rn", row_number().over(fw))
-      .filter(col("__rn") <= beamWidth)
-      .select(col("query_id"), col("id").as("src"))
+      .filter(col("__rn") <= width)
+      .select(keys.map(col) :+ col("id").as("src"): _*)
     val expanded = broadcast(frontier)
       .join(edges, Seq("src"))
-      .select(col("query_id"), col("dst").as("id"))
+      .select(keys.map(col) :+ col("dst").as("id"): _*)
     val scored = e.join(broadcast(expanded), Seq("id"))
       .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("id"),
-        microCos(col("v"), col("qv")).as("cos_u"))
+      .select(keys.map(col) ++ Seq(col("id"),
+        microCos(col("v"), col("qv")).as("cos_u"), lit(hop).as("hop")): _*)
     state.unionByName(scored)
-      .repartition(col("query_id"))
-      .dropDuplicates("query_id", "id")
-      .localCheckpoint(false)
+      .repartition(keys.map(col): _*)
+      .groupBy((keys :+ "id").map(col): _*)
+      .agg(max("cos_u").as("cos_u"), min("hop").as("hop"))
+      .localCheckpoint()
   }
 
   /** NSW OPERATING GRID — [[nswBeamSearch]]'s (beamWidth × hops × k)
@@ -1866,11 +1886,15 @@ object Similarity {
     * grid uses, and `scanned_ppm` = visited-node fraction — visited
     * nodes get an exact distance computed, which is precisely what
     * "scanned" charges the cell families for, so the numbers compete
-    * honestly in one decision. One graph build and ONE walk per
-    * beamWidth serve every (hops, k) cell: the chain snapshots its
-    * state at each requested hop count (a prefix walk IS the shorter
-    * walk, deterministically). Collects are bounded by
-    * |queries|·max(k) (the hit join) — never corpus-shaped.
+    * honestly in one decision. One graph build and ONE walk serve
+    * every (beamWidth, hops, k) cell: all beam widths walk in one
+    * state keyed by (beam_width, query_id), each row stamped with its
+    * first-visit hop, and a prefix walk IS the shorter walk
+    * (deterministically), so the state after h hops is the rows
+    * stamped ≤ h. The walk's max(hops) checkpoint cuts are the only
+    * jobs building the grid fires; every cell then comes from one
+    * lazy plan — one running-count window and one grouped aggregate,
+    * bounded by the visited state, never corpus-shaped.
     * Output: (n_probe, r_shortlist, k, n_queries, n_hits, n_bf,
     * recall_ppm, scanned_ppm). */
   def nswOperatingGrid(corpus: DataFrame, queries: DataFrame,
@@ -1915,86 +1939,57 @@ object Similarity {
     require(hopsList.nonEmpty && hopsList.forall(_ >= 1) &&
       hopsList.distinct.size == hopsList.size, s"bad hopsList $hopsList")
     val spark = corpus.sparkSession
-    val e = corpus.select(col(idCol).as("id"),
-        toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v"))).persist()
-    val q = queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv"))).persist()
-    val kMax = ks.max
-    val ksSorted = ks.sorted
+    val hopsSorted = hopsList.sorted
+    val (e, q, seed) = walkStart(corpus, queries, vecCol, idCol, None)
     val edges = nswGraph(corpus, vecCol, idCol, nBits, bands, degree)
-      .persist()
+      .localCheckpoint()
+    val keys = Seq("beam_width", "query_id")
+    val walked = (1 to hopsList.max).foldLeft(
+        seed.withColumn("beam_width", explode(axisValues(beamWidths)))
+          .repartition(keys.map(col): _*) // hop 1's window: no exchange
+          .localCheckpoint())((state, h) =>
+      nswHop(state, edges, e, q, keys, col("beam_width"), h))
     // answer-set restriction + the filtered truth (None = unfiltered)
-    val keep = keepIds.map(k =>
-      k.select(col(idCol).as("id")).distinct().persist())
-    val bfCorpus = keep.map(kp => corpus.join(
-        kp.select(col("id").as(idCol)), Seq(idCol))).getOrElse(corpus)
-    val bf = bruteForceTopKExact(bfCorpus, queries, vecCol, idCol, kMax)
-      .select(col("query_id"), col("id"), col("rank").as("bfr")).persist()
-    try {
-      val nQ = q.count()
-      val nCorpus = e.count()
-      val selectivityPpm = keep.map { kp =>
-        val nKept = e.join(kp, Seq("id")).count()
-        if (nCorpus == 0) 0L else 1000000L * nKept / nCorpus
-      }
-      val bfAggs = ksSorted.map(kk =>
-        coalesce(sum(when(col("bfr") <= kk, 1L).otherwise(0L)), lit(0L)))
-      val nBfRow = bf.agg(bfAggs.head, bfAggs.tail: _*).head
-      val nBfByK = ksSorted.zipWithIndex
-        .map { case (kk, i) => kk -> nBfRow.getLong(i) }.toMap
-      val entry = e.orderBy(md5(col("id").cast(StringType)), col("id"))
-        .limit(1)
-      val fw = Window.partitionBy("query_id")
-        .orderBy(col("cos_u").desc, col("id").asc)
-      val maxH = hopsList.max
-      val rows = beamWidths.sorted.flatMap { w =>
-        var state = q.crossJoin(broadcast(entry))
-          .select(col("query_id"), col("id"),
-            microCos(col("v"), col("qv")).as("cos_u"))
-          .repartition(col("query_id")) // hop 1's window: no exchange
-        (1 to maxH).flatMap { h =>
-          state = nswHop(state, edges, e, q, w)
-          if (!hopsList.contains(h)) Nil
-          else {
-            val visited = state.count()
-            val scannedPpm =
-              if (nQ == 0 || nCorpus == 0) 0L
-              else (BigInt(1000000L) * visited /
-                (BigInt(nQ) * nCorpus)).toLong
-            // answers come from the visited SURVIVORS (filtered mode);
-            // ranked AFTER the restriction, as a filtered serving
-            // endpoint would rank what it may return
-            val answerable = keep
-              .map(kp => state.join(broadcast(kp), Seq("id")))
-              .getOrElse(state)
-            // bounded: ≤ nQ·kMax rows
-            val joined = answerable.filter(col("id") =!= col("query_id"))
-              .withColumn("rank",
-                row_number().over(fw).cast(LongType))
-              .filter(col("rank") <= kMax)
-              .join(bf, Seq("query_id", "id"))
-              .select(col("rank"), col("bfr")).collect()
-            ksSorted.map { kk =>
-              val hits = joined
-                .count(r => r.getLong(0) <= kk && r.getLong(1) <= kk)
-                .toLong
-              val nbf = nBfByK(kk)
-              (w.toLong, h.toLong, kk.toLong, nQ, hits, nbf,
-                if (nbf == 0) 0L else 1000000L * hits / nbf, scannedPpm)
-            }
-          }
-        }
-      }
-      import spark.implicits._
-      val out = rows.toDF("n_probe", "r_shortlist", "k", "n_queries",
-        "n_hits", "n_bf", "recall_ppm", "scanned_ppm")
-      selectivityPpm.map(s => out.withColumn("selectivity_ppm", lit(s)))
-        .getOrElse(out)
-    } finally {
-      e.unpersist(); q.unpersist(); edges.unpersist(); bf.unpersist()
-      keep.foreach(_.unpersist())
+    val keep = keepIds.map(_.select(col(idCol).as("id")).distinct())
+    val bfCorpus = keep.fold(corpus)(kp =>
+      corpus.join(kp.select(col("id").as(idCol)), Seq(idCol)))
+    val bf = truthRanks(bfCorpus, queries, vecCol, idCol, ks.max)
+    // answers come from the visited SURVIVORS (filtered mode), ranked
+    // AFTER the restriction, as a filtered serving endpoint would rank
+    // what it may return; the rank after h hops is the RUNNING COUNT
+    // of rows stamped ≤ h in score order (for exactly those rows)
+    val aw = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("cos_u").desc, col("id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranked = hopsSorted.foldLeft(
+        keep.fold(walked)(kp => walked.join(broadcast(kp), Seq("id")))
+          .filter(col("id") =!= col("query_id")))((df, h) =>
+      df.withColumn(s"rank_$h",
+        sum(when(col("hop") <= h, 1L).otherwise(0L)).over(aw)))
+    val hits = bf.join(ranked, Seq("query_id", "id"))
+      .withColumn("r_shortlist", explode(axisValues(hopsList)))
+      .withColumn("k", explode(axisValues(ks)))
+      .filter(col("hop") <= col("r_shortlist") && col("bfr") <= col("k") &&
+        atAxis("r_shortlist", hopsSorted, "rank_") <= col("k"))
+      .groupBy(col("beam_width").as("n_probe"), col("r_shortlist"), col("k"))
+      .agg(count(lit(1)).as("n_hits"))
+    // every visited node was scanned: the state after h hops
+    val scanned = walked
+      .withColumn("r_shortlist", explode(axisValues(hopsList)))
+      .filter(col("hop") <= col("r_shortlist"))
+      .groupBy(col("beam_width").as("n_probe"), col("r_shortlist"))
+      .agg(count(lit(1)).as("scanned"))
+    val (denoms, selectivity) = keep match {
+      case None => (gridDenoms(q, e, bf, ks), Nil)
+      case Some(kp) => (gridDenoms(q, e, bf, ks)
+          .crossJoin(e.join(kp, Seq("id")).agg(count(lit(1)).as("n_kept"))),
+        Seq(when(col("n_corpus") === 0L, lit(0L))
+          .otherwise(expr("(1000000 * n_kept) div n_corpus"))
+          .as("selectivity_ppm")))
     }
+    gridTail(cellsOf(spark, "n_probe" -> axisValues(beamWidths),
+        "r_shortlist" -> axisValues(hopsList), "k" -> axisValues(ks)),
+      hits, scanned, denoms, ks, Seq("n_probe", "r_shortlist", "k"),
+      selectivity)
   }
 }

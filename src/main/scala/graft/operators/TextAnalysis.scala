@@ -27,15 +27,13 @@ object TextAnalysis {
       fingerprint(col(textCol)).as("fp"),
       rollingHash(col(textCol)).as("rolling_fp"))
 
-  /** Corpus token statistics grouped by a label column. `countTokens`
-    * selects the token unit (default whitespace; plug
-    * [[bpeTokenCounter]] for fitted-subword budgets). */
-  def tokenStats(df: DataFrame, textCol: String, byCol: String,
-                 countTokens: Column => Column = tokenCount): DataFrame =
+  /** Corpus token statistics grouped by a label column: whitespace
+    * tokens next to the BPE-unit count. */
+  def tokenStats(df: DataFrame, textCol: String, byCol: String): DataFrame =
     df.groupBy(col(byCol))
       .agg(
         count(lit(1)).as("n_docs"),
-        sum(countTokens(col(textCol)).cast(LongType)).as("total_tokens"),
+        sum(tokenCount(col(textCol)).cast(LongType)).as("total_tokens"),
         sum(bpeTokenCount(col(textCol)).cast(LongType)).as("total_bpe_tokens"),
         min(length(col(textCol))).cast(LongType).as("min_chars"),
         max(length(col(textCol))).cast(LongType).as("max_chars"))
@@ -97,15 +95,14 @@ object TextAnalysis {
     * scale-killer and is deliberately not offered).
     */
   def packSequences(df: DataFrame, textCol: String, idCol: String,
-                    shardCol: String, cap: Int,
-                    countTokens: Column => Column = tokenCount): DataFrame = {
+                    shardCol: String, cap: Int): DataFrame = {
     // window ordering references the post-projection name ("doc_id"),
     // not idCol — the select below renames idCol away
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(shardCol)).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     df.select(col(idCol).as("doc_id"), col(shardCol),
-        countTokens(col(textCol)).cast(LongType).as("n_tokens"))
+        tokenCount(col(textCol)).cast(LongType).as("n_tokens"))
       .withColumn("start_tok", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       .select(col("doc_id"), col(shardCol), col("n_tokens"),
         expr(s"start_tok div $cap").as("seq_id"),
@@ -372,11 +369,10 @@ object TextAnalysis {
     * with corpus size — only with domain count.
     */
   def domainMixture(df: DataFrame, textCol: String, domainCol: String,
-                    alpha: Double,
-                    countTokens: Column => Column = tokenCount): DataFrame = {
+                    alpha: Double): DataFrame = {
     val perDomain = df.groupBy(col(domainCol))
       .agg(count(lit(1)).as("n_docs"),
-        sum(countTokens(col(textCol)).cast(LongType)).as("total_tokens"))
+        sum(tokenCount(col(textCol)).cast(LongType)).as("total_tokens"))
     val smoothed = perDomain.withColumn("smoothed",
       pow(col("total_tokens").cast(DoubleType), alpha))
     // the smoothed total is a sum of DOUBLES — accumulate in decimal
@@ -1434,19 +1430,6 @@ object TextAnalysis {
                                          merges: Seq[(String, String)]): Column =
     size(split(trim(bpeSymbols(word, merges)), " ")).cast(LongType)
 
-  /** Per-document count of REAL subword tokens under a fitted merge
-    * table, as a tokenizer pluggable into [[tokenStats]] /
-    * [[packSequences]] / [[domainMixture]]: whitespace-pretokenize
-    * lowercased text, sum each word's symbol count. Array-fold form (no
-    * explode), so it drops into any per-doc projection.
-    * Declared by README row "Round-17 ext": the pluggable counter. */
-  def bpeTokenCounter(merges: Seq[(String, String)]): Column => Column =
-    text => coalesce(
-      aggregate(
-        transform(tokens(lower(text)), w => bpeSymbolCount(w, merges)),
-        lit(0L), (acc, x) => acc + x),
-      lit(0L))
-
   /** Per-document BPE accounting report (t20): whitespace vs subword
     * token counts and their ratio — the number that moves token budgets
     * 20-40% when a pipeline switches units. Explode + doc-keyed sum
@@ -1620,22 +1603,6 @@ object TextAnalysis {
     out
   }
 
-  /** Per-document count of unigram-LM subword tokens, pluggable into
-    * [[tokenStats]] / [[packSequences]] / [[domainMixture]] exactly like
-    * [[bpeTokenCounter]] (VERDICT r16 next-#5's pluggable-counter bar):
-    * whitespace-pretokenize lowercased text, sum each word's Viterbi
-    * piece count under the literal cost table.
-    * Declared by README row "Round-17 ext": the pluggable counter. */
-  def unigramTokenCounter(costsU: Map[String, Long],
-                          oovCostU: Long): Column => Column =
-    text => coalesce(
-      aggregate(
-        transform(tokens(lower(text)), w =>
-          graft.expressions.TextExpressions.unigramCount(
-            w, costsU, oovCostU, 4)),
-        lit(0L), (acc, x) => acc + x),
-      lit(0L))
-
   /** Per-document unigram-LM accounting report (t33) — [[bpeStats]]'s
     * shape for the second tokenizer family: whitespace vs unigram piece
     * counts and their ratio. */
@@ -1745,20 +1712,6 @@ object TextAnalysis {
             col("n_ws_tokens"), 6))
           .otherwise(lit(0.0)).as("wordpiece_per_ws"))
   }
-
-  /** Per-document wordpiece token count, pluggable into [[tokenStats]] /
-    * [[packSequences]] / [[domainMixture]] like [[bpeTokenCounter]] and
-    * [[unigramTokenCounter]] (the pluggable-counter contract's third
-    * real family). [UNK] words count their single [UNK] token.
-    * Declared by README row "Round-17 ext": the pluggable counter. */
-  def wordpieceTokenCounter(vocab: Set[String]): Column => Column =
-    text => coalesce(
-      aggregate(
-        transform(tokens(lower(text)), w =>
-          graft.expressions.TextExpressions
-            .wordpieceCount(w, vocab, 4).getField("tk")),
-        lit(0L), (acc, x) => acc + x),
-      lit(0L))
 
   /** DSIR hashed-feature column (Xie et al. 2023, "Data Selection for
     * Language Models via Importance Resampling"): unigrams + bigrams of

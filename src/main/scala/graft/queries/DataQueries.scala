@@ -1880,9 +1880,9 @@ object DataQueries {
     * bruteForceTopKExact truth every cell-family grid uses, and
     * scanned_ppm = visited-node fraction (visited nodes get an exact
     * distance computed — precisely what "scanned" charges the cell
-    * families for). One walk per beamWidth serves every (hops, k)
-    * cell: a prefix of the walk IS the shorter walk. Feeds e31/e33 as
-    * the FIFTH family. */
+    * families for). One walk of all beam widths serves every
+    * (beamWidth, hops, k) cell: a prefix of the walk IS the shorter
+    * walk. Feeds e31/e33 as the FIFTH family. */
   val e41NswGrid: Q = (s, dir) =>
     nswGridRelation(s, dir)
       .orderBy(col("n_probe"), col("r_shortlist"), col("k"))

@@ -98,64 +98,4 @@ class BpeSpec extends SparkSpec {
       vocabWords = 200, nMerges = 8)
     assert(m1 == m2 && m1.size == 8)
   }
-
-  test("bpeTokenCounter (array-fold form) agrees with bpeStats " +
-      "(explode form) on every document") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(50)
-    val merges = TextAnalysis.fitBpe(docs, "text", "doc_id",
-      vocabWords = 200, nMerges = 8, sampleMod = 1)
-    val fromStats = TextAnalysis.bpeStats(docs, "text", "doc_id", merges)
-      .select("doc_id", "n_bpe_tokens").as[(Long, Long)].collect().toMap
-    val fromFold = docs.select(col("doc_id"),
-        TextAnalysis.bpeTokenCounter(merges)(col("text")).as("n"))
-      .as[(Long, Long)].collect().toMap
-    assert(fromStats == fromFold)
-  }
-
-  test("tokenStats default tokenizer is unchanged; BPE plug-in changes " +
-      "only total_tokens") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val default = TextAnalysis.tokenStats(docs, "text", "lang")
-    val explicitWs = TextAnalysis.tokenStats(docs, "text", "lang",
-      graft.functions.GraftFunctions.tokenCount)
-    assert(default.collect().toSeq == explicitWs.collect().toSeq)
-    val merges = TextAnalysis.fitBpe(docs, "text", "doc_id",
-      vocabWords = 200, nMerges = 8)
-    val bpe = TextAnalysis.tokenStats(docs, "text", "lang",
-      TextAnalysis.bpeTokenCounter(merges))
-    val d = default.select("lang", "n_docs", "min_chars", "max_chars")
-    val b = bpe.select("lang", "n_docs", "min_chars", "max_chars")
-    assert(d.collect().toSeq == b.collect().toSeq,
-      "non-token columns must not depend on the tokenizer")
-    // subword counts exceed whitespace counts (every word >= 1 symbol,
-    // multi-char words start at n_chars symbols before 8 merges)
-    val defTot = default.select("lang", "total_tokens")
-      .as[(String, Long)].collect().toMap
-    val bpeTot = bpe.select("lang", "total_tokens")
-      .as[(String, Long)].collect().toMap
-    assert(bpeTot.forall { case (k, v) => v >= defTot(k) })
-  }
-
-  test("packSequences over the BPE tokenizer packs in subword units") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(20)
-    val merges = TextAnalysis.fitBpe(docs, "text", "doc_id",
-      vocabWords = 200, nMerges = 8, sampleMod = 1)
-    val packed = TextAnalysis.packSequences(docs, "text", "doc_id", "lang",
-      cap = 512, TextAnalysis.bpeTokenCounter(merges))
-    val counts = docs.select(col("doc_id"),
-        TextAnalysis.bpeTokenCounter(merges)(col("text")).as("n"))
-      .as[(Long, Long)].collect().toMap
-    packed.select("doc_id", "n_tokens").as[(Long, Long)].collect()
-      .foreach { case (id, n) => assert(n == counts(id)) }
-  }
-
-  test("domainMixture default is unchanged under explicit whitespace") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val a = TextAnalysis.domainMixture(docs, "text", "source", 0.5)
-    val b = TextAnalysis.domainMixture(docs, "text", "source", 0.5,
-      graft.functions.GraftFunctions.tokenCount)
-    assert(a.collect().toSeq == b.collect().toSeq)
-  }
 }

@@ -1,12 +1,8 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
-import scala.jdk.CollectionConverters._
 
 /** MMR diverse rerank ([[Similarity.mmrRerank]], λ = 1/2): the greedy
   * selection must prefer a diverse moderately-relevant candidate over
@@ -58,34 +54,6 @@ class MmrSpec extends SparkSpec {
     val a = run(1)
     assert(a.length === 3)
     assert(a === run(5))
-  }
-
-  /** Spark jobs started while `body` runs on this thread. Jobs carry a
-    * per-call tag as a local property, so jobs of other threads never
-    * count; a tagged sentinel job submitted afterwards drains the
-    * listener queue, since the bus delivers job starts in order. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.test.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val sentinel = s"$tag-sentinel"
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      try body finally sc.setLocalProperty(key, null)
-      sc.setLocalProperty(key, sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "the listener never saw the sentinel job")
-      seen.asScala.count(_ == tag)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("building the rerank fires no Spark job, and the action's jobs do not grow with k") {

@@ -64,15 +64,19 @@ class NswSpec extends SparkSpec {
     } finally r.unpersist()
   }
 
-  test("nswOperatingGrid: prefix-walk monotonicity and family-grid row shape") {
-    val g = Similarity.nswOperatingGrid(emb,
+  // the (4, 16) widths × (2, 6) hops × (1, 5) ks grid two tests read:
+  // (w, h, k) -> (recall_ppm, scanned_ppm, n_hits, n_bf)
+  private lazy val grid = Similarity.nswOperatingGrid(emb,
       emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
       ks = Seq(1, 5), nBits = 5, bands = 3, degree = 14,
       beamWidths = Seq(4, 16), hopsList = Seq(2, 6)).collect()
-      .map(r => (r.getAs[Long]("n_probe"), r.getAs[Long]("r_shortlist"),
-        r.getAs[Long]("k")) ->
-        (r.getAs[Long]("recall_ppm"), r.getAs[Long]("scanned_ppm"),
-          r.getAs[Long]("n_hits"), r.getAs[Long]("n_bf"))).toMap
+    .map(r => (r.getAs[Long]("n_probe"), r.getAs[Long]("r_shortlist"),
+      r.getAs[Long]("k")) ->
+      (r.getAs[Long]("recall_ppm"), r.getAs[Long]("scanned_ppm"),
+        r.getAs[Long]("n_hits"), r.getAs[Long]("n_bf"))).toMap
+
+  test("nswOperatingGrid: prefix-walk monotonicity and family-grid row shape") {
+    val g = grid
     assert(g.size == 8, "2 widths x 2 hop counts x 2 ks")
     // a longer walk only ever ADDS visited nodes: recall and scanned
     // are non-decreasing in hops at fixed width (the prefix contract)
@@ -86,6 +90,50 @@ class NswSpec extends SparkSpec {
     g.foreach { case ((_, _, kk), (_, _, hits, nbf)) =>
       assert(hits <= nbf && nbf <= 5 * kk)
     }
+  }
+
+  test("nswOperatingGrid: every cell equals an independent walk of its width and hop count") {
+    val queries = emb.filter(col("vec_id") % 100 === 0)
+    def clean(df: org.apache.spark.sql.DataFrame) = df.filter(
+      Similarity.nonDegenerate(graft.functions.GraftFunctions
+        .toDoubleArray(col("embedding")))).count()
+    val (nQ, nCorpus) = (clean(queries), clean(emb))
+    val truth = Similarity.bruteForceTopKExact(emb, queries, "embedding",
+        "vec_id", 5)
+      .select(col("query_id"), col("id"), col("rank").as("bfr"))
+    // nswBeamSearch(beamWidth = w, hops = h) IS this one-level walk;
+    // the graph is built once for the four walks
+    val edges = Similarity.nswGraph(emb, "embedding", "vec_id",
+      nBits = 5, bands = 3, degree = 14).cache()
+    try for (w <- Seq(4, 16); h <- Seq(2, 6)) {
+      val walk = Similarity.hnswSearch(emb, queries, "embedding", "vec_id",
+          emb.select(col("vec_id").as("id")), Seq((edges, w, h)), k = 5)
+        .cache()
+      try {
+        // scanned = every node the walk visited, summed over queries
+        val visited = walk.groupBy("query_id").agg(max("visited").as("v"))
+          .agg(sum("v")).head.getLong(0)
+        for (kk <- Seq(1, 5)) {
+          val (_, scannedPpm, hits, _) = grid((w.toLong, h.toLong, kk.toLong))
+          assert(scannedPpm === 1000000L * visited / (nQ * nCorpus),
+            s"scanned at w=$w h=$h")
+          val walkHits = walk.filter(col("rank") <= kk)
+            .join(truth.filter(col("bfr") <= kk), Seq("query_id", "id"))
+            .count()
+          assert(hits === walkHits, s"hits at w=$w h=$h k=$kk")
+        }
+      } finally walk.unpersist()
+    } finally edges.unpersist()
+  }
+
+  test("nswOperatingGrid build fires the same jobs for 1 beam width as for 2") {
+    val queries = emb.filter(col("vec_id") % 100 === 0)
+    def build(ws: Seq[Int]) = jobsIn(Similarity.nswOperatingGrid(emb,
+      queries, "embedding", "vec_id", ks = Seq(1, 5), nBits = 5, bands = 3,
+      degree = 14, beamWidths = ws, hopsList = Seq(2, 3)))
+    val one = build(Seq(4))
+    assert(one > 0, "the walk's hop cuts run while building")
+    assert(build(Seq(4, 16)) === one)
   }
 
   test("nswUpsertEdges: incremental insert EQUALS the batch rebuild (e43's contract)") {

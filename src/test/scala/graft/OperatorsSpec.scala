@@ -1059,6 +1059,36 @@ class OperatorsSpec extends SparkSpec {
       .forall { case (_, rows) => rows.map(_.getLong(5)).distinct.length == 1 })
   }
 
+  test("grid builds are lazy plans: no job beyond the ADC query collect, 1 probe width or 2") {
+    val keep = emb001.filter($"vec_id" % 2 === 0).select($"vec_id")
+    val queries = emb001.filter($"vec_id" % 100 === 0)
+    val (mins, scales) = Similarity.sqTrain(emb001, "embedding", "vec_id")
+    val thr = Similarity.bqTrain(emb001, "embedding", "vec_id")
+    val (cb, pq) = (cellCb, pqCb) // fitted before any count starts
+    def sweep(nps: Seq[Int]) = jobsIn(Similarity.ivfOperatingSweepExact(
+      emb001, queries, "embedding", "vec_id", ks = Seq(1, 5), codebook = cb,
+      nProbes = nps))
+    def sq(nps: Seq[Int]) = jobsIn(Similarity.ivfSqOperatingGrid3d(emb001,
+      queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb,
+      mins = mins, scales = scales, rs = Seq(5, 10), nProbes = nps))
+    def families(nps: Seq[Int]) = jobsIn(Similarity.ivfFamilyOperatingGrids(
+      emb001, queries, "embedding", "vec_id", ks = Seq(1, 5),
+      cellCodebook = cb, m = 4, pqCodebook = pq, mins = mins,
+      scales = scales, bqThresholds = thr, rs = Seq(5, 10), nProbes = nps))
+    def filtered(nps: Seq[Int]) = jobsIn(
+      Similarity.ivfFilteredFamilyOperatingGrids(emb001, keep, queries,
+        "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb, m = 4,
+        pqCodebook = pq, mins = mins, scales = scales, bqThresholds = thr,
+        rs = Seq(5, 10), nProbes = nps))
+    for (nps <- Seq(Seq(1), Seq(1, 2))) {
+      assert(sweep(nps) === 0, s"sweep at $nps")
+      assert(sq(nps) === 0, s"SQ8 grid at $nps")
+      // the PQ scorer's bounded ADC query collect is the one job
+      assert(families(nps) === 1, s"family grids at $nps")
+      assert(filtered(nps) === 1, s"filtered family grids at $nps")
+    }
+  }
+
   test("e38 filtered choice: cheapest across FIVE families (OPQ + nsw unioned, r18) or the pruned scan") {
     val dir = "/root/testdata/sf0.001"
     val rows = graft.queries.DataQueries.e37FilteredFamily(spark, dir)

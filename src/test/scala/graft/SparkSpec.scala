@@ -1,11 +1,44 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one lazy SparkSession per suite. */
+import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
+
+/** Shared session base: one lazy SparkSession per suite, and the one
+  * job counter the build-time job guards use. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs started while `body` runs on this thread. Jobs carry a
+    * per-call tag as a local property, so jobs of other threads never
+    * count; a tagged sentinel job submitted afterwards drains the
+    * listener queue, since the bus delivers job starts in order. */
+  def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val sentinel = s"$tag-sentinel"
+    val seen = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "the listener never saw the sentinel job")
+      seen.asScala.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

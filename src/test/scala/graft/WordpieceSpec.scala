@@ -75,18 +75,4 @@ class WordpieceSpec extends SparkSpec {
     val unks = sampleWords.filter(w => countOf(w, vocab)._2 == 1L)
     assert(unks.isEmpty, s"sample words must never [UNK]: ${unks.take(5).toSeq}")
   }
-
-  test("pluggable counter == per-doc report sums") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(50)
-    val vocab = TextAnalysis.fitWordpieceVocab(docs, "text", "doc_id")
-    val viaCounter = docs.select(col("doc_id"),
-        TextAnalysis.wordpieceTokenCounter(vocab)(col("text")).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    TextAnalysis.wordpieceStats(docs, "text", "doc_id", vocab)
-      .collect().foreach { r =>
-        assert(r.getAs[Long]("n_wordpiece_tokens") ===
-          viaCounter(r.getAs[Long]("doc_id")))
-      }
-  }
 }
