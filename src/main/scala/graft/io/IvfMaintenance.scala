@@ -38,7 +38,7 @@ object IvfMaintenance {
   private def assign(vecs: DataFrame, vecCol: String, idCol: String,
                      codebook: Seq[Seq[Double]]): DataFrame =
     graft.operators.Similarity
-      .cellAssignmentsTrained(vecs, vecCol, idCol, codebook)
+      .cellAssignments(vecs, vecCol, idCol, codebook)
 
   /** Initial build: assign the corpus against the (trained, frozen)
     * codebook and write it partitioned by cell. */

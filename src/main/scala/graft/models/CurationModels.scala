@@ -368,7 +368,7 @@ object CurationModels {
       val cb = collectRagCodebook(deps("RAG_CODEBOOK"))
       val emb = deps("RAG_CHUNKS").withColumn("emb",
         graft.multimodal.Multimodal.stubTextEmbedding(col("chunk_text"), ragDim))
-      Similarity.cellAssignmentsTrained(emb, "emb", "chunk_id", cb)
+      Similarity.cellAssignments(emb, "emb", "chunk_id", cb)
         .withColumnRenamed("id", "chunk_id")
     })
 

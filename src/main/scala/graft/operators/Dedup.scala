@@ -802,8 +802,10 @@ object Dedup {
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): assign every embedding to its nearest coarse
-    * centroid ([[Similarity.cellAssignments]] — a trained k-means fit
-    * slots in identically), then compare pairs only WITHIN a cluster and
+    * centroid of `codebook` ([[Similarity.cellAssignments]], cells
+    * 0..k-1: the paper's clusters are a k-means fit, a [[KMeans.Model]];
+    * named corpus rows resolve through [[Similarity.codebookOf]]), then
+    * compare pairs only WITHIN a cluster and
     * drop any vector whose cosine to a lower-id cluster-mate reaches
     * `threshold`. The keeper reported for a dropped vector is its
     * LOWEST-id over-threshold neighbor (greedy keep-first — the same
@@ -820,18 +822,26 @@ object Dedup {
     * — bounded by the corpus's near-duplicate volume, not its size.
     */
   def semanticDedup(df: DataFrame, vecCol: String, idCol: String,
-                    centroidIds: Seq[Long], threshold: Double): DataFrame =
-    semanticDedupOn(
-      Similarity.cellAssignments(df, vecCol, idCol, centroidIds), threshold)
-
-  /** SemDeDup over a TRAINED coarse quantizer ([[KMeans.Model]]
-    * codebook, cells 0..k-1) — the published contract proper: the
-    * paper's clusters are a k-means fit, not named corpus rows. */
-  def semanticDedupTrained(df: DataFrame, vecCol: String, idCol: String,
-                           codebook: Seq[Seq[Double]],
-                           threshold: Double): DataFrame =
-    semanticDedupOn(
-      Similarity.cellAssignmentsTrained(df, vecCol, idCol, codebook), threshold)
+                    codebook: Seq[Seq[Double]],
+                    threshold: Double): DataFrame = {
+    val assigned = Similarity.cellAssignments(df, vecCol, idCol, codebook)
+    val l = assigned.select(col("cell"), col("id").as("id1"), col("v").as("v1"))
+    val r = assigned.select(col("cell"), col("id").as("id2"), col("v").as("v2"))
+    val pairs = l.join(r, Seq("cell"))
+      .filter(col("id1") < col("id2"))
+      // threshold on the ROUNDED cosine: a raw-double boundary compare
+      // could ULP-diverge between engines for pairs landing exactly on
+      // the threshold; the oracle mirrors round(...,6) >= t
+      .withColumn("cos_r", round(VectorExpressions.cosine(col("v1"), col("v2")), 6))
+      .filter(col("cos_r") >= threshold)
+    pairs
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy("id2").orderBy(col("id1"))))
+      .filter(col("rn") === 1)
+      .select(col("id2").as("drop_id"), col("id1").as("keeper_id"),
+        col("cell"), col("cos_r").as("cosine"))
+  }
 
   // -------------------------------------------------------------------
   // Edit-distance similarity join (record linkage)
@@ -1182,12 +1192,12 @@ object Dedup {
     * vector whose only near-duplicate in state had a larger id,
     * i.e. it was only correct under monotone id assignment), while
     * batch-batch pairs keep the deterministic smaller-id keeper.
-    * Equivalent to [[semanticDedupTrained]] run globally with ids
+    * Equivalent to [[semanticDedup]] run globally with ids
     * remapped so every state id precedes every batch id (the spec
     * proves that equivalence), and identical to it outright when id
     * assignment IS monotone. A re-sent id (present in both state and
     * batch) never self-drops (`id1 != id2`). Same rounded-cosine
-    * boundary as [[semanticDedupTrained]].
+    * boundary as [[semanticDedup]].
     *
     * Scale shape: batch assignment map-only; the pair join keys on
     * cell with the BATCH side bounded, so per-tick cost tracks
@@ -1196,14 +1206,14 @@ object Dedup {
     * table whose scan prunes to the batch's cells.
     *
     * `state`: (id, v, cell) as stored by a prior assignment (e.g.
-    * [[graft.operators.Similarity.cellAssignmentsTrained]] or the
+    * [[graft.operators.Similarity.cellAssignments]] or the
     * maintained IVF layout). Output: (drop_id, keeper_id, cell,
     * cosine) — drop_id ∈ batch only. */
   def semanticDedupDelta(batch: DataFrame, state: DataFrame,
                          vecCol: String, idCol: String,
                          codebook: Seq[Seq[Double]],
                          threshold: Double): DataFrame = {
-    val b = Similarity.cellAssignmentsTrained(batch, vecCol, idCol, codebook)
+    val b = Similarity.cellAssignments(batch, vecCol, idCol, codebook)
     val all = state.select(col("id"), col("v"), col("cell"))
       .withColumn("st", lit(1))
       .unionByName(b.select(col("id"), col("v"), col("cell"))
@@ -1224,26 +1234,6 @@ object Dedup {
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("id2").orderBy(col("st").desc, col("id1"))))
-      .filter(col("rn") === 1)
-      .select(col("id2").as("drop_id"), col("id1").as("keeper_id"),
-        col("cell"), col("cos_r").as("cosine"))
-  }
-
-  private def semanticDedupOn(assigned: DataFrame,
-                              threshold: Double): DataFrame = {
-    val l = assigned.select(col("cell"), col("id").as("id1"), col("v").as("v1"))
-    val r = assigned.select(col("cell"), col("id").as("id2"), col("v").as("v2"))
-    val pairs = l.join(r, Seq("cell"))
-      .filter(col("id1") < col("id2"))
-      // threshold on the ROUNDED cosine: a raw-double boundary compare
-      // could ULP-diverge between engines for pairs landing exactly on
-      // the threshold; the oracle mirrors round(...,6) >= t
-      .withColumn("cos_r", round(VectorExpressions.cosine(col("v1"), col("v2")), 6))
-      .filter(col("cos_r") >= threshold)
-    pairs
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("id2").orderBy(col("id1"))))
       .filter(col("rn") === 1)
       .select(col("id2").as("drop_id"), col("id1").as("keeper_id"),
         col("cell"), col("cos_r").as("cosine"))

@@ -88,7 +88,7 @@ object KMeans {
     * the oracle replay must use the identical tag.
     * NOTE for oracle authors: the SQL replay of that failure mode is a
     * SHRUNKEN cent relation (same declared divergence as
-    * [[Similarity.collectCodebook]] — fail-loud engine, degrade-silent
+    * [[Similarity.codebookOf]] — fail-loud engine, degrade-silent
     * oracle; comparison is only defined where the contract holds). */
   def fit(df: DataFrame, vecCol: String, idCol: String, k: Int, dim: Int,
           initRounds: Int = 2, oversample: Int = 32, iters: Int = 3,

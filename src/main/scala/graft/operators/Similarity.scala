@@ -15,16 +15,18 @@ import org.apache.spark.sql.types._
   *    corpus, per-partition partial top-k then a final merge. Correctness
   *    baseline and the right tool when |queries| is small.
   *  - [[ivfTopK]]: IVF-style approximate search — corpus assigned to
-  *    coarse cells (nearest of `nCells` deterministic centroids), queries
-  *    probe only `nProbe` nearest cells. Cell assignment is one linear
-  *    pass; the search join hits ~nProbe/nCells of the corpus. At scale
-  *    the corpus would be written bucketed/partitioned BY cell so a probe
-  *    reads only its partitions (partition pruning on the scan).
+  *    coarse cells (nearest of a codebook's centroids, cells 0..k-1: a
+  *    [[KMeans.Model]] fit, or named corpus rows resolved by
+  *    [[codebookOf]]), queries probe only `nProbe` nearest cells. Cell
+  *    assignment is one linear pass; the search join hits
+  *    ~nProbe/nCells of the corpus. At scale the corpus would be written
+  *    bucketed/partitioned BY cell so a probe reads only its partitions
+  *    (partition pruning on the scan).
+  *
+  * Every ANN operator takes its quantizer as an explicit codebook; the
+  * point searches end in one shared per-query top-k tail ([[topK]]).
   */
 object Similarity {
-
-  private def rankWindow = Window.partitionBy("query_id")
-    .orderBy(col("cos_r").desc, col("id").asc)
 
   /** Degenerate embeddings are excluded BY CONTRACT everywhere cosine is
     * ranked or thresholded: zero-norm vectors have no defined cosine,
@@ -44,22 +46,45 @@ object Similarity {
     n2 > 0 && n2 < Double.PositiveInfinity
   }
 
+  /** The filtered corpus relation (id, v) every operator scores: the
+    * embedding decoded to doubles, degenerate vectors excluded by
+    * contract. */
+  private def corpusVecs(corpus: DataFrame, vecCol: String,
+                         idCol: String): DataFrame =
+    corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
+      .filter(nonDegenerate(col("v")))
+
+  /** The filtered query relation (query_id, qv) every ANN operator
+    * ranks against: degenerate query vectors excluded by contract. */
+  private def queryVecs(queries: DataFrame, vecCol: String,
+                        idCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"),
+        toDoubleArray(col(vecCol)).as("qv"))
+      .filter(nonDegenerate(col("qv")))
+
+  /** THE per-query top-k tail of every point search: rank each query's
+    * scored (query_id, id, …) rows by `order`, the lower id first on
+    * ties, and keep ranks ≤ k. Output: (query_id, rank BIGINT, id,
+    * `score`). */
+  private def topK(scored: DataFrame, order: Column, k: Int,
+                   score: Column): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(order, col("id").asc)))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
+        col("id"), score)
+
   /** Exact top-k cosine neighbors for each query vector.
     * Ranking uses cosine rounded to 6 dp with id as tiebreak, so the
     * result is stable under float accumulation-order differences.
     * Output: (query_id, rank, id, cosine). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
-                     vecCol: String, idCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    val q = queryVecs(queries, vecCol, idCol)
-    c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6))
-      .withColumn("rank", row_number().over(rankWindow))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("cos_r").as("cosine"))
-  }
+                     vecCol: String, idCol: String, k: Int): DataFrame =
+    topK(corpusVecs(corpus, vecCol, idCol)
+        .join(broadcast(queryVecs(queries, vecCol, idCol)),
+          col("id") =!= col("query_id"))
+        .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6)),
+      col("cos_r").desc, k, col("cos_r").as("cosine"))
 
   /** [[bruteForceTopK]] ranked on the exact-integer cosine key
     * ([[VectorExpressions.intCosKey]] — floor(1e6·|cos|)·sign of the
@@ -68,18 +93,13 @@ object Similarity {
     * (quantized-degenerate vectors) are filtered on both engines.
     * Output: (query_id, rank, id, cos_key). */
   def bruteForceTopKExact(corpus: DataFrame, queries: DataFrame,
-                          vecCol: String, idCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    val q = queryVecs(queries, vecCol, idCol)
-    c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("cos_r", VectorExpressions.intCosKey(col("v"), col("qv")))
-      .filter(col("cos_r").isNotNull)
-      .withColumn("rank", row_number().over(rankWindow))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("cos_r").as("cos_key"))
-  }
+                          vecCol: String, idCol: String, k: Int): DataFrame =
+    topK(corpusVecs(corpus, vecCol, idCol)
+        .join(broadcast(queryVecs(queries, vecCol, idCol)),
+          col("id") =!= col("query_id"))
+        .withColumn("cos_r", VectorExpressions.intCosKey(col("v"), col("qv")))
+        .filter(col("cos_r").isNotNull),
+      col("cos_r").desc, k, col("cos_r").as("cos_key"))
 
   /** Exact top-k squared-L2 neighbors — the baseline the PQ/ADC family
     * approximates: ADC estimates SQUARED L2 from codes, so judging its
@@ -90,20 +110,14 @@ object Similarity {
     * Output: (query_id, rank, id, d2). */
   def bruteForceTopKL2(corpus: DataFrame, queries: DataFrame,
                        vecCol: String, idCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    val q = queryVecs(queries, vecCol, idCol)
     val d2 = VectorExpressions.dot(col("v"), col("v")) -
       lit(2.0) * VectorExpressions.dot(col("v"), col("qv")) +
       VectorExpressions.dot(col("qv"), col("qv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("d2_r").asc, col("id").asc)
-    c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("d2_r", round(d2, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("d2_r").as("d2"))
+    topK(corpusVecs(corpus, vecCol, idCol)
+        .join(broadcast(queryVecs(queries, vecCol, idCol)),
+          col("id") =!= col("query_id"))
+        .withColumn("d2_r", round(d2, 6)),
+      col("d2_r").asc, k, col("d2_r").as("d2"))
   }
 
   /** Truncated-dimension coarse search + exact full-dim rerank — the
@@ -143,8 +157,7 @@ object Similarity {
                           dPrime: Int, shortlist: Int): DataFrame = {
     require(dPrime > 0, s"dPrime must be positive, got $dPrime")
     require(shortlist >= k, s"shortlist $shortlist smaller than k $k")
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
+    val c = corpusVecs(corpus, vecCol, idCol)
       .withColumn("vt", slice(col("v"), 1, dPrime))
       .filter(nonDegenerate(col("vt")))
     val q = queryVecs(queries, vecCol, idCol)
@@ -152,94 +165,83 @@ object Similarity {
       .filter(nonDegenerate(col("qvt")))
     val coarseW = Window.partitionBy("query_id")
       .orderBy(col("coarse_r").desc, col("id").asc)
-    c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("coarse_r", round(VectorExpressions.cosine(col("vt"), col("qvt")), 6))
-      .withColumn("crank", row_number().over(coarseW))
-      .filter(col("crank") <= shortlist)
-      .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6))
-      .withColumn("rank", row_number().over(rankWindow))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("cos_r").as("cosine"))
+    topK(c.join(broadcast(q), col("id") =!= col("query_id"))
+        .withColumn("coarse_r", round(VectorExpressions.cosine(col("vt"), col("qvt")), 6))
+        .withColumn("crank", row_number().over(coarseW))
+        .filter(col("crank") <= shortlist)
+        .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6)),
+      col("cos_r").desc, k, col("cos_r").as("cosine"))
   }
 
-  /** Assign each vector to its nearest coarse centroid. Centroids are the
-    * vectors whose id is in `centroidIds` (deterministic coarse
-    * quantizer — a k-means fit would slot in identically).
+  /** Codebook rows = the corpus vectors named by `ids`, in id order:
+    * the resolver that turns id-named centroids (a deterministic
+    * stand-in quantizer) into the explicit codebook every ANN operator
+    * takes, so a stand-in is just one codebook among the trained ones.
+    * Duplicate ids resolve once. Driver-collected, bounded by the
+    * quantizer-size contract, like a broadcast dim. */
+  def codebookOf(corpus: DataFrame, vecCol: String, idCol: String,
+                 ids: Seq[Long]): Seq[Seq[Double]] = {
+    val named = ids.distinct
+    val rows = corpusVecs(corpus, vecCol, idCol)
+      .filter(col("id").isInCollection(named))
+      .orderBy(col("id"))
+      .collect()
+      .map(_.getSeq[Double](1).toSeq).toSeq
+    // A silently shrunken codebook (missing or zero-norm centroid id)
+    // would encode against fewer rows than the contract names — and an
+    // EMPTY one would surface as an opaque codebook.head NPE in ADC.
+    // DECLARED DIVERGENCE from the oracles (ADVICE r6): the e04-e07/d13
+    // cb/cents CTEs silently continue with fewer centroid rows on the
+    // same degenerate input — a shrunken-quantizer result, where this
+    // engine fails the job. Fail-loud is the intended production
+    // contract (a missing centroid means the quantizer inputs are
+    // corrupt); the oracle comparison is only defined on inputs where
+    // every named centroid resolves, which the driver corpora satisfy.
+    require(rows.size == named.size,
+      s"codebook resolved ${rows.size} of ${named.size} " +
+        s"centroid ids — missing or degenerate (zero-norm) centroid vectors")
+    rows
+  }
+
+  /** Assign each vector to its nearest coarse centroid of `codebook` —
+    * an explicit centroid list (a [[KMeans.Model]].centroids fit, or
+    * named corpus rows resolved by [[codebookOf]]); cells are its
+    * indices 0..k-1.
     *
     * Assignment is ONE compiled map-only call per row against the
-    * driver-collected centroid codebook ([[graft.expressions
-    * .NearestCellExpr]], same literal-codebook contract as PQ): zero
-    * shuffle at any corpus size. The previous cross-join + per-id
-    * row_number window shuffled corpus×k rows just to pick each row's
-    * argmax — a full-corpus exchange a 100 TB assignment pass cannot
-    * afford; the expression preserves its exact semantics
-    * (round-6dp cosine DESC, lowest cell id on ties). */
+    * driver-literal codebook ([[graft.expressions.NearestCellExpr]],
+    * same literal-codebook contract as PQ): zero shuffle at any corpus
+    * size. The previous cross-join + per-id row_number window shuffled
+    * corpus×k rows just to pick each row's argmax — a full-corpus
+    * exchange a 100 TB assignment pass cannot afford; the expression
+    * preserves its exact semantics (round-6dp cosine DESC, lowest cell
+    * on ties). */
   def cellAssignments(corpus: DataFrame, vecCol: String, idCol: String,
-                      centroidIds: Seq[Long]): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    val ids = centroidIds.distinct.sorted
-    val codebook = collectCodebook(c, ids) // rows in id order = ids order
-    c.withColumn("cell",
-        VectorExpressions.nearestCell(col("v"), codebook, ids))
-      .select(col("id"), col("v"), col("cell"))
-  }
-
-  /** Trained-quantizer form: the codebook is an explicit centroid list
-    * (e.g. a [[KMeans.Model]].centroids fit), cells are its indices
-    * 0..k-1. Same zero-shuffle NearestCellExpr pass; the id-named
-    * overload above is the stand-in special case where centroids are
-    * corpus rows. (Separate name: Seq[Long] and Seq[Seq[Double]] erase
-    * to the same JVM signature, so a true overload cannot compile.) */
-  def cellAssignmentsTrained(corpus: DataFrame, vecCol: String, idCol: String,
-                             codebook: Seq[Seq[Double]]): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    c.withColumn("cell", VectorExpressions.nearestCell(
+                      codebook: Seq[Seq[Double]]): DataFrame =
+    corpusVecs(corpus, vecCol, idCol)
+      .withColumn("cell", VectorExpressions.nearestCell(
         col("v"), codebook, codebook.indices.map(_.toLong)))
       .select(col("id"), col("v"), col("cell"))
-  }
 
-  /** Per-query probe cells: the `nProbe` nearest coarse cells, ranked
-    * by the EXACT-INTEGER cosine key ([[VectorExpressions.intCosKey]]
-    * over the micro-quantized query and centroid vectors) with
-    * lowest-cell tiebreak — the e02/e07 oracles pin these exact
-    * semantics, so every consumer must share ONE formulation. r15
-    * (VERDICT r14 next-#2): probe ranking was the LAST cross-engine
-    * float comparison in the IVF gate family — the only stage
-    * exercised at probe ranks 3-8 by no green query — and now ranks on
-    * the same integer key the brute-force/candidate rankings adopted
-    * in r14; a NULL key (degenerate micro-quantized vector) is
+  /** THE probe ranking — (query_id, qv, cell, prn ≤ maxNp): per query,
+    * the `maxNp` nearest coarse cells, ranked by the EXACT-INTEGER
+    * cosine key ([[VectorExpressions.intCosKey]] over the
+    * micro-quantized query and centroid vectors) with lowest-cell
+    * tiebreak — the e02/e07 oracles pin these exact semantics, so every
+    * probe consumer (the point searches, the operating sweep and grids,
+    * and the [[ivfProbeTable]] diagnostic gate) derives from this ONE
+    * formulation. r15 (VERDICT r14 next-#2): probe ranking was the LAST
+    * cross-engine float comparison in the IVF gate family — the only
+    * stage exercised at probe ranks 3-8 by no green query — and now
+    * ranks on the same integer key the brute-force/candidate rankings
+    * adopted in r14; a NULL key (degenerate micro-quantized vector) is
     * filtered on BOTH engines, the established exact-key contract.
-    * Centroids come straight from the corpus, NOT from the assignment
-    * output: a centroid whose self-similarity key ties another
-    * centroid can be ASSIGNED to the other's cell, which would drop a
-    * probe cell and silently diverge from the oracle. The query side
-    * is the bounded batch, so its window exchange carries |queries|×k
-    * rows. */
-  private def probeCells(corpus: DataFrame, queries: DataFrame,
-                         vecCol: String, idCol: String,
-                         centroidIds: Seq[Long], nProbe: Int): DataFrame = {
-    val cents = corpus
-      .select(col(idCol).as("qcell"), toDoubleArray(col(vecCol)).as("cv"))
-      .filter(col("qcell").isInCollection(centroidIds) && nonDegenerate(col("cv")))
-    probeCellsOn(cents, queries, vecCol, idCol, nProbe)
-  }
-
-  /** Probe ranking against an explicit (qcell, cv) centroid relation —
-    * shared by the stand-in path (centroids are corpus rows) and the
-    * trained path (centroids are a [[KMeans.Model]] codebook). */
-  private def probeCellsOn(cents: DataFrame, queries: DataFrame,
-                           vecCol: String, idCol: String,
-                           nProbe: Int): DataFrame =
-    probeRanked(cents, queries, vecCol, idCol, nProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
-
-  /** THE probe ranking — (query_id, qv, cell, prn ≤ maxNp) — the ONE
-    * formulation every probe consumer derives from ([[probeCellsOn]],
-    * the operating sweep and grids, and the [[ivfProbeTable]] diagnostic
-    * gate), so the contract cannot drift between them. */
+    * Centroids come from the codebook (`cents`, see [[centsOf]]), NOT
+    * from the assignment output: a centroid whose self-similarity key
+    * ties another centroid can be ASSIGNED to the other's cell, which
+    * would drop a probe cell and silently diverge from the oracle. The
+    * query side is the bounded batch, so its window exchange carries
+    * |queries|×k rows. */
   private def probeRanked(cents: DataFrame, queries: DataFrame,
                           vecCol: String, idCol: String,
                           maxNp: Int): DataFrame = {
@@ -266,8 +268,8 @@ object Similarity {
       .select(col("query_id"), col("prn").cast(LongType).as("prn"),
         col("cell"))
 
-  /** The trained-codebook centroid relation: (qcell 0..k-1, cv) built
-    * from driver-literal centroid rows — a tiny broadcastable dim. */
+  /** The codebook's centroid relation: (qcell 0..k-1, cv) built from
+    * driver-literal centroid rows — a tiny broadcastable dim. */
   private def centsOf(spark: org.apache.spark.sql.SparkSession,
                       codebook: Seq[Seq[Double]]): DataFrame = {
     import spark.implicits._
@@ -275,48 +277,34 @@ object Similarity {
       .toDF("qcell", "cv")
   }
 
-  /** IVF approximate top-k: probe the `nProbe` best cells per query. */
+  /** IVF approximate top-k over a coarse quantizer `codebook` (cells
+    * 0..k-1): assign the corpus map-only, probe the `nProbe` best cells
+    * per query, rank the probed cells' vectors by round-6dp cosine.
+    * Output: (query_id, rank, id, cosine). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               vecCol: String, idCol: String, k: Int,
-              centroidIds: Seq[Long], nProbe: Int = 2): DataFrame =
-    ivfSearch(cellAssignments(corpus, vecCol, idCol, centroidIds),
-      probeCells(corpus, queries, vecCol, idCol, centroidIds, nProbe), k)
-
-  /** IVF top-k over a TRAINED coarse quantizer ([[KMeans.Model]]
-    * codebook, cells 0..k-1) — same plan shape as [[ivfTopK]]; only the
-    * centroid source differs (driver-literal fit instead of id-named
-    * corpus rows). */
-  def ivfTopKTrained(corpus: DataFrame, queries: DataFrame,
-                     vecCol: String, idCol: String, k: Int,
-                     codebook: Seq[Seq[Double]], nProbe: Int = 2): DataFrame =
-    ivfSearch(cellAssignmentsTrained(corpus, vecCol, idCol, codebook),
-      probeCellsOn(centsOf(corpus.sparkSession, codebook),
-        queries, vecCol, idCol, nProbe), k)
+              codebook: Seq[Seq[Double]], nProbe: Int = 2): DataFrame =
+    ivfTopKOnAssigned(cellAssignments(corpus, vecCol, idCol, codebook),
+      queries, vecCol, idCol, k, codebook, nProbe)
 
   /** IVF top-k over a PRE-ASSIGNED (id, v, cell) relation — the serving
     * path of a MAINTAINED index ([[graft.io.IvfMaintenance]]): upserts
     * were assigned map-only against the frozen codebook when they
     * landed, tombstones already anti-joined, and the assignment lives
     * in storage partitioned BY cell so the probe filter prunes at the
-    * scan. Same plan downstream as [[ivfTopKTrained]]; only the
-    * assignment source differs. */
+    * scan. [[ivfTopK]] is this search over a fresh assignment. */
   def ivfTopKOnAssigned(assigned: DataFrame, queries: DataFrame,
                         vecCol: String, idCol: String, k: Int,
                         codebook: Seq[Seq[Double]],
-                        nProbe: Int = 2): DataFrame =
-    ivfSearch(assigned,
-      probeCellsOn(centsOf(assigned.sparkSession, codebook),
-        queries, vecCol, idCol, nProbe), k)
-
-  private def ivfSearch(assigned: DataFrame, probes: DataFrame,
-                        k: Int): DataFrame =
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6))
-      .withColumn("rank", row_number().over(rankWindow))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("cos_r").as("cosine"))
+                        nProbe: Int = 2): DataFrame = {
+    val probes = probeRanked(centsOf(assigned.sparkSession, codebook),
+        queries, vecCol, idCol, nProbe)
+      .select(col("query_id"), col("qv"), col("cell"))
+    topK(assigned.join(broadcast(probes), Seq("cell"))
+        .filter(col("id") =!= col("query_id"))
+        .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6)),
+      col("cos_r").desc, k, col("cos_r").as("cosine"))
+  }
 
   /** IVF OPERATING SWEEP — nProbe × k JOINTLY, the cost/recall
     * surface a serving deployment picks its probe width and result
@@ -345,7 +333,7 @@ object Similarity {
     * denominators are one-row aggregates [[gridTail]] joins in. The
     * k axis costs no scan. `scanned_ppm` counts every vector in a
     * probed cell (the query's own vector is excluded only at scoring,
-    * as in [[ivfSearch]]); n_bf(k) divides each recall, so a corpus
+    * as in [[ivfTopK]]); n_bf(k) divides each recall, so a corpus
     * with fewer than k non-degenerate neighbors per query does not bias
     * recall low. At 100 TB the candidate relation is the IVF scan
     * bound; everything after it is bounded by nq·max(k). */
@@ -359,7 +347,7 @@ object Similarity {
       nProbes.distinct.size == nProbes.size, s"bad nProbes $nProbes")
     val spark = corpus.sparkSession
     val npSorted = nProbes.sorted
-    val assigned = cellAssignmentsTrained(corpus, vecCol, idCol, codebook)
+    val assigned = cellAssignments(corpus, vecCol, idCol, codebook)
     // probe ranking on the exact-integer key (r15) — THE shared
     // [[probeRanked]] formulation across the family
     val probes = probeRanked(centsOf(spark, codebook), queries, vecCol,
@@ -390,14 +378,6 @@ object Similarity {
       gridDenoms(queryVecs(queries, vecCol, idCol), assigned, bf, ks), ks,
       Seq("n_probe", "k"))
   }
-
-  /** The filtered query relation (query_id, qv) every ANN operator
-    * ranks against: degenerate query vectors excluded by contract. */
-  private def queryVecs(queries: DataFrame, vecCol: String,
-                        idCol: String): DataFrame =
-    queries.select(col(idCol).as("query_id"),
-        toDoubleArray(col(vecCol)).as("qv"))
-      .filter(nonDegenerate(col("qv")))
 
   /** The truth every operating grid measures against: the exact
     * integer-key top-max(k), (query_id, id, bfr), rank kept so each k
@@ -485,80 +465,23 @@ object Similarity {
 
   /** Product-quantization encode — the memory-scale path for ANN
     * (IVF-PQ's second half): each vector compresses to `m` codebook
-    * indices plus a reconstruction error. The codebook rows are the
-    * corpus vectors named by `centroidIds` in id order (the same
-    * deterministic stand-in contract as [[cellAssignments]]'s coarse
-    * quantizer — a trained k-means codebook slots in identically),
-    * collected driver-side (bounded by the quantizer-size contract,
-    * like a broadcast dim) so encoding is ONE compiled map-only pass —
-    * no join, no shuffle, at any corpus size. Degenerate (zero-norm)
-    * vectors are excluded, as everywhere in the cosine operators. */
-  /** Codebook rows = the corpus vectors named by `centroidIds`, in id
-    * order — driver-collected, bounded by the quantizer-size contract. */
-  private def collectCodebook(c: DataFrame,
-                              centroidIds: Seq[Long]): Seq[Seq[Double]] = {
-    val rows = c.filter(col("id").isInCollection(centroidIds))
-      .orderBy(col("id"))
-      .collect()
-      .map(_.getSeq[Double](1).toSeq).toSeq
-    // A silently shrunken codebook (missing or zero-norm centroid id)
-    // would encode against fewer rows than the contract names — and an
-    // EMPTY one would surface as an opaque codebook.head NPE in ADC.
-    // DECLARED DIVERGENCE from the oracles (ADVICE r6): the e04-e07/d13
-    // cb/cents CTEs silently continue with fewer centroid rows on the
-    // same degenerate input — a shrunken-quantizer result, where this
-    // engine fails the job. Fail-loud is the intended production
-    // contract (a missing centroid means the quantizer inputs are
-    // corrupt); the oracle comparison is only defined on inputs where
-    // every named centroid resolves, which the driver corpora satisfy.
-    require(rows.size == centroidIds.distinct.size,
-      s"codebook resolved ${rows.size} of ${centroidIds.distinct.size} " +
-        s"centroid ids — missing or degenerate (zero-norm) centroid vectors")
-    rows
-  }
-
+    * indices plus a reconstruction error. The codebook is explicit — a
+    * [[KMeans.fitPqCodebook]] packed fit, or named corpus rows resolved
+    * by [[codebookOf]] — and driver-literal (bounded by the
+    * quantizer-size contract, like a broadcast dim), so encoding is ONE
+    * compiled map-only pass — no join, no shuffle, at any corpus size.
+    * Degenerate (zero-norm) vectors are excluded, as everywhere in the
+    * cosine operators; width-mismatched vectors drop, not NPE.
+    * Output: (id, codes, recon_err). */
   def pqEncode(corpus: DataFrame, vecCol: String, idCol: String,
-               m: Int, centroidIds: Seq[Long]): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    pqEncodeOn(c, m, collectCodebook(c, centroidIds))
-  }
-
-  /** PQ encode against an EXPLICIT codebook (a [[KMeans.fitPqCodebook]]
-    * packed fit — the trained form; the id-named overload above is the
-    * stand-in special case where codebook rows are corpus vectors).
-    * Same single map-only compiled pass. (Separate name: Seq[Long] and
-    * Seq[Seq[Double]] erase identically, like cellAssignmentsTrained.) */
-  def pqEncodeTrained(corpus: DataFrame, vecCol: String, idCol: String,
-                      m: Int, codebook: Seq[Seq[Double]]): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    pqEncodeOn(c, m, codebook)
-  }
-
-  private def pqEncodeOn(c: DataFrame, m: Int,
-                         codebook: Seq[Seq[Double]]): DataFrame = {
-    val st = graft.expressions.VectorExpressions.pqEncode(col("v"), codebook, m)
-    c.select(col("id"), st.as("st"))
-      .filter(col("st").isNotNull) // width-mismatched vectors drop, not NPE
+               m: Int, codebook: Seq[Seq[Double]]): DataFrame = {
+    val st = VectorExpressions.pqEncode(col("v"), codebook, m)
+    corpusVecs(corpus, vecCol, idCol).select(col("id"), st.as("st"))
+      .filter(col("st").isNotNull)
       .select(col("id"), col("st.codes").as("codes"),
         round(col("st.err"), 6).as("recon_err"))
   }
 
-  /** PQ asymmetric-distance (ADC) top-k — IVF-PQ's search half: each
-    * query precomputes a per-subspace distance TABLE against the
-    * codebook (m×k doubles, driver-side — queries are a bounded batch,
-    * the same contract as [[bruteForceTopK]]'s broadcast), and scoring
-    * a corpus vector is m table lookups over its CODES — never touching
-    * the original embedding. That is the PQ payoff: the scored relation
-    * carries m small ints per vector instead of `dim` doubles, and the
-    * scan+score pass is bandwidth-bound on ~2% of the raw bytes.
-    *
-    * Plan shape: codes (map-only encode) × broadcast query tables →
-    * codegen'd element_at lookups (no higher-order functions) → per-
-    * query top-k window. Distances are the approximate d² implied by
-    * the quantization, rounded to 6dp with id tiebreak for cross-engine
-    * rank stability. */
   /** Per-query ADC distance tables, flat [j * kCent + cidx] — the
     * i-loop accumulation order matches the oracle's list_inner_product
     * slices. Driver-side: queries are a bounded batch, the same
@@ -614,37 +537,30 @@ object Similarity {
       (col("codes").getItem(j) + lit(j * kCent) + 1).cast(IntegerType)))
     .reduce(_ + _)
 
+  /** PQ asymmetric-distance (ADC) top-k — IVF-PQ's search half: each
+    * query precomputes a per-subspace distance TABLE against the
+    * codebook (m×k doubles, driver-side — queries are a bounded batch,
+    * the same contract as [[bruteForceTopK]]'s broadcast), and scoring
+    * a corpus vector is m table lookups over its CODES — never touching
+    * the original embedding. That is the PQ payoff: the scored relation
+    * carries m small ints per vector instead of `dim` doubles, and the
+    * scan+score pass is bandwidth-bound on ~2% of the raw bytes.
+    *
+    * Plan shape: codes (map-only encode) × broadcast query tables →
+    * codegen'd element_at lookups (no higher-order functions) → per-
+    * query top-k window. Distances are the approximate d² implied by
+    * the quantization, rounded to 6dp with id tiebreak for cross-engine
+    * rank stability. Output: (query_id, rank, id, adc_d2). */
   def pqAdcTopK(corpus: DataFrame, queries: DataFrame,
                 vecCol: String, idCol: String, k: Int,
-                m: Int, centroidIds: Seq[Long]): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    pqAdcTopKOn(corpus, queries, vecCol, idCol, k, m,
-      collectCodebook(c, centroidIds))
-  }
-
-  /** ADC top-k over an EXPLICIT (trained) PQ codebook — same plan shape
-    * as [[pqAdcTopK]]; only the codebook source differs. */
-  def pqAdcTopKTrained(corpus: DataFrame, queries: DataFrame,
-                       vecCol: String, idCol: String, k: Int,
-                       m: Int, codebook: Seq[Seq[Double]]): DataFrame =
-    pqAdcTopKOn(corpus, queries, vecCol, idCol, k, m, codebook)
-
-  private def pqAdcTopKOn(corpus: DataFrame, queries: DataFrame,
-                          vecCol: String, idCol: String, k: Int,
-                          m: Int, codebook: Seq[Seq[Double]]): DataFrame = {
-    val codes = pqEncodeTrained(corpus, vecCol, idCol, m, codebook)
+                m: Int, codebook: Seq[Seq[Double]]): DataFrame = {
+    val codes = pqEncode(corpus, vecCol, idCol, m, codebook)
       .select(col("id"), col("codes"))
     val tables = adcTables(queries, vecCol, idCol, codebook, m)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_d2").asc, col("id").asc)
-    codes.crossJoin(broadcast(tables))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("adc_d2", round(adcScore(m, codebook.length), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("adc_d2"))
+    topK(codes.crossJoin(broadcast(tables))
+        .filter(col("id") =!= col("query_id"))
+        .withColumn("adc_d2", round(adcScore(m, codebook.length), 6)),
+      col("adc_d2").asc, k, col("adc_d2"))
   }
 
   /** The full IVF-PQ search — the production ANN shape at 100 TB:
@@ -654,47 +570,49 @@ object Similarity {
     * ADC-scores only the code rows in those cells: per query the scan
     * touches ~nProbe/nCells of the corpus at ~2% of the raw bytes.
     *
-    * Plan shape: map-only cell assignment + PQ encode in ONE projection
-    * over the corpus scan (both literal-codebook expressions, zero
-    * shuffle); probes + ADC tables are driver/broadcast-side (bounded
-    * query batch); the probe join is an equi-join on cell against a
-    * broadcast; top-k via per-query window. At warehouse scale the code
-    * table is written partitioned BY cell, so probes prune partitions
-    * at the scan (IvfStorageSpec pins that property).
+    * Both quantizers are explicit codebooks: coarse cells from
+    * `cellCodebook` (a spherical [[KMeans.Model]] fit), PQ codes from
+    * `pqCodebook` — `m` independent L2 k-means fits on the sub-vector
+    * slices packed into full-width rows ([[KMeans.fitPqCodebook]]; slice
+    * j of packed row c is sub-centroid (j, c), and
+    * [[graft.expressions.PqEncodeExpr]] slices subspaces independently,
+    * so the packed form encodes identically to per-subspace codebooks),
+    * or named corpus rows resolved by [[codebookOf]].
     *
-    * Cells come from a TRAINED coarse quantizer, a [[KMeans.Model]]
-    * codebook (0..k-1); the PQ sub-codebook stays the id-named
-    * contract. For the fully-trained form (PQ sub-codebooks from
-    * per-subspace L2 k-means too) see [[ivfPqTopKFullyTrained]]. */
-  def ivfPqTopKTrained(corpus: DataFrame, queries: DataFrame,
-                       vecCol: String, idCol: String, k: Int,
-                       cellCodebook: Seq[Seq[Double]], nProbe: Int,
-                       m: Int, pqCentroidIds: Seq[Long]): DataFrame =
-    ivfPqSearch(corpus, queries, vecCol, idCol, k,
-      cellAssignmentsTrained(corpus, vecCol, idCol, cellCodebook),
-      () => probeCellsOn(centsOf(corpus.sparkSession, cellCodebook),
-        queries, vecCol, idCol, nProbe),
-      m, collectCodebook(
-        corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-          .filter(nonDegenerate(col("v"))), pqCentroidIds.distinct.sorted))
+    * The candidates are the PQ grid's scorer ([[pqCandOf]]) at one
+    * probe width, so the point search and its operating grid cannot
+    * drift. Plan shape: map-only cell assignment + PQ encode in ONE
+    * projection over the corpus scan (both literal-codebook
+    * expressions, zero shuffle); probes + ADC tables are
+    * driver/broadcast-side (bounded query batch); the probe join is an
+    * equi-join on cell against a broadcast; top-k via per-query window.
+    * At warehouse scale the code table is written partitioned BY cell,
+    * so probes prune partitions at the scan (IvfStorageSpec pins that
+    * property). Output: (query_id, rank, id, adc_d2). */
+  def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
+                vecCol: String, idCol: String, k: Int,
+                cellCodebook: Seq[Seq[Double]], nProbe: Int,
+                m: Int, pqCodebook: Seq[Seq[Double]]): DataFrame =
+    ivfCandTopK(corpus, queries, vecCol, idCol, k, cellCodebook, nProbe,
+      pqCandOf(queries, vecCol, idCol, m, pqCodebook), "adc_d2")
 
-  /** The production IVF-PQ: BOTH quantizers trained — coarse cells from
-    * the spherical k-means fit, PQ sub-codebooks from `m` independent
-    * L2 k-means fits on the sub-vector slices ([[graft.operators
-    * .KMeans]] with the L2 metric — the geometry PQ encoding argmins),
-    * packed into full-width codebook rows (slice j of packed row c is
-    * sub-centroid (j, c) — [[graft.expressions.PqEncodeExpr]] slices
-    * subspaces independently, so the packed form encodes identically
-    * to per-subspace codebooks with zero expression changes). */
-  def ivfPqTopKFullyTrained(corpus: DataFrame, queries: DataFrame,
-                            vecCol: String, idCol: String, k: Int,
-                            cellCodebook: Seq[Seq[Double]], nProbe: Int,
-                            m: Int, pqCodebook: Seq[Seq[Double]]): DataFrame =
-    ivfPqSearch(corpus, queries, vecCol, idCol, k,
-      cellAssignmentsTrained(corpus, vecCol, idCol, cellCodebook),
-      () => probeCellsOn(centsOf(corpus.sparkSession, cellCodebook),
-        queries, vecCol, idCol, nProbe),
-      m, pqCodebook)
+  /** The IVF point searches over a family scorer: the grids'
+    * candidates (query_id, id, score, prn) under ONE probe width,
+    * ranked score ASC by the shared tail, `score` renamed to the
+    * family's output column. */
+  private def ivfCandTopK(corpus: DataFrame, queries: DataFrame,
+                          vecCol: String, idCol: String, k: Int,
+                          cellCodebook: Seq[Seq[Double]], nProbe: Int,
+                          candOf: (DataFrame, DataFrame, DataFrame)
+                            => DataFrame,
+                          scoreAs: String): DataFrame = {
+    val probes = probeRanked(centsOf(corpus.sparkSession, cellCodebook),
+        queries, vecCol, idCol, nProbe)
+      .select(col("query_id"), col("cell"), col("prn"))
+    topK(candOf(cellAssignments(corpus, vecCol, idCol, cellCodebook),
+        probes, queryVecs(queries, vecCol, idCol)),
+      col("score").asc, k, col("score").as(scoreAs))
+  }
 
   /** 3-D IVF-PQ OPERATING GRID — (nProbe × ADC-shortlist depth × k)
     * JOINTLY (VERDICT r14 next-#7 / missing-#3): the table a real
@@ -737,8 +655,7 @@ object Similarity {
     (assigned, probes, _) => {
       val coded = assigned
         .select(col("id"), col("cell"),
-          graft.expressions.VectorExpressions
-            .pqEncode(col("v"), pqCodebook, m).as("st"))
+          VectorExpressions.pqEncode(col("v"), pqCodebook, m).as("st"))
         .filter(col("st").isNotNull)
         .select(col("id"), col("cell"), col("st.codes").as("codes"))
       val tables = adcTables(queries, vecCol, idCol, pqCodebook, m)
@@ -993,7 +910,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val rsSorted = rs.sorted
     val searched = keepIds.fold(corpus)(kp => corpus.join(kp, Seq(idCol)))
-    val assigned = cellAssignmentsTrained(searched, vecCol, idCol,
+    val assigned = cellAssignments(searched, vecCol, idCol,
       cellCodebook)
     val q = queryVecs(queries, vecCol, idCol)
     val probes = probeRanked(centsOf(spark, cellCodebook), queries, vecCol,
@@ -1051,32 +968,6 @@ object Similarity {
         col("r_shortlist"), col("k")))
   }
 
-  private def ivfPqSearch(corpus: DataFrame, queries: DataFrame,
-                          vecCol: String, idCol: String, k: Int,
-                          assigned: DataFrame,
-                          probesOf: () => DataFrame,
-                          m: Int, codebook: Seq[Seq[Double]]): DataFrame = {
-    // one map-only projection: cell + codes per corpus row
-    val coded = assigned
-      .select(col("id"), col("cell"),
-        graft.expressions.VectorExpressions
-          .pqEncode(col("v"), codebook, m).as("st"))
-      .filter(col("st").isNotNull)
-      .select(col("id"), col("cell"), col("st.codes").as("codes"))
-    val probes = probesOf()
-      .select(col("query_id"), col("cell"))
-    val tables = adcTables(queries, vecCol, idCol, codebook, m)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_d2").asc, col("id").asc)
-    coded.join(broadcast(probes.join(tables, Seq("query_id"))), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("adc_d2", round(adcScore(m, codebook.length), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("adc_d2"))
-  }
-
   /** SQ8 scalar-quantizer stats: per-dimension (min, scale=max−min)
     * over the corpus — the faiss IndexScalarQuantizer QT_8bit training
     * contract (no codebook fit; two exact extrema per dimension, so
@@ -1094,19 +985,6 @@ object Similarity {
       stats.map(r => r.getDouble(2) - r.getDouble(1)).toSeq)
   }
 
-  /** SQ8 search: corpus encoded to 1 byte/dim (8x compression vs
-    * doubles, NO training beyond the per-dim extrema), queries score
-    * the RECONSTRUCTION v̂ᵢ = minᵢ + codeᵢ/255·scaleᵢ by exact squared
-    * L2 — the asymmetric-distance contract (query stays full
-    * precision), round-6dp ASC with id tiebreak. Encode and decode are
-    * per-row index lambdas against the driver-literal stats: map-only
-    * at any corpus size, and a once-per-row cost (not a pairwise hot
-    * path), so the interpreted higher-order functions are acceptable
-    * here where the O(n²) kernels demanded compiled expressions.
-    * Scale shape: the flat-SQ index — at 100 TB this composes with
-    * IVF cell pruning exactly like e07's code table (partitioned BY
-    * cell); the scored relation carries dim bytes instead of dim
-    * doubles. Output: (query_id, rank, id, sq_d2). */
   // code_i = round(((v_i − mn_i) / sc_i) · 255); constant dims -> 0
   private def sqEncodeCol(v: Column, mins: Seq[Double],
                           scales: Seq[Double]): Column = {
@@ -1133,55 +1011,46 @@ object Similarity {
       lit(2.0) * VectorExpressions.dot(col("qv"), col("rv")) +
       VectorExpressions.dot(col("rv"), col("rv"))
 
+  /** SQ8 search: corpus encoded to 1 byte/dim (8x compression vs
+    * doubles, NO training beyond the per-dim extrema), queries score
+    * the RECONSTRUCTION v̂ᵢ = minᵢ + codeᵢ/255·scaleᵢ by exact squared
+    * L2 — the asymmetric-distance contract (query stays full
+    * precision), round-6dp ASC with id tiebreak. Encode and decode are
+    * per-row index lambdas against the driver-literal stats: map-only
+    * at any corpus size, and a once-per-row cost (not a pairwise hot
+    * path), so the interpreted higher-order functions are acceptable
+    * here where the O(n²) kernels demanded compiled expressions.
+    * Scale shape: the flat-SQ index — at 100 TB this composes with
+    * IVF cell pruning exactly like e07's code table (partitioned BY
+    * cell); the scored relation carries dim bytes instead of dim
+    * doubles. Output: (query_id, rank, id, sq_d2). */
   def sqTopK(corpus: DataFrame, queries: DataFrame,
              vecCol: String, idCol: String, k: Int,
              mins: Seq[Double], scales: Seq[Double]): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    val decoded = c
+    val decoded = corpusVecs(corpus, vecCol, idCol)
       .select(col("id"), sqEncodeCol(col("v"), mins, scales).as("codes"))
       .select(col("id"), sqDecodeCol(col("codes"), mins, scales).as("rv"))
-    val q = queryVecs(queries, vecCol, idCol)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sq_d2").asc, col("id").asc)
-    decoded.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("sq_d2", round(sqD2, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("sq_d2"))
+    topK(decoded.join(broadcast(queryVecs(queries, vecCol, idCol)),
+          col("id") =!= col("query_id"))
+        .withColumn("sq_d2", round(sqD2, 6)),
+      col("sq_d2").asc, k, col("sq_d2"))
   }
 
   /** IVF-SQ — the faiss IndexIVFScalarQuantizer composition: trained
     * coarse cells prune WHICH rows are scored (e02's half), SQ8 codes
     * compress WHAT is read to score them (e13's half, 8x). Same plan
-    * shape as [[ivfPqTopKTrained]] with the SQ decode in place of ADC
-    * tables: assignment + encode in one map-only projection chain over
-    * the corpus scan, probes broadcast, per-query window top-k; at
-    * warehouse scale the code table is written partitioned BY cell
+    * shape as [[ivfPqTopK]] with the SQ decode in place of ADC tables —
+    * the SQ8 grid's scorer ([[sqCandOf]]) at one probe width:
+    * assignment + encode in one map-only projection chain over the
+    * corpus scan, probes and queries broadcast, per-query window top-k;
+    * at warehouse scale the code table is written partitioned BY cell
     * (IvfStorageSpec's contract). Output: (query_id, rank, id, sq_d2). */
   def ivfSqTopK(corpus: DataFrame, queries: DataFrame,
                 vecCol: String, idCol: String, k: Int,
                 cellCodebook: Seq[Seq[Double]], nProbe: Int,
-                mins: Seq[Double], scales: Seq[Double]): DataFrame = {
-    val decoded = cellAssignmentsTrained(corpus, vecCol, idCol, cellCodebook)
-      .select(col("id"), col("cell"),
-        sqEncodeCol(col("v"), mins, scales).as("codes"))
-      .select(col("id"), col("cell"),
-        sqDecodeCol(col("codes"), mins, scales).as("rv"))
-    val probes = probeCellsOn(centsOf(corpus.sparkSession, cellCodebook),
-        queries, vecCol, idCol, nProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sq_d2").asc, col("id").asc)
-    decoded.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("sq_d2", round(sqD2, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("sq_d2"))
-  }
+                mins: Seq[Double], scales: Seq[Double]): DataFrame =
+    ivfCandTopK(corpus, queries, vecCol, idCol, k, cellCodebook, nProbe,
+      sqCandOf(mins, scales), "sq_d2")
 
   /** Binary-quantization thresholds: per-dimension means on the exact
     * int64 grid (Σ round(vᵢ·10⁹) summed exactly, ONE double division —
@@ -1235,14 +1104,9 @@ object Similarity {
     val qc = coded(queries, "query_id", "qw")
     val hamming = (0 until nw).map(i =>
       bit_count(col(s"cw$i").bitwiseXOR(col(s"qw$i")))).reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("id").asc)
-    cc.join(broadcast(qc), col("id") =!= col("query_id"))
-      .withColumn("hamming", hamming.cast(LongType))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("hamming"))
+    topK(cc.join(broadcast(qc), col("id") =!= col("query_id"))
+        .withColumn("hamming", hamming.cast(LongType)),
+      col("hamming").asc, k, col("hamming"))
   }
 
   /** Binary-quantized retrieval + exact rerank — the modern vector-DB
@@ -1253,7 +1117,7 @@ object Similarity {
   def bqRerankTopK(corpus: DataFrame, queries: DataFrame,
                    vecCol: String, idCol: String, k: Int, shortlist: Int,
                    thresholds: Seq[Double]): DataFrame =
-    pqRerankOn(corpus, queries, vecCol, idCol, k,
+    exactRerank(corpus, queries, vecCol, idCol, k,
       bqTopK(corpus, queries, vecCol, idCol, k = shortlist, thresholds)
         .select(col("query_id"), col("id")), shortlist)
 
@@ -1266,7 +1130,7 @@ object Similarity {
     * in both engines. */
   def cellResiduals(corpus: DataFrame, vecCol: String, idCol: String,
                     cellCodebook: Seq[Seq[Double]]): DataFrame =
-    cellAssignmentsTrained(corpus, vecCol, idCol, cellCodebook)
+    cellAssignments(corpus, vecCol, idCol, cellCodebook)
       .select(col("id"), col("cell"),
         VectorExpressions.cellResidual(col("v"), col("cell"), cellCodebook)
           .as("rv"))
@@ -1295,11 +1159,10 @@ object Similarity {
     val dim = pqCodebook.head.length
     val coded = cellResiduals(corpus, vecCol, idCol, cellCodebook)
       .select(col("id"), col("cell"),
-        graft.expressions.VectorExpressions
-          .pqEncode(col("rv"), pqCodebook, m).as("st"))
+        VectorExpressions.pqEncode(col("rv"), pqCodebook, m).as("st"))
       .filter(col("st").isNotNull)
       .select(col("id"), col("cell"), col("st.codes").as("codes"))
-    val probeRows = probeCellsOn(centsOf(corpus.sparkSession, cellCodebook),
+    val probeRows = probeRanked(centsOf(corpus.sparkSession, cellCodebook),
         queries, vecCol, idCol, nProbe)
       .select(col("query_id"), col("cell")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -1322,15 +1185,10 @@ object Similarity {
         (qid, cell, adcTableFor(qr, pqCodebook, m).toSeq)
       }
     }.toDF("query_id", "cell", "dt")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_d2").asc, col("id").asc)
-    coded.join(broadcast(tables), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("adc_d2", round(adcScore(m, pqCodebook.length), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("adc_d2"))
+    topK(coded.join(broadcast(tables), Seq("cell"))
+        .filter(col("id") =!= col("query_id"))
+        .withColumn("adc_d2", round(adcScore(m, pqCodebook.length), 6)),
+      col("adc_d2").asc, k, col("adc_d2"))
   }
 
   /** Two-stage retrieval — PQ shortlist + exact rerank (the standard
@@ -1338,55 +1196,39 @@ object Similarity {
     * to `shortlist` candidates per query, then ONLY those candidates'
     * full vectors are read for an exact-cosine rerank to top-`k`).
     *
-    * Scale shape: stage 1 is [[pqAdcTopK]] — bandwidth-bound on ~2% of
-    * the raw bytes; stage 2 joins the (|queries| × shortlist)-row
-    * candidate relation back to the corpus ON ID — a semi-join-sized
-    * probe, broadcastable whenever the query batch is bounded, so the
-    * full-width vectors are fetched for shortlist rows only, never
-    * scanned wholesale. Rerank cost is |queries| × shortlist exact
-    * kernels — independent of corpus size.
+    * Scale shape: stage 1 is [[pqAdcTopK]] over the explicit PQ
+    * `codebook` — bandwidth-bound on ~2% of the raw bytes; stage 2
+    * joins the (|queries| × shortlist)-row candidate relation back to
+    * the corpus ON ID — a semi-join-sized probe, broadcastable whenever
+    * the query batch is bounded, so the full-width vectors are fetched
+    * for shortlist rows only, never scanned wholesale. Rerank cost is
+    * |queries| × shortlist exact kernels — independent of corpus size.
     */
   def pqRerankTopK(corpus: DataFrame, queries: DataFrame,
                    vecCol: String, idCol: String, k: Int, shortlist: Int,
-                   m: Int, centroidIds: Seq[Long]): DataFrame =
-    pqRerankOn(corpus, queries, vecCol, idCol, k,
+                   m: Int, codebook: Seq[Seq[Double]]): DataFrame =
+    exactRerank(corpus, queries, vecCol, idCol, k,
       pqAdcTopK(corpus, queries, vecCol, idCol,
-        k = shortlist, m = m, centroidIds = centroidIds)
-        .select(col("query_id"), col("id")), shortlist)
-
-  /** Shortlist + exact rerank over an EXPLICIT (trained) PQ codebook —
-    * same two-stage shape as [[pqRerankTopK]]. */
-  def pqRerankTopKTrained(corpus: DataFrame, queries: DataFrame,
-                          vecCol: String, idCol: String, k: Int,
-                          shortlist: Int, m: Int,
-                          codebook: Seq[Seq[Double]]): DataFrame =
-    pqRerankOn(corpus, queries, vecCol, idCol, k,
-      pqAdcTopKTrained(corpus, queries, vecCol, idCol,
         k = shortlist, m = m, codebook = codebook)
         .select(col("query_id"), col("id")), shortlist)
 
-  private def pqRerankOn(corpus: DataFrame, queries: DataFrame,
-                         vecCol: String, idCol: String, k: Int,
-                         short: DataFrame, shortlist: Int): DataFrame = {
+  /** The shared second stage of the two-stage searches: the
+    * (query_id, id) shortlist reranked by exact round-6dp cosine. */
+  private def exactRerank(corpus: DataFrame, queries: DataFrame,
+                          vecCol: String, idCol: String, k: Int,
+                          short: DataFrame, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val c = corpus.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
-    val q = queryVecs(queries, vecCol, idCol)
-    short.join(c, Seq("id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6))
-      .withColumn("rank", row_number().over(rankWindow))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-        col("id"), col("cos_r").as("cosine"))
+    topK(short.join(corpusVecs(corpus, vecCol, idCol), Seq("id"))
+        .join(broadcast(queryVecs(queries, vecCol, idCol)), Seq("query_id"))
+        .withColumn("cos_r", round(VectorExpressions.cosine(col("v"), col("qv")), 6)),
+      col("cos_r").desc, k, col("cos_r").as("cosine"))
   }
 
   /** Random-hyperplane LSH bucket key (8-bit sketch by default): the
     * scale path for near-dup joins — only same-bucket pairs compared. */
   def lshBuckets(df: DataFrame, vecCol: String, idCol: String,
                  nBits: Int = 8, dim: Int = 64): DataFrame =
-    df.select(col(idCol).as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
+    corpusVecs(df, vecCol, idCol)
       .withColumn("bucket", concat_ws("",
         (0 until nBits).map(s => hyperplaneBit(col("v"), s, dim).cast(StringType)): _*))
 
@@ -1590,9 +1432,7 @@ object Similarity {
                nBits: Int, bands: Int, degree: Int): DataFrame = {
     require(nBits >= 1 && bands >= 1 && degree >= 1,
       s"need nBits/bands/degree >= 1; got $nBits/$bands/$degree")
-    val e = corpus.select(col(idCol).as("id"),
-        toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
+    val e = corpusVecs(corpus, vecCol, idCol)
     // Build plan left in the round-17 shape DELIBERATELY (r18
     // measured two rewrites and both lost): (a) per-band top-degree
     // windows before the shuffle — lossless, but WindowGroupLimit's
@@ -1737,9 +1577,7 @@ object Similarity {
                      nBits: Int, bands: Int, degree: Int): DataFrame = {
     val gBase = nswGraph(base, vecCol, idCol, nBits, bands, degree)
     def bucketed(df: DataFrame): DataFrame = {
-      val e = df.select(col(idCol).as("id"),
-          toDoubleArray(col(vecCol)).as("v"))
-        .filter(nonDegenerate(col("v")))
+      val e = corpusVecs(df, vecCol, idCol)
       (0 until bands).map { b =>
         e.withColumn("bucket", concat(lit(s"$b:"), concat_ws("",
           (0 until nBits).map(s =>
@@ -1802,9 +1640,7 @@ object Similarity {
                         vecCol: String, idCol: String,
                         entryMembers: Option[DataFrame])
       : (DataFrame, DataFrame, DataFrame) = {
-    val e = corpus.select(col(idCol).as("id"),
-        toDoubleArray(col(vecCol)).as("v"))
-      .filter(nonDegenerate(col("v")))
+    val e = corpusVecs(corpus, vecCol, idCol)
       .localCheckpoint() // streamed per hop — decode the source once
     val q = queryVecs(queries, vecCol, idCol)
       .localCheckpoint() // reused per hop — scan the source once

@@ -534,7 +534,7 @@ object DataQueries {
     * stand-in rows). The oracle replays the full fit via [[kmCtes]]. */
   val e02AnnIvf: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfTopKTrained(emb, emb.filter(col("vec_id") % 100 === 0),
+    Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0),
         "embedding", "vec_id", k = 5,
         codebook = kmModel(s, dir).centroids, nProbe = 2)
       .orderBy(col("query_id"), col("rank"))
@@ -571,7 +571,7 @@ object DataQueries {
     val emb = Catalog(s, dir).embeddings
     val en = Catalog(s, dir).documents
       .filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
-    Similarity.ivfTopKTrained(emb.join(en, Seq("vec_id")),
+    Similarity.ivfTopK(emb.join(en, Seq("vec_id")),
         emb.filter(col("vec_id") % 100 === 0),
         "embedding", "vec_id", k = 5,
         codebook = kmModel(s, dir).centroids, nProbe = 2)
@@ -617,7 +617,7 @@ object DataQueries {
     val bf = Similarity.bruteForceTopK(emb, queries,
         "embedding", "vec_id", k = 5)
       .select(col("query_id"), col("id"))
-    val ivf = Similarity.ivfTopKTrained(emb, queries,
+    val ivf = Similarity.ivfTopK(emb, queries,
         "embedding", "vec_id", k = 5,
         codebook = kmModel(s, dir).centroids, nProbe = 2)
       .select(col("query_id"), col("id"))
@@ -2259,10 +2259,10 @@ object DataQueries {
   val e20IvfUpsert: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
     val cb = kmBaseModel(s, dir).centroids
-    val built = Similarity.cellAssignmentsTrained(
+    val built = Similarity.cellAssignments(
       emb.filter(pmod(col("vec_id"), lit(3L)) =!= 0),
       "embedding", "vec_id", cb)
-    val upserted = Similarity.cellAssignmentsTrained(
+    val upserted = Similarity.cellAssignments(
       emb.filter(pmod(col("vec_id"), lit(3L)) === 0),
       "embedding", "vec_id", cb)
     val tomb = emb.filter(pmod(col("vec_id"), lit(10L)) === 5)
@@ -2307,7 +2307,7 @@ object DataQueries {
     * Scale shape: the e01 brute-force contract — the query (unlabeled)
     * batch broadcasts, per-query top-k is one window over the
     * candidate relation; at corpus scale the same votes run over
-    * [[Similarity.ivfTopKTrained]]'s pruned candidates instead (e02's
+    * [[Similarity.ivfTopK]]'s pruned candidates instead (e02's
     * serving shape; the gate pins the exact variant). */
   val e21KnnLabel: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
@@ -2362,10 +2362,10 @@ object DataQueries {
     * encoding). The code array is projected as a comma-joined string
     * for the oracle compare (the driver's pandas row-sort cannot order
     * array cells — r5's e04 err); [[e05PqAdcTopK]] consumes the native
-    * array form. The stand-in path stays spec-covered
-    * (IvfStorageSpec). */
+    * array form. An id-named stand-in codebook resolves through
+    * [[Similarity.codebookOf]] into this same call. */
   val e04PqEncode: Q = (s, dir) =>
-    Similarity.pqEncodeTrained(Catalog(s, dir).embeddings, "embedding",
+    Similarity.pqEncode(Catalog(s, dir).embeddings, "embedding",
         "vec_id", m = 4, codebook = pqModel(s, dir))
       .select(col("id"),
         concat_ws(",", col("codes").cast("array<string>")).as("codes"),
@@ -2394,12 +2394,12 @@ object DataQueries {
 
   /** PQ asymmetric-distance top-k (IVF-PQ's search half): queries score
     * the corpus through m table lookups over its PQ codes — see
-    * [[Similarity.pqAdcTopKTrained]]; codes and distance tables are
+    * [[Similarity.pqAdcTopK]]; codes and distance tables are
     * against the TRAINED packed codebook (VERDICT r7 next-#2). Same
     * query split as e02. */
   val e05PqAdcTopK: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.pqAdcTopKTrained(emb, emb.filter(col("vec_id") % 100 === 0),
+    Similarity.pqAdcTopK(emb, emb.filter(col("vec_id") % 100 === 0),
         "embedding", "vec_id", k = 5, m = 4, codebook = pqModel(s, dir))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -2439,11 +2439,11 @@ object DataQueries {
   /** Two-stage retrieval: PQ-ADC shortlist (20 candidates/query over
     * compressed codes, TRAINED codebook) -> exact-cosine rerank of ONLY
     * those candidates to top-5 — the production IVF-PQ search shape;
-    * see [[Similarity.pqRerankTopKTrained]]. Same query split as
+    * see [[Similarity.pqRerankTopK]]. Same query split as
     * e02/e05. */
   val e06PqRerank: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.pqRerankTopKTrained(emb, emb.filter(col("vec_id") % 100 === 0),
+    Similarity.pqRerankTopK(emb, emb.filter(col("vec_id") % 100 === 0),
         "embedding", "vec_id", k = 5, shortlist = 20,
         m = 4, codebook = pqModel(s, dir))
       .orderBy(col("query_id"), col("rank"))
@@ -2467,14 +2467,16 @@ object DataQueries {
 
   /** Full IVF-PQ search: coarse cells prune WHICH rows are scored,
     * PQ codes compress WHAT is read to score them — the production ANN
-    * shape; see [[Similarity.ivfPqTopKTrained]]. Same query split, coarse
-    * quantizer, and PQ codebook stand-ins as e02/e04/e05. */
+    * shape; see [[Similarity.ivfPqTopK]]. Same query split and trained
+    * coarse quantizer as e02; the PQ codebook is the id-named stand-in
+    * rows `ivfCentroids`, resolved by [[Similarity.codebookOf]]. */
   val e07IvfPq: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfPqTopKTrained(emb, emb.filter(col("vec_id") % 100 === 0),
+    Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") % 100 === 0),
         "embedding", "vec_id", k = 5,
-        cellCodebook = kmModel(s, dir).centroids, nProbe = 2,
-        m = 4, pqCentroidIds = ivfCentroids)
+        cellCodebook = kmModel(s, dir).centroids, nProbe = 2, m = 4,
+        pqCodebook = Similarity.codebookOf(emb, "embedding", "vec_id",
+          ivfCentroids))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2496,7 +2498,7 @@ object DataQueries {
         initRounds = kmRounds, oversample = kmL, iters = kmIters,
         seedTag = "ks")
     }
-    Similarity.cellAssignmentsTrained(emb, "embedding", "vec_id", m.centroids)
+    Similarity.cellAssignments(emb, "embedding", "vec_id", m.centroids)
       .withColumn("cell_size", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("cell")))
       .select(col("id").as("vec_id"), col("cell"), col("cell_size"))
@@ -2574,12 +2576,12 @@ object DataQueries {
   /** FULLY-trained IVF-PQ (e09): coarse cells from the e08 spherical
     * fit, PQ sub-codebooks from 4 independent L2 k-means fits on the
     * 16-dim sub-vector slices, packed into full-width codebook rows —
-    * see [[Similarity.ivfPqTopKFullyTrained]] / [[KMeans
+    * see [[Similarity.ivfPqTopK]] / [[KMeans
     * .fitPqCodebook]]. Same query split as e02/e05/e07. The oracle
     * replays BOTH quantizer trainings (5 k-means blocks total). */
   val e09IvfPqTrained: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfPqTopKFullyTrained(emb, emb.filter(col("vec_id") % 100 === 0),
+    Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") % 100 === 0),
         "embedding", "vec_id", k = 5,
         cellCodebook = kmModel(s, dir).centroids, nProbe = 2,
         m = 4, pqCodebook = pqModel(s, dir))
@@ -2636,7 +2638,7 @@ object DataQueries {
     val rot = Opq.rotate(Catalog(s, dir).embeddings, "embedding", "vec_id",
       opqReflectors)
     val (cells, pqCb) = opqModel(s, dir)
-    Similarity.ivfPqTopKFullyTrained(rot, rot.filter(col("id") % 100 === 0),
+    Similarity.ivfPqTopK(rot, rot.filter(col("id") % 100 === 0),
         "v", "id", k = 5, cellCodebook = cells.centroids, nProbe = 2,
         m = 4, pqCodebook = pqCb)
       .orderBy(col("query_id"), col("rank"))
@@ -2920,11 +2922,11 @@ object DataQueries {
 
   /** SemDeDup-style semantic dedup: within-cluster cosine >= 0.3 drops
     * the higher id, keeper = lowest-id over-threshold cluster-mate; see
-    * [[Dedup.semanticDedupTrained]]. Clusters are the TRAINED e08
+    * [[Dedup.semanticDedup]]. Clusters are the TRAINED e08
     * k-means fit — the published SemDeDup contract (the paper clusters
     * with k-means, not named rows); same quantizer as e02/e07's IVF. */
   val d13SemanticDedup: Q = (s, dir) =>
-    Dedup.semanticDedupTrained(Catalog(s, dir).embeddings, "embedding",
+    Dedup.semanticDedup(Catalog(s, dir).embeddings, "embedding",
         "vec_id", codebook = kmModel(s, dir).centroids, threshold = 0.3)
       .orderBy(col("drop_id"))
 
@@ -2956,7 +2958,7 @@ object DataQueries {
   val d21SemanticDedupDelta: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
     val cb = kmBaseModel(s, dir).centroids
-    val state = Similarity.cellAssignmentsTrained(
+    val state = Similarity.cellAssignments(
       emb.filter(pmod(col("vec_id"), lit(3L)) =!= 0),
       "embedding", "vec_id", cb)
     Dedup.semanticDedupDelta(
@@ -3036,7 +3038,7 @@ object DataQueries {
     * Lloyd iterations → final assignment), so the trained quantizer is
     * hash-verified end-to-end, not rows-only. */
   val e08KmeansCells: Q = (s, dir) =>
-    Similarity.cellAssignmentsTrained(Catalog(s, dir).embeddings,
+    Similarity.cellAssignments(Catalog(s, dir).embeddings,
         "embedding", "vec_id", kmModel(s, dir).centroids)
       .withColumn("cell_size", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("cell")))
@@ -5050,7 +5052,7 @@ object DataQueries {
     // synthetic ids live at doc_id + 1e6: a corpus whose REAL ids reach
     // 1e6 would silently collide and corrupt the containment outputs
     // (ADVICE r14) — fail loudly instead, per row, inside the plan (the
-    // collectCodebook fail-loud contract; the oracle is only defined on
+    // codebookOf fail-loud contract; the oracle is only defined on
     // corpora where the transform is injective, which the driver
     // corpora satisfy). The guard rides the union branch that scans
     // EVERY document exactly once — assert_true returns NULL on pass,
@@ -5294,7 +5296,7 @@ object DataQueries {
         col("doc_id") * lit(chunkIdBase) + col("chunk_idx"))
       .withColumn("emb", graft.multimodal.Multimodal
         .stubTextEmbedding(col("chunk_text"), 64))
-    Similarity.cellAssignmentsTrained(chunks, "emb", "chunk_id",
+    Similarity.cellAssignments(chunks, "emb", "chunk_id",
         kmModel(s, dir).centroids)
       .select(expr(s"CAST(id div $chunkIdBase AS BIGINT)").as("doc_id"),
         pmod(col("id"), lit(chunkIdBase)).as("chunk_idx"), col("cell"))
@@ -5528,7 +5530,7 @@ object DataQueries {
     * and the oracle replays the k-means fit, the assignment, AND the
     * draw. */
   val d19ClusterSample: Q = (s, dir) => {
-    val assigned = Similarity.cellAssignmentsTrained(
+    val assigned = Similarity.cellAssignments(
       Catalog(s, dir).embeddings, "embedding", "vec_id",
       kmModel(s, dir).centroids)
     val h = md5Long(col("id").cast(StringType))

@@ -297,7 +297,7 @@ object EventStreams {
                            root: String,
                            trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val assigned = graft.operators.Similarity.cellAssignmentsTrained(
+    val assigned = graft.operators.Similarity.cellAssignments(
       ragChunkEmbed(docs, textCol, idCol, dim),
       "emb", "chunk_id", codebook)
       .withColumnRenamed("id", "chunk_id")

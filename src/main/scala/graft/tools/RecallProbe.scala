@@ -51,7 +51,7 @@ object RecallProbe {
             m = 4, kCent = 16, dim = 64, alternations = a)
           val d = Opq.distortion(df, "embedding", "vec_id", rP, cbP, m = 4)
           val rotP = Opq.rotateDense(df, "embedding", "vec_id", rP)
-          val hits = Similarity.pqAdcTopKTrained(rotP,
+          val hits = Similarity.pqAdcTopK(rotP,
               rotP.filter(col("id") % 20 === 0), "v", "id", 5, 4, cbP)
             .select("query_id", "id").collect()
             .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -99,16 +99,18 @@ object RecallProbe {
     val km = KMeans.fit(emb, "embedding", "vec_id", k = 16, dim = 64)
     val cbT = KMeans.fitPqCodebook(emb, "embedding", "vec_id",
       m = 4, kCent = 16, dim = 64)
+    // the id-named stand-in quantizer: corpus rows 0..15 as a codebook
+    val cbS = Similarity.codebookOf(emb, "embedding", "vec_id", 0L until 16L)
     val rStand = rc(hits(Similarity.ivfTopK(
-      emb, q, "embedding", "vec_id", 5, 0L until 16L, nProbe = 2)))
-    val rTrain = rc(hits(Similarity.ivfTopKTrained(
+      emb, q, "embedding", "vec_id", 5, cbS, nProbe = 2)))
+    val rTrain = rc(hits(Similarity.ivfTopK(
       emb, q, "embedding", "vec_id", 5, km.centroids, nProbe = 2)))
     // PQ trio WITHOUT cell pruning (pqAdcTopK) so the number isolates
     // CODEBOOK quality — the thing e04-vs-e09-vs-e11 differ in; the
     // IVF-PQ composition re-adds the probe-pruning loss measured above
     val rPqStand = rl(hits(Similarity.pqAdcTopK(
-      emb, q, "embedding", "vec_id", 5, 4, 0L until 16L)))
-    val rPqTrain = rl(hits(Similarity.pqAdcTopKTrained(
+      emb, q, "embedding", "vec_id", 5, 4, cbS)))
+    val rPqTrain = rl(hits(Similarity.pqAdcTopK(
       emb, q, "embedding", "vec_id", 5, 4, cbT)))
 
     // e11: trained PQ over the OPQ-rotated corpus (ids unchanged;
@@ -117,7 +119,7 @@ object RecallProbe {
     val rot = Opq.rotate(emb, "embedding", "vec_id", Opq.reflectors(4, 64))
     val rotQ = rot.filter(col("id") % 20 === 0)
     val cbR = KMeans.fitPqCodebook(rot, "v", "id", m = 4, kCent = 16, dim = 64)
-    val rOpq = rl(hits(Similarity.pqAdcTopKTrained(
+    val rOpq = rl(hits(Similarity.pqAdcTopK(
       rot, rotQ, "v", "id", 5, 4, cbR)))
 
     // parametric OPQ (Opq.fitParametric — the declared-divergence
@@ -126,7 +128,7 @@ object RecallProbe {
     val (rP, cbPm) = Opq.fitParametric(emb, "embedding", "vec_id",
       m = 4, kCent = 16, dim = 64, alternations = 2)
     val rotP = Opq.rotateDense(emb, "embedding", "vec_id", rP)
-    val rOpqP = rl(hits(Similarity.pqAdcTopKTrained(
+    val rOpqP = rl(hits(Similarity.pqAdcTopK(
       rotP, rotP.filter(col("id") % 20 === 0), "v", "id", 5, 4, cbPm)))
 
     println(f"[recall] $tag%-12s recall@5: ivf-vs-cos stand-in=$rStand%.3f " +
@@ -141,11 +143,11 @@ object RecallProbe {
     // the default l=32 yields ~62 candidates for k=64 and fails loudly
     val cbT64 = KMeans.fitPqCodebook(emb, "embedding", "vec_id",
       m = 4, kCent = 64, dim = 64, oversample = 128)
-    val r64Train = rl(hits(Similarity.pqAdcTopKTrained(
+    val r64Train = rl(hits(Similarity.pqAdcTopK(
       emb, q, "embedding", "vec_id", 5, 4, cbT64)))
     val cbR64 = KMeans.fitPqCodebook(rot, "v", "id",
       m = 4, kCent = 64, dim = 64, oversample = 128)
-    val r64Opq = rl(hits(Similarity.pqAdcTopKTrained(
+    val r64Opq = rl(hits(Similarity.pqAdcTopK(
       rot, rotQ, "v", "id", 5, 4, cbR64)))
     println(f"[recall] $tag%-12s recall@5 kcent=64: " +
       f"pq-trained=$r64Train%.3f opq=$r64Opq%.3f (exact=1.0)")
@@ -155,7 +157,7 @@ object RecallProbe {
     // codes encode — raw vectors vs residuals (IVFADC's claim: with
     // inter-cell structure factored into the cell id, the same PQ
     // budget resolves local detail)
-    val rIvfRaw = rl(hits(Similarity.ivfPqTopKFullyTrained(
+    val rIvfRaw = rl(hits(Similarity.ivfPqTopK(
       emb, q, "embedding", "vec_id", 5, km.centroids, 2, 4, cbT)))
     val residDf = Similarity.cellResiduals(emb, "embedding", "vec_id",
       km.centroids)

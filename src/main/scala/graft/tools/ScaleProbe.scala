@@ -230,7 +230,8 @@ object ScaleProbe {
     stage("pq_encode") {
       t(s"pq_encode_${embBig.count()}vecs")(
         graft.operators.Similarity.pqEncode(embBig, "embedding", "vec_id",
-          m = 4, centroidIds = (0L until 16L)))
+          m = 4, codebook = graft.operators.Similarity.codebookOf(embBig,
+            "embedding", "vec_id", 0L until 16L)))
     }
 
     // d05 audit-budget flatness: the exact all-pairs recall audit
@@ -258,14 +259,17 @@ object ScaleProbe {
       // SemDeDup's contract is k growing to hold cell size ~constant
       t(s"semantic_dedup_${embBig.count()}vecs_${16 * replicas}cells")(
         Dedup.semanticDedup(embBig, "embedding", "vec_id",
-          centroidIds = (0L until (16L * replicas)), threshold = 0.3))
+          codebook = graft.operators.Similarity.codebookOf(embBig,
+            "embedding", "vec_id", 0L until (16L * replicas)),
+          threshold = 0.3))
     }
     stage("pq_rerank") {
       t(s"pq_rerank_${embBig.count()}vecs")(
         graft.operators.Similarity.pqRerankTopK(embBig,
           embBig.filter(pmod(col("vec_id"), lit(10000L)) === 0),
           "embedding", "vec_id", k = 5, shortlist = 20,
-          m = 4, centroidIds = (0L until 16L)))
+          m = 4, codebook = graft.operators.Similarity.codebookOf(embBig,
+            "embedding", "vec_id", 0L until 16L)))
     }
 
     // round-8 compression family: SQ8 is stats (one bounded agg) +
@@ -326,9 +330,10 @@ object ScaleProbe {
         (r.getLong(0), r.getDouble(1))
       }
       val (trMax, trMean) = cellStats(graft.operators.Similarity
-        .cellAssignmentsTrained(embBig, "embedding", "vec_id", kmModel.centroids))
+        .cellAssignments(embBig, "embedding", "vec_id", kmModel.centroids))
       val (siMax, siMean) = cellStats(graft.operators.Similarity
-        .cellAssignments(embBig, "embedding", "vec_id", 0L until 16L))
+        .cellAssignments(embBig, "embedding", "vec_id", graft.operators
+          .Similarity.codebookOf(embBig, "embedding", "vec_id", 0L until 16L)))
       println(f"[scale] kmeans_cells: trained max=$trMax mean=$trMean%.1f | " +
         f"stand-in max=$siMax mean=$siMean%.1f (lower max = better balance)")
     }
@@ -618,14 +623,14 @@ object ScaleProbe {
       val cb = graft.operators.KMeans.fit(emb, "embedding", "vec_id",
         k = 16, dim = 64, initRounds = 2, oversample = 32, iters = 3).centroids
       val state = prepared(s"/tmp/graft_scale_semstate_${replicas}x") {
-        graft.operators.Similarity.cellAssignmentsTrained(
+        graft.operators.Similarity.cellAssignments(
           embBig, "embedding", "vec_id", cb)
       }
       val batch = emb.select((col("vec_id") + lit(900000000L)).as("vec_id"),
         col("embedding"))
       t(s"semantic_delta_${replicas}x")(Dedup.semanticDedupDelta(
         batch, state, "embedding", "vec_id", cb, threshold = 0.3))
-      t(s"semantic_full_${replicas}x")(Dedup.semanticDedupTrained(
+      t(s"semantic_full_${replicas}x")(Dedup.semanticDedup(
         embBig.unionByName(batch), "embedding", "vec_id", cb,
         threshold = 0.3))
     }
@@ -671,7 +676,7 @@ object ScaleProbe {
             lit(graft.operators.TextAnalysis.ChunkIdBase) + col("chunk_idx"))
           .withColumn("emb", graft.multimodal.Multimodal
             .stubTextEmbedding(col("chunk_text"), 64))
-        graft.operators.Similarity.cellAssignmentsTrained(
+        graft.operators.Similarity.cellAssignments(
           ch, "emb", "chunk_id", cb)
       }
     }

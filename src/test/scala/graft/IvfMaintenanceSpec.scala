@@ -37,7 +37,7 @@ class IvfMaintenanceSpec extends SparkSpec {
       df.select(col("id"), col("cell")).as[(Long, Long)]
         .collect().sortBy(_._1).toSeq
     val served = canon(IvfMaintenance.serving(spark, dir))
-    val rebuilt = canon(Similarity.cellAssignmentsTrained(
+    val rebuilt = canon(Similarity.cellAssignments(
       vecs(0 until 200).filter(!col("vec_id").isin(dead: _*)),
       "embedding", "vec_id", codebook))
     assert(served === rebuilt, "maintained index must equal a rebuild")
@@ -48,7 +48,7 @@ class IvfMaintenanceSpec extends SparkSpec {
     val a = Similarity.ivfTopKOnAssigned(IvfMaintenance.serving(spark, dir),
         queries, "embedding", "vec_id", k = 3, codebook, nProbe = 2)
       .select("rank", "id").as[(Long, Long)].collect().toSeq.sorted
-    val b = Similarity.ivfTopKTrained(
+    val b = Similarity.ivfTopK(
         vecs(0 until 200).filter(!col("vec_id").isin(dead: _*)),
         queries, "embedding", "vec_id", k = 3, codebook, nProbe = 2)
       .select("rank", "id").as[(Long, Long)].collect().toSeq.sorted
@@ -92,7 +92,7 @@ class IvfMaintenanceSpec extends SparkSpec {
       df.select(col("id"), col("cell")).as[(Long, Long)]
         .collect().sortBy(_._1).toSeq
     assert(canon(IvfMaintenance.serving(spark, dir)) ===
-      canon(Similarity.cellAssignmentsTrained(vecs(0 until 200),
+      canon(Similarity.cellAssignments(vecs(0 until 200),
         "embedding", "vec_id", codebook)))
   }
 
@@ -117,7 +117,7 @@ class IvfMaintenanceSpec extends SparkSpec {
       df.select(col("id"), col("cell")).as[(Long, Long)]
         .collect().sortBy(_._1).toSeq
     assert(canon(IvfMaintenance.serving(spark, dir)) ===
-      canon(Similarity.cellAssignmentsTrained(
+      canon(Similarity.cellAssignments(
         vecs(0 until 200).filter(!col("vec_id").isin(1L, 2L)),
         "embedding", "vec_id", codebook)))
   }
@@ -187,7 +187,7 @@ class IvfMaintenanceSpec extends SparkSpec {
       df.select(col("id"), col("cell")).as[(Long, Long)]
         .collect().sortBy(_._1).toSeq
     assert(canon(IvfMaintenance.servingVersioned(spark, root)) ===
-      canon(Similarity.cellAssignmentsTrained(
+      canon(Similarity.cellAssignments(
         vecs(0 until 200).filter(!col("vec_id").isin(dead: _*)),
         "embedding", "vec_id", codebook)))
     // the pinned reader still sees the pre-delete index mid-"compact"
@@ -205,7 +205,7 @@ class IvfMaintenanceSpec extends SparkSpec {
         IvfMaintenance.servingVersioned(spark, root),
         queries, "embedding", "vec_id", k = 3, codebook, nProbe = 2)
       .select("rank", "id").as[(Long, Long)].collect().toSeq.sorted
-    val b = Similarity.ivfTopKTrained(
+    val b = Similarity.ivfTopK(
         vecs(0 until 200).filter(!col("vec_id").isin(dead: _*)),
         queries, "embedding", "vec_id", k = 3, codebook, nProbe = 2)
       .select("rank", "id").as[(Long, Long)].collect().toSeq.sorted

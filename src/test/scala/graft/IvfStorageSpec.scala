@@ -16,14 +16,15 @@ class IvfStorageSpec extends SparkSpec {
       val angle = i * math.Pi / 200.0
       (i.toLong, Array(math.cos(angle).toFloat, math.sin(angle).toFloat))
     }.toDF("vec_id", "embedding")
-    val centroidIds = Seq(0L, 50L, 100L, 150L)
     val assigned = Similarity.cellAssignments(vecs, "embedding", "vec_id",
-      centroidIds)
+      Similarity.codebookOf(vecs, "embedding", "vec_id",
+        Seq(0L, 50L, 100L, 150L)))
     val dir = Files.createTempDirectory("graft-ivf").toString + "/corpus"
     assigned.write.partitionBy("cell").parquet(dir)
 
     val stored = spark.read.parquet(dir)
-    val probed = stored.filter(col("cell").isin(0L, 50L))
+    // probe the cells of centroids 0 and 50: codebook indices 0 and 1
+    val probed = stored.filter(col("cell").isin(0L, 1L))
     val plan = probed.queryExecution.executedPlan.toString
 
     // partition pruning happens at PLANNING: the scan's PartitionFilters
@@ -39,36 +40,7 @@ class IvfStorageSpec extends SparkSpec {
       s"expected 2 of 4 cell dirs scanned, got $scanned")
 
     // and the probed relation is exactly the cells' content
-    val expected = assigned.filter(col("cell").isin(0L, 50L)).count()
+    val expected = assigned.filter(col("cell").isin(0L, 1L)).count()
     assert(probed.count() == expected && expected > 0)
-  }
-
-  // e04/e05/e06 now run the TRAINED packed codebook (VERDICT r7
-  // next-#2); the id-named stand-in contract stays covered here: the
-  // trained entry points fed the stand-in codebook (corpus rows 0..15
-  // in id order) must reproduce the stand-in path exactly.
-  test("stand-in PQ path == trained path fed the stand-in codebook") {
-    val vecs = (0 until 120).map { i =>
-      (i.toLong, Array.tabulate(8)(d =>
-        (math.sin(i * 0.37 + d) * 0.8).toFloat))
-    }.toDF("vec_id", "embedding")
-    val ids = (0L until 16L)
-    val standinCb = vecs.filter(col("vec_id") < 16)
-      .orderBy("vec_id").collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val queries = vecs.filter(col("vec_id") % 40 === 0)
-
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(df.columns.map(col): _*).collect().toSeq
-    assert(rows(Similarity.pqEncode(vecs, "embedding", "vec_id", 4, ids)) ==
-      rows(Similarity.pqEncodeTrained(vecs, "embedding", "vec_id", 4, standinCb)))
-    assert(rows(Similarity.pqAdcTopK(vecs, queries, "embedding", "vec_id",
-        5, 4, ids)) ==
-      rows(Similarity.pqAdcTopKTrained(vecs, queries, "embedding", "vec_id",
-        5, 4, standinCb)))
-    assert(rows(Similarity.pqRerankTopK(vecs, queries, "embedding", "vec_id",
-        3, 10, 4, ids)) ==
-      rows(Similarity.pqRerankTopKTrained(vecs, queries, "embedding", "vec_id",
-        3, 10, 4, standinCb)))
   }
 }

@@ -191,7 +191,7 @@ class OperatorsSpec extends SparkSpec {
   test("e24 curve: each width's prefix re-rank equals an independent search") {
     // the sweep's efficiency trick (one candidate scan at max width,
     // re-rank per prefix) must be RESULT-identical to running
-    // ivfTopKTrained separately at each width. The independent search
+    // ivfTopK separately at each width. The independent search
     // and its brute-force truth rank on round-6 float cosines while the
     // sweep ranks on the exact-integer key; the shipped corpus has no
     // cosine tie at 1e-6 between rank-k and rank-k+1 candidates, so the
@@ -204,7 +204,7 @@ class OperatorsSpec extends SparkSpec {
     val bf = Similarity.bruteForceTopK(emb, queries, "embedding", "vec_id", 5)
       .select($"query_id", $"id")
     Seq(1, 2, 4).zipWithIndex.foreach { case (np, i) =>
-      val ivf = Similarity.ivfTopKTrained(emb, queries, "embedding", "vec_id",
+      val ivf = Similarity.ivfTopK(emb, queries, "embedding", "vec_id",
         k = 5, codebook = cellCb, nProbe = np).select($"query_id", $"id")
       val hits = bf.join(ivf, Seq("query_id", "id"), "left_semi").count()
       assert(sweep(i).getLong(3) == hits,
@@ -261,7 +261,7 @@ class OperatorsSpec extends SparkSpec {
       assert(g3((np, r, 5L)) == g2((np, r, 5L)),
         s"(np=$np,r=$r,k=5): 3-D ${g3((np, r, 5L))} != 2-D ${g2((np, r, 5L))}")
     // every k=5 cell's hits equal the serving path composed from
-    // already-gated operators: ivfPqTopKFullyTrained at k=r IS the ADC
+    // already-gated operators: ivfPqTopK at k=r IS the ADC
     // shortlist; exact-key rerank of those ids to top-5, scored
     // against the exact-key brute force
     val bf = Similarity.bruteForceTopKExact(emb, queries, "embedding",
@@ -271,7 +271,7 @@ class OperatorsSpec extends SparkSpec {
     val qv = queries.select($"vec_id".as("query_id"),
       graft.functions.GraftFunctions.toDoubleArray($"embedding").as("qv"))
     for (np <- Seq(1, 2); r <- Seq(5, 10)) {
-      val shortlist = Similarity.ivfPqTopKFullyTrained(emb, queries,
+      val shortlist = Similarity.ivfPqTopK(emb, queries,
         "embedding", "vec_id", k = r, cellCodebook = cellCb, nProbe = np,
         m = 4, pqCodebook = pqCb).select($"query_id", $"id")
       val reranked = shortlist.join(vecs, Seq("id")).join(qv, Seq("query_id"))
@@ -460,10 +460,30 @@ class OperatorsSpec extends SparkSpec {
       (i.toLong, Array(math.cos(angle).toFloat, math.sin(angle).toFloat))
     }.toDF("vec_id", "embedding")
     val res = Similarity.ivfTopK(vecs, vecs.filter($"vec_id" === 20),
-      "embedding", "vec_id", k = 3, centroidIds = Seq(0L, 10L, 20L, 30L), nProbe = 2)
+      "embedding", "vec_id", k = 3, codebook = Similarity.codebookOf(vecs,
+        "embedding", "vec_id", Seq(0L, 10L, 20L, 30L)), nProbe = 2)
     val ids = res.collect().map(_.getLong(2)).toSeq
     assert(ids.length == 3)
     assert(ids.forall(i => math.abs(i - 20) <= 12), s"neighbors near query: $ids")
+  }
+
+  test("codebookOf: named rows in id order, once each; a missing or zero-norm id fails loudly") {
+    val vecs = Seq(
+      (3L, Array(0f, 1f)), (1L, Array(1f, 0f)),
+      (2L, Array(0f, 0f)), // zero-norm: never a centroid
+      (5L, Array(1f, 1f))).toDF("vec_id", "embedding")
+    def codebook(ids: Seq[Long]) =
+      Similarity.codebookOf(vecs, "embedding", "vec_id", ids)
+    // out of order and duplicated in, distinct rows in id order out
+    assert(codebook(Seq(5L, 1L, 5L, 3L)) ==
+      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 1.0)))
+    def failure(ids: Seq[Long]) =
+      intercept[IllegalArgumentException](codebook(ids)).getMessage
+    val missing = failure(Seq(1L, 4L, 1L))
+    assert(missing.contains("codebook resolved 1 of 2 centroid ids"), missing)
+    val degenerate = failure(Seq(3L, 2L, 1L))
+    assert(degenerate.contains("codebook resolved 2 of 3 centroid ids"),
+      degenerate)
   }
 
   test("pqEncode: centroids self-encode at zero error; codes pick the nearest sub-codebook row") {
@@ -474,8 +494,8 @@ class OperatorsSpec extends SparkSpec {
       (2L, Array(0.9f, 0.1f, 0.1f, 0.9f)), // sub0 near c0, sub1 near c1
       (3L, Array(0f, 1f, 1f, 0f))    // sub0 = c1's, sub1 = c0's
     ).toDF("vec_id", "embedding")
-    val out = Similarity.pqEncode(vecs, "embedding", "vec_id",
-      m = 2, centroidIds = Seq(0L, 1L))
+    val cb = Similarity.codebookOf(vecs, "embedding", "vec_id", Seq(0L, 1L))
+    val out = Similarity.pqEncode(vecs, "embedding", "vec_id", m = 2, cb)
       .orderBy("id").collect()
     def codes(r: org.apache.spark.sql.Row) = r.getSeq[Long](1).toSeq
     assert(codes(out(0)) == Seq(0L, 0L) && out(0).getDouble(2) == 0.0)
@@ -484,8 +504,8 @@ class OperatorsSpec extends SparkSpec {
     assert(out(2).getDouble(2) > 0.0, "off-centroid vector has reconstruction error")
     assert(codes(out(3)) == Seq(1L, 0L))
     // map-only: no Exchange in the encode plan
-    val plan = Similarity.pqEncode(vecs, "embedding", "vec_id",
-      m = 2, centroidIds = Seq(0L, 1L)).queryExecution.executedPlan.toString
+    val plan = Similarity.pqEncode(vecs, "embedding", "vec_id", m = 2, cb)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
   }
 
@@ -499,7 +519,8 @@ class OperatorsSpec extends SparkSpec {
         math.cos(angle + 1).toFloat, math.sin(angle + 1).toFloat))
     }.toDF("vec_id", "embedding")
     val res = Similarity.pqAdcTopK(vecs, vecs.filter($"vec_id" === 7),
-      "embedding", "vec_id", k = 5, m = 2, centroidIds = Seq(0L, 10L, 20L, 30L))
+      "embedding", "vec_id", k = 5, m = 2, codebook = Similarity.codebookOf(
+        vecs, "embedding", "vec_id", Seq(0L, 10L, 20L, 30L)))
       .collect()
     assert(res.length == 5)
     assert(res.map(_.getLong(1)).toSeq == (1L to 5L), "ranks dense from 1")
@@ -520,7 +541,8 @@ class OperatorsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val q = vecs.filter($"vec_id" === 3)
     val rer = Similarity.pqRerankTopK(vecs, q, "embedding", "vec_id",
-        k = 5, shortlist = 29, m = 2, centroidIds = Seq(0L, 8L, 15L, 23L))
+        k = 5, shortlist = 29, m = 2, codebook = Similarity.codebookOf(
+          vecs, "embedding", "vec_id", Seq(0L, 8L, 15L, 23L)))
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).sortBy(_._1)
     val bf = Similarity.bruteForceTopK(vecs, q, "embedding", "vec_id", k = 5)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).sortBy(_._1)
@@ -576,7 +598,8 @@ class OperatorsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val res = Similarity.pqRerankTopK(vecs, vecs.filter($"vec_id" === 7),
         "embedding", "vec_id", k = 5, shortlist = 15, m = 2,
-        centroidIds = Seq(0L, 10L, 20L, 30L))
+        codebook = Similarity.codebookOf(vecs, "embedding", "vec_id",
+          Seq(0L, 10L, 20L, 30L)))
       .collect()
     assert(res.length == 5)
     assert(res.map(_.getLong(1)).toSeq.sorted == (1L to 5L))
@@ -591,7 +614,8 @@ class OperatorsSpec extends SparkSpec {
         math.cos(angle * 3).toFloat, math.sin(angle * 3).toFloat))
     }.toDF("vec_id", "embedding")
     val cents = Seq(0L, 30L, 60L, 90L)
-    val got = Similarity.cellAssignments(vecs, "embedding", "vec_id", cents)
+    val got = Similarity.cellAssignments(vecs, "embedding", "vec_id",
+      Similarity.codebookOf(vecs, "embedding", "vec_id", cents))
     // zero Exchange: assignment must stay inside the scan stage
     val plan = got.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"assignment must be map-only:\n$plan")
@@ -609,12 +633,13 @@ class OperatorsSpec extends SparkSpec {
           .partitionBy("id").orderBy(col("d").desc, col("cell").asc)))
       .filter(col("rn") === 1)
       .select(col("id"), col("cell"))
-    val gotM = got.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    // cells are codebook indices 0..k-1, in centroid-id order
+    val gotM = got.collect().map(r => r.getLong(0) -> cents(r.getLong(2).toInt)).toMap
     val refM = ref.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotM == refM, "compiled argmax must equal the window formulation")
   }
 
-  test("ivfPqTopKTrained: all probes == plain ADC; one probe stays in the query's cell") {
+  test("ivfPqTopK: all probes == plain ADC; one probe stays in the query's cell") {
     def ring(i: Int) = {
       val angle = i * 2 * math.Pi / 40.0
       Array(math.cos(angle).toFloat, math.sin(angle).toFloat,
@@ -630,18 +655,19 @@ class OperatorsSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
         .sortBy(_._1).toSeq
     // nProbe = all cells -> candidate set = whole corpus = pqAdcTopK
-    val full = rows(Similarity.ivfPqTopKTrained(vecs, q, "embedding",
+    val pqCodebook = Similarity.codebookOf(vecs, "embedding", "vec_id", cells)
+    val full = rows(Similarity.ivfPqTopK(vecs, q, "embedding",
       "vec_id", k = 5, cellCodebook = cellCodebook, nProbe = 4, m = 2,
-      pqCentroidIds = cells))
+      pqCodebook = pqCodebook))
     val adc = rows(Similarity.pqAdcTopK(vecs, q, "embedding", "vec_id",
-      k = 5, m = 2, centroidIds = cells))
+      k = 5, m = 2, codebook = pqCodebook))
     assert(full == adc, "all-probe IVF-PQ must equal plain ADC")
     // nProbe = 1 -> results confined to the query's own cell
-    val one = Similarity.ivfPqTopKTrained(vecs, q, "embedding", "vec_id",
+    val one = Similarity.ivfPqTopK(vecs, q, "embedding", "vec_id",
       k = 5, cellCodebook = cellCodebook, nProbe = 1, m = 2,
-      pqCentroidIds = cells)
+      pqCodebook = pqCodebook)
       .collect().map(_.getLong(2)).toSet
-    val asg = Similarity.cellAssignmentsTrained(vecs, "embedding", "vec_id",
+    val asg = Similarity.cellAssignments(vecs, "embedding", "vec_id",
         cellCodebook)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val qCell = asg(7L)
@@ -662,7 +688,8 @@ class OperatorsSpec extends SparkSpec {
       20L -> Array(0f, 0f, 1f, 0f)) // alone in whichever cell it lands
     val vecs = rows.toDF("vec_id", "embedding")
     val out = Dedup.semanticDedup(vecs, "embedding", "vec_id",
-        centroidIds = Seq(0L, 10L), threshold = 0.9)
+        codebook = Similarity.codebookOf(vecs, "embedding", "vec_id",
+          Seq(0L, 10L)), threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     // cluster A: 1 and 2 drop with keeper 0; cluster B: 11 drops with
     // keeper 10; the outlier survives (no over-threshold cluster-mate)
@@ -683,7 +710,7 @@ class OperatorsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val base = vecs.filter(pmod(col("vec_id"), lit(3L)) =!= 0)
     val batch = vecs.filter(pmod(col("vec_id"), lit(3L)) === 0)
-    val state = graft.operators.Similarity.cellAssignmentsTrained(
+    val state = graft.operators.Similarity.cellAssignments(
       base, "embedding", "vec_id", codebook)
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -698,7 +725,7 @@ class OperatorsSpec extends SparkSpec {
     val remapped = vecs.withColumn("vec_id",
       when(pmod(col("vec_id"), lit(3L)) === 0, col("vec_id") + off)
         .otherwise(col("vec_id")))
-    val global = canon(Dedup.semanticDedupTrained(remapped, "embedding",
+    val global = canon(Dedup.semanticDedup(remapped, "embedding",
         "vec_id", codebook, threshold = 0.9)
       .filter(col("drop_id") >= off)
       .withColumn("drop_id", col("drop_id") - off)
@@ -716,7 +743,7 @@ class OperatorsSpec extends SparkSpec {
     // near-duplicate has a LARGER id — under the old rule it silently
     // survived; it must drop with the state vector as keeper
     val codebook = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
-    val state = graft.operators.Similarity.cellAssignmentsTrained(
+    val state = graft.operators.Similarity.cellAssignments(
       Seq((5L, Array(1f, 0f)), (9L, Array(0f, 1f)))
         .toDF("vec_id", "embedding"),
       "embedding", "vec_id", codebook)
@@ -796,7 +823,8 @@ class OperatorsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     def run(df: org.apache.spark.sql.DataFrame) =
       Dedup.semanticDedup(df, "embedding", "vec_id",
-          centroidIds = Seq(0L, 3L, 6L, 9L), threshold = 0.8)
+          codebook = Similarity.codebookOf(vecs, "embedding", "vec_id",
+            Seq(0L, 3L, 6L, 9L)), threshold = 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).sortBy(_._1).toSeq
     assert(run(vecs) == run(vecs.repartition(7)))

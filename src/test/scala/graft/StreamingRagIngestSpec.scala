@@ -27,7 +27,7 @@ class StreamingRagIngestSpec extends SparkSpec {
     (0 until 60).map(t => s"w${i}_$t").mkString(" ") // 60 toks -> 2 chunks
 
   private def batchIndex(docs: org.apache.spark.sql.DataFrame) =
-    graft.operators.Similarity.cellAssignmentsTrained(
+    graft.operators.Similarity.cellAssignments(
       graft.operators.TextAnalysis
         .tokenWindowChunks(docs, "text", "doc_id", 64, 48)
         .withColumn("chunk_id",

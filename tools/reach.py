@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Reachability report for the Scala sources: the surface nothing uses.
 
-Prints two lists, each with its count:
+Prints three lists, each with its count:
 
   1. spec-only public defs: public `def`/`val` members of an object,
      class or trait in src/main that nothing in src/main or
@@ -16,6 +16,11 @@ Prints two lists, each with its count:
      (of a def or a class constructor in src/main) that no call site in
      src/main, src/test or perfbench/harness passes, by position or by
      name.
+  3. tool-only public defs: public defs outside graft/tools that list 1
+     counts as reached, but only from the graft/tools mains, directly or
+     through other such defs (list 1's scan with every use inside
+     graft/tools discounted). A probe main keeps such a def alive
+     without any query, model or pipeline needing it.
 
 The scan is textual (comments and string literals blanked, interpolated
 expressions kept) and errs towards "reached": a name several defs share
@@ -30,6 +35,7 @@ import re
 import sys
 
 MAIN = "src/main/scala"
+TOOLS = "src/main/scala/graft/tools/"
 CALLER_DIRS = ("src/main/scala", "perfbench/harness")
 ALL_DIRS = ("src/main/scala", "src/test/scala", "perfbench/harness")
 
@@ -362,22 +368,26 @@ def main():
     # declared capabilities are roots: kept, and what they call is reached
     cands = [d for d in defs if d.public and not d.override
              and not d.declared and d.name not in ENTRY_NAMES]
-    dead = set()
+    def fixed_point(cands, dead, ignored):
+        """Grow `dead` by every candidate whose uses all fall in its own
+        body, in a dead def, or in a caller path `ignored` accepts."""
+        def inside_dead(rel, off):
+            return any(d.path == rel and d.start <= off < d.end for d in dead)
 
-    def inside_dead(rel, off):
-        return any(d.path == rel and d.start <= off < d.end for d in dead)
+        changed = True
+        while changed:
+            changed = False
+            for d in cands:
+                if d in dead:
+                    continue
+                if all((rel == d.path and d.start <= off < d.end)
+                       or ignored(rel) or inside_dead(rel, off)
+                       for rel, off in uses.get(d.name, [])):
+                    dead.add(d)
+                    changed = True
+        return dead
 
-    changed = True
-    while changed:
-        changed = False
-        for d in cands:
-            if d in dead:
-                continue
-            if all((rel == d.path and d.start <= off < d.end)
-                   or inside_dead(rel, off)
-                   for rel, off in uses.get(d.name, [])):
-                dead.add(d)
-                changed = True
+    dead = fixed_point(cands, set(), lambda rel: False)
     spec_only = sorted(dead, key=lambda d: (d.path, d.line))
     print("spec-only public defs: %d" % len(spec_only))
     for d in spec_only:
@@ -427,6 +437,17 @@ def main():
     print("never-passed defaulted parameters: %d" % len(never))
     for path, line, owner, pname in sorted(set(never)):
         print("  %s:%d  %s(%s)" % (path, line, owner, pname))
+
+    # ---- 3. tool-only public defs: list 1 with graft/tools discounted ----
+    non_tool = [d for d in cands if not d.path.startswith(TOOLS)]
+    unreached = fixed_point(non_tool, set(dead),
+                            lambda rel: rel.startswith(TOOLS))
+    tool_only = sorted((d for d in unreached if d not in dead),
+                       key=lambda d: (d.path, d.line))
+    print("tool-only public defs (reached only from graft/tools mains): %d"
+          % len(tool_only))
+    for d in tool_only:
+        print("  %s:%d  %s %s" % (d.path, d.line, d.kw, d.name))
 
 
 if __name__ == "__main__":
