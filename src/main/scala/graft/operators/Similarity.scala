@@ -223,37 +223,42 @@ object Similarity {
         col("v"), codebook, codebook.indices.map(_.toLong)))
       .select(col("id"), col("v"), col("cell"))
 
-  /** THE probe ranking — (query_id, qv, cell, prn ≤ maxNp): per query,
-    * the `maxNp` nearest coarse cells, ranked by the EXACT-INTEGER
-    * cosine key ([[VectorExpressions.intCosKey]] over the
-    * micro-quantized query and centroid vectors) with lowest-cell
-    * tiebreak — the e02/e07 oracles pin these exact semantics, so every
-    * probe consumer (the point searches, the operating sweep and grids,
-    * and the [[ivfProbeTable]] diagnostic gate) derives from this ONE
-    * formulation. r15 (VERDICT r14 next-#2): probe ranking was the LAST
-    * cross-engine float comparison in the IVF gate family — the only
-    * stage exercised at probe ranks 3-8 by no green query — and now
-    * ranks on the same integer key the brute-force/candidate rankings
-    * adopted in r14; a NULL key (degenerate micro-quantized vector) is
-    * filtered on BOTH engines, the established exact-key contract.
-    * Centroids come from the codebook (`cents`, see [[centsOf]]), NOT
-    * from the assignment output: a centroid whose self-similarity key
-    * ties another centroid can be ASSIGNED to the other's cell, which
-    * would drop a probe cell and silently diverge from the oracle. The
-    * query side is the bounded batch, so its window exchange carries
-    * |queries|×k rows. */
+  /** THE probe ranking — (query_id, qv, cell, prn): every (query, cell)
+    * row of the codebook, `prn` the cell's rank among the query's
+    * coarse cells by the EXACT-INTEGER cosine key
+    * ([[VectorExpressions.intCosKey]] over the micro-quantized query
+    * and centroid vectors) with lowest-cell tiebreak, NULL where the
+    * key is NULL (a degenerate micro-quantized vector — the
+    * established exact-key contract, filtered on BOTH engines). The
+    * e02/e07 oracles pin these exact semantics, so every probe
+    * consumer (the point searches, the operating sweep and grids, the
+    * grids' probe counts and the [[ivfProbeTable]] diagnostic gate)
+    * derives from this ONE formulation. r15 (VERDICT r14 next-#2):
+    * probe ranking was the LAST cross-engine float comparison in the
+    * IVF gate family and now ranks on the same integer key as the
+    * brute-force/candidate rankings. Centroids come from the codebook
+    * (`cents`, see [[centsOf]]), NOT from the assignment output: a
+    * centroid whose self-similarity key ties another centroid can be
+    * ASSIGNED to the other's cell, which would drop a probe cell and
+    * silently diverge from the oracle. The query side is the bounded
+    * batch, so its window exchange carries |queries|×k rows. */
+  private def probeRanks(cents: DataFrame, queries: DataFrame,
+                         vecCol: String, idCol: String): DataFrame =
+    queryVecs(queries, vecCol, idCol).crossJoin(broadcast(cents))
+      .withColumn("d", VectorExpressions.intCosKey(col("qv"), col("cv")))
+      // DESC sorts NULL keys last, so they take no rank a key holds
+      .withColumn("prn", when(col("d").isNotNull, row_number().over(
+        Window.partitionBy("query_id").orderBy(col("d").desc,
+          col("qcell").asc))))
+      .select(col("query_id"), col("qv"), col("qcell").as("cell"),
+        col("prn"))
+
+  /** The probe relation (query_id, qv, cell, prn ≤ maxNp): per query,
+    * its `maxNp` nearest coarse cells under [[probeRanks]]. */
   private def probeRanked(cents: DataFrame, queries: DataFrame,
                           vecCol: String, idCol: String,
-                          maxNp: Int): DataFrame = {
-    val q = queryVecs(queries, vecCol, idCol)
-    q.crossJoin(broadcast(cents))
-      .withColumn("d", VectorExpressions.intCosKey(col("qv"), col("cv")))
-      .filter(col("d").isNotNull)
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d").desc, col("qcell").asc)))
-      .filter(col("prn") <= maxNp)
-      .select(col("query_id"), col("qv"), col("qcell").as("cell"), col("prn"))
-  }
+                          maxNp: Int): DataFrame =
+    probeRanks(cents, queries, vecCol, idCol).filter(col("prn") <= maxNp)
 
   /** DIAGNOSTIC GATE (VERDICT r14 next-#1c): the max-width probe
     * relation itself as a checked query — (query_id, prn, cell). The
@@ -324,13 +329,13 @@ object Similarity {
     * the e08 gate proves on its own, replays round-6 floats.
     *
     * Efficiency contract — one lazy plan, not |grid| searches, and
-    * building it fires no Spark job: ONE candidate scan at max(nProbes)
+    * building it fires no Spark job: ONE candidate pass at max(nProbes)
     * (candidates carry their cell's probe rank, and the candidates
     * under n probes are a subset of those under the max), ONE
     * brute-force baseline at max(ks) (rank kept), ONE window pass
     * giving each candidate its rank under every probe width, and ONE
-    * grouped aggregate producing every (nProbe, k) hit count; the
-    * denominators are one-row aggregates [[gridTail]] joins in. The
+    * grouped aggregate producing every (nProbe, k) hit and truth count
+    * ([[cellHits]]); the denominators are [[cellDenoms]]' one row. The
     * k axis costs no scan. `scanned_ppm` counts every vector in a
     * probed cell (the query's own vector is excluded only at scoring,
     * as in [[ivfTopK]]); n_bf(k) divides each recall, so a corpus
@@ -347,13 +352,8 @@ object Similarity {
       nProbes.distinct.size == nProbes.size, s"bad nProbes $nProbes")
     val spark = corpus.sparkSession
     val npSorted = nProbes.sorted
-    val assigned = cellAssignments(corpus, vecCol, idCol, codebook)
-    // probe ranking on the exact-integer key (r15) — THE shared
-    // [[probeRanked]] formulation across the family
-    val probes = probeRanked(centsOf(spark, codebook), queries, vecCol,
-      idCol, nProbes.max)
-    val cand = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
+    val cand = ivfCandidates(corpus, queries, vecCol, idCol, codebook,
+        nProbes.max, Nil)
       .withColumn("cos_r", VectorExpressions.intCosKey(col("v"), col("qv")))
       .filter(col("cos_r").isNotNull)
       .select(col("query_id"), col("id"), col("cos_r"), col("prn"))
@@ -366,17 +366,12 @@ object Similarity {
     val ranked = npSorted.foldLeft(cand)((df, np) =>
       df.withColumn(s"ivfr_$np",
         sum(when(col("prn") <= np, 1L).otherwise(0L)).over(kw)))
-    val bf = truthRanks(corpus, queries, vecCol, idCol, ks.max)
-    val hits = bf.join(ranked, Seq("query_id", "id"))
-      .withColumn("n_probe", explode(axisValues(nProbes)))
-      .withColumn("k", explode(axisValues(ks)))
-      .filter(col("prn") <= col("n_probe") && col("bfr") <= col("k") &&
-        atAxis("n_probe", npSorted, "ivfr_") <= col("k"))
-      .groupBy("n_probe", "k").agg(count(lit(1)).as("n_hits"))
+    val hits = cellHits(truthRanks(corpus, queries, vecCol, idCol, ks.max),
+      ranked, Nil, "n_probe", nProbes, "prn", "ivfr_", ks)
     gridTail(cellsOf(spark, "n_probe" -> axisValues(nProbes),
-        "k" -> axisValues(ks)), hits, probeScans(probes, assigned, nProbes),
-      gridDenoms(queryVecs(queries, vecCol, idCol), assigned, bf, ks), ks,
-      Seq("n_probe", "k"))
+        "k" -> axisValues(ks)), hits,
+      cellDenoms(corpus, None, queries, vecCol, idCol, codebook, nProbes),
+      atAxis("n_probe", npSorted, "scanned_"), Seq("n_probe", "k"))
   }
 
   /** The truth every operating grid measures against: the exact
@@ -409,49 +404,92 @@ object Similarity {
     values.map(v => when(col(axisCol) === v, col(s"$prefix$v")))
       .reduce(coalesce(_, _))
 
-  /** Every probe width's summed scan, (n_probe, scanned): per query,
-    * the populations of the cells its first n_probe probes name. */
-  private def probeScans(probes: DataFrame, assigned: DataFrame,
-                         nProbes: Seq[Int]): DataFrame =
-    probes.withColumn("n_probe", explode(axisValues(nProbes)))
-      .filter(col("prn") <= col("n_probe"))
-      .join(assigned.groupBy("cell").agg(count(lit(1)).as("cell_n")),
-        Seq("cell"))
-      .groupBy("n_probe").agg(sum(col("cell_n")).as("scanned"))
+  /** Every cell's truth and hit counts in ONE aggregate over the truth
+    * `bf` (query_id, id, bfr). A `ranked` answer hits a cell when its
+    * `gate` column is within the cell's value v on the `depth` axis and
+    * its rank at v (column `<prefix>v`) is within the cell's k; answers
+    * that hit no cell are cut first, so the join reads at most the
+    * truth's depth per query, v and key. Each truth row fans out over
+    * the `keys` axes, left-joins the answers on those keys plus
+    * (query_id, id), and fans out over `depth` and `ks`. Per cell:
+    * n_bf = its truth rows with bfr ≤ k, n_hits = those an answer hits.
+    * Cells without a truth row are absent; [[gridTail]] reads them
+    * as 0. */
+  private def cellHits(bf: DataFrame, ranked: DataFrame,
+                       keys: Seq[(String, Column)], depth: String,
+                       values: Seq[Int], gate: String, prefix: String,
+                       ks: Seq[Int]): DataFrame = {
+    val sorted = values.sorted
+    val answers = ranked.filter(sorted.map(v =>
+      col(gate) <= v && col(s"$prefix$v") <= ks.max).reduce(_ || _))
+    keys.foldLeft(bf)((df, a) => df.withColumn(a._1, explode(a._2)))
+      .join(answers, keys.map(_._1) ++ Seq("query_id", "id"), "left")
+      .withColumn(depth, explode(axisValues(values)))
+      .withColumn("k", explode(axisValues(ks)))
+      .filter(col("bfr") <= col("k"))
+      .groupBy((keys.map(_._1) ++ Seq(depth, "k")).map(col): _*)
+      .agg(count(lit(1)).as("n_bf"), count(when(col(gate) <= col(depth) &&
+        atAxis(depth, sorted, prefix) <= col("k"), 1)).as("n_hits"))
+  }
 
-  /** The one-row denominators of a grid: n_queries, n_corpus and, per
-    * depth k, the truth's row count `n_bf_<k>`. */
-  private def gridDenoms(q: DataFrame, corpusRows: DataFrame,
-                         bf: DataFrame, ks: Seq[Int]): DataFrame = {
-    val nBf = ks.map(k => count(when(col("bfr") <= k, 1)).as(s"n_bf_$k"))
-    q.agg(count(lit(1)).as("n_queries"))
-      .crossJoin(corpusRows.agg(count(lit(1)).as("n_corpus")))
-      .crossJoin(bf.agg(nBf.head, nBf.tail: _*))
+  /** The one-row denominators of a cell grid over `codebook`:
+    * `n_queries`, `n_corpus` (the whole clean corpus), `n_kept` (the
+    * part `keep`'s distinct ids name; all of it without `keep`) and,
+    * per probe width np, `scanned_<np>` — per query, the kept
+    * populations of the cells its first np probes name, summed. That
+    * is Σ_c pop(c)·uses(c, np), so ONE corpus pass counts every cell's
+    * kept population and ONE pass over the [[probeRanks]] counts how
+    * many queries probe each cell within each width. */
+  private def cellDenoms(corpus: DataFrame, keep: Option[DataFrame],
+                         queries: DataFrame, vecCol: String, idCol: String,
+                         codebook: Seq[Seq[Double]],
+                         nProbes: Seq[Int]): DataFrame = {
+    val cells = codebook.indices.map(_.toLong)
+    val vecs = corpusVecs(corpus, vecCol, idCol)
+    val kept = keep.fold(lit(true))(_ => col("kept"))
+    val pop = keep.fold(vecs)(kp => vecs.join(
+        kp.select(col(idCol).as("id"), lit(true).as("kept")), Seq("id"),
+        "left"))
+      .withColumn("cell", VectorExpressions.nearestCell(col("v"), codebook,
+        cells))
+      .agg(count(lit(1)).as("n_corpus"), count(when(kept, 1)).as("n_kept")
+        +: cells.map(c =>
+          count(when(kept && col("cell") === c, 1)).as(s"pop_$c")): _*)
+    // every query has exactly one probe-rank row per cell
+    val uses = probeRanks(centsOf(corpus.sparkSession, codebook), queries,
+        vecCol, idCol)
+      .agg(count(when(col("cell") === 0L, 1)).as("n_queries"),
+        (for (np <- nProbes; c <- cells) yield count(when(
+          col("cell") === c && col("prn") <= np, 1)).as(s"uses_${np}_$c")): _*)
+    pop.crossJoin(uses).select(col("n_queries") +: col("n_corpus") +:
+      col("n_kept") +: nProbes.map(np => cells.map(c =>
+        col(s"pop_$c") * col(s"uses_${np}_$c")).reduce(_ + _)
+        .as(s"scanned_$np")): _*)
   }
 
   /** THE cell tail of every operating grid — the one place the rule for
     * a cell's `n_bf`, `recall_ppm` and `scanned_ppm` lives. `cells`
     * lists every cell (its `axes`, `k` among them, plus any tag column);
-    * `hits` holds `n_hits` for the cells with at least one hit (the
-    * rest read 0); `scanned` holds the per-query scan summed over its
-    * key columns; `denoms` is [[gridDenoms]]' one row (plus whatever
-    * `tail` reads). recall_ppm = 10⁶·hits / n_bf(k), 0 when the truth is
-    * empty; scanned_ppm = 10⁶·scanned / (n_queries · n_corpus) in
-    * DECIMAL(38,0), since 10⁶·scanned and n_queries·n_corpus overflow a
-    * Long at the corpus scale these operators document (review r14).
-    * Output: the axes, n_queries, n_hits, n_bf, recall_ppm,
-    * scanned_ppm, then `tail`, sorted by `order`. */
+    * `hits` is [[cellHits]]' n_bf and n_hits for the cells with a truth
+    * row (the rest read 0); `denoms` is one row holding n_queries and
+    * n_corpus (plus whatever `tail` and `scanned` read); `scanned` is
+    * the cell's per-query scan, summed. recall_ppm = 10⁶·hits / n_bf,
+    * 0 when the truth is empty; scanned_ppm = 10⁶·scanned /
+    * (n_queries · n_corpus) in DECIMAL(38,0), since 10⁶·scanned and
+    * n_queries·n_corpus overflow a Long at the corpus scale these
+    * operators document (review r14). Output: the axes, n_queries,
+    * n_hits, n_bf, recall_ppm, scanned_ppm, then `tail`, sorted by
+    * `order`. */
   private def gridTail(cells: DataFrame, hits: DataFrame,
-                       scanned: DataFrame, denoms: DataFrame, ks: Seq[Int],
-                       axes: Seq[String], tail: Seq[Column] = Nil,
+                       denoms: DataFrame, scanned: Column, axes: Seq[String],
+                       tail: Seq[Column] = Nil,
                        order: Seq[Column] = Nil): DataFrame =
-    cells.join(broadcast(hits), cells.columns.toSeq, "left")
-      .join(broadcast(scanned), scanned.columns.toSeq.filter(_ != "scanned"),
-        "left")
+    cells.join(broadcast(hits),
+        hits.columns.toSeq.filterNot(Set("n_bf", "n_hits")), "left")
       .crossJoin(broadcast(denoms))
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-      .withColumn("n_bf", atAxis("k", ks, "n_bf_"))
-      .withColumn("scanned", coalesce(col("scanned"), lit(0L)))
+      .withColumn("n_bf", coalesce(col("n_bf"), lit(0L)))
+      .withColumn("scanned", coalesce(scanned, lit(0L)))
       .orderBy((if (order.isEmpty) axes.map(col) else order): _*)
       .select((axes.map(col) ++ Seq(col("n_queries"), col("n_hits"),
         col("n_bf"),
@@ -579,243 +617,246 @@ object Similarity {
     * so the packed form encodes identically to per-subspace codebooks),
     * or named corpus rows resolved by [[codebookOf]].
     *
-    * The candidates are the PQ grid's scorer ([[pqCandOf]]) at one
-    * probe width, so the point search and its operating grid cannot
-    * drift. Plan shape: map-only cell assignment + PQ encode in ONE
-    * projection over the corpus scan (both literal-codebook
-    * expressions, zero shuffle); probes + ADC tables are
-    * driver/broadcast-side (bounded query batch); the probe join is an
-    * equi-join on cell against a broadcast; top-k via per-query window.
-    * At warehouse scale the code table is written partitioned BY cell,
-    * so probes prune partitions at the scan (IvfStorageSpec pins that
-    * property). Output: (query_id, rank, id, adc_d2). */
+    * The candidates are the grids' candidate pass ([[ivfCandidates]])
+    * scored by the PQ family ([[IvfFamily.Pq]]) at one probe width, so
+    * the point search and its operating grid cannot drift. Plan shape:
+    * map-only cell assignment + PQ encode in ONE projection over the
+    * corpus scan (both literal-codebook expressions, zero shuffle);
+    * probes + ADC tables are driver/broadcast-side (bounded query
+    * batch); the probe join is an equi-join on cell against a
+    * broadcast; top-k via per-query window. At warehouse scale the code
+    * table is written partitioned BY cell, so probes prune partitions
+    * at the scan (IvfStorageSpec pins that property). Output:
+    * (query_id, rank, id, adc_d2). */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
                 vecCol: String, idCol: String, k: Int,
                 cellCodebook: Seq[Seq[Double]], nProbe: Int,
                 m: Int, pqCodebook: Seq[Seq[Double]]): DataFrame =
     ivfCandTopK(corpus, queries, vecCol, idCol, k, cellCodebook, nProbe,
-      pqCandOf(queries, vecCol, idCol, m, pqCodebook), "adc_d2")
+      IvfFamily.Pq(m, pqCodebook), "adc_d2")
 
-  /** The IVF point searches over a family scorer: the grids'
-    * candidates (query_id, id, score, prn) under ONE probe width,
-    * ranked score ASC by the shared tail, `score` renamed to the
-    * family's output column. */
+  /** The IVF point searches over one family: the candidate pass under
+    * ONE probe width, the rows the family scores ranked score ASC by
+    * the shared tail, the score named the family's output column. */
   private def ivfCandTopK(corpus: DataFrame, queries: DataFrame,
                           vecCol: String, idCol: String, k: Int,
                           cellCodebook: Seq[Seq[Double]], nProbe: Int,
-                          candOf: (DataFrame, DataFrame, DataFrame)
-                            => DataFrame,
-                          scoreAs: String): DataFrame = {
-    val probes = probeRanked(centsOf(corpus.sparkSession, cellCodebook),
-        queries, vecCol, idCol, nProbe)
-      .select(col("query_id"), col("cell"), col("prn"))
-    topK(candOf(cellAssignments(corpus, vecCol, idCol, cellCodebook),
-        probes, queryVecs(queries, vecCol, idCol)),
-      col("score").asc, k, col("score").as(scoreAs))
+                          family: IvfFamily, scoreAs: String): DataFrame = {
+    val score = col(family.tag)
+    topK(ivfCandidates(corpus, queries, vecCol, idCol, cellCodebook, nProbe,
+        Seq(family)).filter(score.isNotNull),
+      score.asc, k, score.as(scoreAs))
   }
 
-  /** 3-D IVF-PQ OPERATING GRID — (nProbe × ADC-shortlist depth × k)
-    * JOINTLY (VERDICT r14 next-#7 / missing-#3): the table a real
-    * deployment actually tunes from. Probe width buys candidate
-    * coverage, shortlist depth buys back ADC mis-ordering, result depth
-    * k trades recall against serving cost, and all three interact
-    * (deep shortlists only pay at wide k; narrow probes cap recall
-    * regardless of r). Per cell: recall@k of [ADC-rank shortlist of
-    * depth r → EXACT rerank → top-k] against the exact brute force,
-    * next to the scanned corpus fraction. The final rerank ranks on
-    * the exact-integer cosine key and the baseline is
-    * [[bruteForceTopKExact]] (the [[ivfOperatingSweepExact]] gate
-    * contract); ADC scoring keeps the round-6 float replay the
-    * e05/e07/e09 gates have proven. A single-k call is the (nProbe × r)
-    * surface at fixed k (e26 reads it off `ks = Seq(5)`).
-    *
-    * Efficiency contract (see [[operatingGrid3dMulti]]): one lazy
-    * plan — ONE coded candidate scan at max(nProbes), ONE ADC window
-    * over every probe width cutting each shortlist to max(rs), the TRUE
-    * vectors attached only to those bounded shortlists (nq·max(rs) rows
-    * per width — the rerank never touches the corpus), ONE exact-key
-    * window ranking them under every depth, and ONE grouped aggregate
-    * emitting every (np, r, k) hit count. The k axis costs no scan.
-    * The baseline is taken at max(ks), rank kept, so each k divides by
-    * its own depth-k baseline row count (the ADVICE-r13 denominator,
-    * per depth). */
-  def ivfPqOperatingGrid3d(corpus: DataFrame, queries: DataFrame,
-                           vecCol: String, idCol: String, ks: Seq[Int],
-                           cellCodebook: Seq[Seq[Double]], m: Int,
-                           pqCodebook: Seq[Seq[Double]],
-                           rs: Seq[Int], nProbes: Seq[Int]): DataFrame =
-    operatingGrid3dOn(corpus, queries, vecCol, idCol, ks, cellCodebook,
-      rs, nProbes, pqCandOf(queries, vecCol, idCol, m, pqCodebook))
+  /** A quantizer FAMILY of the IVF cell searches and grids: the
+    * approximate scorer of one candidate row of [[ivfCandidates]]
+    * (score ASC = more promising, round-6dp or exact, id tiebreak —
+    * the established shortlist ordering contract). A family adds code
+    * columns to the corpus assignment projection (from the row's `v`,
+    * once per corpus row), columns to the broadcast probe relation
+    * (from the query's `qv`), and scores a joined row from the two;
+    * a NULL score drops the row from that family only. */
+  sealed trait IvfFamily {
+    /** The family's `family` value in a grid's rows. */
+    def tag: String
+    private[Similarity] def codes: Seq[Column]
+    private[Similarity] def onProbes(probes: DataFrame, queries: DataFrame,
+                                     vecCol: String,
+                                     idCol: String): DataFrame
+    private[Similarity] def score: Column
+  }
 
-  // the PQ/ADC candidate scorer — shared by the standalone PQ grid and
-  // the multi-family union, so the two paths cannot drift
-  private def pqCandOf(queries: DataFrame, vecCol: String, idCol: String,
-                       m: Int, pqCodebook: Seq[Seq[Double]])
-      : (DataFrame, DataFrame, DataFrame) => DataFrame =
-    (assigned, probes, _) => {
-      val coded = assigned
-        .select(col("id"), col("cell"),
-          VectorExpressions.pqEncode(col("v"), pqCodebook, m).as("st"))
-        .filter(col("st").isNotNull)
-        .select(col("id"), col("cell"), col("st.codes").as("codes"))
-      val tables = adcTables(queries, vecCol, idCol, pqCodebook, m)
-      coded
-        .join(broadcast(probes.join(tables, Seq("query_id"))), Seq("cell"))
-        .filter(col("id") =!= col("query_id"))
-        .withColumn("score", round(adcScore(m, pqCodebook.length), 6))
-        .select(col("query_id"), col("id"), col("score"), col("prn"))
+  object IvfFamily {
+    /** PQ/ADC: the row's `m` sub-codes of the packed `codebook`
+      * ([[pqEncode]]'s codes — a row that does not encode drops),
+      * scored round-6dp by the query's ADC table ([[adcTables]]: the
+      * bounded driver-side query collect, the one job building a PQ
+      * search fires). */
+    final case class Pq(m: Int, codebook: Seq[Seq[Double]])
+        extends IvfFamily {
+      def tag: String = "ivf_pq"
+      private[Similarity] def codes: Seq[Column] = Seq(
+        VectorExpressions.pqEncode(col("v"), codebook, m)
+          .getField("codes").as("codes"))
+      private[Similarity] def onProbes(probes: DataFrame, queries: DataFrame,
+                                       vecCol: String,
+                                       idCol: String): DataFrame =
+        probes.join(adcTables(queries, vecCol, idCol, codebook, m),
+          Seq("query_id"))
+      private[Similarity] def score: Column =
+        round(adcScore(m, codebook.length), 6)
     }
 
-  /** IVF-SQ8 OPERATING GRID — [[ivfPqOperatingGrid3d]]'s (nProbe ×
-    * shortlist × k) surface with the candidate stage scored by the SQ8
-    * reconstruction ([[sqTopK]]'s asymmetric L2 over [[sqDecodeCol]])
-    * instead of PQ/ADC tables: the scalar-quantizer FAMILY's operating
-    * points, feeding the cross-family serving auto-choice the same way
-    * e27 feeds e28. Plan shape is identical (shared skeleton below —
-    * ONE coded candidate scan at max(nProbes), bounded shortlists,
-    * exact-integer-key re-rank, one grouped hit aggregate), so the
-    * two families' cost/recall cells are directly comparable: same
-    * probe stage, same truth, same scanned_ppm denominator — only the
-    * approximate scorer differs, which is exactly the axis a family
-    * choice must isolate. */
-  def ivfSqOperatingGrid3d(corpus: DataFrame, queries: DataFrame,
-                           vecCol: String, idCol: String, ks: Seq[Int],
-                           cellCodebook: Seq[Seq[Double]],
-                           mins: Seq[Double], scales: Seq[Double],
-                           rs: Seq[Int], nProbes: Seq[Int]): DataFrame =
-    operatingGrid3dOn(corpus, queries, vecCol, idCol, ks, cellCodebook,
-      rs, nProbes, sqCandOf(mins, scales))
-
-  // the SQ8-reconstruction candidate scorer — shared like [[pqCandOf]]
-  private def sqCandOf(mins: Seq[Double], scales: Seq[Double])
-      : (DataFrame, DataFrame, DataFrame) => DataFrame =
-    (assigned, probes, q) => {
-      val decoded = assigned
-        .select(col("id"), col("cell"),
-          sqEncodeCol(col("v"), mins, scales).as("codes"))
-        .select(col("id"), col("cell"),
-          sqDecodeCol(col("codes"), mins, scales).as("rv"))
-      decoded.join(broadcast(probes), Seq("cell"))
-        .filter(col("id") =!= col("query_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .withColumn("score", round(sqD2, 6))
-        .select(col("query_id"), col("id"), col("score"), col("prn"))
+    /** SQ8: [[sqTopK]]'s asymmetric squared L2 from the query to the
+      * row's 8-bit reconstruction ([[sqDecodeCol]]), round-6dp. */
+    final case class Sq8(mins: Seq[Double], scales: Seq[Double])
+        extends IvfFamily {
+      def tag: String = "ivf_sq8"
+      private[Similarity] def codes: Seq[Column] = Seq(sqDecodeCol(
+        sqEncodeCol(col("v"), mins, scales), mins, scales).as("rv"))
+      private[Similarity] def onProbes(probes: DataFrame, queries: DataFrame,
+                                       vecCol: String,
+                                       idCol: String): DataFrame = probes
+      private[Similarity] def score: Column = round(sqD2, 6)
     }
 
-  /** IVF-BQ OPERATING GRID — the binary-quantization FAMILY's
-    * (nProbe × shortlist × k) surface (VERDICT r16 next-#2): e14's
-    * 1-bit sign codes + hamming shortlist ranking plugged into the
-    * same skeleton as the PQ/SQ8 grids, so the modern vector-store
-    * default (32× compression, XOR+popcount candidate scan, exact
-    * rescore of the bounded shortlist) competes in the cross-family
-    * choice on the identical probe stage, truth, and scanned-ppm
-    * denominator. Hamming is round-free integer arithmetic — the one
-    * family whose approximate scorer has zero float-replay risk. */
-  def ivfBqOperatingGrid3d(corpus: DataFrame, queries: DataFrame,
-                           vecCol: String, idCol: String, ks: Seq[Int],
-                           cellCodebook: Seq[Seq[Double]],
-                           thresholds: Seq[Double],
-                           rs: Seq[Int], nProbes: Seq[Int]): DataFrame =
-    operatingGrid3dOn(corpus, queries, vecCol, idCol, ks, cellCodebook,
-      rs, nProbes, bqCandOf(thresholds))
-
-  // the 1-bit sign-code candidate scorer — [[bqTopK]]'s hamming ranking
-  // in the skeleton's score slot: corpus codes pack per 32-dim word in
-  // the assignment projection, query codes broadcast, score =
-  // XOR+popcount (exact integers; the double cast only satisfies the
-  // skeleton's column type, it cannot reorder ties)
-  private def bqCandOf(thresholds: Seq[Double])
-      : (DataFrame, DataFrame, DataFrame) => DataFrame =
-    (assigned, probes, q) => {
-      val nw = (thresholds.length + 31) / 32
-      val cc = assigned.select(col("id") +: col("cell") +:
+    /** BQ: [[bqTopK]]'s hamming distance of the 1-bit sign codes, packed
+      * per 32-dim word on both sides — XOR+popcount, exact integers
+      * (the double cast only gives the families one score type; it
+      * cannot reorder ties). */
+    final case class Bq(thresholds: Seq[Double]) extends IvfFamily {
+      def tag: String = "ivf_bq"
+      private[Similarity] def codes: Seq[Column] =
         bqWords(col("v"), thresholds).zipWithIndex.map {
-          case (w, i) => w.as(s"cw$i") }: _*)
-      val qc = q.select(col("query_id") +:
-        bqWords(col("qv"), thresholds).zipWithIndex.map {
-          case (w, i) => w.as(s"qw$i") }: _*)
-      val hamming = (0 until nw).map(i =>
-        bit_count(col(s"cw$i").bitwiseXOR(col(s"qw$i")))).reduce(_ + _)
-      cc.join(broadcast(probes), Seq("cell"))
-        .filter(col("id") =!= col("query_id"))
-        .join(broadcast(qc), Seq("query_id"))
-        .withColumn("score", hamming.cast(DoubleType))
-        .select(col("query_id"), col("id"), col("score"), col("prn"))
+          case (w, i) => w.as(s"cw$i") }
+      private[Similarity] def onProbes(probes: DataFrame, queries: DataFrame,
+                                       vecCol: String,
+                                       idCol: String): DataFrame =
+        probes.select(col("*") +: bqWords(col("qv"), thresholds)
+          .zipWithIndex.map { case (w, i) => w.as(s"qw$i") }: _*)
+      private[Similarity] def score: Column =
+        (0 until (thresholds.length + 31) / 32).map(i =>
+          bit_count(col(s"cw$i").bitwiseXOR(col(s"qw$i"))))
+          .reduce(_ + _).cast(DoubleType)
     }
+  }
 
-  /** The PQ, SQ8, and BQ family grids over ONE shared substrate (see
-    * [[operatingGrid3dMulti]]) — the relation the cross-family choices
-    * (e31/e32/e33) consume: identical cells to running the three
-    * standalone grids, with the probe stage, truth job, and baselines
-    * computed once instead of three times. The OPQ family cannot join
-    * the substrate (rotated corpus, its own quantizers) and unions in
-    * from its standalone grid. Output: grid columns + `family` in
-    * {"ivf_pq", "ivf_sq8", "ivf_bq"}. */
-  def ivfFamilyOperatingGrids(corpus: DataFrame, queries: DataFrame,
-                              vecCol: String, idCol: String, ks: Seq[Int],
-                              cellCodebook: Seq[Seq[Double]], m: Int,
-                              pqCodebook: Seq[Seq[Double]],
-                              mins: Seq[Double], scales: Seq[Double],
-                              bqThresholds: Seq[Double],
-                              rs: Seq[Int], nProbes: Seq[Int]): DataFrame =
-    operatingGrid3dMulti(corpus, None, queries, vecCol, idCol, ks,
-      cellCodebook, rs, nProbes, Seq(
-        "ivf_pq" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook),
-        "ivf_sq8" -> sqCandOf(mins, scales),
-        "ivf_bq" -> bqCandOf(bqThresholds)))
+  /** THE IVF candidate pass every cell search shares: the corpus
+    * assigned to its cells with every family's codes in ONE projection,
+    * ONE equi-join on cell against the broadcast probe relation at
+    * `maxNp` (each query's `qv` plus every family's query columns), and
+    * every family's score as a column of the one candidate row, named
+    * by its tag. The query's own vector is no candidate. A row
+    * NearestCell cannot place (NULL cell) joins no probe; the join
+    * reads it as cell -1, so the planner infers no NOT NULL filter
+    * that would evaluate NearestCell a second time per corpus row.
+    * Output: (query_id, id, prn, v, qv, <tag>…). */
+  private def ivfCandidates(corpus: DataFrame, queries: DataFrame,
+                            vecCol: String, idCol: String,
+                            cellCodebook: Seq[Seq[Double]], maxNp: Int,
+                            families: Seq[IvfFamily]): DataFrame = {
+    val probes = families.foldLeft(probeRanked(
+        centsOf(corpus.sparkSession, cellCodebook), queries, vecCol, idCol,
+        maxNp))((p, f) => f.onProbes(p, queries, vecCol, idCol))
+    cellAssignments(corpus, vecCol, idCol, cellCodebook)
+      .select(Seq(col("id"), col("v"),
+        coalesce(col("cell"), lit(-1L)).as("cell")) ++
+        families.flatMap(_.codes): _*)
+      .join(broadcast(probes), Seq("cell"))
+      .filter(col("id") =!= col("query_id"))
+      .select(Seq(col("query_id"), col("id"), col("prn"), col("v"),
+        col("qv")) ++ families.map(f => f.score.as(f.tag)): _*)
+  }
 
-  /** FILTERED IVF-PQ OPERATING GRID (VERDICT r16 next-#4): the e27
-    * grid measured UNDER a metadata predicate — e17's pre-filter
-    * contract (the corpus side is cut to `keepIds` BEFORE the probe
-    * join; the index, trained on the FULL corpus, is shared). Two
-    * filtered-serving semantics differ from the unfiltered grid and
-    * both matter to the layout decision:
-    *  - the brute-force truth is the FILTERED search's truth (exact
-    *    top-k over the survivors — post-filtering an unfiltered top-k
-    *    loses recall and would hash-mismatch);
-    *  - `scanned_ppm` keeps the FULL corpus as its denominator, so a
-    *    cell's cost is comparable to the predicate-pruned exact scan,
-    *    whose cost is exactly `selectivity_ppm` (appended as a
-    *    constant column). At 100 TB this is the real filtered-serving
-    *    question: an index cell is only worth building if it scans
-    *    fewer rows than the pruned flat scan the predicate already
-    *    buys. */
-  def ivfPqFilteredOperatingGrid3d(corpus: DataFrame, keepIds: DataFrame,
-                                   queries: DataFrame, vecCol: String,
-                                   idCol: String, ks: Seq[Int],
-                                   cellCodebook: Seq[Seq[Double]], m: Int,
-                                   pqCodebook: Seq[Seq[Double]],
-                                   rs: Seq[Int], nProbes: Seq[Int])
-      : DataFrame =
-    operatingGrid3dMulti(corpus, Some(keepIds), queries, vecCol, idCol, ks,
-        cellCodebook, rs, nProbes,
-        Seq("" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook)))
-      .drop("family")
-
-  /** FILTERED MULTI-FAMILY GRIDS — [[ivfPqFilteredOperatingGrid3d]]'s
-    * pre-filter contract over [[operatingGrid3dMulti]]'s shared
-    * substrate: the PQ, SQ8, and BQ families measured UNDER the
-    * predicate with ONE filtered probe stage and ONE filtered truth
-    * job, each cell charged against the FULL corpus (so every family's
-    * cells compare to the predicate-pruned exact scan at
-    * `selectivity_ppm`). The OPQ family is deliberately absent: its
-    * rotated corpus cannot join the substrate, and a filtered serving
-    * choice wants the families that share one index storage. Output:
-    * grid columns + `family` + `selectivity_ppm`. */
-  def ivfFilteredFamilyOperatingGrids(corpus: DataFrame, keepIds: DataFrame,
-                                      queries: DataFrame, vecCol: String,
-                                      idCol: String, ks: Seq[Int],
-                                      cellCodebook: Seq[Seq[Double]], m: Int,
-                                      pqCodebook: Seq[Seq[Double]],
-                                      mins: Seq[Double], scales: Seq[Double],
-                                      bqThresholds: Seq[Double],
-                                      rs: Seq[Int], nProbes: Seq[Int])
-      : DataFrame =
-    operatingGrid3dMulti(corpus, Some(keepIds), queries, vecCol, idCol, ks,
-      cellCodebook, rs, nProbes, Seq(
-        "ivf_pq" -> pqCandOf(queries, vecCol, idCol, m, pqCodebook),
-        "ivf_sq8" -> sqCandOf(mins, scales),
-        "ivf_bq" -> bqCandOf(bqThresholds)))
+  /** THE IVF OPERATING GRID — (nProbe × shortlist depth × k) JOINTLY,
+    * per quantizer family (VERDICT r14 next-#7 / missing-#3): the
+    * table a real deployment tunes from. Probe width buys candidate
+    * coverage, shortlist depth buys back the family scorer's
+    * mis-ordering, result depth k trades recall against serving cost,
+    * and all three interact (deep shortlists only pay at wide k;
+    * narrow probes cap recall regardless of r). Per cell and family:
+    * recall@k of [family-score shortlist of depth r → EXACT rerank →
+    * top-k] against the exact brute force, next to the scanned corpus
+    * fraction. The rerank ranks on the exact-integer cosine key and the
+    * truth is [[bruteForceTopKExact]] (the [[ivfOperatingSweepExact]]
+    * gate contract); the family scorers ([[IvfFamily]]) keep the
+    * replays their point-search gates prove (ADC e05/e07/e09, SQ8
+    * e13/e15, BQ e14 — hamming is the one scorer with no float-replay
+    * risk). The families share everything but the scorer — probe
+    * stage, truth, scanned-ppm denominator — so their cells compare
+    * like with like, the axis a family choice (e31/e32/e33) must
+    * isolate; a single-family call is that family's grid (e27/e29/e34;
+    * e26 reads the k = 5 slice of the PQ grid).
+    *
+    * With `keepIds` the grid is measured under the pre-filter contract
+    * (e17, VERDICT r16 next-#4): the corpus side is cut to `keepIds`
+    * BEFORE the probe join (the index, trained on the FULL corpus, is
+    * shared), and the truth is the FILTERED search's truth (exact
+    * top-k over the survivors — post-filtering an unfiltered top-k
+    * loses recall and would hash-mismatch). `scanned_ppm` keeps the
+    * FULL clean corpus as its denominator, so a cell's cost compares
+    * to the predicate-pruned exact scan, whose cost is exactly
+    * `selectivity_ppm` (appended as a constant column): at 100 TB an
+    * index cell is only worth building if it scans fewer rows than
+    * the pruned flat scan the predicate already buys. An empty corpus
+    * fails the action.
+    *
+    * Efficiency contract — one lazy plan; building it fires no Spark
+    * job beyond the PQ family's bounded ADC query collect
+    * ([[adcTables]]). ONE candidate pass at max(nProbes)
+    * ([[ivfCandidates]]) scores every family and the exact-integer key
+    * of each (query, row) pair in one projection, then explodes
+    * `family`; the probe widths join the candidates on prn ≤ n_probe,
+    * ONE window partitioned by (n_probe, family, query_id) cuts each
+    * shortlist to max(rs) by score (the rerank never re-reads the
+    * corpus), ONE exact-key window gives each shortlist row its rank
+    * under every depth (the depth-r rank of a row with ar ≤ r is the
+    * RUNNING COUNT of ar ≤ r rows in exact-key order), and ONE grouped
+    * aggregate emits every (n_probe, r, k, family) hit and truth count
+    * ([[cellHits]]). The truth is taken at max(ks), rank kept, so each
+    * k divides by its own depth-k count (the ADVICE-r13 denominator,
+    * per depth); the other denominators are [[cellDenoms]]' one row.
+    * The k axis costs no scan. Output: (n_probe, r_shortlist, k,
+    * n_queries, n_hits, n_bf, recall_ppm, scanned_ppm, family
+    * [, selectivity_ppm]), ordered by n_probe, family (in `families`
+    * order), r_shortlist, k; a single-family caller drops `family`. */
+  def ivfOperatingGrid(corpus: DataFrame, keepIds: Option[DataFrame],
+                       queries: DataFrame, vecCol: String, idCol: String,
+                       ks: Seq[Int], cellCodebook: Seq[Seq[Double]],
+                       families: Seq[IvfFamily],
+                       rs: Seq[Int], nProbes: Seq[Int]): DataFrame = {
+    require(ks.nonEmpty && ks.forall(_ >= 1) && ks.distinct.size == ks.size,
+      s"bad ks $ks")
+    require(rs.nonEmpty && rs.forall(_ >= ks.max) &&
+      rs.distinct.size == rs.size,
+      s"shortlist depths must be >= max k=${ks.max} and distinct, got $rs")
+    require(nProbes.nonEmpty && nProbes.forall(_ >= 1) &&
+      nProbes.distinct.size == nProbes.size, s"bad nProbes $nProbes")
+    val tags = families.map(_.tag)
+    require(tags.nonEmpty && tags.distinct.size == tags.size,
+      s"families must be distinct, got $tags")
+    val spark = corpus.sparkSession
+    val rsSorted = rs.sorted
+    val keep = keepIds.map(_.select(col(idCol)).distinct())
+    val searched = keep.fold(corpus)(kp => corpus.join(kp, Seq(idCol)))
+    val perCell = Seq(col("n_probe"), col("family"), col("query_id"))
+    val short = ivfCandidates(searched, queries, vecCol, idCol, cellCodebook,
+        nProbes.max, families)
+      .select(col("query_id"), col("id"), col("prn"),
+        VectorExpressions.intCosKey(col("v"), col("qv")).as("key"),
+        explode(array(families.map(f => struct(lit(f.tag).as("family"),
+          col(f.tag).as("score"))): _*)).as("fs"))
+      .filter(col("fs.score").isNotNull)
+      .withColumn("n_probe", explode(axisValues(nProbes)))
+      .filter(col("prn") <= col("n_probe"))
+      .select(col("n_probe"), col("fs.family").as("family"),
+        col("query_id"), col("id"), col("fs.score").as("score"), col("key"))
+      .withColumn("ar", row_number().over(Window.partitionBy(perCell: _*)
+        .orderBy(col("score").asc, col("id").asc)))
+      .filter(col("ar") <= rs.max && col("key").isNotNull)
+    val kw = Window.partitionBy(perCell: _*)
+      .orderBy(col("key").desc, col("id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranked = rsSorted.foldLeft(short)((df, r) =>
+      df.withColumn(s"frank_$r",
+        sum(when(col("ar") <= r, 1L).otherwise(0L)).over(kw)))
+    val hits = cellHits(truthRanks(searched, queries, vecCol, idCol, ks.max),
+      ranked, Seq("n_probe" -> axisValues(nProbes), "family" -> typedlit(tags)),
+      "r_shortlist", rs, "ar", "frank_", ks)
+    val selectivity = keep.map(_ => when(col("n_corpus") === 0L,
+        raise_error(lit("filtered grids need a non-empty corpus")))
+      .otherwise(expr("(1000000 * n_kept) div n_corpus"))
+      .as("selectivity_ppm")).toSeq
+    gridTail(cellsOf(spark, "n_probe" -> axisValues(nProbes),
+        "r_shortlist" -> axisValues(rs), "k" -> axisValues(ks),
+        "family" -> typedlit(tags)),
+      hits, cellDenoms(corpus, keep, queries, vecCol, idCol, cellCodebook,
+        nProbes),
+      atAxis("n_probe", nProbes.sorted, "scanned_"),
+      Seq("n_probe", "r_shortlist", "k"), col("family") +: selectivity,
+      Seq(col("n_probe"), array_position(typedlit(tags), col("family")),
+        col("r_shortlist"), col("k")))
+  }
 
   /** The CHEAPEST-MEETING-CELL decision window shared by every serving
     * auto-choice (e28/e31/e32/e33/e36 and the curation index card —
@@ -838,134 +879,6 @@ object Similarity {
         col("scanned_ppm").asc) ++ costTail): _*)
     cand.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-  }
-
-  /** The family-generic 3-D grid skeleton: everything in the e27
-    * contract EXCEPT the approximate candidate scorer, which `candOf`
-    * supplies as a (query_id, id, score, prn) relation built from the
-    * cell assignments, the probe table, and the skeleton's
-    * filtered query relation (query_id, qv) (score ASC = more
-    * promising, round-6dp, id tiebreak — the established shortlist
-    * ordering contract). */
-  private def operatingGrid3dOn(corpus: DataFrame, queries: DataFrame,
-                                vecCol: String, idCol: String, ks: Seq[Int],
-                                cellCodebook: Seq[Seq[Double]],
-                                rs: Seq[Int], nProbes: Seq[Int],
-                                candOf: (DataFrame, DataFrame, DataFrame)
-                                  => DataFrame)
-      : DataFrame =
-    operatingGrid3dMulti(corpus, None, queries, vecCol, idCol, ks,
-      cellCodebook, rs, nProbes, Seq("" -> candOf)).drop("family")
-
-  /** MULTI-FAMILY grid: the skeleton run for SEVERAL candidate scorers
-    * over ONE shared substrate — cell assignments, probe table,
-    * brute-force truth, per-k baselines, and per-probe-width scanned
-    * fractions are all family-independent, so they are planned once
-    * and every family's candidates, tagged with `family`, flow through
-    * one ranking and one aggregate (the corpus is scanned once per
-    * family for CODES, but the exchanges and the truth job are not
-    * repeated). e31/e32/e33 select over this union; the single-family
-    * operators delegate here with one entry, so the shared and
-    * standalone paths cannot diverge (and the e31 spec re-derives the
-    * choice from the standalone grids, pinning the equality).
-    *
-    * With `keepIds` the grid is measured under the pre-filter contract
-    * (e17): candidates and truth come from the corpus cut to `keepIds`,
-    * every cell's scan is charged against the FULL clean corpus (so it
-    * compares to the predicate-pruned exact scan), and
-    * `selectivity_ppm` — that scan's cost — is appended; an empty
-    * corpus fails the action.
-    *
-    * One lazy plan; building it fires no Spark job beyond the PQ
-    * scorer's bounded ADC query collect ([[adcTables]]). The probe
-    * widths join the candidates on prn ≤ n_probe, ONE window
-    * partitioned by (n_probe, family, query_id) cuts each shortlist to
-    * max(rs) by score, the TRUE vectors are attached only to those
-    * bounded shortlists (nq·max(rs) rows per cell — the rerank never
-    * touches the corpus), ONE exact-key window gives each shortlist row
-    * its rank under every depth (the depth-r rank of a row with ar ≤ r
-    * is the RUNNING COUNT of ar ≤ r rows in exact-key order), and ONE
-    * grouped aggregate emits every (n_probe, r, k, family) hit count.
-    * Output: the grid columns + `family` (+ `selectivity_ppm`). */
-  private def operatingGrid3dMulti(corpus: DataFrame,
-                                   keepIds: Option[DataFrame],
-                                   queries: DataFrame,
-                                   vecCol: String, idCol: String,
-                                   ks: Seq[Int],
-                                   cellCodebook: Seq[Seq[Double]],
-                                   rs: Seq[Int], nProbes: Seq[Int],
-                                   families: Seq[(String,
-                                     (DataFrame, DataFrame, DataFrame)
-                                       => DataFrame)]): DataFrame = {
-    require(ks.nonEmpty && ks.forall(_ >= 1) && ks.distinct.size == ks.size,
-      s"bad ks $ks")
-    require(rs.nonEmpty && rs.forall(_ >= ks.max) &&
-      rs.distinct.size == rs.size,
-      s"shortlist depths must be >= max k=${ks.max} and distinct, got $rs")
-    require(nProbes.nonEmpty && nProbes.forall(_ >= 1) &&
-      nProbes.distinct.size == nProbes.size, s"bad nProbes $nProbes")
-    require(families.nonEmpty &&
-      families.map(_._1).distinct.size == families.size,
-      s"family tags must be distinct, got ${families.map(_._1)}")
-    val spark = corpus.sparkSession
-    val rsSorted = rs.sorted
-    val searched = keepIds.fold(corpus)(kp => corpus.join(kp, Seq(idCol)))
-    val assigned = cellAssignments(searched, vecCol, idCol,
-      cellCodebook)
-    val q = queryVecs(queries, vecCol, idCol)
-    val probes = probeRanked(centsOf(spark, cellCodebook), queries, vecCol,
-        idCol, nProbes.max)
-      .select(col("query_id"), col("cell"), col("prn"))
-    val cand = families.map { case (fam, candOf) =>
-      candOf(assigned, probes, q).select(lit(fam).as("family"),
-        col("query_id"), col("id"), col("score"), col("prn"))
-    }.reduce(_ unionByName _)
-    val perCell = Seq(col("n_probe"), col("family"), col("query_id"))
-    val short = cand.withColumn("n_probe", explode(axisValues(nProbes)))
-      .filter(col("prn") <= col("n_probe"))
-      .withColumn("ar", row_number().over(Window.partitionBy(perCell: _*)
-        .orderBy(col("score").asc, col("id").asc)))
-      .filter(col("ar") <= rs.max)
-      .join(assigned.select(col("id"), col("v")), Seq("id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("key", VectorExpressions.intCosKey(col("v"), col("qv")))
-      .filter(col("key").isNotNull)
-      .select(col("n_probe"), col("family"), col("query_id"), col("id"),
-        col("ar"), col("key"))
-    val kw = Window.partitionBy(perCell: _*)
-      .orderBy(col("key").desc, col("id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = rsSorted.foldLeft(short)((df, r) =>
-      df.withColumn(s"frank_$r",
-        sum(when(col("ar") <= r, 1L).otherwise(0L)).over(kw)))
-    val bf = truthRanks(searched, queries, vecCol, idCol, ks.max)
-    val hits = bf.join(ranked, Seq("query_id", "id"))
-      .withColumn("r_shortlist", explode(axisValues(rs)))
-      .withColumn("k", explode(axisValues(ks)))
-      .filter(col("ar") <= col("r_shortlist") && col("bfr") <= col("k") &&
-        atAxis("r_shortlist", rsSorted, "frank_") <= col("k"))
-      .groupBy("n_probe", "r_shortlist", "k", "family")
-      .agg(count(lit(1)).as("n_hits"))
-    val tags = families.map(_._1)
-    val (denoms, selectivity) = keepIds match {
-      case None => (gridDenoms(q, assigned, bf, ks), Nil)
-      case Some(_) =>
-        val clean = corpus.select(toDoubleArray(col(vecCol)).as("v"))
-          .filter(nonDegenerate(col("v")))
-        (gridDenoms(q, clean, bf, ks)
-          .crossJoin(assigned.agg(count(lit(1)).as("n_kept"))),
-          Seq(when(col("n_corpus") === 0L,
-              raise_error(lit("filtered grids need a non-empty corpus")))
-            .otherwise(expr("(1000000 * n_kept) div n_corpus"))
-            .as("selectivity_ppm")))
-    }
-    gridTail(cellsOf(spark, "n_probe" -> axisValues(nProbes),
-        "r_shortlist" -> axisValues(rs), "k" -> axisValues(ks),
-        "family" -> typedlit(tags)),
-      hits, probeScans(probes, assigned, nProbes), denoms, ks,
-      Seq("n_probe", "r_shortlist", "k"), col("family") +: selectivity,
-      Seq(col("n_probe"), array_position(typedlit(tags), col("family")),
-        col("r_shortlist"), col("k")))
   }
 
   /** SQ8 scalar-quantizer stats: per-dimension (min, scale=max−min)
@@ -1040,9 +953,10 @@ object Similarity {
     * coarse cells prune WHICH rows are scored (e02's half), SQ8 codes
     * compress WHAT is read to score them (e13's half, 8x). Same plan
     * shape as [[ivfPqTopK]] with the SQ decode in place of ADC tables —
-    * the SQ8 grid's scorer ([[sqCandOf]]) at one probe width:
-    * assignment + encode in one map-only projection chain over the
-    * corpus scan, probes and queries broadcast, per-query window top-k;
+    * the candidate pass scored by the SQ8 family ([[IvfFamily.Sq8]]) at
+    * one probe width: assignment + encode in one map-only projection
+    * chain over the corpus scan, the probes (carrying each query's
+    * `qv`) broadcast, per-query window top-k;
     * at warehouse scale the code table is written partitioned BY cell
     * (IvfStorageSpec's contract). Output: (query_id, rank, id, sq_d2). */
   def ivfSqTopK(corpus: DataFrame, queries: DataFrame,
@@ -1050,7 +964,7 @@ object Similarity {
                 cellCodebook: Seq[Seq[Double]], nProbe: Int,
                 mins: Seq[Double], scales: Seq[Double]): DataFrame =
     ivfCandTopK(corpus, queries, vecCol, idCol, k, cellCodebook, nProbe,
-      sqCandOf(mins, scales), "sq_d2")
+      IvfFamily.Sq8(mins, scales), "sq_d2")
 
   /** Binary-quantization thresholds: per-dimension means on the exact
     * int64 grid (Σ round(vᵢ·10⁹) summed exactly, ONE double division —
@@ -1716,7 +1630,7 @@ object Similarity {
 
   /** NSW OPERATING GRID — [[nswBeamSearch]]'s (beamWidth × hops × k)
     * cells in the SAME row shape as the cell-family grids
-    * ([[ivfFamilyOperatingGrids]]): n_probe := beamWidth, r_shortlist
+    * ([[ivfOperatingGrid]]): n_probe := beamWidth, r_shortlist
     * := hops (the graph family's two knobs in the shared slots),
     * recall measured against the [[bruteForceTopKExact]] truth every
     * grid uses, and `scanned_ppm` = visited-node fraction — visited
@@ -1729,43 +1643,28 @@ object Similarity {
     * (deterministically), so the state after h hops is the rows
     * stamped ≤ h. The walk's max(hops) checkpoint cuts are the only
     * jobs building the grid fires; every cell then comes from one
-    * lazy plan — one running-count window and one grouped aggregate,
-    * bounded by the visited state, never corpus-shaped.
-    * Output: (n_probe, r_shortlist, k, n_queries, n_hits, n_bf,
-    * recall_ppm, scanned_ppm). */
-  def nswOperatingGrid(corpus: DataFrame, queries: DataFrame,
-                       vecCol: String, idCol: String, ks: Seq[Int],
-                       nBits: Int, bands: Int, degree: Int,
-                       beamWidths: Seq[Int], hopsList: Seq[Int]): DataFrame =
-    nswGridCore(corpus, None, queries, vecCol, idCol, ks, nBits, bands,
-      degree, beamWidths, hopsList)
-
-  /** FILTERED NSW GRID — [[nswOperatingGrid]] under a metadata
-    * predicate, with the production filtered-HNSW semantics
-    * (Qdrant/Weaviate-style): the walk NAVIGATES the full graph
-    * (non-matching nodes still route — deleting them would shatter
-    * connectivity exactly when the predicate is selective), and only
-    * the ANSWER set is restricted to the survivors. Accordingly:
+    * lazy plan — one running-count window and one grouped aggregate
+    * ([[cellHits]]), bounded by the visited state, never corpus-shaped.
+    *
+    * With `keepIds` the grid is measured under a metadata predicate
+    * with the production filtered-HNSW semantics (Qdrant/Weaviate-
+    * style): the walk NAVIGATES the full graph (non-matching nodes
+    * still route — deleting them would shatter connectivity exactly
+    * when the predicate is selective), and only the ANSWER set is
+    * restricted to the survivors. Accordingly:
     *  - the truth is the FILTERED exact top-k (e17's contract — post-
     *    filtering an unfiltered top-k loses recall);
     *  - `scanned_ppm` keeps the FULL corpus denominator and charges
     *    every visited node (non-matching visits still cost a distance
     *    computation), so cells compare to the predicate-pruned exact
-    *    scan at `selectivity_ppm` (appended, the e35 contract). */
-  def nswFilteredOperatingGrid(corpus: DataFrame, keepIds: DataFrame,
-                               queries: DataFrame,
-                               vecCol: String, idCol: String, ks: Seq[Int],
-                               nBits: Int, bands: Int, degree: Int,
-                               beamWidths: Seq[Int], hopsList: Seq[Int])
-      : DataFrame =
-    nswGridCore(corpus, Some(keepIds), queries, vecCol, idCol, ks, nBits,
-      bands, degree, beamWidths, hopsList)
-
-  private def nswGridCore(corpus: DataFrame, keepIds: Option[DataFrame],
-                          queries: DataFrame,
-                          vecCol: String, idCol: String, ks: Seq[Int],
-                          nBits: Int, bands: Int, degree: Int,
-                          beamWidths: Seq[Int], hopsList: Seq[Int])
+    *    scan at `selectivity_ppm` (appended, the e35 contract).
+    * Output: (n_probe, r_shortlist, k, n_queries, n_hits, n_bf,
+    * recall_ppm, scanned_ppm [, selectivity_ppm]). */
+  def nswOperatingGrid(corpus: DataFrame, keepIds: Option[DataFrame],
+                       queries: DataFrame,
+                       vecCol: String, idCol: String, ks: Seq[Int],
+                       nBits: Int, bands: Int, degree: Int,
+                       beamWidths: Seq[Int], hopsList: Seq[Int])
       : DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1) && ks.distinct.size == ks.size,
       s"bad ks $ks")
@@ -1785,16 +1684,16 @@ object Similarity {
           .repartition(keys.map(col): _*) // hop 1's window: no exchange
           .localCheckpoint())((state, h) =>
       nswHop(state, edges, e, q, keys, col("beam_width"), h))
+      .withColumnRenamed("beam_width", "n_probe")
     // answer-set restriction + the filtered truth (None = unfiltered)
     val keep = keepIds.map(_.select(col(idCol).as("id")).distinct())
     val bfCorpus = keep.fold(corpus)(kp =>
       corpus.join(kp.select(col("id").as(idCol)), Seq(idCol)))
-    val bf = truthRanks(bfCorpus, queries, vecCol, idCol, ks.max)
     // answers come from the visited SURVIVORS (filtered mode), ranked
     // AFTER the restriction, as a filtered serving endpoint would rank
     // what it may return; the rank after h hops is the RUNNING COUNT
     // of rows stamped ≤ h in score order (for exactly those rows)
-    val aw = Window.partitionBy(keys.map(col): _*)
+    val aw = Window.partitionBy("n_probe", "query_id")
       .orderBy(col("cos_u").desc, col("id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = hopsSorted.foldLeft(
@@ -1802,30 +1701,29 @@ object Similarity {
           .filter(col("id") =!= col("query_id")))((df, h) =>
       df.withColumn(s"rank_$h",
         sum(when(col("hop") <= h, 1L).otherwise(0L)).over(aw)))
-    val hits = bf.join(ranked, Seq("query_id", "id"))
-      .withColumn("r_shortlist", explode(axisValues(hopsList)))
-      .withColumn("k", explode(axisValues(ks)))
-      .filter(col("hop") <= col("r_shortlist") && col("bfr") <= col("k") &&
-        atAxis("r_shortlist", hopsSorted, "rank_") <= col("k"))
-      .groupBy(col("beam_width").as("n_probe"), col("r_shortlist"), col("k"))
-      .agg(count(lit(1)).as("n_hits"))
+    val hits = cellHits(truthRanks(bfCorpus, queries, vecCol, idCol, ks.max),
+      ranked, Seq("n_probe" -> axisValues(beamWidths)), "r_shortlist",
+      hopsList, "hop", "rank_", ks)
     // every visited node was scanned: the state after h hops
     val scanned = walked
       .withColumn("r_shortlist", explode(axisValues(hopsList)))
       .filter(col("hop") <= col("r_shortlist"))
-      .groupBy(col("beam_width").as("n_probe"), col("r_shortlist"))
+      .groupBy("n_probe", "r_shortlist")
       .agg(count(lit(1)).as("scanned"))
-    val (denoms, selectivity) = keep match {
-      case None => (gridDenoms(q, e, bf, ks), Nil)
-      case Some(kp) => (gridDenoms(q, e, bf, ks)
+    val denoms = q.agg(count(lit(1)).as("n_queries"))
+      .crossJoin(e.agg(count(lit(1)).as("n_corpus")))
+    val (withKept, selectivity) = keep match {
+      case None => (denoms, Nil)
+      case Some(kp) => (denoms
           .crossJoin(e.join(kp, Seq("id")).agg(count(lit(1)).as("n_kept"))),
         Seq(when(col("n_corpus") === 0L, lit(0L))
           .otherwise(expr("(1000000 * n_kept) div n_corpus"))
           .as("selectivity_ppm")))
     }
     gridTail(cellsOf(spark, "n_probe" -> axisValues(beamWidths),
-        "r_shortlist" -> axisValues(hopsList), "k" -> axisValues(ks)),
-      hits, scanned, denoms, ks, Seq("n_probe", "r_shortlist", "k"),
+        "r_shortlist" -> axisValues(hopsList), "k" -> axisValues(ks))
+        .join(broadcast(scanned), Seq("n_probe", "r_shortlist"), "left"),
+      hits, withKept, col("scanned"), Seq("n_probe", "r_shortlist", "k"),
       selectivity)
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.catalog.Catalog
 import graft.functions.GraftFunctions.{emailRe, fingerprint, ipv4Re, md5Long, phoneRe, qualityScore, tokenCount, tokens}
 import graft.operators.{Dedup, KMeans, Opq, Similarity, Stats, TextAnalysis}
+import graft.operators.Similarity.IvfFamily
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
@@ -966,8 +967,8 @@ object DataQueries {
   private val pqGridNps = Seq(1, 2, 4)
 
   /** IVF-PQ OPERATING GRID (e26 — the k = 5 slice of [[Similarity
-    * .ivfPqOperatingGrid3d]]): the PRODUCTION ANN path's two serving
-    * knobs measured jointly — probe width × ADC-shortlist depth at
+    * .ivfOperatingGrid]]'s PQ family): the PRODUCTION ANN path's two
+    * serving knobs measured jointly — probe width × ADC-shortlist depth at
     * fixed k=5, each cell's recall@5 of [lossy-ADC shortlist → exact
     * rerank → top-5] against the brute force, next to the scanned
     * fraction. The e06 rerank contract measured instead of assumed:
@@ -979,11 +980,12 @@ object DataQueries {
     * quantizer trainings + the ADC chain + every rerank window. */
   val e26PqGrid: Q = (s, dir) => {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfPqOperatingGrid3d(emb,
+    Similarity.ivfOperatingGrid(emb, None,
         emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = Seq(5), cellCodebook = kmModel(s, dir).centroids, m = 4,
-        pqCodebook = pqModel(s, dir), rs = pqGridRs, nProbes = pqGridNps)
-      .drop("k")
+        ks = Seq(5), cellCodebook = kmModel(s, dir).centroids,
+        families = Seq(IvfFamily.Pq(4, pqModel(s, dir))),
+        rs = pqGridRs, nProbes = pqGridNps)
+      .drop("family", "k")
       .orderBy(col("n_probe"), col("r_shortlist"))
   }
 
@@ -1077,7 +1079,7 @@ object DataQueries {
   private val grid3dNps = Seq(1, 4)
 
   /** 3-D IVF-PQ OPERATING GRID (e27 — [[Similarity
-    * .ivfPqOperatingGrid3d]]): e25's (nProbe × k) and e26's
+    * .ivfOperatingGrid]] with the PQ family): e25's (nProbe × k) and e26's
     * (nProbe × r) composed into the (nProbe × r × k) surface the
     * production ANN path actually tunes from (VERDICT r14 next-#7).
     * Gate contract: the e24/e25/e26 integer-key chain end-to-end —
@@ -1095,10 +1097,12 @@ object DataQueries {
   private def grid3dRelation(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfPqOperatingGrid3d(emb,
-      emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-      ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids, m = 4,
-      pqCodebook = pqModel(s, dir), rs = grid3dRs, nProbes = grid3dNps)
+    Similarity.ivfOperatingGrid(emb, None,
+        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
+        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
+        families = Seq(IvfFamily.Pq(4, pqModel(s, dir))),
+        rs = grid3dRs, nProbes = grid3dNps)
+      .drop("family")
   }
 
   lazy val e27Sql: String =
@@ -1237,20 +1241,21 @@ object DataQueries {
     * over by BOTH the e31 cross-family choice and the e33 layout
     * decision (the shared-body rule: adding a family is one edit here
     * + one in [[familyGridsCtes]], never a silent fork). PQ, SQ8, and
-    * BQ (VERDICT r16 next-#2) ride [[Similarity
-    * .ivfFamilyOperatingGrids]]'s shared substrate (one probe stage +
-    * truth job for all three — cell-identical to the standalone
+    * BQ (VERDICT r16 next-#2) ride ONE [[Similarity
+    * .ivfOperatingGrid]] (one candidate pass, probe stage and truth
+    * for all three — cell-identical to the standalone
     * e27/e29/e34 grids, which the OperatorsSpec pins re-derive
     * against); OPQ unions in from its rotated-corpus grid. */
   private def familyGridsRelation(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val emb = Catalog(s, dir).embeddings
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
-    Similarity.ivfFamilyOperatingGrids(emb,
+    Similarity.ivfOperatingGrid(emb, None,
         emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids, m = 4,
-        pqCodebook = pqModel(s, dir), mins = mins, scales = scales,
-        bqThresholds = Similarity.bqTrain(emb, "embedding", "vec_id"),
+        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
+        families = Seq(IvfFamily.Pq(4, pqModel(s, dir)),
+          IvfFamily.Sq8(mins, scales),
+          IvfFamily.Bq(Similarity.bqTrain(emb, "embedding", "vec_id"))),
         rs = grid3dRs, nProbes = grid3dNps)
       .unionByName(opqGrid3dRelation(s, dir)
         .withColumn("family", lit("opq_ivf_pq")))
@@ -1376,9 +1381,9 @@ object DataQueries {
        |  scanned_ppm, CAST(meets AS BIGINT) AS meets_target
        |FROM rk WHERE rn = 1 ORDER BY tenant_id, k""".stripMargin
 
-  /** IVF-SQ8 OPERATING GRID (e29 — [[Similarity.ivfSqOperatingGrid3d]],
-    * VERDICT r15 next-#6): e27's (nProbe × r × k) surface with the
-    * shortlist stage scored by the SQ8 reconstruction (e13/e15's
+  /** IVF-SQ8 OPERATING GRID (e29 — [[Similarity.ivfOperatingGrid]]'s
+    * SQ8 family, VERDICT r15 next-#6): e27's (nProbe × r × k) surface
+    * with the shortlist stage scored by the SQ8 reconstruction (e13/e15's
     * quantizer) instead of PQ/ADC — the scalar-quantizer FAMILY's
     * measured operating points on the SAME probe stage, truth, and
     * scanned-fraction denominator as e27, so e31's cross-family choice
@@ -1394,10 +1399,12 @@ object DataQueries {
       : org.apache.spark.sql.DataFrame = {
     val emb = Catalog(s, dir).embeddings
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
-    Similarity.ivfSqOperatingGrid3d(emb,
-      emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-      ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-      mins = mins, scales = scales, rs = grid3dRs, nProbes = grid3dNps)
+    Similarity.ivfOperatingGrid(emb, None,
+        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
+        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
+        families = Seq(IvfFamily.Sq8(mins, scales)),
+        rs = grid3dRs, nProbes = grid3dNps)
+      .drop("family")
   }
 
   /** The e13-oracle SQ chain (per-dim extrema → byte codes → decode)
@@ -1423,8 +1430,8 @@ object DataQueries {
   /** OPQ-ROTATED IVF-PQ OPERATING GRID (e30 — VERDICT r15 next-#6):
     * the e27 grid run over the OPQ-rotated corpus with the
     * rotation-trained quantizers (e11's models) — the third family's
-    * operating points. Spark side is [[Similarity.ivfPqOperatingGrid3d]]
-    * applied to [[Opq.rotate]]d vectors verbatim (rotation is a
+    * operating points. Spark side is [[Similarity.ivfOperatingGrid]]'s
+    * PQ family applied to [[Opq.rotate]]d vectors verbatim (rotation is a
     * pre-transform, not a new operator); the oracle fills
     * [[sweepCtePrefix]]'s `e` slot with the e11 rotation-replay chain
     * and runs the IDENTICAL PQ stack after it. Recall is measured in
@@ -1440,9 +1447,11 @@ object DataQueries {
     val rot = Opq.rotate(Catalog(s, dir).embeddings, "embedding", "vec_id",
       opqReflectors)
     val (cells, pqCb) = opqModel(s, dir)
-    Similarity.ivfPqOperatingGrid3d(rot, rot.filter(col("id") % 100 === 0),
-      "v", "id", ks = grid3dKs, cellCodebook = cells.centroids, m = 4,
-      pqCodebook = pqCb, rs = grid3dRs, nProbes = grid3dNps)
+    Similarity.ivfOperatingGrid(rot, None, rot.filter(col("id") % 100 === 0),
+        "v", "id", ks = grid3dKs, cellCodebook = cells.centroids,
+        families = Seq(IvfFamily.Pq(4, pqCb)),
+        rs = grid3dRs, nProbes = grid3dNps)
+      .drop("family")
   }
 
   private lazy val e30SqlBody: String =
@@ -1453,7 +1462,7 @@ object DataQueries {
     s"$e30SqlBody\nORDER BY n_probe, r_shortlist, k"
 
   /** BINARY-QUANTIZATION OPERATING GRID (e34 — [[Similarity
-    * .ivfBqOperatingGrid3d]], VERDICT r16 next-#2): e27's
+    * .ivfOperatingGrid]]'s BQ family, VERDICT r16 next-#2): e27's
     * (nProbe × r × k) surface with the shortlist stage ranked by e14's
     * 1-bit sign-code hamming distance — the modern vector-store
     * default compression (32×) measured as a FAMILY of operating
@@ -1471,11 +1480,13 @@ object DataQueries {
   private def bqGrid3dRelation(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfBqOperatingGrid3d(emb,
-      emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-      ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-      thresholds = Similarity.bqTrain(emb, "embedding", "vec_id"),
-      rs = grid3dRs, nProbes = grid3dNps)
+    Similarity.ivfOperatingGrid(emb, None,
+        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
+        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
+        families = Seq(IvfFamily.Bq(
+          Similarity.bqTrain(emb, "embedding", "vec_id"))),
+        rs = grid3dRs, nProbes = grid3dNps)
+      .drop("family")
   }
 
   /** The e14-oracle BQ chain (per-dim exact-grid mean thresholds →
@@ -1512,7 +1523,7 @@ object DataQueries {
     * partition-pruned exact scan the index must beat (the 100 TB note
     * on e33: for filtered workloads flat-exact's true cost is the
     * pruned scan, not 10⁶). See [[Similarity
-    * .ivfPqFilteredOperatingGrid3d]]. */
+    * .ivfOperatingGrid]] with `keepIds`. */
   val e35FilteredGrid: Q = (s, dir) =>
     filteredGridRelation(s, dir)
       .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
@@ -1522,10 +1533,12 @@ object DataQueries {
     val emb = Catalog(s, dir).embeddings
     val en = Catalog(s, dir).documents.filter(col("lang") === "en")
       .select(col("doc_id").as("vec_id"))
-    Similarity.ivfPqFilteredOperatingGrid3d(emb, en,
-      emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-      ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids, m = 4,
-      pqCodebook = pqModel(s, dir), rs = grid3dRs, nProbes = grid3dNps)
+    Similarity.ivfOperatingGrid(emb, Some(en),
+        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
+        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
+        families = Seq(IvfFamily.Pq(4, pqModel(s, dir))),
+        rs = grid3dRs, nProbes = grid3dNps)
+      .drop("family")
   }
 
   private lazy val filteredECtes: String =
@@ -1614,7 +1627,7 @@ object DataQueries {
   /** FILTERED OPQ-ROTATED GRID (e39 — VERDICT r17 next-#5, closing
     * the e37 design note): the OPQ family's operating points measured
     * UNDER the metadata predicate — [[Similarity
-    * .ivfPqFilteredOperatingGrid3d]] applied to the [[Opq.rotate]]d
+    * .ivfOperatingGrid]]'s filtered PQ grid applied to the [[Opq.rotate]]d
     * corpus with the rotation-trained quantizers (e30's models),
     * filtered by the SAME `en` id set (rotation preserves ids, and an
     * orthogonal rotation preserves cosine, so the filtered truth and
@@ -1634,10 +1647,12 @@ object DataQueries {
     val (cells, pqCb) = opqModel(s, dir)
     val en = Catalog(s, dir).documents.filter(col("lang") === "en")
       .select(col("doc_id").as("id"))
-    Similarity.ivfPqFilteredOperatingGrid3d(rot, en,
-      rot.filter(col("id") % 100 === 0), "v", "id",
-      ks = grid3dKs, cellCodebook = cells.centroids, m = 4,
-      pqCodebook = pqCb, rs = grid3dRs, nProbes = grid3dNps)
+    Similarity.ivfOperatingGrid(rot, Some(en),
+        rot.filter(col("id") % 100 === 0), "v", "id",
+        ks = grid3dKs, cellCodebook = cells.centroids,
+        families = Seq(IvfFamily.Pq(4, pqCb)),
+        rs = grid3dRs, nProbes = grid3dNps)
+      .drop("family")
   }
 
   private lazy val opqFilteredECtes: String =
@@ -1890,9 +1905,9 @@ object DataQueries {
   private def nswGridRelation(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val emb = Catalog(s, dir).embeddings
-    Similarity.nswOperatingGrid(emb, emb.filter(col("vec_id") % 100 === 0),
-      "embedding", "vec_id", ks = grid3dKs,
-      nBits = nswNBits, bands = nswBands, degree = nswDegree,
+    Similarity.nswOperatingGrid(emb, None,
+      emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
+      ks = grid3dKs, nBits = nswNBits, bands = nswBands, degree = nswDegree,
       beamWidths = nswBeamWidths, hopsList = nswHopsList)
   }
 
@@ -1971,7 +1986,7 @@ object DataQueries {
 
   /** FILTERED NSW GRID (e42 — the graph family joins the FILTERED
     * serving decision, completing the e39 symmetry): [[Similarity
-    * .nswFilteredOperatingGrid]] — full-graph navigation (deleting
+    * .nswOperatingGrid]] with `keepIds` — full-graph navigation (deleting
     * non-matching nodes would shatter connectivity exactly when the
     * predicate is selective, so production filtered-HNSW routes
     * through them), answers and truth cut to the `lang = 'en'`
@@ -1987,7 +2002,7 @@ object DataQueries {
     val emb = Catalog(s, dir).embeddings
     val en = Catalog(s, dir).documents.filter(col("lang") === "en")
       .select(col("doc_id").as("vec_id"))
-    Similarity.nswFilteredOperatingGrid(emb, en,
+    Similarity.nswOperatingGrid(emb, Some(en),
       emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
       ks = grid3dKs, nBits = nswNBits, bands = nswBands,
       degree = nswDegree, beamWidths = nswBeamWidths,
@@ -2003,7 +2018,7 @@ object DataQueries {
     * e33/e36 design notes pointed): ALL FIVE families
     * measured UNDER the metadata predicate — PQ, SQ8, and BQ over ONE
     * shared filtered substrate ([[Similarity
-    * .ivfFilteredFamilyOperatingGrids]] — one filtered probe stage,
+    * .ivfOperatingGrid]] with `keepIds` — one filtered probe stage,
     * one filtered truth job, full-corpus scan denominator,
     * `selectivity_ppm` on every row), plus OPQ unioned in from its own
     * rotated substrate (e39 — VERDICT r17 next-#5: the union needs
@@ -2023,11 +2038,12 @@ object DataQueries {
     val en = Catalog(s, dir).documents.filter(col("lang") === "en")
       .select(col("doc_id").as("vec_id"))
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
-    Similarity.ivfFilteredFamilyOperatingGrids(emb, en,
+    Similarity.ivfOperatingGrid(emb, Some(en),
         emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids, m = 4,
-        pqCodebook = pqModel(s, dir), mins = mins, scales = scales,
-        bqThresholds = Similarity.bqTrain(emb, "embedding", "vec_id"),
+        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
+        families = Seq(IvfFamily.Pq(4, pqModel(s, dir)),
+          IvfFamily.Sq8(mins, scales),
+          IvfFamily.Bq(Similarity.bqTrain(emb, "embedding", "vec_id"))),
         rs = grid3dRs, nProbes = grid3dNps)
       .unionByName(filteredOpqGridRelation(s, dir)
         .withColumn("family", lit("opq_ivf_pq")))

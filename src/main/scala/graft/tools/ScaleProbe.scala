@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.Similarity.IvfFamily
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -994,9 +995,10 @@ object ScaleProbe {
           k = 16, dim = 64, iters = 3).centroids
         val pqCb = graft.operators.KMeans.fitPqCodebook(emb, "embedding",
           "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
-        graft.operators.Similarity.ivfPqOperatingGrid3d(embBig,
+        graft.operators.Similarity.ivfOperatingGrid(embBig, None,
           emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cellCb, m = 4, pqCodebook = pqCb,
+          ks = Seq(1, 5), cellCodebook = cellCb,
+          families = Seq(IvfFamily.Pq(4, pqCb)),
           rs = Seq(5, 20), nProbes = Seq(1, 4))
       }
     }
@@ -1009,10 +1011,11 @@ object ScaleProbe {
           k = 16, dim = 64, iters = 3).centroids
         val (mins, scales) = graft.operators.Similarity.sqTrain(emb,
           "embedding", "vec_id")
-        graft.operators.Similarity.ivfSqOperatingGrid3d(embBig,
+        graft.operators.Similarity.ivfOperatingGrid(embBig, None,
           emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cellCb, mins = mins,
-          scales = scales, rs = Seq(5, 20), nProbes = Seq(1, 4))
+          ks = Seq(1, 5), cellCodebook = cellCb,
+          families = Seq(IvfFamily.Sq8(mins, scales)),
+          rs = Seq(5, 20), nProbes = Seq(1, 4))
       }
     }
     // r17 binary-quantization family grid: the same skeleton as grid3d
@@ -1025,9 +1028,10 @@ object ScaleProbe {
           k = 16, dim = 64, iters = 3).centroids
         val thr = graft.operators.Similarity.bqTrain(emb,
           "embedding", "vec_id")
-        graft.operators.Similarity.ivfBqOperatingGrid3d(embBig,
+        graft.operators.Similarity.ivfOperatingGrid(embBig, None,
           emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cellCb, thresholds = thr,
+          ks = Seq(1, 5), cellCodebook = cellCb,
+          families = Seq(IvfFamily.Bq(thr)),
           rs = Seq(5, 20), nProbes = Seq(1, 4))
       }
     }
@@ -1042,10 +1046,11 @@ object ScaleProbe {
           "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
         val keep = embBig.filter(pmod(col("vec_id"), lit(16L)) < 7)
           .select(col("vec_id"))
-        graft.operators.Similarity.ivfPqFilteredOperatingGrid3d(embBig,
-          keep, emb.filter(col("vec_id") % 100 === 0),
-          "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cellCb,
-          m = 4, pqCodebook = pqCb, rs = Seq(5, 20), nProbes = Seq(1, 4))
+        graft.operators.Similarity.ivfOperatingGrid(embBig, Some(keep),
+          emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
+          ks = Seq(1, 5), cellCodebook = cellCb,
+          families = Seq(IvfFamily.Pq(4, pqCb)),
+          rs = Seq(5, 20), nProbes = Seq(1, 4))
       }
     }
     // r17 unigram-LM tokenizer: the fit is bounded by the sample vocab

@@ -66,7 +66,7 @@ class NswSpec extends SparkSpec {
 
   // the (4, 16) widths × (2, 6) hops × (1, 5) ks grid two tests read:
   // (w, h, k) -> (recall_ppm, scanned_ppm, n_hits, n_bf)
-  private lazy val grid = Similarity.nswOperatingGrid(emb,
+  private lazy val grid = Similarity.nswOperatingGrid(emb, None,
       emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
       ks = Seq(1, 5), nBits = 5, bands = 3, degree = 14,
       beamWidths = Seq(4, 16), hopsList = Seq(2, 6)).collect()
@@ -128,7 +128,7 @@ class NswSpec extends SparkSpec {
 
   test("nswOperatingGrid build fires the same jobs for 1 beam width as for 2") {
     val queries = emb.filter(col("vec_id") % 100 === 0)
-    def build(ws: Seq[Int]) = jobsIn(Similarity.nswOperatingGrid(emb,
+    def build(ws: Seq[Int]) = jobsIn(Similarity.nswOperatingGrid(emb, None,
       queries, "embedding", "vec_id", ks = Seq(1, 5), nBits = 5, bands = 3,
       degree = 14, beamWidths = ws, hopsList = Seq(2, 3)))
     val one = build(Seq(4))

@@ -2,6 +2,7 @@ package graft
 
 import graft.expressions.VectorExpressions
 import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity.IvfFamily
 import org.apache.spark.sql.functions._
 
 class OperatorsSpec extends SparkSpec {
@@ -16,6 +17,12 @@ class OperatorsSpec extends SparkSpec {
     "vec_id", k = 8, dim = 64, iters = 3).centroids
   private lazy val pqCb = graft.operators.KMeans.fitPqCodebook(emb001,
     "embedding", "vec_id", m = 4, kCent = 16, dim = 64, iters = 3)
+  // e31 and e37 at sf0.001, each built once: the plan budget reads
+  // their plans, the choice tests collect them
+  private lazy val e31At001 = graft.queries.DataQueries.e31FamilyChoice(
+    spark, "/root/testdata/sf0.001")
+  private lazy val e37At001 = graft.queries.DataQueries.e37FilteredFamily(
+    spark, "/root/testdata/sf0.001")
 
   test("wordShingles: distinct 3-grams, short docs -> empty") {
     val got = Seq("a b c d a b c d", "a b", "").toDF("t")
@@ -245,9 +252,10 @@ class OperatorsSpec extends SparkSpec {
   test("ivfPqOperatingGrid3d: every k-matching cell equals the e26 2-D point; k axis consistent with its own baselines (r15)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)
-    def grid(ks: Seq[Int]) = Similarity.ivfPqOperatingGrid3d(emb, queries,
-        "embedding", "vec_id", ks = ks, cellCodebook = cellCb, m = 4,
-        pqCodebook = pqCb, rs = Seq(5, 10), nProbes = Seq(1, 2))
+    def grid(ks: Seq[Int]) = Similarity.ivfOperatingGrid(emb, None, queries,
+        "embedding", "vec_id", ks = ks, cellCodebook = cellCb,
+        families = Seq(IvfFamily.Pq(4, pqCb)), rs = Seq(5, 10),
+        nProbes = Seq(1, 2))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
@@ -912,28 +920,20 @@ class OperatorsSpec extends SparkSpec {
     val queries = emb.filter($"vec_id" % 100 === 0)
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
     val thr = Similarity.bqTrain(emb, "embedding", "vec_id")
-    def key(r: org.apache.spark.sql.Row, fam: String) =
-      (fam, r.getLong(0), r.getLong(1), r.getLong(2)) ->
+    def grid(families: Seq[IvfFamily]) = Similarity.ivfOperatingGrid(emb,
+      None, queries, "embedding", "vec_id", ks = Seq(1, 5),
+      cellCodebook = cellCb, families = families, rs = Seq(5, 10),
+      nProbes = Seq(1, 2))
+    def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(8), r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
-          r.getLong(7))
-    val shared = Similarity.ivfFamilyOperatingGrids(emb, queries,
-        "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cellCb, m = 4,
-        pqCodebook = pqCb, mins = mins, scales = scales,
-        bqThresholds = thr, rs = Seq(5, 10), nProbes = Seq(1, 2))
-      .collect().map(r => key(r, r.getString(8))).toMap
-    val standalone =
-      Similarity.ivfPqOperatingGrid3d(emb, queries, "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cellCb, m = 4, pqCodebook = pqCb,
-          rs = Seq(5, 10), nProbes = Seq(1, 2))
-        .collect().map(r => key(r, "ivf_pq")) ++
-      Similarity.ivfSqOperatingGrid3d(emb, queries, "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cellCb, mins = mins, scales = scales,
-          rs = Seq(5, 10), nProbes = Seq(1, 2))
-        .collect().map(r => key(r, "ivf_sq8")) ++
-      Similarity.ivfBqOperatingGrid3d(emb, queries, "embedding", "vec_id",
-          ks = Seq(1, 5), cellCodebook = cellCb, thresholds = thr,
-          rs = Seq(5, 10), nProbes = Seq(1, 2))
-        .collect().map(r => key(r, "ivf_bq"))
+          r.getLong(7)))
+    val families = Seq(IvfFamily.Pq(4, pqCb), IvfFamily.Sq8(mins, scales),
+      IvfFamily.Bq(thr))
+    val shared = cells(grid(families)).toMap
+    // the three single-family grids, run as one action
+    val standalone = cells(families.map(f => grid(Seq(f)))
+      .reduce(_ unionByName _))
     assert(shared.size === 24 && standalone.size === 24)
     standalone.foreach { case (k, v) =>
       assert(shared(k) === v, s"shared-substrate cell $k diverged")
@@ -956,9 +956,10 @@ class OperatorsSpec extends SparkSpec {
     val nCells = 8
     val thr = Similarity.bqTrain(emb, "embedding", "vec_id")
     val rFull = 600 // > corpus size
-    val g = Similarity.ivfBqOperatingGrid3d(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5), cellCodebook = cellCb, thresholds = thr,
-        rs = Seq(20, rFull), nProbes = Seq(1, nCells))
+    val g = Similarity.ivfOperatingGrid(emb, None, queries, "embedding",
+        "vec_id", ks = Seq(1, 5), cellCodebook = cellCb,
+        families = Seq(IvfFamily.Bq(thr)), rs = Seq(20, rFull),
+        nProbes = Seq(1, nCells))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
@@ -995,9 +996,10 @@ class OperatorsSpec extends SparkSpec {
     val queries = emb.filter($"vec_id" % 100 === 0)
     val nCells = 8
     val rFull = 600 // > corpus size
-    val g = Similarity.ivfPqFilteredOperatingGrid3d(emb, en, queries,
-        "embedding", "vec_id", ks = Seq(5), cellCodebook = cellCb, m = 4,
-        pqCodebook = pqCb, rs = Seq(5, rFull), nProbes = Seq(1, nCells))
+    val g = Similarity.ivfOperatingGrid(emb, Some(en), queries,
+        "embedding", "vec_id", ks = Seq(5), cellCodebook = cellCb,
+        families = Seq(IvfFamily.Pq(4, pqCb)), rs = Seq(5, rFull),
+        nProbes = Seq(1, nCells))
       .collect()
     val nFull = emb.count()
     val nKept = emb.join(en, Seq("vec_id")).count()
@@ -1061,24 +1063,25 @@ class OperatorsSpec extends SparkSpec {
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
     val thr = Similarity.bqTrain(emb, "embedding", "vec_id")
     def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2)) ->
+      (r.getAs[String]("family"), r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
           r.getLong(7), r.getAs[Long]("selectivity_ppm"))
-    val shared = Similarity.ivfFilteredFamilyOperatingGrids(emb, en,
-        queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cellCb,
-        m = 4, pqCodebook = pqCb, mins = mins, scales = scales,
-        bqThresholds = thr, rs = Seq(5, 10), nProbes = Seq(1, 2))
-      .collect()
+    def grid(families: Seq[IvfFamily]) = Similarity.ivfOperatingGrid(emb,
+      Some(en), queries, "embedding", "vec_id", ks = Seq(1, 5),
+      cellCodebook = cellCb, families = families, rs = Seq(5, 10),
+      nProbes = Seq(1, 2))
+    val families = Seq(IvfFamily.Pq(4, pqCb), IvfFamily.Sq8(mins, scales),
+      IvfFamily.Bq(thr))
+    val shared = grid(families).collect()
     assert(shared.length === 24, "3 families x 8 cells")
-    val pqCells = shared.filter(_.getAs[String]("family") == "ivf_pq")
-      .map(key).toMap
-    val standalone = Similarity.ivfPqFilteredOperatingGrid3d(emb, en,
-        queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cellCb,
-        m = 4, pqCodebook = pqCb, rs = Seq(5, 10), nProbes = Seq(1, 2))
-      .collect().map(key)
-    assert(standalone.length === 8)
+    val sharedCells = shared.map(key).toMap
+    // every family's filtered cells equal its single-family filtered
+    // call (the three run as one action)
+    val standalone = families.map(f => grid(Seq(f)))
+      .reduce(_ unionByName _).collect().map(key)
+    assert(standalone.length === 24)
     standalone.foreach { case (k, v) =>
-      assert(pqCells(k) === v, s"filtered substrate cell $k diverged")
+      assert(sharedCells(k) === v, s"filtered substrate cell $k diverged")
     }
     // every family's truth and selectivity are the substrate's — one
     // filtered brute force, one survivor fraction
@@ -1096,18 +1099,16 @@ class OperatorsSpec extends SparkSpec {
     def sweep(nps: Seq[Int]) = jobsIn(Similarity.ivfOperatingSweepExact(
       emb001, queries, "embedding", "vec_id", ks = Seq(1, 5), codebook = cb,
       nProbes = nps))
-    def sq(nps: Seq[Int]) = jobsIn(Similarity.ivfSqOperatingGrid3d(emb001,
-      queries, "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb,
-      mins = mins, scales = scales, rs = Seq(5, 10), nProbes = nps))
-    def families(nps: Seq[Int]) = jobsIn(Similarity.ivfFamilyOperatingGrids(
-      emb001, queries, "embedding", "vec_id", ks = Seq(1, 5),
-      cellCodebook = cb, m = 4, pqCodebook = pq, mins = mins,
-      scales = scales, bqThresholds = thr, rs = Seq(5, 10), nProbes = nps))
-    def filtered(nps: Seq[Int]) = jobsIn(
-      Similarity.ivfFilteredFamilyOperatingGrids(emb001, keep, queries,
-        "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb, m = 4,
-        pqCodebook = pq, mins = mins, scales = scales, bqThresholds = thr,
-        rs = Seq(5, 10), nProbes = nps))
+    val all = Seq(IvfFamily.Pq(4, pq), IvfFamily.Sq8(mins, scales),
+      IvfFamily.Bq(thr))
+    def grid(keepIds: Option[org.apache.spark.sql.DataFrame],
+             families: Seq[IvfFamily], nps: Seq[Int]) =
+      jobsIn(Similarity.ivfOperatingGrid(emb001, keepIds, queries,
+        "embedding", "vec_id", ks = Seq(1, 5), cellCodebook = cb,
+        families = families, rs = Seq(5, 10), nProbes = nps))
+    def sq(nps: Seq[Int]) = grid(None, Seq(IvfFamily.Sq8(mins, scales)), nps)
+    def families(nps: Seq[Int]) = grid(None, all, nps)
+    def filtered(nps: Seq[Int]) = grid(Some(keep), all, nps)
     for (nps <- Seq(Seq(1), Seq(1, 2))) {
       assert(sweep(nps) === 0, s"sweep at $nps")
       assert(sq(nps) === 0, s"SQ8 grid at $nps")
@@ -1117,10 +1118,36 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("e31/e37 plan budget: embeddings scans and NearestCell evaluations before any action") {
+    // the composites' pre-execution plans (reading executedPlan fires
+    // no job): one candidate pass per cell grid, the truth, one cell
+    // population pass and one probe-rank pass each — not one corpus
+    // pass per family scorer, per cell-size aggregate, per row count
+    def budget(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.initialPlan
+        case p => p
+      }
+      val scans = plan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location.rootPaths
+              .exists(_.getName == "embeddings.parquet") => f
+      }.size
+      val cells = plan.collect { case n => n.expressions.map(_.collect {
+        case e: graft.expressions.NearestCellExpr => e }.size).sum }.sum
+      (scans, cells)
+    }
+    for ((key, q) <- Seq("e31" -> e31At001, "e37" -> e37At001)) {
+      val (scans, cells) = budget(q)
+      assert(scans <= 14, s"$key scans embeddings.parquet $scans times")
+      assert(cells <= 4, s"$key evaluates NearestCell in $cells places")
+    }
+  }
+
   test("e38 filtered choice: cheapest across FIVE families (OPQ + nsw unioned, r18) or the pruned scan") {
     val dir = "/root/testdata/sf0.001"
-    val rows = graft.queries.DataQueries.e37FilteredFamily(spark, dir)
-      .collect()
+    val rows = e37At001.collect()
     val cells = rows.map(r => (r.getAs[String]("family"), r.getAs[Long]("k"),
         r.getAs[Long]("n_probe"), r.getAs[Long]("r_shortlist"),
         r.getAs[Long]("recall_ppm"), r.getAs[Long]("scanned_ppm"),
@@ -1250,9 +1277,10 @@ class OperatorsSpec extends SparkSpec {
     val queries = emb.filter($"vec_id" % 100 === 0)
     val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
     val rFull = 600 // > corpus size: every probed candidate survives
-    val gsq = Similarity.ivfSqOperatingGrid3d(emb, queries, "embedding",
-        "vec_id", ks = Seq(1, 5), cellCodebook = cellCb, mins = mins,
-        scales = scales, rs = Seq(5, rFull), nProbes = Seq(1, 2))
+    val gsq = Similarity.ivfOperatingGrid(emb, None, queries, "embedding",
+        "vec_id", ks = Seq(1, 5), cellCodebook = cellCb,
+        families = Seq(IvfFamily.Sq8(mins, scales)), rs = Seq(5, rFull),
+        nProbes = Seq(1, 2))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toMap
@@ -1315,8 +1343,7 @@ class OperatorsSpec extends SparkSpec {
       cells(graft.queries.DataQueries.e30OpqGrid3d(spark, dir), "opq_ivf_pq") ++
       cells(graft.queries.DataQueries.e34BqGrid3d(spark, dir), "ivf_bq") ++
       cells(graft.queries.DataQueries.e41NswGrid(spark, dir), "nsw")
-    val chosen = graft.queries.DataQueries.e31FamilyChoice(spark, dir)
-      .collect()
+    val chosen = e31At001.collect()
     assert(chosen.length === 6, "one row per (k, target)")
     chosen.foreach { c =>
       val (k, target) = (c.getAs[Long]("k"), c.getAs[Long]("target_ppm"))
