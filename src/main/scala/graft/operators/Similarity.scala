@@ -285,11 +285,14 @@ object Similarity {
   /** IVF approximate top-k over a coarse quantizer `codebook` (cells
     * 0..k-1): assign the corpus map-only, probe the `nProbe` best cells
     * per query, rank the probed cells' vectors by round-6dp cosine.
+    * The fresh assignment reads a NULL cell as -1, as [[ivfCandidates]]
+    * does, so NearestCell runs once per corpus row.
     * Output: (query_id, rank, id, cosine). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               vecCol: String, idCol: String, k: Int,
               codebook: Seq[Seq[Double]], nProbe: Int = 2): DataFrame =
-    ivfTopKOnAssigned(cellAssignments(corpus, vecCol, idCol, codebook),
+    ivfTopKOnAssigned(cellAssignments(corpus, vecCol, idCol, codebook)
+        .withColumn("cell", coalesce(col("cell"), lit(-1L))),
       queries, vecCol, idCol, k, codebook, nProbe)
 
   /** IVF top-k over a PRE-ASSIGNED (id, v, cell) relation — the serving
@@ -1071,11 +1074,17 @@ object Similarity {
                         cellCodebook: Seq[Seq[Double]], nProbe: Int,
                         m: Int, pqCodebook: Seq[Seq[Double]]): DataFrame = {
     val dim = pqCodebook.head.length
+    // a row with no cell or no codes reads as cell -1, which joins no
+    // probe (the [[ivfCandidates]] rule): no NOT NULL filter is inferred
+    // or pushed below the projections, so NearestCell and the encode
+    // run once per corpus row
     val coded = cellResiduals(corpus, vecCol, idCol, cellCodebook)
       .select(col("id"), col("cell"),
         VectorExpressions.pqEncode(col("rv"), pqCodebook, m).as("st"))
-      .filter(col("st").isNotNull)
-      .select(col("id"), col("cell"), col("st.codes").as("codes"))
+      .select(col("id"),
+        when(col("st").isNull, lit(-1L))
+          .otherwise(coalesce(col("cell"), lit(-1L))).as("cell"),
+        col("st.codes").as("codes"))
     val probeRows = probeRanked(centsOf(corpus.sparkSession, cellCodebook),
         queries, vecCol, idCol, nProbe)
       .select(col("query_id"), col("cell")).collect()

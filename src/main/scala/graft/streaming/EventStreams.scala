@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface. The reference is a cron-refreshed batch
@@ -228,16 +228,11 @@ object EventStreams {
                         outputMode: String = "update",
                         partitionBy: Seq[String] = Nil,
                         trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    out.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.pipeline.Pipeline.mergeIntoParquet(
-          spark, path, batch.toDF(), uniqueKey, partitionBy)
-      }
-      .outputMode(outputMode)
-      .option("checkpointLocation", s"$path.__checkpoint")
-      .trigger(trigger)
-      .start()
+      : StreamingQuery =
+    startFold(out, path, trigger, outputMode) { (batch, _) =>
+      graft.pipeline.Pipeline.mergeIntoParquet(
+        spark, path, batch, uniqueKey, partitionBy)
+    }
 
   /** [[upsertStreamQuery]] against a SNAPSHOT-VERSIONED table
     * ([[graft.pipeline.VersionedTable]]) — the transactional form the
@@ -256,17 +251,11 @@ object EventStreams {
                                  outputMode: String = "update",
                                  partitionBy: Seq[String] = Nil,
                                  trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    out.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.pipeline.VersionedTable.merge(
-          spark, root, batch.toDF(), uniqueKey, partitionBy)
-        ()
-      }
-      .outputMode(outputMode)
-      .option("checkpointLocation", s"$root.__checkpoint")
-      .trigger(trigger)
-      .start()
+      : StreamingQuery =
+    startFold(out, root, trigger, outputMode) { (batch, _) =>
+      graft.pipeline.VersionedTable.merge(
+        spark, root, batch, uniqueKey, partitionBy)
+    }
 
   /** STREAMING RAG INGEST — the r13 curation-DAG RAG loop's serving
     * tick as a stream: every document micro-batch (a crawl drop) is
@@ -296,7 +285,7 @@ object EventStreams {
                            codebook: Seq[Seq[Double]], dim: Int,
                            root: String,
                            trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val assigned = graft.operators.Similarity.cellAssignments(
       ragChunkEmbed(docs, textCol, idCol, dim),
       "emb", "chunk_id", codebook)
@@ -350,19 +339,14 @@ object EventStreams {
     * set always carries the quantizer its index was assigned with —
     * the index/codebook lockstep contract without per-epoch refits.
     *
-    * Replay safety (the cmsFoldBatch trichotomy, review r14): the
-    * member merges are idempotent keyed merges (replaying identical
-    * rows converges — the [[ragIngestStreamQuery]] contract), and the
-    * newest RETAINED release's `epoch <id> rows <n>` note is the
-    * authoritative epoch cursor (scanned newest-first, so an
-    * interleaved [[graft.pipeline.PublishSet.rollback]] — whose note
-    * is `rollback to vN` — never erases epoch memory). A replayed
-    * batch (id == cursor) re-runs the idempotent merges but SKIPS the
-    * publish; a batch id BELOW the cursor means the checkpoint was
-    * reset while the registry survived — that fails LOUD before any
-    * merge (silently merging-but-never-releasing until ids catch up
-    * would starve release readers). Epochs that fail the gate never
-    * advance the cursor — their rows ride the NEXT epoch's release.
+    * Replay safety: the [[foldOnce]] contract, with the newest
+    * RETAINED release's `epoch <id> rows <n>` note (scanned
+    * newest-first, so an interleaved
+    * [[graft.pipeline.PublishSet.rollback]] never erases epoch memory)
+    * or the persisted cursor as `last`. The member merges are
+    * idempotent keyed merges and re-run on a replay, which skips only
+    * the publish. Epochs that fail the gate never advance the cursor —
+    * their rows ride the NEXT epoch's release.
     *
     * At 100 TB: per-tick cost tracks the batch — map-only front; the
     * chunks member merges partition-scoped on a doc-id RANGE bucket
@@ -383,23 +367,18 @@ object EventStreams {
                             gcStaleAfterMs: Long = 3600 * 1000L,
                             compactMaxFiles: Option[Int] = None,
                             compactColdVersions: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ragReleaseFoldBatch(spark, batch.toDF(), batchId, textCol, idCol,
-          codebook, dim, registryRoot, chunksRoot, indexRoot, codebookRoot,
-          gcKeepReleases, gcMemberKeep, gcStaleAfterMs,
-          compactMaxFiles, compactColdVersions)
-      }
-      .option("checkpointLocation", s"$registryRoot.__checkpoint")
-      .trigger(trigger)
-      .start()
-  }
+      : StreamingQuery =
+    startFold(docs, registryRoot, trigger) { (batch, batchId) =>
+      ragReleaseFoldBatch(spark, batch, batchId, textCol, idCol,
+        codebook, dim, registryRoot, chunksRoot, indexRoot, codebookRoot,
+        gcKeepReleases, gcMemberKeep, gcStaleAfterMs,
+        compactMaxFiles, compactColdVersions)
+    }
 
   /** The guarded per-epoch release fold (exposed so the replay spec
     * can drive it with a stale batch id — the cmsFoldBatch pattern). */
   private[graft] def ragReleaseFoldBatch(spark: SparkSession,
-      batchDf: DataFrame, batchId: Long, textCol: String, idCol: String,
+      batch: DataFrame, batchId: Long, textCol: String, idCol: String,
       codebook: Seq[Seq[Double]], dim: Int, registryRoot: String,
       chunksRoot: String, indexRoot: String, codebookRoot: String,
       gcKeepReleases: Option[Int], gcMemberKeep: Int, gcStaleAfterMs: Long,
@@ -407,150 +386,221 @@ object EventStreams {
       compactColdVersions: Int = 0): Unit = {
     import org.apache.spark.sql.functions._
     import graft.pipeline.{PublishSet, VersionedTable}
-    {
-        val batch = batchDf
-        val released = PublishSet.currentVersion(spark, registryRoot)
-        // the newest RETAINED 'epoch <id> rows <n>' note is the epoch
-        // cursor — scanned newest-first so a rollback release's
-        // 'rollback to vN' note cannot erase epoch memory (review r14)
-        def parseNote(n: String): Option[(Long, Option[Long])] =
-          n.split(' ') match {
-            case Array("epoch", e) => e.toLongOption.map(_ -> None)
-            case Array("epoch", e, "rows", r) =>
-              e.toLongOption.map(_ -> r.toLongOption)
-            case _ => None
-          }
-        val lastRelease: Option[(Long, Option[Long])] =
-          if (released.isEmpty) None
-          else PublishSet.versions(spark, registryRoot).reverseIterator
-            .map(v => PublishSet.note(spark, registryRoot, v)
-              .flatMap(parseNote))
-            .collectFirst { case Some(x) => x }
-        // the epoch cursor is the MAX of the note-derived cursor and
-        // the persisted sidecar ([[PublishSet.readEpochCursor]]):
-        // retention can fill the registry window entirely with
-        // rollback-noted releases, resetting the note cursor to -1 —
-        // a replayed batch would then re-publish OVER the rollback
-        // (ADVICE r14). The sidecar survives any prune; rollback never
-        // advances it (rollback must not reset OR extend epoch memory).
-        val cursorEpoch = PublishSet.readEpochCursor(spark, registryRoot)
-          .map(_._1).getOrElse(-1L)
-        // re-sync a LAGGING sidecar from the notes (review r15): a
-        // crash between publish and the cursor advance leaves the
-        // sidecar one epoch behind, and the replayed batch then skips
-        // the publish WITHOUT advancing it — retention could later
-        // erase the only up-to-date copy (the exact hole the sidecar
-        // closes). The note still retained at this instant carries the
-        // same (epoch, rows) the crashed advance would have written.
-        lastRelease.filter(_._1 > cursorEpoch).foreach { case (e, rows) =>
-          PublishSet.advanceEpochCursor(spark, registryRoot, e,
-            rows.getOrElse(0L))
-        }
-        val lastEpoch = math.max(lastRelease.map(_._1).getOrElse(-1L),
-          cursorEpoch)
-        // the cmsFoldBatch trichotomy, BEFORE any member merge: a batch
-        // id below the cursor means the checkpoint restarted at 0 while
-        // the registry survived — merging-but-never-publishing until
-        // ids catch up would silently starve release readers
-        if (batchId < lastEpoch)
-          throw new IllegalStateException(
-            s"release registry at $registryRoot has epoch cursor " +
-              s"$lastEpoch but the stream delivered batchId=$batchId — " +
-              "the checkpoint was reset while the registry survived; " +
-              "restore the checkpoint (or move registry, members and " +
-              "checkpoint aside together) before restarting")
-        // within-epoch dedup: a crawl drop can carry the same doc twice
-        // (a re-fetch landing in the same batch) — the keyed member
-        // merges dedup ACROSS epochs but insert every row of one
-        // increment, so duplicate ids must collapse here; max(text) is
-        // the deterministic keeper (dropDuplicates' first-wins is
-        // partitioning-dependent), found by the replay spec inserting
-        // doubled chunk rows
-        val dedup = batch.toDF().groupBy(col(idCol))
-          .agg(max(col(textCol)).as(textCol))
-        val chunked = ragChunkEmbed(dedup, textCol, idCol, dim)
-          // one durable cut: chunks feed BOTH member merges, and the
-          // second merge must not rescan a landing dir the first one's
-          // job may outlive (the curation-tick eager-cut rule)
-          .localCheckpoint()
-        // doc-id RANGE bucket (100 000 ids) as the chunks partition
-        // (review r14): a crawl drop's fresh monotone ids land in the
-        // newest buckets,
-        // so the partition-scoped merge reuses old buckets' files
-        // verbatim — per-tick write cost tracks the batch, not the
-        // accumulated corpus
-        val chunksV = VersionedTable.merge(spark, chunksRoot,
-          chunked.select(
-            expr("doc_id div 100000L").as("chunk_bucket"),
-            col("doc_id"), col("chunk_idx"), col("chunk_id"),
-            col("chunk_text")),
-          uniqueKey = Seq("chunk_bucket", "chunk_id"),
-          partitionBy = Seq("chunk_bucket"))
-        val idxV = graft.io.IvfMaintenance.upsertVersioned(spark, indexRoot,
-          chunked.select(col("chunk_id"), col("emb")), "emb", "chunk_id",
-          codebook)
-        val cbV = VersionedTable.currentVersion(spark, codebookRoot)
-          .getOrElse {
-            import spark.implicits._
-            VersionedTable.write(spark, codebookRoot,
-              codebook.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-                .toDF("cell", "centroid"))
-          }
-        // accretion gate vs the RELEASED index: the released count
-        // comes from the note (no released-version rescan, review
-        // r14); pre-`rows` notes fall back to counting the pin once
-        val releasedIdxRows = lastRelease.flatMap(_._2).orElse {
-          released
-            .map(v => PublishSet.resolveVersion(spark, registryRoot, v))
-            .flatMap(_.get(indexRoot))
-            .map(v => VersionedTable.readVersion(spark, indexRoot, v)
-              .count())
-        }.getOrElse(0L)
-        val newIdxRows = VersionedTable.readVersion(spark, indexRoot, idxV)
-          .count()
-        if (batchId > lastEpoch && newIdxRows >= releasedIdxRows) {
-          PublishSet.publish(spark, registryRoot,
-            Map(chunksRoot -> chunksV, indexRoot -> idxV,
-              codebookRoot -> cbV),
-            note = Some(s"epoch $batchId rows $newIdxRows"))
-          // persist the cursor OUTSIDE note retention (ADVICE r14) —
-          // after the publish, so a crash between the two leaves the
-          // note as the (still-retained, newest) cursor source
-          PublishSet.advanceEpochCursor(spark, registryRoot, batchId,
-            newIdxRows)
-          // in-tick retention maintenance (opt-in): bound the registry
-          // to the newest gcKeepReleases, then the retention-coupled
-          // member GC ([[graft.pipeline.PublishSet.pruneMembers]]) —
-          // the maintenance cadence that otherwise needs an external
-          // cron rides the publish that created the garbage. Runs only
-          // AFTER a successful publish, so a gate-failed epoch never
-          // triggers a sweep under the release readers still serve.
-          gcKeepReleases.foreach { keep =>
-            PublishSet.prune(spark, registryRoot, keep)
-            PublishSet.pruneMembers(spark, registryRoot, gcMemberKeep,
-              gcStaleAfterMs)
-          }
-          // opt-in small-file maintenance AFTER the publish: each
-          // partition-scoped merge leaves one shuffle-task file set per
-          // touched bucket, so long-running members fragment steadily —
-          // compactPartitions rewrites ONLY over-threshold buckets
-          // (content-identical new version, above the retained floor;
-          // the release keeps serving its pinned version untouched)
-          // compactColdVersions > 0 adds the cadence policy: only
-          // buckets untouched by the last N VERSIONS compact (size N
-          // in versions, not merges — compaction commits advance the
-          // version counter too), so the hot range bucket (still
-          // receiving every tick's fresh ids) is never rewritten just
-          // to re-fragment next tick
-          compactMaxFiles.foreach { maxF =>
-            VersionedTable.compactPartitions(spark, chunksRoot, maxF,
-              compactColdVersions)
-            VersionedTable.compactPartitions(spark, indexRoot, maxF,
-              compactColdVersions)
-          }
-        }
-        ()
+    val released = PublishSet.currentVersion(spark, registryRoot)
+    // the newest RETAINED 'epoch <id> rows <n>' note is the epoch
+    // cursor — scanned newest-first so a rollback release's
+    // 'rollback to vN' note cannot erase epoch memory (review r14)
+    def parseNote(n: String): Option[(Long, Option[Long])] =
+      n.split(' ') match {
+        case Array("epoch", e) => e.toLongOption.map(_ -> None)
+        case Array("epoch", e, "rows", r) =>
+          e.toLongOption.map(_ -> r.toLongOption)
+        case _ => None
+      }
+    val lastRelease: Option[(Long, Option[Long])] =
+      if (released.isEmpty) None
+      else PublishSet.versions(spark, registryRoot).reverseIterator
+        .map(v => PublishSet.note(spark, registryRoot, v)
+          .flatMap(parseNote))
+        .collectFirst { case Some(x) => x }
+    // the epoch cursor is the MAX of the note-derived cursor and
+    // the persisted sidecar ([[PublishSet.readEpochCursor]]):
+    // retention can fill the registry window entirely with
+    // rollback-noted releases, resetting the note cursor to -1 —
+    // a replayed batch would then re-publish OVER the rollback
+    // (ADVICE r14). The sidecar survives any prune; rollback never
+    // advances it (rollback must not reset OR extend epoch memory).
+    val cursorEpoch = PublishSet.readEpochCursor(spark, registryRoot)
+      .map(_._1).getOrElse(-1L)
+    // re-sync a LAGGING sidecar from the notes (review r15): a
+    // crash between publish and the cursor advance leaves the
+    // sidecar one epoch behind, and the replayed batch then skips
+    // the publish WITHOUT advancing it — retention could later
+    // erase the only up-to-date copy (the exact hole the sidecar
+    // closes). The note still retained at this instant carries the
+    // same (epoch, rows) the crashed advance would have written.
+    lastRelease.filter(_._1 > cursorEpoch).foreach { case (e, rows) =>
+      PublishSet.advanceEpochCursor(spark, registryRoot, e,
+        rows.getOrElse(0L))
     }
+    val lastEpoch = math.max(lastRelease.map(_._1).getOrElse(-1L),
+      cursorEpoch)
+    // the [[foldOnce]] trichotomy, BEFORE any member merge: a reset
+    // must not merge-but-never-publish until ids catch up (that would
+    // silently starve release readers); a replay re-runs the
+    // idempotent merges and skips only the publish
+    val publishes = advances(registryRoot, batchId, lastEpoch)
+    // within-epoch dedup: a crawl drop can carry the same doc twice
+    // (a re-fetch landing in the same batch) — the keyed member
+    // merges dedup ACROSS epochs but insert every row of one
+    // increment, so duplicate ids must collapse here; max(text) is
+    // the deterministic keeper (dropDuplicates' first-wins is
+    // partitioning-dependent), found by the replay spec inserting
+    // doubled chunk rows
+    val dedup = batch.groupBy(col(idCol))
+      .agg(max(col(textCol)).as(textCol))
+    val chunked = ragChunkEmbed(dedup, textCol, idCol, dim)
+      // one durable cut: chunks feed BOTH member merges, and the
+      // second merge must not rescan a landing dir the first one's
+      // job may outlive (the curation-tick eager-cut rule)
+      .localCheckpoint()
+    // doc-id RANGE bucket (100 000 ids) as the chunks partition
+    // (review r14): a crawl drop's fresh monotone ids land in the
+    // newest buckets,
+    // so the partition-scoped merge reuses old buckets' files
+    // verbatim — per-tick write cost tracks the batch, not the
+    // accumulated corpus
+    val chunksV = VersionedTable.merge(spark, chunksRoot,
+      chunked.select(
+        expr("doc_id div 100000L").as("chunk_bucket"),
+        col("doc_id"), col("chunk_idx"), col("chunk_id"),
+        col("chunk_text")),
+      uniqueKey = Seq("chunk_bucket", "chunk_id"),
+      partitionBy = Seq("chunk_bucket"))
+    val idxV = graft.io.IvfMaintenance.upsertVersioned(spark, indexRoot,
+      chunked.select(col("chunk_id"), col("emb")), "emb", "chunk_id",
+      codebook)
+    val cbV = VersionedTable.currentVersion(spark, codebookRoot)
+      .getOrElse {
+        import spark.implicits._
+        VersionedTable.write(spark, codebookRoot,
+          codebook.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+            .toDF("cell", "centroid"))
+      }
+    // accretion gate vs the RELEASED index: the released count
+    // comes from the note (no released-version rescan, review
+    // r14); pre-`rows` notes fall back to counting the pin once
+    val releasedIdxRows = lastRelease.flatMap(_._2).orElse {
+      released
+        .map(v => PublishSet.resolveVersion(spark, registryRoot, v))
+        .flatMap(_.get(indexRoot))
+        .map(v => VersionedTable.readVersion(spark, indexRoot, v)
+          .count())
+    }.getOrElse(0L)
+    val newIdxRows = VersionedTable.readVersion(spark, indexRoot, idxV)
+      .count()
+    if (publishes && newIdxRows >= releasedIdxRows) {
+      PublishSet.publish(spark, registryRoot,
+        Map(chunksRoot -> chunksV, indexRoot -> idxV,
+          codebookRoot -> cbV),
+        note = Some(s"epoch $batchId rows $newIdxRows"))
+      // persist the cursor OUTSIDE note retention (ADVICE r14) —
+      // after the publish, so a crash between the two leaves the
+      // note as the (still-retained, newest) cursor source
+      PublishSet.advanceEpochCursor(spark, registryRoot, batchId,
+        newIdxRows)
+      // in-tick retention maintenance (opt-in): bound the registry
+      // to the newest gcKeepReleases, then the retention-coupled
+      // member GC ([[graft.pipeline.PublishSet.pruneMembers]]) —
+      // the maintenance cadence that otherwise needs an external
+      // cron rides the publish that created the garbage. Runs only
+      // AFTER a successful publish, so a gate-failed epoch never
+      // triggers a sweep under the release readers still serve.
+      gcKeepReleases.foreach { keep =>
+        PublishSet.prune(spark, registryRoot, keep)
+        PublishSet.pruneMembers(spark, registryRoot, gcMemberKeep,
+          gcStaleAfterMs)
+      }
+      // opt-in small-file maintenance AFTER the publish: each
+      // partition-scoped merge leaves one shuffle-task file set per
+      // touched bucket, so long-running members fragment steadily —
+      // compactPartitions rewrites ONLY over-threshold buckets
+      // (content-identical new version, above the retained floor;
+      // the release keeps serving its pinned version untouched)
+      // compactColdVersions > 0 adds the cadence policy: only
+      // buckets untouched by the last N VERSIONS compact (size N
+      // in versions, not merges — compaction commits advance the
+      // version counter too), so the hot range bucket (still
+      // receiving every tick's fresh ids) is never rewritten just
+      // to re-fragment next tick
+      compactMaxFiles.foreach { maxF =>
+        VersionedTable.compactPartitions(spark, chunksRoot, maxF,
+          compactColdVersions)
+        VersionedTable.compactPartitions(spark, indexRoot, maxF,
+          compactColdVersions)
+      }
+    }
+  }
+
+  /** The one stream start of every foreachBatch sink: `fold` gets each
+    * micro-batch and its id, the checkpoint sits at `<root>.__checkpoint`. */
+  private def startFold(out: DataFrame, root: String, trigger: Trigger,
+                        outputMode: String = "append")(
+      fold: (DataFrame, Long) => Unit): StreamingQuery =
+    out.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        fold(batch.toDF(), batchId)
+      }
+      .outputMode(outputMode)
+      .option("checkpointLocation", s"$root.__checkpoint")
+      .trigger(trigger)
+      .start()
+
+  /** THE replay guard of every additive state fold. foreachBatch is
+    * at-least-once and an additive fold is not idempotent (counts would
+    * double), so each fold commits the id of the batch it folded as a
+    * `last_batch` column IN the same crash-safe
+    * [[graft.pipeline.Pipeline.mergeIntoParquet]] swap that publishes
+    * its state, after its idempotent keyed companion merges; a crash
+    * anywhere before that swap replays into the OLD state and re-produces
+    * identical companion merges. `last` is max(last_batch) of the
+    * relation at `guardPath`, read once and handed to `fold`: -1 when
+    * the path is absent (`empty`, which carries no `last_batch`) or its
+    * state predates the column. Then ([[advances]]):
+    *  - `batchId > last` folds;
+    *  - `batchId == last` is a genuine replay (a restart before the
+    *    checkpoint committed) and is skipped — the fold is already in;
+    *  - `batchId < last` fails loud: the checkpoint was reset while the
+    *    state survived, batch ids restarted at 0, and skipping would
+    *    silently drop every batch until the ids caught up. Reset the
+    *    state and its checkpoint together. */
+  private def foldOnce(spark: SparkSession, batchId: Long, guardPath: String,
+                       empty: => DataFrame)(fold: DataFrame => Unit): Unit = {
+    val state = readOrEmpty(spark, guardPath, empty)
+    val last =
+      if (!state.columns.contains("last_batch")) -1L
+      else state.agg(coalesce(max(col("last_batch")), lit(-1L)))
+        .head.getLong(0)
+    if (advances(guardPath, batchId, last)) fold(state)
+  }
+
+  /** The [[foldOnce]] trichotomy on a batch id and the last one folded
+    * into the state at `path`: fails on a reset, true to fold. */
+  private def advances(path: String, batchId: Long, last: Long): Boolean = {
+    if (batchId < last)
+      throw new IllegalStateException(
+        s"state at $path has last batch $last but the stream delivered " +
+          s"batchId=$batchId — the checkpoint was reset while the state " +
+          "survived; restore the checkpoint, or move the state and its " +
+          "checkpoint aside together, before restarting")
+    batchId > last
+  }
+
+  /** A state or companion relation, read through the path's Hadoop
+    * FileSystem ([[graft.pipeline.Pipeline.pathExists]] — a
+    * `java.io.File` check would read an HDFS/S3 state as empty, ADVICE
+    * r8), or `empty` when the path is absent. */
+  private def readOrEmpty(spark: SparkSession, path: String,
+                          empty: => DataFrame): DataFrame =
+    if (graft.pipeline.Pipeline.pathExists(spark, path))
+      spark.read.parquet(path)
+    else empty
+
+  /** The (fp, id, text, n_copies) keeper state of the delta queries
+    * when none exists yet. */
+  private def emptyKeeperState(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(String, Long, String, Long)].toDF("fp", "id", "text", "n_copies")
+  }
+
+  /** The two signature companion tables of a keeper state. */
+  private def readBandState(spark: SparkSession, statePath: String)
+      : (DataFrame, DataFrame) = {
+    import spark.implicits._
+    (readOrEmpty(spark, s"${statePath}_base",
+       Seq.empty[(Long, Seq[String])].toDF("id", "sh")),
+     readOrEmpty(spark, s"${statePath}_bands",
+       Seq.empty[(Long, String)].toDF("id", "band")))
   }
 
   /** STREAMING DELTA NEAR-DUP PAIRING — the delta dedup family
@@ -573,19 +623,8 @@ object EventStreams {
     * valid — the result then matches the rebuild up to first-seen vs
     * min-id keeper naming.
     *
-    * foreachBatch is at-least-once; the state fold is NOT idempotent
-    * (counts would double), so replays must be skipped. The
-    * last-processed batch id is committed ATOMICALLY WITH the state
-    * (a `last_batch` column written in the same crash-safe
-    * [[graft.pipeline.Pipeline.mergeIntoParquet]] swap — ADVICE r7:
-    * the previous sidecar marker file was written AFTER the fold, so a
-    * crash between the two doubled counts on replay, and its java.nio
-    * path silently restricted statePath to local filesystems). Write
-    * order per batch: pairs first (idempotent per (id1,id2) key — a
-    * replayed merge lands identical rows), then bands/base appends
-    * (idempotent per key the same way), then the state fold + batch id
-    * in one swap. A crash anywhere replays into the OLD state and
-    * re-produces byte-identical intermediate merges.
+    * Replay safety: [[foldOnce]] on the keeper state; pairs, then the
+    * base/bands companions merge before the state swap.
     *
     * The state side's signatures come from MATERIALIZED companion
     * tables (`<statePath>_base`, `<statePath>_bands` — [[graft
@@ -593,79 +632,33 @@ object EventStreams {
     * its new fingerprints' rows, so no micro-batch ever re-shingles
     * old text and per-batch cost is independent of state size
     * (VERDICT r7 next-#3). */
-  /** Shared keeper-state read for the delta streaming queries: the
-    * (fp, id, text, n_copies) relation plus the last committed batch id
-    * (-1 when the state is absent OR predates the r8 atomic batch-id
-    * column — both queries tolerate a pre-r8 state, ADVICE r8 low).
-    * Existence resolves through the path's Hadoop FileSystem
-    * ([[graft.pipeline.Pipeline.pathExists]]) — the previous
-    * `java.io.File` check read an HDFS/S3 state as empty, defeating the
-    * replay guard and replacing accumulated counts (ADVICE r8 medium). */
-  private def readKeeperState(spark: SparkSession, statePath: String)
-      : (DataFrame, Long) = {
-    import spark.implicits._
-    val stateExists = graft.pipeline.Pipeline.pathExists(spark, statePath)
-    val rawState =
-      if (stateExists) spark.read.parquet(statePath)
-      else Seq.empty[(String, Long, String, Long, Long)]
-        .toDF("fp", "id", "text", "n_copies", "last_batch")
-    val last =
-      if (!stateExists || !rawState.columns.contains("last_batch")) -1L
-      else rawState.agg(coalesce(max(col("last_batch")), lit(-1L)))
-        .head.getLong(0)
-    (rawState.select(col("fp"), col("id"), col("text"), col("n_copies")), last)
-  }
-
-  /** Companion/label relation read-or-empty, through the Hadoop
-    * FileSystem for the same reason as [[readKeeperState]]. */
-  private def readOrEmpty(spark: SparkSession, path: String,
-                          empty: => DataFrame): DataFrame =
-    if (graft.pipeline.Pipeline.pathExists(spark, path))
-      spark.read.parquet(path)
-    else empty
-
-  /** The two signature companion tables of a keeper state. */
-  private def readBandState(spark: SparkSession, statePath: String)
-      : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    (readOrEmpty(spark, s"${statePath}_base",
-       Seq.empty[(Long, Seq[String])].toDF("id", "sh")),
-     readOrEmpty(spark, s"${statePath}_bands",
-       Seq.empty[(Long, String)].toDF("id", "band")))
-  }
-
   def deltaDedupStreamQuery(spark: SparkSession, docs: DataFrame,
                             textCol: String, idCol: String,
                             statePath: String, pairsPath: String,
                             threshold: Double = 0.5,
                             trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val (state, last) = readKeeperState(spark, statePath)
-        if (batchId > last) {
-          val (stateBase, stateBands) = readBandState(spark, statePath)
-          val delta = graft.operators.Dedup.minhashPairsDeltaBanded(
-            batch.toDF(), state, stateBase, stateBands,
-            textCol, idCol, threshold = threshold)
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, pairsPath, delta.pairs.select(col("id1"), col("id2"), col("jaccard")),
-            Seq("id1", "id2"))
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, s"${statePath}_base", delta.newBase, Seq("id"))
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, s"${statePath}_bands", delta.newBands, Seq("id", "band"))
-          val newState = graft.operators.Dedup.mergeFingerprintRepState(
-              state, batch.toDF(), textCol, idCol)
-            .withColumn("last_batch", lit(batchId))
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, statePath, newState, Seq("fp"))
-        }
-        () // foreachBatch wants (Dataset, Long) => Unit
+      : StreamingQuery =
+    startFold(docs, statePath, trigger) { (batch, batchId) =>
+      foldOnce(spark, batchId, statePath, emptyKeeperState(spark)) { raw =>
+        val state = raw.select(col("fp"), col("id"), col("text"), col("n_copies"))
+        val (stateBase, stateBands) = readBandState(spark, statePath)
+        val delta = graft.operators.Dedup.minhashPairsDeltaBanded(
+          batch, state, stateBase, stateBands,
+          textCol, idCol, threshold = threshold)
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, pairsPath, delta.pairs.select(col("id1"), col("id2"), col("jaccard")),
+          Seq("id1", "id2"))
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, s"${statePath}_base", delta.newBase, Seq("id"))
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, s"${statePath}_bands", delta.newBands, Seq("id", "band"))
+        val newState = graft.operators.Dedup.mergeFingerprintRepState(
+            state, batch, textCol, idCol)
+          .withColumn("last_batch", lit(batchId))
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, statePath, newState, Seq("fp"))
       }
-      .option("checkpointLocation", s"$statePath.__checkpoint")
-      .trigger(trigger)
-      .start()
+    }
 
   /** Freeze the cosine-link state from a reference corpus — the
     * [[graft.operators.Dedup.allPairsCosineState]] relations written as
@@ -697,50 +690,43 @@ object EventStreams {
     * StreamingCosineLinkSpec. Pairs are stored orientation-normalized
     * (id1 < id2). Per-tick cost: the batch's sets are hashed ONCE and
     * reused for the cross link, the internal link, and the state
-    * append; the replay guard (max last_batch in `_base`) makes a
-    * re-delivered batch a no-op. */
+    * append. Replay safety: [[foldOnce]] on `_base`. */
   def cosineLinkStreamQuery(spark: SparkSession, docs: DataFrame,
                             textCol: String, idCol: String, shingleN: Int,
                             tauNum: Int, tauDen: Int,
                             statePath: String, pairsPath: String,
                             trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val stateBase = spark.read.parquet(s"${statePath}_base")
-        val last = stateBase
-          .agg(coalesce(max(col("last_batch")), lit(-1L))).head.getLong(0)
-        if (batchId > last) {
-          val freq = spark.read.parquet(s"${statePath}_freq")
-          val prefix = spark.read.parquet(s"${statePath}_prefix")
-          val (bBase, bPrefix) = graft.operators.Dedup.allPairsCosineAppend(
-            batch.toDF(), textCol, idCol, shingleN, tauNum, tauDen, freq)
-          val cross = graft.operators.Dedup.allPairsCosineDeltaPre(
-              bBase, bPrefix, tauNum, tauDen, prefix,
-              stateBase.select("id", "shs", "n"))
-            .select(
-              least(col("ref_id"), col("batch_id")).as("id1"),
-              greatest(col("ref_id"), col("batch_id")).as("id2"),
-              when(col("ref_id") < col("batch_id"), col("n_ref"))
-                .otherwise(col("n_batch")).as("n1"),
-              when(col("ref_id") < col("batch_id"), col("n_batch"))
-                .otherwise(col("n_ref")).as("n2"),
-              col("n_shared"), col("cos_nano"))
-          val internal = graft.operators.Dedup.allPairsCosinePre(
-            bBase, tauNum, tauDen)
-          graft.pipeline.Pipeline.mergeIntoParquet(spark, pairsPath,
-            cross.unionByName(internal), Seq("id1", "id2"))
-          graft.pipeline.Pipeline.mergeIntoParquet(spark,
-            s"${statePath}_prefix", bPrefix, Seq("h", "id"))
-          graft.pipeline.Pipeline.mergeIntoParquet(spark,
-            s"${statePath}_base",
-            bBase.withColumn("last_batch", lit(batchId)), Seq("id"))
-        }
-        ()
+      : StreamingQuery =
+    startFold(docs, statePath, trigger) { (batch, batchId) =>
+      // init*LinkState writes `_base`; reading it fails when absent
+      foldOnce(spark, batchId, s"${statePath}_base",
+          spark.read.parquet(s"${statePath}_base")) { stateBase =>
+        val freq = spark.read.parquet(s"${statePath}_freq")
+        val prefix = spark.read.parquet(s"${statePath}_prefix")
+        val (bBase, bPrefix) = graft.operators.Dedup.allPairsCosineAppend(
+          batch, textCol, idCol, shingleN, tauNum, tauDen, freq)
+        val cross = graft.operators.Dedup.allPairsCosineDeltaPre(
+            bBase, bPrefix, tauNum, tauDen, prefix,
+            stateBase.select("id", "shs", "n"))
+          .select(
+            least(col("ref_id"), col("batch_id")).as("id1"),
+            greatest(col("ref_id"), col("batch_id")).as("id2"),
+            when(col("ref_id") < col("batch_id"), col("n_ref"))
+              .otherwise(col("n_batch")).as("n1"),
+            when(col("ref_id") < col("batch_id"), col("n_batch"))
+              .otherwise(col("n_ref")).as("n2"),
+            col("n_shared"), col("cos_nano"))
+        val internal = graft.operators.Dedup.allPairsCosinePre(
+          bBase, tauNum, tauDen)
+        graft.pipeline.Pipeline.mergeIntoParquet(spark, pairsPath,
+          cross.unionByName(internal), Seq("id1", "id2"))
+        graft.pipeline.Pipeline.mergeIntoParquet(spark,
+          s"${statePath}_prefix", bPrefix, Seq("h", "id"))
+        graft.pipeline.Pipeline.mergeIntoParquet(spark,
+          s"${statePath}_base",
+          bBase.withColumn("last_batch", lit(batchId)), Seq("id"))
       }
-      .option("checkpointLocation", s"$statePath.__checkpoint")
-      .trigger(trigger)
-      .start()
+    }
 
   /** Freeze the containment-link state from a reference corpus — the
     * [[graft.operators.Dedup.allPairsContainmentState]] relations as
@@ -776,58 +762,52 @@ object EventStreams {
     * the operator's canonical orientation — id1 = the CONTAINED
     * (smaller; id asc on ties) side. Per-tick cost: the batch's sets
     * are hashed and ranked ONCE and reused for the cross link, the
-    * internal link, and the state append; the replay guard
-    * (max last_batch in `_base`) makes a re-delivered batch a no-op. */
+    * internal link, and the state append. Replay safety: [[foldOnce]]
+    * on `_base`. */
   def containLinkStreamQuery(spark: SparkSession, docs: DataFrame,
                              textCol: String, idCol: String, shingleN: Int,
                              tauNum: Int, tauDen: Int, minN: Int,
                              statePath: String, pairsPath: String,
                              trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val stateBase = spark.read.parquet(s"${statePath}_base")
-        val last = stateBase
-          .agg(coalesce(max(col("last_batch")), lit(-1L))).head.getLong(0)
-        if (batchId > last) {
-          val freq = spark.read.parquet(s"${statePath}_freq")
-          val small = spark.read.parquet(s"${statePath}_small")
-          val big = spark.read.parquet(s"${statePath}_big")
-          val (bBase, bSmall, bBig) =
-            graft.operators.Dedup.allPairsContainmentAppend(
-              batch.toDF(), textCol, idCol, shingleN, tauNum, tauDen,
-              minN, freq)
-          // canonical orientation: id1 = the contained (smaller;
-          // id-asc on ties) side, matching allPairsContainment
-          val sm = col("n_ref") < col("n_batch") ||
-            (col("n_ref") === col("n_batch") &&
-              col("ref_id") < col("batch_id"))
-          val cross = graft.operators.Dedup.allPairsContainmentDeltaPre(
-              bBase, bSmall, bBig, tauNum, tauDen,
-              small, big, stateBase.select("id", "shs", "n"))
-            .select(
-              when(sm, col("ref_id")).otherwise(col("batch_id")).as("id1"),
-              when(sm, col("batch_id")).otherwise(col("ref_id")).as("id2"),
-              when(sm, col("n_ref")).otherwise(col("n_batch")).as("n1"),
-              when(sm, col("n_batch")).otherwise(col("n_ref")).as("n2"),
-              col("n_shared"), col("cont_nano"))
-          val internal = graft.operators.Dedup.allPairsContainmentPre(
-            bBase, tauNum, tauDen, minN)
-          graft.pipeline.Pipeline.mergeIntoParquet(spark, pairsPath,
-            cross.unionByName(internal), Seq("id1", "id2"))
-          graft.pipeline.Pipeline.mergeIntoParquet(spark,
-            s"${statePath}_small", bSmall, Seq("h", "id"))
-          graft.pipeline.Pipeline.mergeIntoParquet(spark,
-            s"${statePath}_big", bBig, Seq("h", "id"))
-          graft.pipeline.Pipeline.mergeIntoParquet(spark,
-            s"${statePath}_base",
-            bBase.withColumn("last_batch", lit(batchId)), Seq("id"))
-        }
-        ()
+      : StreamingQuery =
+    startFold(docs, statePath, trigger) { (batch, batchId) =>
+      // init*LinkState writes `_base`; reading it fails when absent
+      foldOnce(spark, batchId, s"${statePath}_base",
+          spark.read.parquet(s"${statePath}_base")) { stateBase =>
+        val freq = spark.read.parquet(s"${statePath}_freq")
+        val small = spark.read.parquet(s"${statePath}_small")
+        val big = spark.read.parquet(s"${statePath}_big")
+        val (bBase, bSmall, bBig) =
+          graft.operators.Dedup.allPairsContainmentAppend(
+            batch, textCol, idCol, shingleN, tauNum, tauDen,
+            minN, freq)
+        // canonical orientation: id1 = the contained (smaller;
+        // id-asc on ties) side, matching allPairsContainment
+        val sm = col("n_ref") < col("n_batch") ||
+          (col("n_ref") === col("n_batch") &&
+            col("ref_id") < col("batch_id"))
+        val cross = graft.operators.Dedup.allPairsContainmentDeltaPre(
+            bBase, bSmall, bBig, tauNum, tauDen,
+            small, big, stateBase.select("id", "shs", "n"))
+          .select(
+            when(sm, col("ref_id")).otherwise(col("batch_id")).as("id1"),
+            when(sm, col("batch_id")).otherwise(col("ref_id")).as("id2"),
+            when(sm, col("n_ref")).otherwise(col("n_batch")).as("n1"),
+            when(sm, col("n_batch")).otherwise(col("n_ref")).as("n2"),
+            col("n_shared"), col("cont_nano"))
+        val internal = graft.operators.Dedup.allPairsContainmentPre(
+          bBase, tauNum, tauDen, minN)
+        graft.pipeline.Pipeline.mergeIntoParquet(spark, pairsPath,
+          cross.unionByName(internal), Seq("id1", "id2"))
+        graft.pipeline.Pipeline.mergeIntoParquet(spark,
+          s"${statePath}_small", bSmall, Seq("h", "id"))
+        graft.pipeline.Pipeline.mergeIntoParquet(spark,
+          s"${statePath}_big", bBig, Seq("h", "id"))
+        graft.pipeline.Pipeline.mergeIntoParquet(spark,
+          s"${statePath}_base",
+          bBase.withColumn("last_batch", lit(batchId)), Seq("id"))
       }
-      .option("checkpointLocation", s"$statePath.__checkpoint")
-      .trigger(trigger)
-      .start()
+    }
 
   /** STREAMING CURATION — the curation DAG's per-document gate chain
     * composed with the delta dedup family on an unbounded crawl
@@ -859,74 +839,68 @@ object EventStreams {
     * same way (a literal-codebook map-only expression —
     * StreamingQuantizerSpec) when the stream carries embeddings.
     *
-    * Replay safety: same contract as [[deltaDedupStreamQuery]] — the
-    * last-processed batch id commits atomically with the state swap;
-    * every other write is an idempotent keyed merge. */
+    * Replay safety: [[foldOnce]] on the keeper state; every other write
+    * is an idempotent keyed merge. */
   def curationStreamQuery(spark: SparkSession, docs: DataFrame,
                           benchmark: DataFrame,
                           statePath: String, cleanPath: String,
                           pairsPath: String,
                           threshold: Double = 0.5,
                           trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import spark.implicits._
-        val (state, last) = readKeeperState(spark, statePath)
-        if (batchId > last) {
-          val (stateBase, stateBands) = readBandState(spark, statePath)
-          val gated = graft.models.CurationModels.gateDocs(batch.toDF())
-            .localCheckpoint(false) // feeds pairing, keeper drop, and the fold
-          val delta = graft.operators.Dedup.minhashPairsDeltaBanded(
-            gated, state, stateBase, stateBands,
-            "text", "doc_id", threshold = threshold)
-          // EAGER cut: the pair relation is consumed twice (pairs merge
-          // + the groups fold below) and its plan scans the companion
-          // tables the merges in between REWRITE — a lazy re-execution
-          // after the swap would read deleted part files
-          val newPairs = delta.pairs
-            .select(col("id1"), col("id2"), col("jaccard"))
-            .localCheckpoint()
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, pairsPath, newPairs, Seq("id1", "id2"))
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, s"${statePath}_base", delta.newBase, Seq("id"))
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, s"${statePath}_bands", delta.newBands, Seq("id", "band"))
-          // transitive groups: fold the batch's pairs into the evolving
-          // labeling — the delta-CC graph is |labels| + |batch pairs|
-          // edges, and changed labels replace their rows in the merge
-          val oldLabels = readOrEmpty(spark, s"${pairsPath}_groups",
-            Seq.empty[(Long, Long)].toDF("id", "group_id"))
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, s"${pairsPath}_groups",
-            graft.operators.Dedup.connectedComponentsDelta(
-              oldLabels, newPairs.select(col("id1"), col("id2"))),
-            Seq("id"))
-          // the batch's NEW keepers (first-seen fingerprints), full
-          // gated columns carried through, then per-doc decontamination
-          val newKeeperIds = graft.operators.Dedup
-            .fingerprintRepState(gated, "text", "doc_id")
-            .join(state.select(col("fp")), Seq("fp"), "left_anti")
-            .select(col("id").as("doc_id"))
-          val newKeepers = gated.join(newKeeperIds, Seq("doc_id"))
-          val contaminated = graft.operators.TextAnalysis.ngramOverlap(
-            newKeepers, benchmark, "text", "doc_id", n = 5)
-          val clean = newKeepers.join(
-            contaminated.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, cleanPath, clean, Seq("doc_id"))
-          val newState = graft.operators.Dedup.mergeFingerprintRepState(
-              state, gated, "text", "doc_id")
-            .withColumn("last_batch", lit(batchId))
-          graft.pipeline.Pipeline.mergeIntoParquet(
-            spark, statePath, newState, Seq("fp"))
-        }
-        ()
+      : StreamingQuery =
+    startFold(docs, statePath, trigger) { (batch, batchId) =>
+      import spark.implicits._
+      foldOnce(spark, batchId, statePath, emptyKeeperState(spark)) { raw =>
+        val state = raw.select(col("fp"), col("id"), col("text"), col("n_copies"))
+        val (stateBase, stateBands) = readBandState(spark, statePath)
+        val gated = graft.models.CurationModels.gateDocs(batch)
+          .localCheckpoint(false) // feeds pairing, keeper drop, and the fold
+        val delta = graft.operators.Dedup.minhashPairsDeltaBanded(
+          gated, state, stateBase, stateBands,
+          "text", "doc_id", threshold = threshold)
+        // EAGER cut: the pair relation is consumed twice (pairs merge
+        // + the groups fold below) and its plan scans the companion
+        // tables the merges in between REWRITE — a lazy re-execution
+        // after the swap would read deleted part files
+        val newPairs = delta.pairs
+          .select(col("id1"), col("id2"), col("jaccard"))
+          .localCheckpoint()
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, pairsPath, newPairs, Seq("id1", "id2"))
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, s"${statePath}_base", delta.newBase, Seq("id"))
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, s"${statePath}_bands", delta.newBands, Seq("id", "band"))
+        // transitive groups: fold the batch's pairs into the evolving
+        // labeling — the delta-CC graph is |labels| + |batch pairs|
+        // edges, and changed labels replace their rows in the merge
+        val oldLabels = readOrEmpty(spark, s"${pairsPath}_groups",
+          Seq.empty[(Long, Long)].toDF("id", "group_id"))
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, s"${pairsPath}_groups",
+          graft.operators.Dedup.connectedComponentsDelta(
+            oldLabels, newPairs.select(col("id1"), col("id2"))),
+          Seq("id"))
+        // the batch's NEW keepers (first-seen fingerprints), full
+        // gated columns carried through, then per-doc decontamination
+        val newKeeperIds = graft.operators.Dedup
+          .fingerprintRepState(gated, "text", "doc_id")
+          .join(state.select(col("fp")), Seq("fp"), "left_anti")
+          .select(col("id").as("doc_id"))
+        val newKeepers = gated.join(newKeeperIds, Seq("doc_id"))
+        val contaminated = graft.operators.TextAnalysis.ngramOverlap(
+          newKeepers, benchmark, "text", "doc_id", n = 5)
+        val clean = newKeepers.join(
+          contaminated.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, cleanPath, clean, Seq("doc_id"))
+        val newState = graft.operators.Dedup.mergeFingerprintRepState(
+            state, gated, "text", "doc_id")
+          .withColumn("last_batch", lit(batchId))
+        graft.pipeline.Pipeline.mergeIntoParquet(
+          spark, statePath, newState, Seq("fp"))
       }
-      .option("checkpointLocation", s"$statePath.__checkpoint")
-      .trigger(trigger)
-      .start()
+    }
 
   /** Current-weight view of the streamed pairs: join the state's copy
     * counts onto the stored (id1, id2, jaccard) relation — identical
@@ -968,52 +942,24 @@ object EventStreams {
     * streams through — the sketch is the thing that makes "top tokens
     * over an unbounded crawl" a bounded-state streaming problem.
     *
-    * Additive folds are not idempotent, so replays are skipped via the
-    * same atomic last-batch-in-state-swap guard as
-    * [[deltaDedupStreamQuery]]. */
+    * Replay safety: [[foldOnce]] on the state. */
   def cmsStreamQuery(spark: SparkSession, docs: DataFrame, textCol: String,
                      statePath: String,
                      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cmsFoldBatch(spark, batch.toDF(), batchId, textCol, statePath, 4, 512)
-      }
-      .option("checkpointLocation", s"$statePath.__checkpoint")
-      .trigger(trigger)
-      .start()
+      : StreamingQuery =
+    startFold(docs, statePath, trigger) { (batch, batchId) =>
+      cmsFoldBatch(spark, batch, batchId, textCol, statePath, 4, 512)
+    }
 
   /** The guarded per-batch CMS fold (exposed so the replay spec can
-    * drive it with a stale batch id): skip unless batchId advances, add
-    * the batch's partial sketch per (r, bucket), commit the batch id in
-    * the same state swap. */
+    * drive it with a stale batch id): add the batch's partial sketch
+    * per (r, bucket) under [[foldOnce]]. */
   private[graft] def cmsFoldBatch(spark: SparkSession, batch: DataFrame,
                                   batchId: Long, textCol: String,
                                   statePath: String, d: Int, w: Int): Unit = {
     import spark.implicits._
-    val exists = graft.pipeline.Pipeline.pathExists(spark, statePath)
-    val raw =
-      if (exists) spark.read.parquet(statePath)
-      else Seq.empty[(Int, Long, Long, Long)]
-        .toDF("r", "bucket", "c", "last_batch")
-    val last =
-      if (!exists) -1L
-      else raw.agg(coalesce(max(col("last_batch")), lit(-1L)))
-        .head.getLong(0)
-    // batchId == last is a genuine foreachBatch replay (restart before
-    // the checkpoint committed) — skip silently, the fold is already in.
-    // batchId < last means the CHECKPOINT was deleted/recreated while
-    // the state table survived: batch ids restarted at 0 and every fold
-    // would silently no-op forever. That is an operational error, not a
-    // replay — fail loud so the operator resets state and checkpoint
-    // together.
-    if (batchId < last)
-      throw new IllegalStateException(
-        s"CMS state at $statePath has last_batch=$last but the stream " +
-          s"delivered batchId=$batchId — the checkpoint was reset while " +
-          "the state table survived; delete (or move) BOTH together " +
-          "before restarting, or every batch is silently skipped")
-    if (batchId > last) {
+    foldOnce(spark, batchId, statePath,
+        Seq.empty[(Int, Long, Long)].toDF("r", "bucket", "c")) { raw =>
       val part = graft.operators.TextAnalysis
         .cmsSketch(batch, textCol, d, w)
       val merged = raw.select(col("r"), col("bucket"), col("c"))
@@ -1029,52 +975,33 @@ object EventStreams {
     * warehouse state table folded per micro-batch
     * ([[graft.operators.TextAnalysis.dataCardState]] — fingerprint-keyed
     * counter merges, so the RETROACTIVE dup flip of an earlier batch's
-    * document falls out of the keying with no rescan). Same
-    * atomic last-batch-in-state-swap replay guard as the CMS fold
-    * (counter merges are not idempotent); read the card at any time
-    * with `dataCardFromState(read(statePath).drop("last_batch"))`. */
+    * document falls out of the keying with no rescan). Replay safety:
+    * [[foldOnce]] on the state (counter merges are not idempotent); read
+    * the card at any time with
+    * `dataCardFromState(read(statePath).drop("last_batch"))`. */
   def dataCardStreamQuery(spark: SparkSession, docs: DataFrame,
                           textCol: String, langCol: String,
                           sourceCol: String, nCharsCol: String,
                           statePath: String,
                           trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dataCardFoldBatch(spark, batch.toDF(), batchId, textCol, langCol,
-          sourceCol, nCharsCol, statePath)
-      }
-      .option("checkpointLocation", s"$statePath.__checkpoint")
-      .trigger(trigger)
-      .start()
+      : StreamingQuery =
+    startFold(docs, statePath, trigger) { (batch, batchId) =>
+      dataCardFoldBatch(spark, batch, batchId, textCol, langCol,
+        sourceCol, nCharsCol, statePath)
+    }
 
   /** The guarded per-batch data-card fold (exposed for the replay
-    * spec). Guard semantics identical to [[cmsFoldBatch]]: equal batch
-    * id = genuine replay, skip; lower = checkpoint reset over surviving
-    * state, fail loud. */
+    * spec), under [[foldOnce]]. */
   private[graft] def dataCardFoldBatch(spark: SparkSession, batch: DataFrame,
                                        batchId: Long, textCol: String,
                                        langCol: String, sourceCol: String,
                                        nCharsCol: String,
                                        statePath: String): Unit = {
     import spark.implicits._
-    val exists = graft.pipeline.Pipeline.pathExists(spark, statePath)
-    val raw =
-      if (exists) spark.read.parquet(statePath)
-      else Seq.empty[(String, String, String, Long, Long, Long, Long, Long)]
-        .toDF("fp", "lang", "source", "n_docs", "n_tokens", "n_chars",
-          "n_pii_docs", "last_batch")
-    val last =
-      if (!exists) -1L
-      else raw.agg(coalesce(max(col("last_batch")), lit(-1L)))
-        .head.getLong(0)
-    if (batchId < last)
-      throw new IllegalStateException(
-        s"data-card state at $statePath has last_batch=$last but the " +
-          s"stream delivered batchId=$batchId — the checkpoint was reset " +
-          "while the state table survived; delete (or move) BOTH " +
-          "together before restarting, or every batch is silently skipped")
-    if (batchId > last) {
+    foldOnce(spark, batchId, statePath,
+        Seq.empty[(String, String, String, Long, Long, Long, Long)]
+          .toDF("fp", "lang", "source", "n_docs", "n_tokens", "n_chars",
+            "n_pii_docs")) { raw =>
       val part = graft.operators.TextAnalysis
         .dataCardState(batch, textCol, langCol, sourceCol, nCharsCol)
       val merged = graft.operators.TextAnalysis
@@ -1153,11 +1080,20 @@ object EventStreams {
         col("purchase_ts"), col("click_ts"), col("amount"))
   }
 
-  /** Drain-everything-now runner (the cron-tick semantics): starts the
-    * query with Trigger.AvailableNow on an append-mode memory sink and
-    * blocks until the backlog is processed. Returns the sink contents. */
+  /** Drain-everything-now runner (the cron-tick semantics): drains the
+    * backlog into the append-mode memory sink `queryName`
+    * ([[drainToMemory]]) and returns the sink contents. */
   def runAvailableNow(spark: SparkSession, out: DataFrame,
                       queryName: String): DataFrame = {
+    drainToMemory(out, queryName)
+    spark.table(queryName)
+  }
+
+  /** The one memory-sink start: runs `out` with Trigger.AvailableNow
+    * into the append-mode memory sink `queryName` and returns the query
+    * once the backlog is processed. */
+  private[streaming] def drainToMemory(out: DataFrame,
+                                       queryName: String): StreamingQuery = {
     val q = out.writeStream
       .format("memory")
       .queryName(queryName)
@@ -1165,6 +1101,6 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(queryName)
+    q
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.types._
 
 /** Streaming lateness / watermark observability (VERDICT r10 next-#7).
@@ -155,14 +155,7 @@ object StreamingMetrics {
   def runAvailableNowWithMetrics(spark: SparkSession, out: DataFrame,
                                  queryName: String,
                                  metricsPath: String): DataFrame = {
-    val q = out.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    harvest(spark, q, metricsPath)
+    harvest(spark, EventStreams.drainToMemory(out, queryName), metricsPath)
     spark.table(queryName)
   }
 }

@@ -37,7 +37,9 @@ class StreamingContainLinkSpec extends SparkSpec {
     df.select("id1", "id2", "n1", "n2", "n_shared", "cont_nano")
       .as[P].collect().toSet
 
-  test("streamed drops accumulate the static containment relation on everything seen") {
+  /** Drops 1 and 2 drained as batch ids 0 and 1 into a fresh state:
+    * (landing dir, statePath, pairsPath), shared by both tests. */
+  private lazy val drained = {
     val root = Files.createTempDirectory("graft-stream-contain")
     val in = root.resolve("in"); Files.createDirectory(in)
     drop1.toDF("doc_id", "text").coalesce(1)
@@ -50,7 +52,12 @@ class StreamingContainLinkSpec extends SparkSpec {
     EventStreams.initContainLinkState(spark, ref.toDF("doc_id", "text"),
       "text", "doc_id", shingleN = 1, tauNum = 1, tauDen = 2, minN = 3,
       statePath)
+    drain(in, statePath, pairsPath)
+    (in, statePath, pairsPath)
+  }
 
+  private def drain(in: java.nio.file.Path, statePath: String,
+                    pairsPath: String): Unit = {
     val schema = drop1.toDF("doc_id", "text").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -59,7 +66,10 @@ class StreamingContainLinkSpec extends SparkSpec {
         shingleN = 1, tauNum = 1, tauDen = 2, minN = 3,
         statePath, pairsPath, Trigger.AvailableNow())
       .awaitTermination()
+  }
 
+  test("streamed drops accumulate the static containment relation on everything seen") {
+    val (_, statePath, pairsPath) = drained
     val streamed = rel(spark.read.parquet(pairsPath))
     val all = (ref ++ drop1 ++ drop2).toDF("doc_id", "text")
     val expect =
@@ -88,5 +98,22 @@ class StreamingContainLinkSpec extends SparkSpec {
       .select("id").distinct().count() == 7L)
     assert(spark.read.parquet(s"${statePath}_big")
       .select("id").distinct().count() == 7L)
+  }
+
+  test("a checkpoint reset fails loudly and leaves the state unchanged") {
+    val (in, statePath, pairsPath) = drained
+    def tables = Seq(s"${statePath}_base", pairsPath)
+      .map(p => spark.read.parquet(p).collect().map(_.toString).sorted.toSeq)
+    val before = tables
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$statePath.__checkpoint"))
+    Seq((30L, "a b c d e f")).toDF("doc_id", "text").coalesce(1)
+      .write.parquet(in.resolve("d3").toString)
+    // batch ids restart at 0 below `_base`'s last_batch 1
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(in, statePath, pairsPath)
+    }
+    assert(ex.toString.contains("checkpoint was reset"), ex.toString)
+    assert(tables == before, "a reset must fold nothing")
   }
 }

@@ -35,7 +35,9 @@ class StreamingCosineLinkSpec extends SparkSpec {
     df.select("id1", "id2", "n1", "n2", "n_shared", "cos_nano")
       .as[P].collect().toSet
 
-  test("streamed drops accumulate the static all-pairs relation on everything seen") {
+  /** Drops 1 and 2 drained as batch ids 0 and 1 into a fresh state:
+    * (landing dir, statePath, pairsPath), shared by both tests. */
+  private lazy val drained = {
     val root = Files.createTempDirectory("graft-stream-cosine")
     val in = root.resolve("in"); Files.createDirectory(in)
     drop1.toDF("doc_id", "text").coalesce(1)
@@ -47,7 +49,12 @@ class StreamingCosineLinkSpec extends SparkSpec {
 
     EventStreams.initCosineLinkState(spark, ref.toDF("doc_id", "text"),
       "text", "doc_id", shingleN = 1, tauNum = 3, tauDen = 5, statePath)
+    drain(in, statePath, pairsPath)
+    (in, statePath, pairsPath)
+  }
 
+  private def drain(in: java.nio.file.Path, statePath: String,
+                    pairsPath: String): Unit = {
     val schema = drop1.toDF("doc_id", "text").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -56,7 +63,10 @@ class StreamingCosineLinkSpec extends SparkSpec {
         shingleN = 1, tauNum = 3, tauDen = 5, statePath, pairsPath,
         Trigger.AvailableNow())
       .awaitTermination()
+  }
 
+  test("streamed drops accumulate the static all-pairs relation on everything seen") {
+    val (_, statePath, pairsPath) = drained
     val streamed = rel(spark.read.parquet(pairsPath))
     val all = (ref ++ drop1 ++ drop2).toDF("doc_id", "text")
     val expect = rel(Dedup.allPairsCosine(all, "text", "doc_id", 1, 3, 5)) --
@@ -77,5 +87,22 @@ class StreamingCosineLinkSpec extends SparkSpec {
     assert(base.count() == (ref ++ drop1 ++ drop2).size)
     assert(base.filter(col("last_batch") >= 0L).count() ==
       (drop1 ++ drop2).size)
+  }
+
+  test("a checkpoint reset fails loudly and leaves the state unchanged") {
+    val (in, statePath, pairsPath) = drained
+    def tables = Seq(s"${statePath}_base", pairsPath)
+      .map(p => spark.read.parquet(p).collect().map(_.toString).sorted.toSeq)
+    val before = tables
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$statePath.__checkpoint"))
+    Seq((30L, "a b c d g")).toDF("doc_id", "text").coalesce(1)
+      .write.parquet(in.resolve("d3").toString)
+    // batch ids restart at 0 below `_base`'s last_batch 1
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(in, statePath, pairsPath)
+    }
+    assert(ex.toString.contains("checkpoint was reset"), ex.toString)
+    assert(tables == before, "a reset must fold nothing")
   }
 }

@@ -14,6 +14,7 @@ import java.nio.file.{Files, Paths}
   * design; CurationModels documents that split.)
   */
 class StreamingCurationSpec extends SparkSpec {
+  import StreamingCurationSpec.CurationDrain
 
   private val src = "/root/testdata/sf0.001/documents.parquet"
 
@@ -61,12 +62,20 @@ class StreamingCurationSpec extends SparkSpec {
       s"w${i}d", "in", s"w${i}e", "is", s"w${i}f", "it", s"w${i}g",
       "that", s"w${i}h", "for", s"w${i}j", "a", s"w${i}k").mkString(" ")
 
-  test("micro-batched crawl == batch DAG DOCS_CLEAN; delta pairs == batch rebuild") {
-    import graft.models.CurationModels
-    import graft.operators.Dedup
-    import graft.pipeline.Pipeline._
-    import spark.implicits._
+  // two sequential AvailableNow drains (the cron-tick contract) so the
+  // drop order is deterministic — the append-ordered slicing the
+  // equality claim is stated for
+  private def drain(f: CurationDrain): Unit = {
+    val stream = spark.readStream.schema(f.union.schema)
+      .option("maxFilesPerTrigger", "1").parquet(f.in.toString + "/*")
+    EventStreams.curationStreamQuery(spark, stream, f.bench,
+      f.statePath, f.cleanPath, f.pairsPath, threshold = 0.5)
+      .awaitTermination()
+  }
 
+  /** Drops 1 and 2 drained as batch ids 0 and 1 into a fresh state. */
+  private lazy val e2e: CurationDrain = {
+    import spark.implicits._
     // drop 1: gated docs 0..9, an exact copy of 0, a junk doc the gate
     // drops, and doc 1 is benchmark-contaminated
     val drop1 = ((0L until 10L).map(i => (i, docText(i), "en", "web")) ++
@@ -78,29 +87,26 @@ class StreamingCurationSpec extends SparkSpec {
       Seq((101L, docText(2), "en", "web"),
         (110L, docText(0).replace("w0k", "w0kx"), "en", "web")))
       .toDF("doc_id", "text", "lang", "source")
-    val union = drop1.unionByName(drop2)
     val bench = Seq((9001L, docText(1))).toDF("doc_id", "text")
 
     val root = Files.createTempDirectory("graft-stream-cur-e2e")
     val in = root.resolve("in"); Files.createDirectory(in)
-    val statePath = root.resolve("state").toString
-    val cleanPath = root.resolve("clean").toString
-    val pairsPath = root.resolve("pairs").toString
-    val schema = drop1.schema
-
-    // two sequential AvailableNow drains (the cron-tick contract) so the
-    // drop order is deterministic — the append-ordered slicing the
-    // equality claim is stated for
-    def drain(): Unit = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(in.toString + "/*")
-      EventStreams.curationStreamQuery(spark, stream, bench,
-        statePath, cleanPath, pairsPath, threshold = 0.5).awaitTermination()
-    }
+    val f = CurationDrain(in, root.resolve("state").toString,
+      root.resolve("clean").toString, root.resolve("pairs").toString,
+      drop1.unionByName(drop2), bench)
     drop1.coalesce(1).write.parquet(in.resolve("d1").toString)
-    drain()
+    drain(f)
     drop2.coalesce(1).write.parquet(in.resolve("d2").toString)
-    drain()
+    drain(f)
+    f
+  }
+
+  test("micro-batched crawl == batch DAG DOCS_CLEAN; delta pairs == batch rebuild") {
+    import graft.models.CurationModels
+    import graft.operators.Dedup
+    import graft.pipeline.Pipeline._
+    import spark.implicits._
+    val CurationDrain(_, statePath, cleanPath, pairsPath, union, bench) = e2e
 
     // the batch DAG over the union corpus
     val tmp = Files.createTempDirectory("graft-cur-batch").toString
@@ -145,4 +151,32 @@ class StreamingCurationSpec extends SparkSpec {
     assert(streamedGroups == batchGroups && streamedGroups.nonEmpty,
       s"streamed groups $streamedGroups != batch closure $batchGroups")
   }
+
+  test("a checkpoint reset fails loudly and leaves the state unchanged") {
+    import spark.implicits._
+    val f = e2e
+    def tables = Seq(f.statePath, f.cleanPath, f.pairsPath,
+        s"${f.pairsPath}_groups")
+      .map(p => spark.read.parquet(p).collect().map(_.toString).sorted.toSeq)
+    val before = tables
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"${f.statePath}.__checkpoint"))
+    Seq((20L, docText(20), "en", "web"))
+      .toDF("doc_id", "text", "lang", "source").coalesce(1)
+      .write.parquet(f.in.resolve("d3").toString)
+    // batch ids restart at 0 below the state's last_batch 1
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(f)
+    }
+    assert(ex.toString.contains("checkpoint was reset"), ex.toString)
+    assert(tables == before, "a reset must fold nothing")
+  }
+}
+
+object StreamingCurationSpec {
+  /** The end-to-end fixture both tests read: the landing dir and the
+    * streamed relations, the union corpus and the benchmark. */
+  final case class CurationDrain(in: java.nio.file.Path,
+      statePath: String, cleanPath: String, pairsPath: String,
+      union: DataFrame, bench: DataFrame)
 }

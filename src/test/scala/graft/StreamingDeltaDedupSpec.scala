@@ -25,7 +25,9 @@ class StreamingDeltaDedupSpec extends SparkSpec {
     (10L, near3), (11L, near2),
     (12L, "another disjoint document with its very own vocabulary set"))
 
-  test("streamed drops end in the batch rebuild's pair relation") {
+  /** Drops 1 and 2 drained as batch ids 0 and 1 into a fresh state:
+    * (landing dir, statePath, pairsPath), shared by both tests. */
+  private lazy val drained = {
     val root = Files.createTempDirectory("graft-stream-delta")
     val in = root.resolve("in"); Files.createDirectory(in)
     drop1.toDF("doc_id", "text").coalesce(1)
@@ -34,7 +36,12 @@ class StreamingDeltaDedupSpec extends SparkSpec {
       .write.parquet(in.resolve("d2").toString)
     val statePath = root.resolve("state").toString
     val pairsPath = root.resolve("pairs").toString
+    drain(in, statePath, pairsPath)
+    (in, statePath, pairsPath)
+  }
 
+  private def drain(in: java.nio.file.Path, statePath: String,
+                    pairsPath: String): Unit = {
     val schema = drop1.toDF("doc_id", "text").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // one crawl drop per micro-batch
@@ -42,7 +49,10 @@ class StreamingDeltaDedupSpec extends SparkSpec {
     EventStreams.deltaDedupStreamQuery(spark, stream, "text", "doc_id",
         statePath, pairsPath, threshold = 0.5, Trigger.AvailableNow())
       .awaitTermination()
+  }
 
+  test("streamed drops end in the batch rebuild's pair relation") {
+    val (_, statePath, pairsPath) = drained
     def rel(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSet
@@ -66,5 +76,23 @@ class StreamingDeltaDedupSpec extends SparkSpec {
       .select("fp", "id", "n_copies").as[(String, Long, Long)]
       .collect().sortBy(_._2).toSeq
     assert(mergedState == scratch)
+  }
+
+  test("a checkpoint reset fails loudly and leaves the state unchanged") {
+    val (in, statePath, pairsPath) = drained
+    def tables = Seq(statePath, s"${statePath}_base", pairsPath)
+      .map(p => spark.read.parquet(p).collect().map(_.toString).sorted.toSeq)
+    val before = tables
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$statePath.__checkpoint"))
+    Seq((20L, "a third drop landing after the checkpoint was lost"))
+      .toDF("doc_id", "text").coalesce(1)
+      .write.parquet(in.resolve("d3").toString)
+    // batch ids restart at 0 below the state's last_batch 1
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(in, statePath, pairsPath)
+    }
+    assert(ex.toString.contains("checkpoint was reset"), ex.toString)
+    assert(tables == before, "a reset must fold nothing")
   }
 }
