@@ -452,15 +452,14 @@ object CurationModels {
   /** INDEX CARD — the published index's measured serving frontier as a
     * bounded relation (VERDICT r16 next-#8): the exact (nProbe × k)
     * operating sweep over the current index+codebook (e25's gated
-    * kernel) reduced to the e28-style cheapest-meeting-cell CHOICE per
-    * (k, recall target). This is the operating point a serving team
+    * kernel) reduced to the e28-style CHOICE per (k, recall target)
+    * ([[Similarity.cheapestMeetingCell]]). This is the operating point a serving team
     * reads off the release; versioned next to the release so a retrain
     * that degrades the cost/recall frontier is a DIFFABLE event, not a
     * silent regression. Bounded: k ∈ {1, 5} × targets {60%, 90%}
     * (probe widths 1, 2, 4) = 4 rows, computed from the 1-in-20 chunk
     * sample against the stored index. */
   def indexCard(spark: SparkSession, cfg: RunConfig): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val index = VersionedTable.read(spark, memberRoot(cfg, "RAG_CHUNK_INDEX"))
     val cb = collectRagCodebook(
       VersionedTable.read(spark, memberRoot(cfg, "RAG_CODEBOOK")))
@@ -470,13 +469,10 @@ object CurationModels {
     val grid = Similarity.ivfOperatingSweepExact(corpus, queries, "v", "id",
       ks = Seq(1, 5), codebook = cb, nProbes = Seq(1, 2, 4))
     import spark.implicits._
-    val targets = Seq(600000L, 900000L).toDF("target_ppm")
-    val cand = grid.crossJoin(broadcast(targets))
-      .withColumn("meets",
-        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
     // the exact sweep has no shortlist/family axes, so the cost tail is
     // probe count alone
-    Similarity.cheapestMeetingCell(cand, Seq("k", "target_ppm"),
+    Similarity.cheapestMeetingCell(grid,
+        Seq(600000L, 900000L).toDF("target_ppm"), Seq("k", "target_ppm"),
         Seq(col("n_probe").asc))
       .select(col("k"), col("target_ppm"), col("n_probe"),
         col("recall_ppm"), col("scanned_ppm"),

@@ -861,26 +861,26 @@ object Similarity {
         col("r_shortlist"), col("k")))
   }
 
-  /** The CHEAPEST-MEETING-CELL decision window shared by every serving
-    * auto-choice (e28/e31/e32/e33/e36 and the curation index card —
-    * review r17: six hand-rolled copies of this load-bearing ordering
-    * had accumulated): per partition (the (k, target) or (tenant, k)
-    * key), prefer cells meeting the target (`meets` = 1), then minimal
-    * recall deficit (the best-available fallback when nothing meets),
-    * then the lexicographic cost order — scanned corpus fraction first
-    * (the at-scale dominant cost), then the caller's remaining
-    * tiebreaks (shortlist depth, probe count, family name) as
-    * already-directed columns. `cand` must carry integer `meets`,
-    * `recall_ppm`, `scanned_ppm`. Returns the winning row per
-    * partition (the `rn` helper column dropped). */
-  def cheapestMeetingCell(cand: DataFrame, partitionCols: Seq[String],
+  /** THE serving-choice rule (e28, e31–e33, e36, e38, the index card;
+    * SQL twin `DataQueries.cheapestMeetingCellSql`): each `grid` cell ×
+    * broadcast `targets` row is flagged `meets` = 1 when `recall_ppm >=
+    * target_ppm`; per `partitionCols` the winner orders by meets DESC,
+    * then recall deficit (10⁶ − recall_ppm, 0 when meeting: if nothing
+    * meets, the best-available cell returns with meets = 0), then
+    * `scanned_ppm`, then the caller's directed `costTail`, whose last
+    * key decides. Returns each partition's winner, `meets` kept. */
+  def cheapestMeetingCell(grid: DataFrame, targets: DataFrame,
+                          partitionCols: Seq[String],
                           costTail: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(partitionCols.map(col): _*)
       .orderBy((Seq(col("meets").desc,
         when(col("meets") === 1L, lit(0L))
           .otherwise(lit(1000000L) - col("recall_ppm")).asc,
         col("scanned_ppm").asc) ++ costTail): _*)
-    cand.withColumn("rn", row_number().over(w))
+    grid.crossJoin(broadcast(targets))
+      .withColumn("meets",
+        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
+      .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
   }
 

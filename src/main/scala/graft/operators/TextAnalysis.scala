@@ -1347,16 +1347,24 @@ object TextAnalysis {
   def fitBpe(docs: DataFrame, textCol: String, idCol: String,
              vocabWords: Int = 2000, nMerges: Int = 16,
              sampleMod: Int = 20): Seq[(String, String)] = {
-    val sample = docs.filter(
-      pmod(md5Long(col(idCol).cast(StringType)), lit(sampleMod.toLong)) === 0L)
-    val words = sample
+    fitBpeDriver(sampleWords(docs, textCol, idCol, vocabWords, sampleMod),
+      nMerges)
+  }
+
+  /** The tokenizer fits' bounded word sample: the deterministic md5
+    * 1/`sampleMod` document sample, whitespace-pretokenized and
+    * lowercased, reduced to its top-`vocabWords` words by (count DESC,
+    * md5(word), word) and collected with their counts. */
+  private def sampleWords(docs: DataFrame, textCol: String, idCol: String,
+                          vocabWords: Int, sampleMod: Int = 20)
+      : Seq[(String, Long)] =
+    docs.filter(
+        pmod(md5Long(col(idCol).cast(StringType)), lit(sampleMod.toLong)) === 0L)
       .select(explode(tokens(lower(col(textCol)))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, md5(col("w")), col("w"))
       .limit(vocabWords)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    fitBpeDriver(words, nMerges)
-  }
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -1492,15 +1500,8 @@ object TextAnalysis {
                    vocabWords: Int = 2000, pieceMaxLen: Int = 4,
                    candVocab: Int = 120, emIters: Int = 2)
       : (Map[String, Long], Long) = {
-    val sample = docs.filter( // the deterministic 1-in-20 md5 sample
-      pmod(md5Long(col(idCol).cast(StringType)), lit(20L)) === 0L)
-    val words = sample
-      .select(explode(tokens(lower(col(textCol)))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, md5(col("w")), col("w"))
-      .limit(vocabWords)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    fitUnigramDriver(words, pieceMaxLen, candVocab, emIters)
+    fitUnigramDriver(sampleWords(docs, textCol, idCol, vocabWords),
+      pieceMaxLen, candVocab, emIters)
   }
 
   /** The driver-side unigram fit over a bounded weighted word list.
@@ -1643,15 +1644,8 @@ object TextAnalysis {
   def fitWordpieceVocab(docs: DataFrame, textCol: String, idCol: String,
                         vocabWords: Int = 2000, pieceMaxLen: Int = 4,
                         candVocab: Int = 120): Set[String] = {
-    val sample = docs.filter( // the deterministic 1-in-20 md5 sample
-      pmod(md5Long(col(idCol).cast(StringType)), lit(20L)) === 0L)
-    val words = sample
-      .select(explode(tokens(lower(col(textCol)))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, md5(col("w")), col("w"))
-      .limit(vocabWords)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    fitWordpieceDriver(words, pieceMaxLen, candVocab)
+    fitWordpieceDriver(sampleWords(docs, textCol, idCol, vocabWords),
+      pieceMaxLen, candVocab)
   }
 
   /** Driver-side wordpiece fit over a bounded weighted word list

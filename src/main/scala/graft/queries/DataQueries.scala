@@ -978,16 +978,11 @@ object DataQueries {
     * exact-integer cosine key (e24/e25); ADC scoring keeps the round-6
     * replay the e05/e07/e09 gates have proven. The oracle replays BOTH
     * quantizer trainings + the ADC chain + every rerank window. */
-  val e26PqGrid: Q = (s, dir) => {
-    val emb = Catalog(s, dir).embeddings
-    Similarity.ivfOperatingGrid(emb, None,
-        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = Seq(5), cellCodebook = kmModel(s, dir).centroids,
-        families = Seq(IvfFamily.Pq(4, pqModel(s, dir))),
-        rs = pqGridRs, nProbes = pqGridNps)
+  val e26PqGrid: Q = (s, dir) =>
+    ivfGrid(s, dir, Seq("ivf_pq"), ks = Seq(5), rs = pqGridRs,
+        nps = pqGridNps)
       .drop("family", "k")
       .orderBy(col("n_probe"), col("r_shortlist"))
-  }
 
   /** The PQ/ADC scoring CTE chain shared by the e26 and e27 oracles
     * (downstream of sweepCtePrefix's e/q/asg/pr and [[pqCbCtes]]'s
@@ -1078,35 +1073,79 @@ object DataQueries {
   private val grid3dRs = Seq(5, 20)
   private val grid3dNps = Seq(1, 4)
 
-  /** 3-D IVF-PQ OPERATING GRID (e27 — [[Similarity
-    * .ivfOperatingGrid]] with the PQ family): e25's (nProbe × k) and e26's
-    * (nProbe × r) composed into the (nProbe × r × k) surface the
-    * production ANN path actually tunes from (VERDICT r14 next-#7).
-    * Gate contract: the e24/e25/e26 integer-key chain end-to-end —
-    * exact-key rerank, depth-k brute-force denominators, integer ppm;
-    * the k axis costs no scan. e26 is this operator's k = 5 slice;
-    * OperatorsSpec "ivfPqOperatingGrid3d: every k-matching cell equals
-    * the e26 2-D point" pins a multi-k grid's k = 5 cells equal to it. */
-  val e27Grid3d: Q = (s, dir) =>
-    grid3dRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
+  /** The IVF code families, by the `family` tag their grid rows carry. */
+  private val ivfFamilyTags = Seq("ivf_pq", "ivf_sq8", "ivf_bq")
 
-  /** The measured e27 grid — one LAZY builder shared by e27's report
-    * and e28's decision (the [[bandingSweepCi]] single-sourcing
-    * contract; same deliberate no-memo rationale). */
-  private def grid3dRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
+  /** The `lang = 'en'` keep set every filtered grid cuts its corpus to
+    * (e17's metadata predicate), as the corpus id column `idCol`. */
+  private def enKeep(s: SparkSession, dir: String, idCol: String)
+      : DataFrame =
+    Catalog(s, dir).documents.filter(col("lang") === "en")
+      .select(col("doc_id").as(idCol))
+
+  /** SQL twin of [[enKeep]]: the `en(id)` CTE. */
+  private val enKeepCte =
+    "en AS (SELECT doc_id AS id FROM documents WHERE lang = 'en')"
+
+  /** THE IVF operating-grid builder of the catalogue (e26, e27, e29,
+    * e30, e34, e35, e39 and the [[familyGrids]] unions): one [[Similarity
+    * .ivfOperatingGrid]] scoring the `tags` families over one candidate
+    * pass — on the plain corpus with the kmModel cells and pqModel codes,
+    * or with `opq` on the [[Opq.rotate]]d corpus with the
+    * rotation-trained models (orthogonal rotation preserves ids and
+    * cosine, so the cells stay commensurate); unfiltered, or with
+    * `filtered` cut to [[enKeep]]. Queries are every 100th id; rows keep
+    * their `family` tag. Oracle: [[ivfGridSql]]. */
+  private def ivfGrid(s: SparkSession, dir: String, tags: Seq[String],
+                      opq: Boolean = false, filtered: Boolean = false,
+                      ks: Seq[Int] = grid3dKs, rs: Seq[Int] = grid3dRs,
+                      nps: Seq[Int] = grid3dNps): DataFrame = {
     val emb = Catalog(s, dir).embeddings
-    Similarity.ivfOperatingGrid(emb, None,
-        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-        families = Seq(IvfFamily.Pq(4, pqModel(s, dir))),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .drop("family")
+    val (corpus, vecCol, idCol) =
+      if (opq) (Opq.rotate(emb, "embedding", "vec_id", opqReflectors), "v", "id")
+      else (emb, "embedding", "vec_id")
+    val families = tags.map {
+      case "ivf_pq" =>
+        IvfFamily.Pq(4, if (opq) opqModel(s, dir)._2 else pqModel(s, dir))
+      case "ivf_sq8" =>
+        val (mins, scales) = Similarity.sqTrain(corpus, vecCol, idCol)
+        IvfFamily.Sq8(mins, scales)
+      case "ivf_bq" => IvfFamily.Bq(Similarity.bqTrain(corpus, vecCol, idCol))
+    }
+    Similarity.ivfOperatingGrid(corpus,
+      Option.when(filtered)(enKeep(s, dir, idCol)),
+      corpus.filter(col(idCol) % 100 === 0), vecCol, idCol, ks = ks,
+      cellCodebook =
+        if (opq) opqModel(s, dir)._1.centroids else kmModel(s, dir).centroids,
+      families = families, rs = rs, nProbes = nps)
   }
 
-  lazy val e27Sql: String =
-    s"$e27SqlBody\nORDER BY n_probe, r_shortlist, k"
+  /** The PQ family's grid, untagged: e27's report and the e28/e32
+    * decisions, or with `filtered` e35's report and e36's decision. */
+  private def pqGrid(s: SparkSession, dir: String,
+                     filtered: Boolean = false): DataFrame =
+    ivfGrid(s, dir, Seq("ivf_pq"), filtered = filtered).drop("family")
+
+  /** A grid report: its cells in (n_probe, r_shortlist, k) order. */
+  private def byCell(grid: DataFrame): DataFrame =
+    grid.orderBy(col("n_probe"), col("r_shortlist"), col("k"))
+
+  /** SQL twin of [[byCell]] over an oracle grid body. */
+  private def byCellSql(body: String): String =
+    s"$body\nORDER BY n_probe, r_shortlist, k"
+
+  /** 3-D IVF-PQ OPERATING GRID (e27 — [[ivfGrid]] with the PQ family):
+    * e25's (nProbe × k) and e26's (nProbe × r) composed into the
+    * (nProbe × r × k) surface the production ANN path actually tunes
+    * from (VERDICT r14 next-#7). Gate contract: the e24/e25/e26
+    * integer-key chain end-to-end — exact-key rerank, depth-k
+    * brute-force denominators, integer ppm; the k axis costs no scan.
+    * e26 is this operator's k = 5 slice; OperatorsSpec
+    * "ivfPqOperatingGrid3d: every k-matching cell equals the e26 2-D
+    * point" pins a multi-k grid's k = 5 cells equal to it. */
+  val e27Grid3d: Q = (s, dir) => byCell(pqGrid(s, dir))
+
+  lazy val e27Sql: String = byCellSql(ivfGridSql("ivf_pq"))
 
   /** The family-independent (nProbe × r × k) UNION blocks — every cell
     * reads its probe width's `rk<np>key` re-rank chain and the shared
@@ -1144,17 +1183,26 @@ object DataQueries {
          |""".stripMargin).mkString("UNION ALL\n")
   }
 
-  /** ONE builder for every family-grid oracle body — shared sweep
-    * prefix (optionally pre-filtered), the family's candidate CTE
-    * chain, the per-probe re-rank chains, the grid blocks (+ the
-    * selectivity column in filtered mode): the (family × filtered)
-    * matrix of bodies cannot drift because there is only this text. */
-  private def familyGridBodySql(candCtes: String, src: String,
-                                score: String, filtered: Boolean = false,
-                                eDef: String = rawECtes): String = {
+  /** SQL twin of [[ivfGrid]] at the three-axis defaults: ONE builder
+    * for every IVF family-grid oracle body (nestable, no ORDER BY) —
+    * the shared sweep prefix (the e11 rotation replay in its `e` slot
+    * with `opq`, the corpus side cut to [[enKeepCte]] with `filtered`),
+    * the family's candidate CTE chain, the per-probe re-rank chains,
+    * the grid blocks (+ the selectivity column when filtered): the
+    * (family × rotation × filter) matrix of bodies cannot drift
+    * because there is only this text. */
+  private def ivfGridSql(tag: String, opq: Boolean = false,
+                         filtered: Boolean = false): String = {
+    val (candCtes, src, score) = tag match {
+      case "ivf_pq" => (s"$pqCbCtes,\n$pqAdcScpCtes", "scp", "adc_d2")
+      case "ivf_sq8" => (sqCandCtes, "scq", "sq_d2")
+      case "ivf_bq" => (bqScbCtes, "scb", "hamming")
+    }
+    val eDef = (if (opq) opqRotCtesBody else rawECtes) +
+      (if (filtered) s",\n$enKeepCte" else "")
     val prefix = sweepCtePrefix(grid3dNps.max, grid3dKs.max,
       bfKeepRank = true, eDef = eDef,
-      corpusKeepRel = if (filtered) Some("en") else None)
+      corpusKeepRel = Option.when(filtered)("en"))
     val blocks =
       if (filtered) grid3dBlocksSqlWith(
         "CAST(1000000 * (SELECT count(*) FROM asg) " +
@@ -1166,172 +1214,179 @@ object DataQueries {
        |$blocks""".stripMargin
   }
 
-  /** e27's unordered oracle body — shared with e28's CTE embed so the
-    * ORDER BY never has to be surgically stripped (ADVICE r15). */
-  private lazy val e27SqlBody: String =
-    familyGridBodySql(s"$pqCbCtes,\n$pqAdcScpCtes", "scp", "adc_d2")
-
   /** SERVING OPERATING-POINT AUTO-CHOICE (e28): the decision the
     * e25/e26/e27 grids exist to feed, as an operator — per (k, recall
-    * target), the CHEAPEST grid cell meeting the target. Cost order is
-    * lexicographic (scanned_ppm, r_shortlist, n_probe): corpus
-    * fraction scanned dominates at 100 TB, then true-vector fetches
-    * per query (the rerank depth), then probe count as the final
-    * determinism key. Unlike d35, the grid's recalls are EXACT
-    * (measured against the full brute-force truth on the bounded query
-    * batch, not a sample), so the point value IS the bound. When no
-    * cell meets a target the best-available cell is returned flagged
-    * `meets_target = 0` (highest recall, then cheapest) — the signal
-    * to widen the grid rather than silently under-serve. Selection
-    * adds a broadcast of three target literals and a |grid|-row
-    * window over the same relation as e27. */
+    * target), the cheapest e27 cell meeting the target under
+    * [[Similarity.cheapestMeetingCell]]'s rule (oracle:
+    * [[cheapestMeetingCellSql]]), with cost tail (r_shortlist,
+    * n_probe): corpus fraction scanned dominates at 100 TB, then
+    * true-vector fetches per query (the rerank depth), then probe count
+    * as the final determinism key. Unlike d35, the grid's recalls are
+    * EXACT (measured against the full brute-force truth on the bounded
+    * query batch, not a sample), so the point value IS the bound. A
+    * target no cell meets comes back best-available with
+    * `meets_target = 0` — the signal to widen the grid rather than
+    * silently under-serve. */
   private val servingTargetsPpm = Seq(600000L, 900000L, 990000L)
 
-  val e28OperatingChoice: Q = (s, dir) => {
+  /** [[servingTargetsPpm]] as the choice rule's targets relation. */
+  private def servingTargets(s: SparkSession): DataFrame = {
     import s.implicits._
-    val grid = grid3dRelation(s, dir)
-    val targets = servingTargetsPpm.toDF("target_ppm")
-    val cand = grid.crossJoin(broadcast(targets))
-      .withColumn("meets",
-        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
-    Similarity.cheapestMeetingCell(cand, Seq("k", "target_ppm"),
-        Seq(col("r_shortlist").asc, col("n_probe").asc))
+    servingTargetsPpm.toDF("target_ppm")
+  }
+
+  /** SQL twin of [[servingTargets]]. */
+  private lazy val servingTargetsSql: String = {
+    val tgVals = servingTargetsPpm
+      .map(t => s"(CAST($t AS BIGINT))").mkString(",")
+    s"SELECT * FROM (VALUES $tgVals) t(target_ppm)"
+  }
+
+  /** SQL twin of [[Similarity.cheapestMeetingCell]] — the one oracle
+    * text of every serving choice (e28, e31, e32, e33, e36, e38):
+    * after `ctes`, every row of the relation `grid` is flagged against
+    * every row of the `targets` query (`meets` = recall_ppm ≥
+    * target_ppm), and per `partition` the first row under (meets DESC,
+    * recall deficit, scanned_ppm, `costTail`) is kept, projected to
+    * `outCols` and ordered by `partition`. */
+  private def cheapestMeetingCellSql(ctes: String, grid: String,
+                                     targets: String, partition: String,
+                                     costTail: String,
+                                     outCols: String): String =
+    s"""WITH $ctes,
+       |tg AS ($targets),
+       |cand AS (SELECT tg.*, c.*,
+       |  CASE WHEN c.recall_ppm >= tg.target_ppm
+       |    THEN 1 ELSE 0 END AS meets
+       |  FROM $grid c CROSS JOIN tg),
+       |rk AS (SELECT *, row_number() OVER (PARTITION BY $partition
+       |  ORDER BY meets DESC,
+       |    CASE WHEN meets = 1 THEN 0
+       |      ELSE 1000000 - recall_ppm END ASC,
+       |    scanned_ppm ASC, $costTail) AS rn
+       |  FROM cand)
+       |SELECT $outCols
+       |FROM rk WHERE rn = 1 ORDER BY $partition""".stripMargin
+
+  val e28OperatingChoice: Q = (s, dir) =>
+    Similarity.cheapestMeetingCell(pqGrid(s, dir), servingTargets(s),
+        Seq("k", "target_ppm"), Seq(col("r_shortlist").asc, col("n_probe").asc))
       .select(col("k"), col("target_ppm"), col("n_probe"),
         col("r_shortlist"), col("recall_ppm"), col("scanned_ppm"),
         col("meets").as("meets_target"))
       .orderBy("k", "target_ppm")
-  }
 
-  lazy val e28Sql: String = {
-    val tgVals = servingTargetsPpm
-      .map(t => s"(CAST($t AS BIGINT))").mkString(",")
-    s"""WITH g AS ($e27SqlBody),
-       |tg AS (SELECT * FROM (VALUES $tgVals) t(target_ppm)),
-       |cand AS (SELECT tg.target_ppm, g.*,
-       |  CASE WHEN g.recall_ppm >= tg.target_ppm
-       |    THEN 1 ELSE 0 END AS meets
-       |  FROM g CROSS JOIN tg),
-       |rk AS (SELECT *, row_number() OVER (PARTITION BY k, target_ppm
-       |  ORDER BY meets DESC,
-       |    CASE WHEN meets = 1 THEN 0
-       |      ELSE 1000000 - recall_ppm END ASC,
-       |    scanned_ppm ASC, r_shortlist ASC, n_probe ASC) AS rn
-       |  FROM cand)
-       |SELECT k, target_ppm, n_probe, r_shortlist, recall_ppm,
-       |  scanned_ppm, CAST(meets AS BIGINT) AS meets_target
-       |FROM rk WHERE rn = 1 ORDER BY k, target_ppm""".stripMargin
-  }
+  lazy val e28Sql: String = cheapestMeetingCellSql(
+    s"g AS (${ivfGridSql("ivf_pq")})", "g", servingTargetsSql,
+    "k, target_ppm", "r_shortlist ASC, n_probe ASC",
+    "k, target_ppm, n_probe, r_shortlist, recall_ppm,\n" +
+      "  scanned_ppm, CAST(meets AS BIGINT) AS meets_target")
 
-  /** INDEX-LAYOUT CHOICE (e33): the decision BEFORE e31's — whether an
-    * ANN index is worth building at all. The cross-family grid union
-    * gains a `flat_exact` row per k (the brute-force layout: recall
-    * 10⁶ by definition, scanned 10⁶ by definition, no probe/shortlist
-    * knobs), derived from the measured grid's own per-k baselines so
-    * the row count and query batch agree with the cells it competes
-    * against. Under e31's cost order the flat row has the WORST
-    * scanned fraction, so it wins only when NO indexed cell meets the
-    * target — turning e31's meets_target=0 "widen the grid" signal
-    * into an actionable "serve exact until the index catches up",
-    * flagged by `index_worth_it = 0`. At 100 TB this is the real
-    * capacity decision: a 99%-recall SLO a trained index cannot meet
-    * is served by partition-pruned exact scan, not by silently
-    * under-recalling. */
-  /** The five-family measured grid union (r18 adds the graph family) —
-    * ONE definition selected
-    * over by BOTH the e31 cross-family choice and the e33 layout
-    * decision (the shared-body rule: adding a family is one edit here
-    * + one in [[familyGridsCtes]], never a silent fork). PQ, SQ8, and
-    * BQ (VERDICT r16 next-#2) ride ONE [[Similarity
-    * .ivfOperatingGrid]] (one candidate pass, probe stage and truth
-    * for all three — cell-identical to the standalone
-    * e27/e29/e34 grids, which the OperatorsSpec pins re-derive
-    * against); OPQ unions in from its rotated-corpus grid. */
-  private def familyGridsRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val emb = Catalog(s, dir).embeddings
-    val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
-    Similarity.ivfOperatingGrid(emb, None,
-        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-        families = Seq(IvfFamily.Pq(4, pqModel(s, dir)),
-          IvfFamily.Sq8(mins, scales),
-          IvfFamily.Bq(Similarity.bqTrain(emb, "embedding", "vec_id"))),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .unionByName(opqGrid3dRelation(s, dir)
-        .withColumn("family", lit("opq_ivf_pq")))
-      // the GRAPH family (r18): NSW cells compete in the same row
-      // shape — n_probe := beamWidth, r_shortlist := hops, scanned =
-      // visited-node fraction (exact distances computed, the same
-      // thing "scanned" charges the cell families for)
-      .unionByName(nswGridRelation(s, dir)
+  /** The five-family measured grid union (r18 adds the graph family),
+    * unfiltered (e31, e33) or `filtered` (e37, e38): PQ, SQ8 and BQ
+    * (VERDICT r16 next-#2) ride ONE [[ivfGrid]] (one candidate pass,
+    * probe stage and truth for all three — cell-identical to the
+    * standalone e27/e29/e34 grids, which the OperatorsSpec pins
+    * re-derive against); OPQ unions in from its rotated-corpus grid
+    * (the union needs shared COLUMNS, not a shared substrate — VERDICT
+    * r17 next-#5); the GRAPH family's NSW cells compete in the same
+    * row shape — n_probe := beamWidth, r_shortlist := hops, scanned =
+    * visited-node fraction (exact distances computed, the same thing
+    * "scanned" charges the cell families for). Adding a family is one
+    * edit here and one in [[familyGridsCtes]]. */
+  private def familyGrids(s: SparkSession, dir: String,
+                          filtered: Boolean): DataFrame =
+    ivfGrid(s, dir, ivfFamilyTags, filtered = filtered)
+      .unionByName(ivfGrid(s, dir, Seq("ivf_pq"), opq = true,
+          filtered = filtered)
+        .drop("family").withColumn("family", lit("opq_ivf_pq")))
+      .unionByName(nswGrid(s, dir, filtered)
         .withColumn("family", lit("nsw")))
+
+  /** SQL twin of [[familyGrids]], ending in `g`. */
+  private def familyGridsCtes(filtered: Boolean): String = {
+    val grids = ivfFamilyTags.map(t => t -> ivfGridSql(t, filtered = filtered)) ++
+      Seq("opq_ivf_pq" -> ivfGridSql("ivf_pq", opq = true, filtered = filtered),
+        "nsw" -> nswGridBodySql(filtered))
+    val bodies = grids.zipWithIndex.map { case ((_, body), i) =>
+      s"g$i AS ($body)" }
+    val union = grids.zipWithIndex.map { case ((tag, _), i) =>
+      s"SELECT '$tag' AS family, * FROM g$i" }
+    (bodies :+ union.mkString("g AS (", "\n  UNION ALL ", ")")).mkString(",\n")
   }
 
-  /** SQL twin of [[familyGridsRelation]], ending in `g`. */
-  private lazy val familyGridsCtes: String =
-    s"""gp AS ($e27SqlBody),
-       |gs AS ($e29SqlBody),
-       |go AS ($e30SqlBody),
-       |gb AS ($e34SqlBody),
-       |gn AS ($e41SqlBody),
-       |g AS (SELECT 'ivf_pq' AS family, * FROM gp
-       |  UNION ALL SELECT 'ivf_sq8' AS family, * FROM gs
-       |  UNION ALL SELECT 'opq_ivf_pq' AS family, * FROM go
-       |  UNION ALL SELECT 'ivf_bq' AS family, * FROM gb
-       |  UNION ALL SELECT 'nsw' AS family, * FROM gn)""".stripMargin
-
-  val e33LayoutChoice: Q = (s, dir) => {
-    import s.implicits._
-    val grids = familyGridsRelation(s, dir)
-    val flat = grids.groupBy("k").agg(
-        max("n_queries").as("n_queries"), max("n_bf").as("n_bf"))
-      .select(lit(0L).as("n_probe"), lit(0L).as("r_shortlist"), col("k"),
-        col("n_queries"), col("n_bf").as("n_hits"), col("n_bf"),
-        lit(1000000L).as("recall_ppm"), lit(1000000L).as("scanned_ppm"),
-        lit("flat_exact").as("family"))
-    val targets = servingTargetsPpm.toDF("target_ppm")
-    val cand = grids.unionByName(flat).crossJoin(broadcast(targets))
-      .withColumn("meets",
-        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
-    Similarity.cheapestMeetingCell(cand, Seq("k", "target_ppm"),
+  /** INDEX-LAYOUT CHOICE (e33, e36, e38): the decision BEFORE e31's —
+    * whether an ANN index is worth building at all. The tagged `grid`
+    * gains one exact-fallback row per k (recall 10⁶ by definition, no
+    * probe/shortlist knobs), derived from the grid's own per-k
+    * baselines so the row count and query batch agree with the cells
+    * it competes against. Unfiltered, the fallback is `flat_exact` at
+    * scanned 10⁶; `filtered`, it is `flat_filtered`, the
+    * predicate-pruned scan at scanned = selectivity_ppm (e17's serving
+    * query, not 10⁶). The choice is [[Similarity.cheapestMeetingCell]]
+    * with cost tail (r_shortlist, n_probe, family): the fallback has the
+    * worst scanned fraction of any cell that could match it, so it wins
+    * only when no cheaper indexed cell meets the target — turning e31's
+    * meets_target = 0 "widen the grid" signal into an actionable "serve
+    * exact until the index catches up", flagged by `index_worth_it = 0`.
+    * At 100 TB this is the real capacity decision: a 99%-recall SLO a
+    * trained index cannot meet is served by a (partition-pruned) exact
+    * scan, not by silently under-recalling. Oracle: [[layoutChoiceSql]]. */
+  private def layoutChoice(s: SparkSession, grid: DataFrame,
+                           filtered: Boolean): DataFrame = {
+    val flatTag = if (filtered) "flat_filtered" else "flat_exact"
+    val sel = if (filtered) Seq("selectivity_ppm") else Nil
+    val flat = grid.groupBy("k").agg(max("n_queries").as("n_queries"),
+        max("n_bf").as("n_bf") +: sel.map(c => max(c).as(c)): _*)
+      .select(Seq(lit(0L).as("n_probe"), lit(0L).as("r_shortlist"),
+        col("k"), col("n_queries"), col("n_bf").as("n_hits"), col("n_bf"),
+        lit(1000000L).as("recall_ppm"),
+        (if (filtered) col("selectivity_ppm") else lit(1000000L))
+          .as("scanned_ppm"),
+        lit(flatTag).as("family")) ++ sel.map(col): _*)
+    Similarity.cheapestMeetingCell(grid.unionByName(flat), servingTargets(s),
+        Seq("k", "target_ppm"),
         Seq(col("r_shortlist").asc, col("n_probe").asc, col("family").asc))
-      .select(col("k"), col("target_ppm"), col("family"), col("n_probe"),
-        col("r_shortlist"), col("recall_ppm"), col("scanned_ppm"),
-        (col("family") =!= "flat_exact").cast(LongType)
-          .as("index_worth_it"))
+      .select(Seq(col("k"), col("target_ppm"), col("family"),
+        col("n_probe"), col("r_shortlist"), col("recall_ppm"),
+        col("scanned_ppm")) ++ sel.map(col) :+
+        (col("family") =!= flatTag).cast(LongType).as("index_worth_it"): _*)
       .orderBy("k", "target_ppm")
   }
 
-  lazy val e33Sql: String = {
-    val tgVals = servingTargetsPpm
-      .map(t => s"(CAST($t AS BIGINT))").mkString(",")
-    s"""WITH $familyGridsCtes,
-       |gf AS (SELECT * FROM g
-       |  UNION ALL
-       |  SELECT 'flat_exact' AS family, CAST(0 AS BIGINT) AS n_probe,
-       |    CAST(0 AS BIGINT) AS r_shortlist, k, max(n_queries),
-       |    max(n_bf) AS n_hits, max(n_bf) AS n_bf,
-       |    CAST(1000000 AS BIGINT) AS recall_ppm,
-       |    CAST(1000000 AS BIGINT) AS scanned_ppm
-       |  FROM g GROUP BY k),
-       |tg AS (SELECT * FROM (VALUES $tgVals) t(target_ppm)),
-       |cand AS (SELECT tg.target_ppm, gf.*,
-       |  CASE WHEN gf.recall_ppm >= tg.target_ppm
-       |    THEN 1 ELSE 0 END AS meets
-       |  FROM gf CROSS JOIN tg),
-       |rk AS (SELECT *, row_number() OVER (PARTITION BY k, target_ppm
-       |  ORDER BY meets DESC,
-       |    CASE WHEN meets = 1 THEN 0
-       |      ELSE 1000000 - recall_ppm END ASC,
-       |    scanned_ppm ASC, r_shortlist ASC, n_probe ASC, family ASC)
-       |    AS rn
-       |  FROM cand)
-       |SELECT k, target_ppm, family, n_probe, r_shortlist, recall_ppm,
-       |  scanned_ppm,
-       |  CAST(CASE WHEN family <> 'flat_exact' THEN 1 ELSE 0 END
-       |    AS BIGINT) AS index_worth_it
-       |FROM rk WHERE rn = 1 ORDER BY k, target_ppm""".stripMargin
+  /** SQL twin of [[layoutChoice]] over `gridCtes` ending in the tagged
+    * grid `g`. */
+  private def layoutChoiceSql(gridCtes: String, filtered: Boolean): String = {
+    val flatTag = if (filtered) "flat_filtered" else "flat_exact"
+    val scanned =
+      if (filtered) "max(selectivity_ppm) AS scanned_ppm,\n" +
+        "    max(selectivity_ppm) AS selectivity_ppm"
+      else "CAST(1000000 AS BIGINT) AS scanned_ppm"
+    cheapestMeetingCellSql(
+      s"""$gridCtes,
+         |gf AS (SELECT * FROM g
+         |  UNION ALL
+         |  SELECT '$flatTag' AS family, CAST(0 AS BIGINT) AS n_probe,
+         |    CAST(0 AS BIGINT) AS r_shortlist, k, max(n_queries),
+         |    max(n_bf) AS n_hits, max(n_bf) AS n_bf,
+         |    CAST(1000000 AS BIGINT) AS recall_ppm,
+         |    $scanned
+         |  FROM g GROUP BY k)""".stripMargin,
+      "gf", servingTargetsSql, "k, target_ppm",
+      "r_shortlist ASC, n_probe ASC, family ASC",
+      "k, target_ppm, family, n_probe, r_shortlist, recall_ppm,\n" +
+        s"  scanned_ppm,${if (filtered) " selectivity_ppm," else ""}\n" +
+        s"  CAST(CASE WHEN family <> '$flatTag' THEN 1 ELSE 0 END\n" +
+        "    AS BIGINT) AS index_worth_it")
   }
+
+  /** INDEX-LAYOUT CHOICE over the five-family union (e33): the
+    * [[layoutChoice]] of [[familyGrids]] against `flat_exact`. */
+  val e33LayoutChoice: Q = (s, dir) =>
+    layoutChoice(s, familyGrids(s, dir, filtered = false), filtered = false)
+
+  lazy val e33Sql: String =
+    layoutChoiceSql(familyGridsCtes(filtered = false), filtered = false)
 
   /** PER-TENANT SERVING CHOICE (e32 — VERDICT r15 next-#8): e28's
     * decision with the recall targets coming from a TABLE instead of
@@ -1340,48 +1395,34 @@ object DataQueries {
     * targets relation against the ONE shared measured grid. Tenants
     * here are the `nation` rows with a deterministic 5-tier target
     * derived from the key (the testdata stand-in for a real SLO
-    * table); the decision logic, cost order, and best-available
-    * fallback are EXACTLY e28's, per (tenant, k) instead of per
-    * (k, literal). Scale: grid is |cells| rows, targets broadcast —
-    * the choice costs one window over |cells|·|tenants| rows
-    * regardless of corpus size. */
+    * table); the rule is e28's ([[Similarity.cheapestMeetingCell]],
+    * same cost tail), per (tenant, k) instead of per (k, literal).
+    * Scale: grid is |cells| rows, targets broadcast — the choice costs
+    * one window over |cells|·|tenants| rows regardless of corpus
+    * size. */
   val e32TenantChoice: Q = (s, dir) => {
-    val grid = grid3dRelation(s, dir)
     val tenants = Catalog(s, dir).nation.select(
       col("n_nationkey").cast(LongType).as("tenant_id"),
       (lit(500000L) + (col("n_nationkey") % 5).cast(LongType) * lit(100000L))
         .as("target_ppm"))
-    val cand = grid.crossJoin(broadcast(tenants))
-      .withColumn("meets",
-        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
-    Similarity.cheapestMeetingCell(cand, Seq("tenant_id", "k"),
-        Seq(col("r_shortlist").asc, col("n_probe").asc))
+    Similarity.cheapestMeetingCell(pqGrid(s, dir), tenants,
+        Seq("tenant_id", "k"), Seq(col("r_shortlist").asc, col("n_probe").asc))
       .select(col("tenant_id"), col("k"), col("target_ppm"),
         col("n_probe"), col("r_shortlist"), col("recall_ppm"),
         col("scanned_ppm"), col("meets").as("meets_target"))
       .orderBy("tenant_id", "k")
   }
 
-  lazy val e32Sql: String =
-    s"""WITH g AS ($e27SqlBody),
-       |tn AS (SELECT CAST(n_nationkey AS BIGINT) AS tenant_id,
-       |  CAST(500000 + (n_nationkey % 5) * 100000 AS BIGINT) AS target_ppm
-       |  FROM nation),
-       |cand AS (SELECT tn.tenant_id, tn.target_ppm, g.*,
-       |  CASE WHEN g.recall_ppm >= tn.target_ppm
-       |    THEN 1 ELSE 0 END AS meets
-       |  FROM g CROSS JOIN tn),
-       |rk AS (SELECT *, row_number() OVER (PARTITION BY tenant_id, k
-       |  ORDER BY meets DESC,
-       |    CASE WHEN meets = 1 THEN 0
-       |      ELSE 1000000 - recall_ppm END ASC,
-       |    scanned_ppm ASC, r_shortlist ASC, n_probe ASC) AS rn
-       |  FROM cand)
-       |SELECT tenant_id, k, target_ppm, n_probe, r_shortlist, recall_ppm,
-       |  scanned_ppm, CAST(meets AS BIGINT) AS meets_target
-       |FROM rk WHERE rn = 1 ORDER BY tenant_id, k""".stripMargin
+  lazy val e32Sql: String = cheapestMeetingCellSql(
+    s"g AS (${ivfGridSql("ivf_pq")})", "g",
+    """SELECT CAST(n_nationkey AS BIGINT) AS tenant_id,
+      |  CAST(500000 + (n_nationkey % 5) * 100000 AS BIGINT) AS target_ppm
+      |  FROM nation""".stripMargin,
+    "tenant_id, k", "r_shortlist ASC, n_probe ASC",
+    "tenant_id, k, target_ppm, n_probe, r_shortlist, recall_ppm,\n" +
+      "  scanned_ppm, CAST(meets AS BIGINT) AS meets_target")
 
-  /** IVF-SQ8 OPERATING GRID (e29 — [[Similarity.ivfOperatingGrid]]'s
+  /** IVF-SQ8 OPERATING GRID (e29 — [[ivfGrid]]'s
     * SQ8 family, VERDICT r15 next-#6): e27's (nProbe × r × k) surface
     * with the shortlist stage scored by the SQ8 reconstruction (e13/e15's
     * quantizer) instead of PQ/ADC — the scalar-quantizer FAMILY's
@@ -1392,20 +1433,7 @@ object DataQueries {
     * codebook + ADC CTEs; the re-rank chain and grid blocks are the
     * SAME strings as e27's. */
   val e29SqGrid3d: Q = (s, dir) =>
-    sqGrid3dRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
-
-  private def sqGrid3dRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val emb = Catalog(s, dir).embeddings
-    val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
-    Similarity.ivfOperatingGrid(emb, None,
-        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-        families = Seq(IvfFamily.Sq8(mins, scales)),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .drop("family")
-  }
+    byCell(ivfGrid(s, dir, Seq("ivf_sq8")).drop("family"))
 
   /** The e13-oracle SQ chain (per-dim extrema → byte codes → decode)
     * plus the probe-pruned SQ-scored candidate relation `scq(query_id,
@@ -1421,11 +1449,7 @@ object DataQueries {
        |  JOIN sqdec d ON d.id = a.id
        |  JOIN q ON q.query_id = p.query_id)""".stripMargin
 
-  private lazy val e29SqlBody: String =
-    familyGridBodySql(sqCandCtes, "scq", "sq_d2")
-
-  lazy val e29Sql: String =
-    s"$e29SqlBody\nORDER BY n_probe, r_shortlist, k"
+  lazy val e29Sql: String = byCellSql(ivfGridSql("ivf_sq8"))
 
   /** OPQ-ROTATED IVF-PQ OPERATING GRID (e30 — VERDICT r15 next-#6):
     * the e27 grid run over the OPQ-rotated corpus with the
@@ -1439,27 +1463,9 @@ object DataQueries {
     * rotation preserves cosine, so the operating points are
     * commensurate with e27/e29's. */
   val e30OpqGrid3d: Q = (s, dir) =>
-    opqGrid3dRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
+    byCell(ivfGrid(s, dir, Seq("ivf_pq"), opq = true).drop("family"))
 
-  private def opqGrid3dRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val rot = Opq.rotate(Catalog(s, dir).embeddings, "embedding", "vec_id",
-      opqReflectors)
-    val (cells, pqCb) = opqModel(s, dir)
-    Similarity.ivfOperatingGrid(rot, None, rot.filter(col("id") % 100 === 0),
-        "v", "id", ks = grid3dKs, cellCodebook = cells.centroids,
-        families = Seq(IvfFamily.Pq(4, pqCb)),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .drop("family")
-  }
-
-  private lazy val e30SqlBody: String =
-    familyGridBodySql(s"$pqCbCtes,\n$pqAdcScpCtes", "scp", "adc_d2",
-      eDef = opqRotCtesBody)
-
-  lazy val e30Sql: String =
-    s"$e30SqlBody\nORDER BY n_probe, r_shortlist, k"
+  lazy val e30Sql: String = byCellSql(ivfGridSql("ivf_pq", opq = true))
 
   /** BINARY-QUANTIZATION OPERATING GRID (e34 — [[Similarity
     * .ivfOperatingGrid]]'s BQ family, VERDICT r16 next-#2): e27's
@@ -1474,20 +1480,7 @@ object DataQueries {
     * (hamming is exact integer arithmetic in both engines, the one
     * family with zero float-replay surface in its scorer). */
   val e34BqGrid3d: Q = (s, dir) =>
-    bqGrid3dRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
-
-  private def bqGrid3dRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val emb = Catalog(s, dir).embeddings
-    Similarity.ivfOperatingGrid(emb, None,
-        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-        families = Seq(IvfFamily.Bq(
-          Similarity.bqTrain(emb, "embedding", "vec_id"))),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .drop("family")
-  }
+    byCell(ivfGrid(s, dir, Seq("ivf_bq")).drop("family"))
 
   /** The e14-oracle BQ chain (per-dim exact-grid mean thresholds →
     * per-dim sign-mismatch counting — the same integer popcount would
@@ -1505,11 +1498,7 @@ object DataQueries {
        |  FROM asg a JOIN pr p ON a.cell = p.cell AND a.id <> p.query_id
        |  CROSS JOIN bsl s JOIN q ON q.query_id = p.query_id)""".stripMargin
 
-  private lazy val e34SqlBody: String =
-    familyGridBodySql(bqScbCtes, "scb", "hamming")
-
-  lazy val e34Sql: String =
-    s"$e34SqlBody\nORDER BY n_probe, r_shortlist, k"
+  lazy val e34Sql: String = byCellSql(ivfGridSql("ivf_bq"))
 
   /** FILTERED OPERATING GRID (e35 — VERDICT r16 next-#4, e17 × e27):
     * the IVF-PQ grid measured UNDER a metadata predicate (documents
@@ -1524,105 +1513,29 @@ object DataQueries {
     * on e33: for filtered workloads flat-exact's true cost is the
     * pruned scan, not 10⁶). See [[Similarity
     * .ivfOperatingGrid]] with `keepIds`. */
-  val e35FilteredGrid: Q = (s, dir) =>
-    filteredGridRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
+  val e35FilteredGrid: Q = (s, dir) => byCell(pqGrid(s, dir, filtered = true))
 
-  private def filteredGridRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val emb = Catalog(s, dir).embeddings
-    val en = Catalog(s, dir).documents.filter(col("lang") === "en")
-      .select(col("doc_id").as("vec_id"))
-    Similarity.ivfOperatingGrid(emb, Some(en),
-        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-        families = Seq(IvfFamily.Pq(4, pqModel(s, dir))),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .drop("family")
-  }
-
-  private lazy val filteredECtes: String =
-    s"""$rawECtes,
-       |en AS (SELECT doc_id AS id FROM documents WHERE lang = 'en')""".stripMargin
-
-  private lazy val e35SqlBody: String =
-    familyGridBodySql(s"$pqCbCtes,\n$pqAdcScpCtes", "scp", "adc_d2",
-      filtered = true, eDef = filteredECtes)
-
-  lazy val e35Sql: String =
-    s"$e35SqlBody\nORDER BY n_probe, r_shortlist, k"
+  lazy val e35Sql: String = byCellSql(ivfGridSql("ivf_pq", filtered = true))
 
   /** FILTERED LAYOUT CHOICE (e36 — closes e33's own design note): the
-    * flat-vs-index decision FOR A FILTERED WORKLOAD, where the exact
-    * fallback is the predicate-pruned scan — its row is recall 10⁶ at
-    * scanned_ppm = selectivity_ppm, NOT 10⁶ (the e33 flat row's cost
-    * models an unfiltered serving query; this one models e17's). An
-    * index cell now wins only when it scans fewer rows than the
-    * predicate already prunes to — at 43% selectivity most moderate-
-    * recall cells still win, but high-recall targets flip to the
-    * pruned scan far sooner than e33's unfiltered decision would
+    * flat-vs-index decision FOR A FILTERED WORKLOAD — the
+    * [[layoutChoice]] of the e35 grid against `flat_filtered`, the
+    * predicate-pruned scan at scanned_ppm = selectivity_ppm, NOT 10⁶
+    * (the e33 flat row's cost models an unfiltered serving query; this
+    * one models e17's). An index cell now wins only when it scans fewer
+    * rows than the predicate already prunes to — at 43% selectivity
+    * most moderate-recall cells still win, but high-recall targets flip
+    * to the pruned scan far sooner than e33's unfiltered decision would
     * suggest, which is exactly the capacity insight the filtered grid
-    * exists to surface. Cost order and fallback semantics are e33's. */
-  val e36FilteredLayout: Q = (s, dir) => {
-    import s.implicits._
-    // ONE grid computation feeds both arms: the skeleton measures
-    // eagerly, so a second filteredGridRelation call would re-run the
-    // whole filtered sweep just to derive the flat row (review r17)
-    val grid0 = filteredGridRelation(s, dir)
-    val grid = grid0.withColumn("family", lit("ivf_pq_filtered"))
-    val flat = grid0.groupBy("k").agg(
-        max("n_queries").as("n_queries"), max("n_bf").as("n_bf"),
-        max("selectivity_ppm").as("selectivity_ppm"))
-      .select(lit(0L).as("n_probe"), lit(0L).as("r_shortlist"), col("k"),
-        col("n_queries"), col("n_bf").as("n_hits"), col("n_bf"),
-        lit(1000000L).as("recall_ppm"),
-        col("selectivity_ppm").as("scanned_ppm"), col("selectivity_ppm"),
-        lit("flat_filtered").as("family"))
-    val targets = servingTargetsPpm.toDF("target_ppm")
-    val cand = grid.unionByName(flat).crossJoin(broadcast(targets))
-      .withColumn("meets",
-        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
-    Similarity.cheapestMeetingCell(cand, Seq("k", "target_ppm"),
-        Seq(col("r_shortlist").asc, col("n_probe").asc, col("family").asc))
-      .select(col("k"), col("target_ppm"), col("family"), col("n_probe"),
-        col("r_shortlist"), col("recall_ppm"), col("scanned_ppm"),
-        col("selectivity_ppm"),
-        (col("family") =!= "flat_filtered").cast(LongType)
-          .as("index_worth_it"))
-      .orderBy("k", "target_ppm")
-  }
+    * exists to surface. */
+  val e36FilteredLayout: Q = (s, dir) =>
+    layoutChoice(s, pqGrid(s, dir, filtered = true)
+      .withColumn("family", lit("ivf_pq_filtered")), filtered = true)
 
-  lazy val e36Sql: String = {
-    val tgVals = servingTargetsPpm
-      .map(t => s"(CAST($t AS BIGINT))").mkString(",")
-    s"""WITH gf0 AS ($e35SqlBody),
-       |g AS (SELECT 'ivf_pq_filtered' AS family, * FROM gf0
-       |  UNION ALL
-       |  SELECT 'flat_filtered' AS family, CAST(0 AS BIGINT) AS n_probe,
-       |    CAST(0 AS BIGINT) AS r_shortlist, k, max(n_queries),
-       |    max(n_bf) AS n_hits, max(n_bf) AS n_bf,
-       |    CAST(1000000 AS BIGINT) AS recall_ppm,
-       |    max(selectivity_ppm) AS scanned_ppm,
-       |    max(selectivity_ppm) AS selectivity_ppm
-       |  FROM gf0 GROUP BY k),
-       |tg AS (SELECT * FROM (VALUES $tgVals) t(target_ppm)),
-       |cand AS (SELECT tg.target_ppm, g.*,
-       |  CASE WHEN g.recall_ppm >= tg.target_ppm
-       |    THEN 1 ELSE 0 END AS meets
-       |  FROM g CROSS JOIN tg),
-       |rk AS (SELECT *, row_number() OVER (PARTITION BY k, target_ppm
-       |  ORDER BY meets DESC,
-       |    CASE WHEN meets = 1 THEN 0
-       |      ELSE 1000000 - recall_ppm END ASC,
-       |    scanned_ppm ASC, r_shortlist ASC, n_probe ASC, family ASC)
-       |    AS rn
-       |  FROM cand)
-       |SELECT k, target_ppm, family, n_probe, r_shortlist, recall_ppm,
-       |  scanned_ppm, selectivity_ppm,
-       |  CAST(CASE WHEN family <> 'flat_filtered' THEN 1 ELSE 0 END
-       |    AS BIGINT) AS index_worth_it
-       |FROM rk WHERE rn = 1 ORDER BY k, target_ppm""".stripMargin
-  }
+  lazy val e36Sql: String = layoutChoiceSql(
+    s"""gf0 AS (${ivfGridSql("ivf_pq", filtered = true)}),
+       |g AS (SELECT 'ivf_pq_filtered' AS family, * FROM gf0)""".stripMargin,
+    filtered = true)
 
   /** FILTERED OPQ-ROTATED GRID (e39 — VERDICT r17 next-#5, closing
     * the e37 design note): the OPQ family's operating points measured
@@ -1637,34 +1550,11 @@ object DataQueries {
     * substrate, exactly as unfiltered e31 unions e30. Oracle: the e30
     * rotation-replay chain in the `e` slot of the filtered grid body. */
   val e39FilteredOpqGrid: Q = (s, dir) =>
-    filteredOpqGridRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
-
-  private def filteredOpqGridRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val rot = Opq.rotate(Catalog(s, dir).embeddings, "embedding", "vec_id",
-      opqReflectors)
-    val (cells, pqCb) = opqModel(s, dir)
-    val en = Catalog(s, dir).documents.filter(col("lang") === "en")
-      .select(col("doc_id").as("id"))
-    Similarity.ivfOperatingGrid(rot, Some(en),
-        rot.filter(col("id") % 100 === 0), "v", "id",
-        ks = grid3dKs, cellCodebook = cells.centroids,
-        families = Seq(IvfFamily.Pq(4, pqCb)),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .drop("family")
-  }
-
-  private lazy val opqFilteredECtes: String =
-    s"""$opqRotCtesBody,
-       |en AS (SELECT doc_id AS id FROM documents WHERE lang = 'en')""".stripMargin
-
-  private lazy val e39SqlBody: String =
-    familyGridBodySql(s"$pqCbCtes,\n$pqAdcScpCtes", "scp", "adc_d2",
-      filtered = true, eDef = opqFilteredECtes)
+    byCell(ivfGrid(s, dir, Seq("ivf_pq"), opq = true, filtered = true)
+      .drop("family"))
 
   lazy val e39Sql: String =
-    s"$e39SqlBody\nORDER BY n_probe, r_shortlist, k"
+    byCellSql(ivfGridSql("ivf_pq", opq = true, filtered = true))
 
   /** GRAPH-FAMILY ANN (e40 — NSW navigable-small-world build + beam
     * search, Malkov et al. 2014; the flat-graph core of HNSW, Malkov &
@@ -1898,20 +1788,23 @@ object DataQueries {
     * families for). One walk of all beam widths serves every
     * (beamWidth, hops, k) cell: a prefix of the walk IS the shorter
     * walk. Feeds e31/e33 as the FIFTH family. */
-  val e41NswGrid: Q = (s, dir) =>
-    nswGridRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
+  val e41NswGrid: Q = (s, dir) => byCell(nswGrid(s, dir, filtered = false))
 
-  private def nswGridRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
+  /** The catalogue's NSW grid builder (e41, e42 and the [[familyGrids]]
+    * unions): [[Similarity.nswOperatingGrid]] over the plain corpus,
+    * unfiltered or with [[enKeep]] as `keepIds`; queries are every
+    * 100th id. Oracle: [[nswGridBodySql]]. */
+  private def nswGrid(s: SparkSession, dir: String,
+                      filtered: Boolean): DataFrame = {
     val emb = Catalog(s, dir).embeddings
-    Similarity.nswOperatingGrid(emb, None,
+    Similarity.nswOperatingGrid(emb,
+      Option.when(filtered)(enKeep(s, dir, "vec_id")),
       emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
       ks = grid3dKs, nBits = nswNBits, bands = nswBands, degree = nswDegree,
       beamWidths = nswBeamWidths, hopsList = nswHopsList)
   }
 
-  /** The NSW grid oracle body (nestable, the e27SqlBody contract):
+  /** The NSW grid oracle body (nestable, the [[ivfGridSql]] contract):
     * int-key truth + graph build + one chain per beamWidth + the
     * (w × hops × k) grid blocks. Filtered mode (e42) mirrors the
     * filtered-HNSW semantics: full-graph walk, truth and answers cut
@@ -1959,7 +1852,7 @@ object DataQueries {
          |    // ((SELECT nq FROM nq) * (SELECT nc FROM nc)) AS BIGINT)
          |    AS scanned_ppm$extra
          |""".stripMargin).mkString("UNION ALL\n")
-    val eDef = if (filtered) filteredECtes else rawECtes
+    val eDef = if (filtered) s"$rawECtes,\n$enKeepCte" else rawECtes
     val bfSrcCtes =
       if (filtered)
         s"""bfdk AS (SELECT bfd.* FROM bfd JOIN en ON bfd.id = en.id),
@@ -1979,10 +1872,7 @@ object DataQueries {
        |$blocks""".stripMargin
   }
 
-  private lazy val e41SqlBody: String = nswGridBodySql(filtered = false)
-
-  lazy val e41Sql: String =
-    s"$e41SqlBody\nORDER BY n_probe, r_shortlist, k"
+  lazy val e41Sql: String = byCellSql(nswGridBodySql(filtered = false))
 
   /** FILTERED NSW GRID (e42 — the graph family joins the FILTERED
     * serving decision, completing the e39 symmetry): [[Similarity
@@ -1994,200 +1884,67 @@ object DataQueries {
     * cells compare to the predicate-pruned exact scan at
     * `selectivity_ppm`. Feeds e37/e38 as their FIFTH family. */
   val e42FilteredNswGrid: Q = (s, dir) =>
-    filteredNswGridRelation(s, dir)
-      .orderBy(col("n_probe"), col("r_shortlist"), col("k"))
+    byCell(nswGrid(s, dir, filtered = true))
 
-  private def filteredNswGridRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val emb = Catalog(s, dir).embeddings
-    val en = Catalog(s, dir).documents.filter(col("lang") === "en")
-      .select(col("doc_id").as("vec_id"))
-    Similarity.nswOperatingGrid(emb, Some(en),
-      emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-      ks = grid3dKs, nBits = nswNBits, bands = nswBands,
-      degree = nswDegree, beamWidths = nswBeamWidths,
-      hopsList = nswHopsList)
-  }
-
-  private lazy val e42SqlBody: String = nswGridBodySql(filtered = true)
-
-  lazy val e42Sql: String =
-    s"$e42SqlBody\nORDER BY n_probe, r_shortlist, k"
+  lazy val e42Sql: String = byCellSql(nswGridBodySql(filtered = true))
 
   /** FILTERED CROSS-FAMILY GRID (e37 — e31 × e17, the direction the
-    * e33/e36 design notes pointed): ALL FIVE families
-    * measured UNDER the metadata predicate — PQ, SQ8, and BQ over ONE
-    * shared filtered substrate ([[Similarity
-    * .ivfOperatingGrid]] with `keepIds` — one filtered probe stage,
-    * one filtered truth job, full-corpus scan denominator,
-    * `selectivity_ppm` on every row), plus OPQ unioned in from its own
-    * rotated substrate (e39 — VERDICT r17 next-#5: the union needs
-    * shared COLUMNS, not a shared substrate, exactly as unfiltered e31
-    * unions e30), and the graph family from its filtered walk (e42,
-    * r18). Oracle: the [[familyGridBodySql]] instances in
-    * filtered mode plus [[nswGridBodySql]] — the SAME builder text as
-    * the unfiltered bodies, so the (family × filtered) matrix cannot
-    * fork. */
+    * e33/e36 design notes pointed): ALL FIVE families measured UNDER
+    * the metadata predicate — [[familyGrids]] with `filtered`: PQ, SQ8
+    * and BQ over ONE shared filtered substrate (one filtered probe
+    * stage, one filtered truth job, full-corpus scan denominator,
+    * `selectivity_ppm` on every row), plus OPQ from its own rotated
+    * substrate (e39) and the graph family from its filtered walk (e42,
+    * r18). Oracle: [[familyGridsCtes]] in filtered mode — the SAME
+    * builder text as the unfiltered bodies, so the (family × filtered)
+    * matrix cannot fork. */
   val e37FilteredFamily: Q = (s, dir) =>
-    filteredFamilyRelation(s, dir)
+    familyGrids(s, dir, filtered = true)
       .orderBy(col("family"), col("n_probe"), col("r_shortlist"), col("k"))
 
-  private def filteredFamilyRelation(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val emb = Catalog(s, dir).embeddings
-    val en = Catalog(s, dir).documents.filter(col("lang") === "en")
-      .select(col("doc_id").as("vec_id"))
-    val (mins, scales) = Similarity.sqTrain(emb, "embedding", "vec_id")
-    Similarity.ivfOperatingGrid(emb, Some(en),
-        emb.filter(col("vec_id") % 100 === 0), "embedding", "vec_id",
-        ks = grid3dKs, cellCodebook = kmModel(s, dir).centroids,
-        families = Seq(IvfFamily.Pq(4, pqModel(s, dir)),
-          IvfFamily.Sq8(mins, scales),
-          IvfFamily.Bq(Similarity.bqTrain(emb, "embedding", "vec_id"))),
-        rs = grid3dRs, nProbes = grid3dNps)
-      .unionByName(filteredOpqGridRelation(s, dir)
-        .withColumn("family", lit("opq_ivf_pq")))
-      // the GRAPH family under the predicate (r18): full-graph
-      // navigation, survivor-restricted answers/truth, full-corpus
-      // scan denominator — competes with the pruned scan like every
-      // other filtered cell
-      .unionByName(filteredNswGridRelation(s, dir)
-        .withColumn("family", lit("nsw")))
-  }
-
-  /** SQL twin of [[filteredFamilyRelation]], ending in `g`. */
-  private lazy val filteredFamilyCtes: String =
-    s"""fp AS ($e35SqlBody),
-       |fs AS (${familyGridBodySql(sqCandCtes, "scq", "sq_d2",
-           filtered = true, eDef = filteredECtes)}),
-       |fb AS (${familyGridBodySql(bqScbCtes, "scb", "hamming",
-           filtered = true, eDef = filteredECtes)}),
-       |fo AS ($e39SqlBody),
-       |fn AS ($e42SqlBody),
-       |g AS (SELECT 'ivf_pq' AS family, * FROM fp
-       |  UNION ALL SELECT 'ivf_sq8' AS family, * FROM fs
-       |  UNION ALL SELECT 'ivf_bq' AS family, * FROM fb
-       |  UNION ALL SELECT 'opq_ivf_pq' AS family, * FROM fo
-       |  UNION ALL SELECT 'nsw' AS family, * FROM fn)""".stripMargin
-
   lazy val e37Sql: String =
-    s"""WITH $filteredFamilyCtes
+    s"""WITH ${familyGridsCtes(filtered = true)}
        |SELECT * FROM g
        |ORDER BY family, n_probe, r_shortlist, k""".stripMargin
 
-  /** FILTERED CROSS-FAMILY LAYOUT CHOICE (e38): e36's decision with
-    * the e37 union as the candidate set — per (k, recall target), the
-    * cheapest of {all FIVE families under the predicate,
-    * OPQ and the graph family included since r18} ∪ {the predicate-pruned exact scan at
-    * `selectivity_ppm`}. This is the complete filtered-serving
+  /** FILTERED CROSS-FAMILY LAYOUT CHOICE (e38): the [[layoutChoice]] of
+    * the e37 union against `flat_filtered` — per (k, recall target), the
+    * cheapest of {all FIVE families under the predicate, OPQ and the
+    * graph family included since r18} ∪ {the predicate-pruned exact
+    * scan at `selectivity_ppm`}. This is the complete filtered-serving
     * capacity decision: which index family to build for a filtered
     * workload, or none at all — and a workload whose best family is
     * OPQ now gets the same answer from e38 that e31 would give
     * unfiltered (VERDICT r17 next-#5). */
-  val e38FilteredChoice: Q = (s, dir) => {
-    import s.implicits._
-    val grid = filteredFamilyRelation(s, dir)
-    val flat = grid.groupBy("k").agg(
-        max("n_queries").as("n_queries"), max("n_bf").as("n_bf"),
-        max("selectivity_ppm").as("selectivity_ppm"))
-      .select(lit(0L).as("n_probe"), lit(0L).as("r_shortlist"), col("k"),
-        col("n_queries"), col("n_bf").as("n_hits"), col("n_bf"),
-        lit(1000000L).as("recall_ppm"),
-        col("selectivity_ppm").as("scanned_ppm"),
-        lit("flat_filtered").as("family"), col("selectivity_ppm"))
-    val targets = servingTargetsPpm.toDF("target_ppm")
-    val cand = grid.unionByName(flat).crossJoin(broadcast(targets))
-      .withColumn("meets",
-        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
-    Similarity.cheapestMeetingCell(cand, Seq("k", "target_ppm"),
-        Seq(col("r_shortlist").asc, col("n_probe").asc, col("family").asc))
-      .select(col("k"), col("target_ppm"), col("family"), col("n_probe"),
-        col("r_shortlist"), col("recall_ppm"), col("scanned_ppm"),
-        col("selectivity_ppm"),
-        (col("family") =!= "flat_filtered").cast(LongType)
-          .as("index_worth_it"))
-      .orderBy("k", "target_ppm")
-  }
+  val e38FilteredChoice: Q = (s, dir) =>
+    layoutChoice(s, familyGrids(s, dir, filtered = true), filtered = true)
 
-  lazy val e38Sql: String = {
-    val tgVals = servingTargetsPpm
-      .map(t => s"(CAST($t AS BIGINT))").mkString(",")
-    s"""WITH $filteredFamilyCtes,
-       |gf AS (SELECT * FROM g
-       |  UNION ALL
-       |  SELECT 'flat_filtered' AS family, CAST(0 AS BIGINT) AS n_probe,
-       |    CAST(0 AS BIGINT) AS r_shortlist, k, max(n_queries),
-       |    max(n_bf) AS n_hits, max(n_bf) AS n_bf,
-       |    CAST(1000000 AS BIGINT) AS recall_ppm,
-       |    max(selectivity_ppm) AS scanned_ppm,
-       |    max(selectivity_ppm) AS selectivity_ppm
-       |  FROM g GROUP BY k),
-       |tg AS (SELECT * FROM (VALUES $tgVals) t(target_ppm)),
-       |cand AS (SELECT tg.target_ppm, gf.*,
-       |  CASE WHEN gf.recall_ppm >= tg.target_ppm
-       |    THEN 1 ELSE 0 END AS meets
-       |  FROM gf CROSS JOIN tg),
-       |rk AS (SELECT *, row_number() OVER (PARTITION BY k, target_ppm
-       |  ORDER BY meets DESC,
-       |    CASE WHEN meets = 1 THEN 0
-       |      ELSE 1000000 - recall_ppm END ASC,
-       |    scanned_ppm ASC, r_shortlist ASC, n_probe ASC, family ASC)
-       |    AS rn
-       |  FROM cand)
-       |SELECT k, target_ppm, family, n_probe, r_shortlist, recall_ppm,
-       |  scanned_ppm, selectivity_ppm,
-       |  CAST(CASE WHEN family <> 'flat_filtered' THEN 1 ELSE 0 END
-       |    AS BIGINT) AS index_worth_it
-       |FROM rk WHERE rn = 1 ORDER BY k, target_ppm""".stripMargin
-  }
+  lazy val e38Sql: String =
+    layoutChoiceSql(familyGridsCtes(filtered = true), filtered = true)
 
   /** CROSS-FAMILY SERVING AUTO-CHOICE (e31 — VERDICT r15 next-#6): the
-    * e28 decision widened across quantizer FAMILIES — per (k, recall
-    * target), the cheapest cell of the UNION of the IVF-PQ (e27),
-    * IVF-SQ8 (e29), and OPQ-IVF-PQ (e30) grids meeting the target.
-    * Cost order is e28's lexicographic (scanned_ppm, r_shortlist,
-    * n_probe) with the family NAME as the final determinism key; the
-    * family column rides along so the choice is actionable (which
-    * index to build, not just which knobs). All three grids share the
-    * probe stage, brute-force truth contract, and scanned-fraction
-    * denominator, so cells are directly comparable; no-cell-meets
-    * falls back to best-available flagged `meets_target = 0`, e28's
-    * widen-the-grid signal. */
-  val e31FamilyChoice: Q = (s, dir) => {
-    import s.implicits._
-    val grid = familyGridsRelation(s, dir)
-    val targets = servingTargetsPpm.toDF("target_ppm")
-    val cand = grid.crossJoin(broadcast(targets))
-      .withColumn("meets",
-        (col("recall_ppm") >= col("target_ppm")).cast(LongType))
-    Similarity.cheapestMeetingCell(cand, Seq("k", "target_ppm"),
+    * e28 decision widened across index FAMILIES — per (k, recall
+    * target), the cheapest cell of the [[familyGrids]] union meeting
+    * the target under [[Similarity.cheapestMeetingCell]]'s rule, with
+    * e28's cost tail plus the family NAME as the final determinism key;
+    * the family column rides along so the choice is actionable (which
+    * index to build, not just which knobs). All five grids share the
+    * brute-force truth contract and scanned-fraction denominator, so
+    * cells are directly comparable. */
+  val e31FamilyChoice: Q = (s, dir) =>
+    Similarity.cheapestMeetingCell(familyGrids(s, dir, filtered = false),
+        servingTargets(s), Seq("k", "target_ppm"),
         Seq(col("r_shortlist").asc, col("n_probe").asc, col("family").asc))
       .select(col("k"), col("target_ppm"), col("family"), col("n_probe"),
         col("r_shortlist"), col("recall_ppm"), col("scanned_ppm"),
         col("meets").as("meets_target"))
       .orderBy("k", "target_ppm")
-  }
 
-  lazy val e31Sql: String = {
-    val tgVals = servingTargetsPpm
-      .map(t => s"(CAST($t AS BIGINT))").mkString(",")
-    s"""WITH $familyGridsCtes,
-       |tg AS (SELECT * FROM (VALUES $tgVals) t(target_ppm)),
-       |cand AS (SELECT tg.target_ppm, g.*,
-       |  CASE WHEN g.recall_ppm >= tg.target_ppm
-       |    THEN 1 ELSE 0 END AS meets
-       |  FROM g CROSS JOIN tg),
-       |rk AS (SELECT *, row_number() OVER (PARTITION BY k, target_ppm
-       |  ORDER BY meets DESC,
-       |    CASE WHEN meets = 1 THEN 0
-       |      ELSE 1000000 - recall_ppm END ASC,
-       |    scanned_ppm ASC, r_shortlist ASC, n_probe ASC, family ASC)
-       |    AS rn
-       |  FROM cand)
-       |SELECT k, target_ppm, family, n_probe, r_shortlist, recall_ppm,
-       |  scanned_ppm, CAST(meets AS BIGINT) AS meets_target
-       |FROM rk WHERE rn = 1 ORDER BY k, target_ppm""".stripMargin
-  }
+  lazy val e31Sql: String = cheapestMeetingCellSql(
+    familyGridsCtes(filtered = false), "g", servingTargetsSql,
+    "k, target_ppm", "r_shortlist ASC, n_probe ASC, family ASC",
+    "k, target_ppm, family, n_probe, r_shortlist, recall_ppm,\n" +
+      "  scanned_ppm, CAST(meets AS BIGINT) AS meets_target")
 
   private val mmrTopN = 20
   private val mmrK = 5

@@ -229,7 +229,7 @@ object EventStreams {
                         partitionBy: Seq[String] = Nil,
                         trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    startFold(out, path, trigger, outputMode) { (batch, _) =>
+    startFold(out, path, outputMode, trigger) { (batch, _) =>
       graft.pipeline.Pipeline.mergeIntoParquet(
         spark, path, batch, uniqueKey, partitionBy)
     }
@@ -249,10 +249,9 @@ object EventStreams {
   def versionedUpsertStreamQuery(spark: SparkSession, out: DataFrame,
                                  root: String, uniqueKey: Seq[String],
                                  outputMode: String = "update",
-                                 partitionBy: Seq[String] = Nil,
-                                 trigger: Trigger = Trigger.AvailableNow())
+                                 partitionBy: Seq[String] = Nil)
       : StreamingQuery =
-    startFold(out, root, trigger, outputMode) { (batch, _) =>
+    startFold(out, root, outputMode) { (batch, _) =>
       graft.pipeline.VersionedTable.merge(
         spark, root, batch, uniqueKey, partitionBy)
     }
@@ -283,16 +282,14 @@ object EventStreams {
   def ragIngestStreamQuery(spark: SparkSession, docs: DataFrame,
                            textCol: String, idCol: String,
                            codebook: Seq[Seq[Double]], dim: Int,
-                           root: String,
-                           trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
+                           root: String): StreamingQuery = {
     val assigned = graft.operators.Similarity.cellAssignments(
       ragChunkEmbed(docs, textCol, idCol, dim),
       "emb", "chunk_id", codebook)
       .withColumnRenamed("id", "chunk_id")
     versionedUpsertStreamQuery(spark, assigned, root,
       uniqueKey = Seq("cell", "chunk_id"), outputMode = "append",
-      partitionBy = Seq("cell"), trigger = trigger)
+      partitionBy = Seq("cell"))
   }
 
   /** The shared RAG tick front half: chunk (the curation DAG's
@@ -361,18 +358,13 @@ object EventStreams {
                             codebook: Seq[Seq[Double]], dim: Int,
                             registryRoot: String, chunksRoot: String,
                             indexRoot: String, codebookRoot: String,
-                            trigger: Trigger = Trigger.AvailableNow(),
                             gcKeepReleases: Option[Int] = None,
-                            gcMemberKeep: Int = 1,
-                            gcStaleAfterMs: Long = 3600 * 1000L,
-                            compactMaxFiles: Option[Int] = None,
-                            compactColdVersions: Int = 0)
+                            compactMaxFiles: Option[Int] = None)
       : StreamingQuery =
-    startFold(docs, registryRoot, trigger) { (batch, batchId) =>
+    startFold(docs, registryRoot) { (batch, batchId) =>
       ragReleaseFoldBatch(spark, batch, batchId, textCol, idCol,
         codebook, dim, registryRoot, chunksRoot, indexRoot, codebookRoot,
-        gcKeepReleases, gcMemberKeep, gcStaleAfterMs,
-        compactMaxFiles, compactColdVersions)
+        gcKeepReleases, compactMaxFiles)
     }
 
   /** The guarded per-epoch release fold (exposed so the replay spec
@@ -381,9 +373,8 @@ object EventStreams {
       batch: DataFrame, batchId: Long, textCol: String, idCol: String,
       codebook: Seq[Seq[Double]], dim: Int, registryRoot: String,
       chunksRoot: String, indexRoot: String, codebookRoot: String,
-      gcKeepReleases: Option[Int], gcMemberKeep: Int, gcStaleAfterMs: Long,
-      compactMaxFiles: Option[Int] = None,
-      compactColdVersions: Int = 0): Unit = {
+      gcKeepReleases: Option[Int],
+      compactMaxFiles: Option[Int] = None): Unit = {
     import org.apache.spark.sql.functions._
     import graft.pipeline.{PublishSet, VersionedTable}
     val released = PublishSet.currentVersion(spark, registryRoot)
@@ -498,8 +489,7 @@ object EventStreams {
       // triggers a sweep under the release readers still serve.
       gcKeepReleases.foreach { keep =>
         PublishSet.prune(spark, registryRoot, keep)
-        PublishSet.pruneMembers(spark, registryRoot, gcMemberKeep,
-          gcStaleAfterMs)
+        PublishSet.pruneMembers(spark, registryRoot)
       }
       // opt-in small-file maintenance AFTER the publish: each
       // partition-scoped merge leaves one shuffle-task file set per
@@ -507,25 +497,18 @@ object EventStreams {
       // compactPartitions rewrites ONLY over-threshold buckets
       // (content-identical new version, above the retained floor;
       // the release keeps serving its pinned version untouched)
-      // compactColdVersions > 0 adds the cadence policy: only
-      // buckets untouched by the last N VERSIONS compact (size N
-      // in versions, not merges — compaction commits advance the
-      // version counter too), so the hot range bucket (still
-      // receiving every tick's fresh ids) is never rewritten just
-      // to re-fragment next tick
       compactMaxFiles.foreach { maxF =>
-        VersionedTable.compactPartitions(spark, chunksRoot, maxF,
-          compactColdVersions)
-        VersionedTable.compactPartitions(spark, indexRoot, maxF,
-          compactColdVersions)
+        VersionedTable.compactPartitions(spark, chunksRoot, maxF)
+        VersionedTable.compactPartitions(spark, indexRoot, maxF)
       }
     }
   }
 
   /** The one stream start of every foreachBatch sink: `fold` gets each
     * micro-batch and its id, the checkpoint sits at `<root>.__checkpoint`. */
-  private def startFold(out: DataFrame, root: String, trigger: Trigger,
-                        outputMode: String = "append")(
+  private def startFold(out: DataFrame, root: String,
+                        outputMode: String = "append",
+                        trigger: Trigger = Trigger.AvailableNow())(
       fold: (DataFrame, Long) => Unit): StreamingQuery =
     out.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
@@ -638,7 +621,7 @@ object EventStreams {
                             threshold: Double = 0.5,
                             trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    startFold(docs, statePath, trigger) { (batch, batchId) =>
+    startFold(docs, statePath, trigger = trigger) { (batch, batchId) =>
       foldOnce(spark, batchId, statePath, emptyKeeperState(spark)) { raw =>
         val state = raw.select(col("fp"), col("id"), col("text"), col("n_copies"))
         val (stateBase, stateBands) = readBandState(spark, statePath)
@@ -697,7 +680,7 @@ object EventStreams {
                             statePath: String, pairsPath: String,
                             trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    startFold(docs, statePath, trigger) { (batch, batchId) =>
+    startFold(docs, statePath, trigger = trigger) { (batch, batchId) =>
       // init*LinkState writes `_base`; reading it fails when absent
       foldOnce(spark, batchId, s"${statePath}_base",
           spark.read.parquet(s"${statePath}_base")) { stateBase =>
@@ -770,7 +753,7 @@ object EventStreams {
                              statePath: String, pairsPath: String,
                              trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    startFold(docs, statePath, trigger) { (batch, batchId) =>
+    startFold(docs, statePath, trigger = trigger) { (batch, batchId) =>
       // init*LinkState writes `_base`; reading it fails when absent
       foldOnce(spark, batchId, s"${statePath}_base",
           spark.read.parquet(s"${statePath}_base")) { stateBase =>
@@ -845,10 +828,8 @@ object EventStreams {
                           benchmark: DataFrame,
                           statePath: String, cleanPath: String,
                           pairsPath: String,
-                          threshold: Double = 0.5,
-                          trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    startFold(docs, statePath, trigger) { (batch, batchId) =>
+                          threshold: Double = 0.5): StreamingQuery =
+    startFold(docs, statePath) { (batch, batchId) =>
       import spark.implicits._
       foldOnce(spark, batchId, statePath, emptyKeeperState(spark)) { raw =>
         val state = raw.select(col("fp"), col("id"), col("text"), col("n_copies"))
@@ -944,10 +925,8 @@ object EventStreams {
     *
     * Replay safety: [[foldOnce]] on the state. */
   def cmsStreamQuery(spark: SparkSession, docs: DataFrame, textCol: String,
-                     statePath: String,
-                     trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    startFold(docs, statePath, trigger) { (batch, batchId) =>
+                     statePath: String): StreamingQuery =
+    startFold(docs, statePath) { (batch, batchId) =>
       cmsFoldBatch(spark, batch, batchId, textCol, statePath, 4, 512)
     }
 
@@ -982,10 +961,8 @@ object EventStreams {
   def dataCardStreamQuery(spark: SparkSession, docs: DataFrame,
                           textCol: String, langCol: String,
                           sourceCol: String, nCharsCol: String,
-                          statePath: String,
-                          trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    startFold(docs, statePath, trigger) { (batch, batchId) =>
+                          statePath: String): StreamingQuery =
+    startFold(docs, statePath) { (batch, batchId) =>
       dataCardFoldBatch(spark, batch, batchId, textCol, langCol,
         sourceCol, nCharsCol, statePath)
     }

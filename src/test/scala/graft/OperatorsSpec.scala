@@ -915,6 +915,34 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("cheapestMeetingCell: equal recall meets, best-available fallback, the caller's tail breaks a scanned tie") {
+    // a hand-built grid (k, n_probe, r_shortlist, recall_ppm, scanned_ppm)
+    val grid = Seq(
+        (1L, 1L, 5L, 900000L, 100000L),
+        (1L, 2L, 5L, 950000L, 200000L),
+        (1L, 4L, 20L, 950000L, 150000L),
+        (5L, 1L, 20L, 950000L, 300000L),
+        (5L, 2L, 5L, 950000L, 300000L))
+      .toDF("k", "n_probe", "r_shortlist", "recall_ppm", "scanned_ppm")
+    val targets = Seq(900000L, 990000L).toDF("target_ppm")
+    def choose(tail: Seq[org.apache.spark.sql.Column]) =
+      Similarity.cheapestMeetingCell(grid, targets, Seq("k", "target_ppm"),
+          tail).collect()
+        .map(r => (r.getAs[Long]("k"), r.getAs[Long]("target_ppm")) ->
+          ((r.getAs[Long]("n_probe"), r.getAs[Long]("r_shortlist"),
+            r.getAs[Long]("meets")))).toMap
+    val byDepth = choose(Seq($"r_shortlist".asc, $"n_probe".asc))
+    assert(byDepth.size === 4, "one row per (k, target)")
+    // recall_ppm == target_ppm meets, and that cell is the cheapest
+    assert(byDepth((1L, 900000L)) === ((1L, 5L, 1L)))
+    // nothing meets 99%: the smallest deficit wins over the cheapest
+    // cell, and the cheaper of the two equal-deficit cells is returned
+    assert(byDepth((1L, 990000L)) === ((4L, 20L, 0L)))
+    // a scanned_ppm tie goes to the caller's cost tail
+    assert(byDepth((5L, 900000L)) === ((2L, 5L, 1L)))
+    assert(choose(Seq($"n_probe".asc))((5L, 900000L)) === ((1L, 20L, 1L)))
+  }
+
   test("ivfFamilyOperatingGrids: shared-substrate cells equal the standalone grids exactly (r16, +bq r17)") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter($"vec_id" % 100 === 0)

@@ -134,8 +134,7 @@ class StreamingReleaseSpec extends SparkSpec {
     EventStreams.ragReleaseFoldBatch(spark,
       Seq((1L, docText(1L))).toDF("doc_id", "text"), 1L,
       "text", "doc_id", codebook, dim, reg, chunks, idx, cb,
-      gcKeepReleases = None, gcMemberKeep = 1,
-      gcStaleAfterMs = 3600 * 1000L)
+      gcKeepReleases = None)
     assert(PublishSet.currentVersion(spark, reg) === Some(3L),
       "the replayed epoch must not publish over the rollback")
     assert(PublishSet.resolve(spark, reg).values.toSet === Set(1L),
@@ -150,8 +149,7 @@ class StreamingReleaseSpec extends SparkSpec {
       EventStreams.ragReleaseFoldBatch(spark,
         Seq((id, docText(id))).toDF("doc_id", "text"), batchId,
         "text", "doc_id", codebook, dim, reg, chunks, idx, cb,
-        gcKeepReleases = None, gcMemberKeep = 1,
-        gcStaleAfterMs = 3600 * 1000L)
+        gcKeepReleases = None)
     fold(0L, 0L) // release 1, note 'epoch 0 rows 2'
     fold(1L, 1L) // release 2, note 'epoch 1 rows 4'
     assert(PublishSet.readEpochCursor(spark, reg) === Some((1L, 4L)),
